@@ -15,11 +15,15 @@ comparing (cross-type joins match iff renderings coincide — documented
 deviation: Spark's float rendering differs from Rust's).
 
 Scale: the build side is a sampled fact — small by construction — so we
-broadcast it (replicating the reference's build/probe asymmetry,
-join.rs:28-77) and the probe side streams through a BroadcastHashJoin
-with **zero shuffle** of the big table. For build sides too large to
-broadcast, pass ``broadcast=False`` and Catalyst/AQE picks a
-shuffled-hash or sort-merge join.
+broadcast its key column (replicating the reference's build/probe
+asymmetry, join.rs:28-77) and the probe side streams through a
+BroadcastHashJoin with **zero shuffle** of the big table. The keys are
+broadcast as projected, duplicates included: the LeftSemi/LeftAnti
+BroadcastHashJoin emits each probe row at most once however often its
+key repeats, so a ``distinct()`` would only add a shuffle-map job. For
+build sides too large to broadcast, pass ``broadcast=False`` and
+Catalyst/AQE picks a shuffled-hash or sort-merge join; there the keys
+are de-duplicated first, whose partial aggregation shrinks the shuffle.
 """
 
 from __future__ import annotations
@@ -45,10 +49,13 @@ def semi_join_reduce(
     rows with NO matching build key (``how="left_anti"``).
     Output schema = probe schema.
 
-    The build side is projected to its key column and de-duplicated
-    before broadcast — semi-join output is invariant to build duplicates
-    (join.rs:72 set insert collapses them), and a distinct key list keeps
-    the broadcast minimal.
+    The build side is projected to its key column. Semi-join output is
+    invariant to build duplicates (join.rs:72 set insert collapses
+    them), so the broadcast path ships the keys as they are — one job
+    for the broadcast, none for a de-duplication. The shuffle
+    strategies (``False``, ``"shuffle_hash"``, ``"merge"``) de-duplicate
+    the keys first: the partial aggregation runs before the exchange
+    and shrinks it.
 
     ``broadcast``: ``True`` (default) hints a broadcast of the key list
     — zero shuffle of the probe side, right while the build side is a
@@ -77,11 +84,13 @@ def semi_join_reduce(
     if stringly:
         bk = bk.cast("string")
         pk = pk.cast("string")
-    keys = build.select(bk.alias(_BK)).distinct()
+    keys = build.select(bk.alias(_BK))
     if broadcast is True:
         keys = F.broadcast(keys)
-    elif broadcast:
-        keys = keys.hint(broadcast)
+    else:
+        keys = keys.distinct()
+        if broadcast:
+            keys = keys.hint(broadcast)
 
     if null_safe:
         cond = pk.eqNullSafe(keys[_BK])

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from parquet_sampler_spark.functions.hashing import lehmer_hash_sql
 from parquet_sampler_spark.operators.sample import sample_exact
 from parquet_sampler_spark.operators.semijoin import semi_join_reduce
+from parquet_sampler_spark.sources.io import read_parquet
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -45,7 +46,9 @@ _LINEITEM_TIE = ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The registry's one table reader: ``<sf_dir>/<name>.parquet``
+    through :func:`read_parquet` (footer schema, no inference job)."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # Session-scoped temp root: every query that needs scratch disk (sink
@@ -133,6 +136,7 @@ def clear_caches() -> None:
     queries_ext._IVF_HIER_SQL_CACHE.clear()
     queries_ext._ANN_SIZED_SQL_CACHE.clear()
     queries_ext._SEM_SQL_CACHE.clear()
+    queries_ext._CORESET_SQL_CACHE.clear()
     # plain-value caches (no DataFrames to unpersist)
     queries_ext._BPE_MERGES_CACHE.clear()
     from parquet_sampler_spark.operators import similarity as _sim_mod
@@ -370,7 +374,7 @@ def _q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = f"{session_tmp_dir(spark, 'sink')}/customer_red.parquet"
     write_parquet(customer_reduced(spark, sf_dir), out, single_file=True)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def _q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,7 +388,7 @@ def _q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     out = f"{session_tmp_dir(spark, 'sinkp')}/orders"
     write_parquet(o, out, partition_by=["o_orderpriority"])
-    return spark.read.parquet(out).select(*o.columns)
+    return read_parquet(spark, out).select(*o.columns)
 
 
 def _q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,7 +623,7 @@ def _q_star_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         (df, f"{d}/{tbl}.parquet") for tbl, df, _ in members
     ])
     parts = [
-        _snap_fp(spark.read.parquet(f"{d}/{tbl}.parquet"), tbl, keys)
+        _snap_fp(read_parquet(spark, f"{d}/{tbl}.parquet"), tbl, keys)
         for tbl, _, keys in members
     ]
     out_df = parts[0]
@@ -739,7 +743,7 @@ def _q_star_snapshot_refresh(
         (v2[tbl][0], f"{store}/{tbl}.parquet") for tbl in drifted
     ])
     parts = [
-        _snap_fp(spark.read.parquet(f"{store}/{tbl}.parquet"), tbl, k)
+        _snap_fp(read_parquet(spark, f"{store}/{tbl}.parquet"), tbl, k)
         for tbl, (_, k) in v2.items()
     ]
     out = parts[0]

@@ -39,10 +39,7 @@ from parquet_sampler_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from parquet_sampler_spark.queries import table as _t
 
 
 def _normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -70,8 +67,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # follows the session timezone — pin UTC so results match the
     # UTC-naive DuckDB oracle even under a driver session with another TZ
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return _normalize_ts(e)
+    return _normalize_ts(_t(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------

@@ -14,9 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from parquet_sampler_spark.queries import table as _t
 
 
 # ---------------------------------------------------------------------------

@@ -10,19 +10,122 @@ INT96 / decimals / nested, lib.rs:122-124).
 
 from __future__ import annotations
 
+import os
+
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
+
+# Hadoop glob metacharacters (SparkHadoopUtil.isGlobPath)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+_PARQUET_PKG = "org.apache.spark.sql.execution.datasources.parquet"
+# filesystems listed with os.scandir: through py4j, every entry of a
+# Hadoop listing costs round trips
+_LOCAL_SCHEMES = ("file",)
 
 
 def read_parquet(
-    spark: SparkSession, path: str, columns: list[str] | None = None
+    spark: SparkSession, path: str | list[str], columns: list[str] | None = None
 ) -> DataFrame:
     """Scan a Parquet path; optional projection (reference: join.rs:42-56
     builds a one-column schema projection by hand — Catalyst's
-    ColumnPruning pushes ``select`` into the reader for free)."""
-    df = spark.read.parquet(path)
+    ColumnPruning pushes ``select`` into the reader for free).
+
+    The schema is resolved on the driver from one file footer, as the
+    reference does (``file_metadata.schema()``, sample.rs:83, join.rs:43),
+    and handed to the reader — so the read launches no Spark job. Bare
+    ``spark.read.parquet`` would run one schema-inference job per call
+    (``ParquetUtils.inferSchema``), even for a single footer. The footer
+    goes through Spark's own conversion (``ParquetFileFormat.
+    readSchemaFromFooter`` with the session's
+    ``ParquetToSparkSchemaConverter``), so the Spark row-metadata key,
+    ``binaryAsString``, INT96 and timestamp-NTZ settings apply exactly
+    as in inference. The footer read is the file Spark's inference would
+    pick: the first data file by path, hidden names (``_*``, ``.*``,
+    ``*._COPYING_``) skipped.
+
+    Falls back to ``spark.read.parquet`` — inference, and Spark's own
+    errors — for several paths or a glob, a directory with any
+    subdirectory (partitioned layout) or a ``_metadata`` /
+    ``_common_metadata`` summary file, ``spark.sql.parquet.mergeSchema``
+    on, no data file, and any failure of the footer read (a missing
+    path, say).
+    """
+    paths = [path] if isinstance(path, str) else list(path)
+    schema = None
+    if len(paths) == 1 and not _GLOB_CHARS.intersection(paths[0]):
+        try:
+            schema = _footer_schema(spark, paths[0])
+        except (OSError, Py4JError, PySparkException):
+            pass  # inference below raises Spark's own error, if any
+    if schema is None:
+        df = spark.read.parquet(*paths)
+    else:
+        df = DataFrame(
+            spark._jsparkSession.read().schema(schema).parquet(paths[0]),
+            spark,
+        )
     if columns is not None:
         df = df.select(*columns)
     return df
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The JVM ``StructType`` Spark's inference would give ``path``, read
+    from one footer on the driver; ``None`` where inference must run."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def cls(name: str):
+        # direct class handle: a JVMView package walk costs one py4j
+        # round trip per name segment
+        return JavaClass(name, client)
+
+    state = spark._jsparkSession.sessionState()
+    if state.conf().isParquetSchemaMergingEnabled():
+        return None
+    conf = state.newHadoopConf()
+    hpath = cls("org.apache.hadoop.fs.Path")(path)
+    fs = hpath.getFileSystem(conf)
+    # (name, is_dir) of each directory entry; None for a file
+    if fs.getScheme() in _LOCAL_SCHEMES:
+        root = fs.pathToFile(hpath).getPath()
+        entries = None if os.path.isfile(root) else [
+            (e.name, e.is_dir()) for e in os.scandir(root)]
+    else:
+        entries = None if fs.getFileStatus(hpath).isFile() else [
+            (st.getPath().getName(), st.isDirectory())
+            for st in fs.listStatus(hpath)]
+    if entries is None:
+        if _hidden(hpath.getName()):
+            return None
+        data = hpath
+    else:
+        if any(is_dir or name.startswith(("_metadata", "_common_metadata"))
+               for name, is_dir in entries):
+            return None
+        names = sorted(name for name, _ in entries if not _hidden(name))
+        if not names:
+            return None
+        data = cls("org.apache.hadoop.fs.Path")(hpath, names[0])
+    metadata = cls(f"{_PARQUET_PKG}.ParquetFooterReader").readFooter(
+        cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
+            data, conf),
+        cls("org.apache.parquet.format.converter.ParquetMetadataConverter")
+        .SKIP_ROW_GROUPS,
+    )
+    footer = cls("org.apache.parquet.hadoop.Footer")(data, metadata)
+    converter = cls(f"{_PARQUET_PKG}.ParquetToSparkSchemaConverter")(
+        state.conf())
+    return cls(f"{_PARQUET_PKG}.ParquetFileFormat").readSchemaFromFooter(
+        footer, converter)
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``InMemoryFileIndex.
+    shouldFilterOutPathName``, summary files aside)."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
 
 
 def metadata_row_count(path: str) -> int:
@@ -86,7 +189,7 @@ def compact_parquet(
 
     total = _dataset_bytes(spark, path)
     n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     # coalesce (no shuffle) when reducing file count — the usual case;
     # repartition only if the input has FEWER partitions than wanted
     out = (

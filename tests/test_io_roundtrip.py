@@ -7,6 +7,7 @@ natively."""
 from __future__ import annotations
 
 import datetime
+import pathlib
 from decimal import Decimal
 
 import pytest
@@ -18,6 +19,7 @@ from parquet_sampler_spark.sources.io import (
     read_parquet,
     write_parquet,
 )
+from tests.conftest import SF_MED
 
 ALLTYPES_SCHEMA = T.StructType([
     T.StructField("k", T.LongType(), False),
@@ -171,3 +173,232 @@ def test_cluster_by_range_enables_file_skipping(spark, tmp_path):
 
     assert overlaps(ranges(messy)) > 0        # every file spans ~all
     assert overlaps(ranges(clustered)) == 0   # disjoint ranges
+
+
+# ---------------------------------------------------------------------------
+# read_parquet: driver-side footer schema (no inference job) and its
+# fallbacks to Spark's own inference
+# ---------------------------------------------------------------------------
+
+def _read_jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"io_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_parity(spark, path):
+    """read_parquet's schema is exactly what Spark infers; returns the
+    number of jobs read_parquet launched."""
+    df, jobs = _read_jobs(spark, lambda: read_parquet(spark, path))
+    assert df.schema.json() == spark.read.parquet(path).schema.json()
+    return jobs
+
+
+_SF_MED_TABLES = sorted(
+    p.name for p in pathlib.Path(SF_MED).glob("*.parquet"))
+
+
+@pytest.mark.parametrize("name", _SF_MED_TABLES)
+def test_read_schema_parity_testdata(spark, name):
+    assert _assert_parity(spark, f"{SF_MED}/{name}") == 0
+
+
+RICH_SCHEMA = T.StructType([
+    T.StructField("k", T.LongType(), False),
+    T.StructField("c_dec", T.DecimalType(12, 2), False),
+    T.StructField("c_date", T.DateType(), True),
+    T.StructField("c_ts", T.TimestampType(), True),
+    T.StructField("c_ntz", T.TimestampNTZType(), True),
+    T.StructField("c_bin", T.BinaryType(), True),
+    T.StructField("c_arr", T.ArrayType(T.IntegerType(), False), True),
+    T.StructField("c_map", T.MapType(T.StringType(), T.DoubleType()), True),
+    T.StructField("c_struct", T.StructType([
+        T.StructField("a", T.IntegerType(), False),
+        T.StructField("b", T.StringType(), True),
+    ]), True),
+])
+
+
+@pytest.fixture(scope="module")
+def rich_dir(spark, tmp_path_factory):
+    rows = [
+        (i, Decimal(f"{i}.50"), datetime.date(2024, 1, 1 + i % 28),
+         datetime.datetime(2024, 2, 1, i % 24),
+         datetime.datetime(2024, 3, 1, i % 24),
+         bytes([i % 256]), [i, i + 1], {f"m{i}": i / 4}, (i, f"s{i}"))
+        for i in range(40)
+    ]
+    out = str(tmp_path_factory.mktemp("rich") / "rich")
+    write_parquet(spark.createDataFrame(rows, RICH_SCHEMA).repartition(3),
+                  out)
+    return out
+
+
+def test_read_schema_parity_spark_written(spark, rich_dir):
+    """Non-nullable, decimal, date, timestamp (LTZ and NTZ), binary and
+    nested columns: the Spark row-metadata schema path, on a directory
+    and on one of its part files, launching no job."""
+    assert _assert_parity(spark, rich_dir) == 0
+    part = sorted(pathlib.Path(rich_dir).glob("part-*.parquet"))[0]
+    assert _assert_parity(spark, str(part)) == 0
+    back = read_parquet(spark, rich_dir)
+    assert back.count() == 40
+    # Spark reports every field nullable, nested ones too
+    assert [f.dataType.simpleString() for f in back.schema] == \
+        [f.dataType.simpleString() for f in RICH_SCHEMA]
+
+
+def test_read_schema_parity_pyarrow_written(spark, tmp_path):
+    """Files without Spark's row metadata: unsigned ints, plain binary
+    (with and without binaryAsString) and nanosecond timestamps (read
+    as long under the legacy nanosAsLong conf)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "arrow.parquet")
+    pq.write_table(pa.table({
+        "u8": pa.array([1, 2], pa.uint8()),
+        "u32": pa.array([1, 2], pa.uint32()),
+        "u64": pa.array([1, 2**64 - 1], pa.uint64()),
+        "raw": pa.array([b"a", b"b"], pa.binary()),
+        "ts_ns": pa.array([1, 2], pa.timestamp("ns")),
+    }), path)
+    try:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        assert _assert_parity(spark, path) == 0
+        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+        assert _assert_parity(spark, path) == 0
+        assert dict(read_parquet(spark, path).dtypes)["raw"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+
+
+def test_read_picks_first_data_file_skipping_hidden(spark, tmp_path):
+    """The footer read is the first non-hidden file by name, as in
+    Spark's inference: a hidden file sorting first (here with another
+    schema) and an in-flight ``._COPYING_`` file are skipped."""
+    d = tmp_path / "hidden"
+    spark.range(3).selectExpr("id AS b").write.parquet(str(d / "x"))
+    src = sorted((d / "x").glob("part-*.parquet"))[0]
+    spark.range(3).selectExpr("id AS a").coalesce(1).write.parquet(
+        str(d / "y"))
+    good = sorted((d / "y").glob("part-*.parquet"))[0]
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    (flat / "_a_hidden.parquet").write_bytes(src.read_bytes())
+    (flat / ".b_hidden.parquet").write_bytes(src.read_bytes())
+    (flat / "a.parquet._COPYING_").write_bytes(src.read_bytes())
+    (flat / "m.parquet").write_bytes(good.read_bytes())
+    assert _assert_parity(spark, str(flat)) == 0
+    assert read_parquet(spark, str(flat)).columns == ["a"]
+
+
+def test_read_hadoop_listing_path(spark, rich_dir, monkeypatch):
+    """Filesystems other than the local one are listed through the
+    Hadoop FileSystem API; forced onto a local directory, that listing
+    picks the same file."""
+    from parquet_sampler_spark.sources import io
+
+    monkeypatch.setattr(io, "_LOCAL_SCHEMES", ())
+    assert _assert_parity(spark, rich_dir) == 0
+
+
+def test_read_fallback_partitioned(spark, tmp_path):
+    """A partitioned layout keeps Spark's inference (partition columns
+    come from directory names)."""
+    out = str(tmp_path / "parts")
+    spark.range(20).selectExpr("id", "id % 3 AS p").write.partitionBy(
+        "p").parquet(out)
+    jobs = _assert_parity(spark, out)
+    assert jobs >= 1
+    assert read_parquet(spark, out).columns == ["id", "p"]
+
+
+def test_read_fallback_glob_and_multi_path(spark, rich_dir):
+    assert _assert_parity(spark, f"{rich_dir}/*.parquet") >= 1
+    parts = sorted(str(p) for p in pathlib.Path(rich_dir).glob("part-*"))
+    df, jobs = _read_jobs(spark, lambda: read_parquet(spark, parts[:2]))
+    assert jobs >= 1
+    assert df.schema.json() == spark.read.parquet(*parts[:2]).schema.json()
+
+
+def test_read_fallback_merge_schema(spark, tmp_path):
+    """With mergeSchema on, every footer counts: the union of two
+    files' columns, not the first file's."""
+    d = tmp_path / "merge"
+    d.mkdir()
+    for i, col in enumerate(["a", "b"]):
+        spark.range(2).selectExpr(f"id AS {col}").coalesce(1).write.parquet(
+            str(tmp_path / col))
+        f = sorted((tmp_path / col).glob("part-*.parquet"))[0]
+        (d / f"part-{i}.parquet").write_bytes(f.read_bytes())
+    assert read_parquet(spark, str(d)).columns == ["a"]
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert _assert_parity(spark, str(d)) >= 1
+        assert sorted(read_parquet(spark, str(d)).columns) == ["a", "b"]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_read_fallback_summary_file(spark, tmp_path):
+    """A ``_common_metadata`` summary file is what Spark's inference
+    reads first; its schema (here one column wider than the data
+    file's) must win."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "summary"
+    d.mkdir()
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}),
+                   str(d / "part-0.parquet"))
+    pq.write_metadata(pa.schema([("a", pa.int64()), ("z", pa.string())]),
+                      str(d / "_common_metadata"))
+    jobs = _assert_parity(spark, str(d))
+    assert jobs >= 1
+    assert read_parquet(spark, str(d)).columns == ["a", "z"]
+
+
+def test_read_fallback_raises_sparks_errors(spark, tmp_path):
+    """A missing path, a directory without data files and a footer
+    Spark cannot convert (nanosecond timestamps, nanosAsLong off) raise
+    exactly what ``spark.read.parquet`` raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("ns"))}), nanos)
+    for path in [str(tmp_path / "missing"), str(empty), nanos]:
+        with pytest.raises(Exception) as want:
+            spark.read.parquet(path)
+        with pytest.raises(type(want.value)) as got:
+            read_parquet(spark, path)
+        assert type(got.value) is type(want.value)
+        assert got.value.getCondition() == want.value.getCondition()
+
+
+def test_compact_parquet_reads_without_inference(spark, tmp_path):
+    """compact_parquet's read goes through read_parquet: it launches the
+    write job only, no schema-inference job."""
+    from parquet_sampler_spark.sources.io import compact_parquet
+
+    src = str(tmp_path / "src")
+    spark.range(100).repartition(4).write.parquet(src)
+    _, jobs_compact = _read_jobs(
+        spark, lambda: compact_parquet(spark, src, str(tmp_path / "out")))
+    _, jobs_plain = _read_jobs(
+        spark, lambda: spark.read.parquet(src).write.parquet(
+            str(tmp_path / "plain")))
+    assert jobs_compact == jobs_plain - 1

@@ -54,3 +54,18 @@ def test_all_registered_query_outputs_are_scalar(spark):
         "contract (explode to long-form scalar rows or emit a "
         "fingerprint): " + "; ".join(bad)
     )
+
+
+def test_clear_caches_drops_coreset_oracle_sql(monkeypatch):
+    """The ivf_coreset oracle SQL inlines centroids fitted to the data
+    in its sf_dir; ``clear_caches()`` must drop it like the other
+    data-fitted oracle caches, or a regenerated directory is checked
+    against stale literals."""
+    from parquet_sampler_spark import queries_ext
+    from parquet_sampler_spark.queries import clear_caches
+
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_SMALL)
+    sql = queries_ext._sql_ivf_coreset()
+    assert queries_ext._CORESET_SQL_CACHE[SF_SMALL] == sql
+    clear_caches()
+    assert queries_ext._CORESET_SQL_CACHE == {}

@@ -203,3 +203,77 @@ def test_star_snapshot_refresh_selective_equals_full(spark):
     assert merged == full_v2
     n_drift = _q_star_snapshot_drift(spark, sf).count()
     assert 0 < n_drift < 7  # something shipped, something was skipped
+
+
+# ---------------------------------------------------------------------------
+# Broadcast path: build keys broadcast as projected, no distinct()
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def tripled(spark):
+    """Probe with NULL and duplicate keys; a build side whose every key
+    (NULL included) appears three times."""
+    probe = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (None, "e"), (None, "f"),
+         (7, "g")],
+        "k long, payload string",
+    )
+    build = spark.createDataFrame(
+        [(k,) for k in [1, 2, None, 5] for _ in range(3)], "k long"
+    )
+    return probe, build
+
+
+def _distinct_formulation(probe, build, how, null_safe, stringly):
+    """The pre-broadcast-path formulation: de-duplicated keys, broadcast."""
+    from pyspark.sql import functions as F
+
+    bk, pk = F.col("k"), probe["k"]
+    if stringly:
+        bk, pk = bk.cast("string"), pk.cast("string")
+    keys = F.broadcast(build.select(bk.alias("bk")).distinct())
+    cond = pk.eqNullSafe(keys["bk"]) if null_safe else pk == keys["bk"]
+    return probe.join(keys, cond, how)
+
+
+@pytest.mark.parametrize("how", ["left_semi", "left_anti"])
+@pytest.mark.parametrize("null_safe,stringly",
+                         [(False, False), (True, False), (True, True)])
+def test_broadcast_without_distinct_same_rows(tripled, how, null_safe,
+                                              stringly):
+    """Tripled build keys change nothing: each probe row is emitted at
+    most once, the same row multiset as the distinct() formulation."""
+    probe, build = tripled
+    out = semi_join_reduce(probe, "k", build, "k", how=how,
+                           null_safe=null_safe, stringly=stringly)
+    want = _distinct_formulation(probe, build, how, null_safe, stringly)
+    got_rows = sorted(map(tuple, out.collect()), key=repr)
+    assert got_rows == sorted(map(tuple, want.collect()), key=repr)
+    assert len(got_rows) == len(set(got_rows))  # probe rows are unique
+
+
+def test_broadcast_plan_has_no_aggregate(spark, tripled):
+    """The broadcast build side is the projected key column itself: no
+    HashAggregate under the BroadcastExchange (it would cost a
+    shuffle-map job)."""
+    probe, build = tripled
+    for kw in [{}, {"null_safe": True, "stringly": True},
+               {"how": "left_anti"}]:
+        out = semi_join_reduce(probe, "k", build, "k", **kw)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        assert "BroadcastExchange" in plan
+        assert "HashAggregate" not in plan
+
+
+def test_shuffle_hash_path_keeps_distinct(spark, tripled):
+    """The shuffle strategies still de-duplicate the build keys (the
+    partial aggregation shrinks the shuffle), with the same rows."""
+    probe, build = tripled
+    out = semi_join_reduce(probe, "k", build, "k", broadcast="shuffle_hash")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan
+    assert "HashAggregate" in plan
+    bcast = semi_join_reduce(probe, "k", build, "k")
+    assert sorted(map(tuple, out.collect())) == \
+        sorted(map(tuple, bcast.collect()))
