@@ -10,8 +10,6 @@ INT96 / decimals / nested, lib.rs:122-124).
 
 from __future__ import annotations
 
-import os
-
 from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
@@ -20,13 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 # Hadoop glob metacharacters (SparkHadoopUtil.isGlobPath)
 _GLOB_CHARS = frozenset("{}[]*?\\")
 _PARQUET_PKG = "org.apache.spark.sql.execution.datasources.parquet"
-# filesystems listed with os.scandir: through py4j, every entry of a
-# Hadoop listing costs round trips
-_LOCAL_SCHEMES = ("file",)
 
 
 def read_parquet(
-    spark: SparkSession, path: str | list[str], columns: list[str] | None = None
+    spark: SparkSession, path: str, columns: list[str] | None = None
 ) -> DataFrame:
     """Scan a Parquet path; optional projection (reference: join.rs:42-56
     builds a one-column schema projection by hand — Catalyst's
@@ -46,26 +41,23 @@ def read_parquet(
     ``*._COPYING_``) skipped.
 
     Falls back to ``spark.read.parquet`` — inference, and Spark's own
-    errors — for several paths or a glob, a directory with any
+    errors — for a glob, a directory with any
     subdirectory (partitioned layout) or a ``_metadata`` /
     ``_common_metadata`` summary file, ``spark.sql.parquet.mergeSchema``
     on, no data file, and any failure of the footer read (a missing
     path, say).
     """
-    paths = [path] if isinstance(path, str) else list(path)
     schema = None
-    if len(paths) == 1 and not _GLOB_CHARS.intersection(paths[0]):
+    if not _GLOB_CHARS.intersection(path):
         try:
-            schema = _footer_schema(spark, paths[0])
+            schema = _footer_schema(spark, path)
         except (OSError, Py4JError, PySparkException):
             pass  # inference below raises Spark's own error, if any
     if schema is None:
-        df = spark.read.parquet(*paths)
+        df = spark.read.parquet(path)
     else:
         df = DataFrame(
-            spark._jsparkSession.read().schema(schema).parquet(paths[0]),
-            spark,
-        )
+            spark._jsparkSession.read().schema(schema).parquet(path), spark)
     if columns is not None:
         df = df.select(*columns)
     return df
@@ -88,14 +80,9 @@ def _footer_schema(spark: SparkSession, path: str):
     hpath = cls("org.apache.hadoop.fs.Path")(path)
     fs = hpath.getFileSystem(conf)
     # (name, is_dir) of each directory entry; None for a file
-    if fs.getScheme() in _LOCAL_SCHEMES:
-        root = fs.pathToFile(hpath).getPath()
-        entries = None if os.path.isfile(root) else [
-            (e.name, e.is_dir()) for e in os.scandir(root)]
-    else:
-        entries = None if fs.getFileStatus(hpath).isFile() else [
-            (st.getPath().getName(), st.isDirectory())
-            for st in fs.listStatus(hpath)]
+    entries = None if fs.getFileStatus(hpath).isFile() else [
+        (st.getPath().getName(), st.isDirectory())
+        for st in fs.listStatus(hpath)]
     if entries is None:
         if _hidden(hpath.getName()):
             return None

@@ -302,16 +302,6 @@ def test_read_picks_first_data_file_skipping_hidden(spark, tmp_path):
     assert read_parquet(spark, str(flat)).columns == ["a"]
 
 
-def test_read_hadoop_listing_path(spark, rich_dir, monkeypatch):
-    """Filesystems other than the local one are listed through the
-    Hadoop FileSystem API; forced onto a local directory, that listing
-    picks the same file."""
-    from parquet_sampler_spark.sources import io
-
-    monkeypatch.setattr(io, "_LOCAL_SCHEMES", ())
-    assert _assert_parity(spark, rich_dir) == 0
-
-
 def test_read_fallback_partitioned(spark, tmp_path):
     """A partitioned layout keeps Spark's inference (partition columns
     come from directory names)."""
@@ -323,12 +313,8 @@ def test_read_fallback_partitioned(spark, tmp_path):
     assert read_parquet(spark, out).columns == ["id", "p"]
 
 
-def test_read_fallback_glob_and_multi_path(spark, rich_dir):
+def test_read_fallback_glob(spark, rich_dir):
     assert _assert_parity(spark, f"{rich_dir}/*.parquet") >= 1
-    parts = sorted(str(p) for p in pathlib.Path(rich_dir).glob("part-*"))
-    df, jobs = _read_jobs(spark, lambda: read_parquet(spark, parts[:2]))
-    assert jobs >= 1
-    assert df.schema.json() == spark.read.parquet(*parts[:2]).schema.json()
 
 
 def test_read_fallback_merge_schema(spark, tmp_path):
