@@ -33,8 +33,7 @@ from pyspark.sql import types as T
 _RN = "__psx_rn"
 
 # operator-persisted relations are registered with the shared
-# session-lifetime registry (plans/cache.py), drained by
-# queries.clear_caches()
+# session-lifetime registry (plans/cache.py)
 from parquet_sampler_spark.plans.cache import persist as _persist  # noqa: E402
 from parquet_sampler_spark.plans.lineage import (  # noqa: E402
     truncate_lineage as _truncate_lineage,

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from parquet_sampler_spark.functions.hashing import MODULUS, lehmer_hash
+from parquet_sampler_spark.plans.cache import register
 
 _PR = "__psx_pr"
 _RN = "__psx_rn"
@@ -120,24 +121,6 @@ def _kth_rank_value(
             return int(r[_PR]), acc
         acc += r["__c"]
     raise ValueError("k exceeds candidate count")  # pragma: no cover
-
-# Persisted prefilter candidate sets, kept alive because the returned
-# (lazy) top-k plan reads them after this function returns. Registered
-# here so ``queries.clear_caches()`` can evict them — nothing else does.
-# FIFO-bounded: repeated sample calls must not pin unbounded cached
-# blocks (evicting an old entry only costs its consumers a recompute).
-_CANDIDATE_CACHE: list[DataFrame] = []
-_CANDIDATE_CACHE_MAX = 8
-
-
-def clear_candidate_cache() -> None:
-    """Unpersist every candidate set persisted by :func:`sample_exact`."""
-    for df in _CANDIDATE_CACHE:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session may already be stopped
-    _CANDIDATE_CACHE.clear()
 
 
 def _validate_ratio(ratio: float) -> None:
@@ -294,13 +277,9 @@ def sample_exact(
         pre = tagged.filter(F.col(_PR) < threshold).persist()
         if pre.count() >= k:
             PREFILTER_STATS["hit"] += 1
-            candidates = pre
-            _CANDIDATE_CACHE.append(pre)
-            while len(_CANDIDATE_CACHE) > _CANDIDATE_CACHE_MAX:
-                try:
-                    _CANDIDATE_CACHE.pop(0).unpersist()
-                except Exception:
-                    pass
+            # kept alive for the returned (lazy) top-k plan, which
+            # reads it after this function returns
+            candidates = register(pre)
         else:
             # astronomically unlikely at production k (Chernoff); scan
             # everything — and drop the abandoned candidate set's

@@ -50,32 +50,32 @@ _RN = "__psx_rank"
 
 # operator-persisted relations (normalized vectors, band tables) are
 # registered with the shared session-lifetime registry (plans/cache.py)
-from parquet_sampler_spark.plans.cache import persist as _cache_persist  # noqa: E402
-
-
-# embedding width per (session, plan): every LSH/gate operator needs
-# the vector dim at plan-build time to seed its hyperplanes, and each
-# invocation paid a one-row scan JOB for it (r14 optimization round:
-# 4 probe jobs per admit-row build at ~0.1 s driver latency each —
-# pure overhead at any scale). Keyed on the canonicalized plan hash,
-# so re-invocations over the same relation skip the job; wrong only
-# if a plan-identical relation changes width within one session,
-# which no supported flow does (same caveat class as the model
-# caches, cleared alongside them).
-_DIM_CACHE: dict = {}
+from parquet_sampler_spark.plans.cache import (  # noqa: E402
+    MEMO,
+    persist as _cache_persist,
+)
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
+    """Embedding width, memoized per (session, plan): every LSH/gate
+    operator needs the vector dim at plan-build time to seed its
+    hyperplanes, and each invocation paid a one-row scan JOB for it
+    (r14: 4 probe jobs per admit-row build at ~0.1 s driver latency
+    each). Keyed on the canonicalized plan hash, so re-invocations over
+    the same relation skip the job; wrong only if a plan-identical
+    relation changes width within one session, which no supported flow
+    does."""
     try:
         key = (
+            "vec_dim",
             df.sparkSession.sparkContext.applicationId,
             df.select(vec_col).semanticHash(),
         )
     except Exception:
         return df.select(F.size(vec_col)).first()[0]
-    if key not in _DIM_CACHE:
-        _DIM_CACHE[key] = df.select(F.size(vec_col)).first()[0]
-    return _DIM_CACHE[key]
+    if key not in MEMO:
+        MEMO[key] = df.select(F.size(vec_col)).first()[0]
+    return MEMO[key]
 
 
 def _normalized(df: DataFrame, id_col: str, vec_col: str,

@@ -1,23 +1,37 @@
-"""Session-lifetime registry for operator-persisted DataFrames.
+"""The package's one home for session state: a plan LRU and a memo.
 
-Operators persist relations their (lazy) returned plans re-read —
-shingle/signature tables, normalized vectors, CC labels. Nothing evicts
-those automatically, so every persisting module registers them HERE and
-``queries.clear_caches()`` drains one registry instead of enumerating
-modules (the forget-to-wire failure mode of per-module registries).
+Everything an engine session reuses across queries lives here, so
+``queries.clear_caches()`` drains it with one :func:`clear` call
+instead of enumerating per-module caches (a per-module cache that a
+hand-written clear list forgets survives the clear and serves stale
+state).
 
-Entries are DEDUPED BY PLAN SEMANTICS (r12): Spark's CacheManager
-already shares one cache entry across semantically-equal plans, so a
-bench loop (or long-lived service) re-invoking the same operator must
-NOT append a duplicate registry entry — under the FIFO bound the
-duplicate's eventual eviction unpersists the SHARED entry out from
-under every other reference. That was a measured production bug: the
-r12 registry growth pushed a full bench pass past the old 32-entry
-bound, the FIFO evicted the weighted-minhash shingle cache between
-passes, and the row's pass-3 time went 0.9 s → 112 s (recompute of
-the O(L²) expansion once per downstream consumer). A semantic hit now
-refreshes the entry's position (LRU) and returns the ALREADY-persisted
-frame; only genuinely distinct plans grow the registry.
+**Persisted plans** (:func:`persist`, :func:`register`). Operators
+persist relations their (lazy) returned plans re-read — shingle and
+signature tables, normalized vectors, CC labels, the sampler's
+prefilter candidates. Entries are DEDUPED BY PLAN SEMANTICS (r12):
+Spark's CacheManager already shares one cache entry across
+semantically-equal plans, so a bench loop (or long-lived service)
+re-invoking the same operator must NOT append a duplicate registry
+entry — the duplicate's eventual eviction would unpersist the SHARED
+entry out from under every other reference. That was a measured
+production bug: the r12 registry growth pushed a full bench pass past
+the old 32-entry bound, the eviction dropped the weighted-minhash
+shingle cache between passes, and the row's pass-3 time went
+0.9 s → 112 s (recompute of the O(L²) expansion once per downstream
+consumer). A semantic hit refreshes the entry's position (LRU) and
+returns the ALREADY-persisted frame; only genuinely distinct plans
+grow the registry.
+
+**Memo** (:data:`MEMO`). A plain dict for everything else a session
+computes once and reuses: the registry's persisted sample, pair graphs
+and merges, fitted ANN models, data-fitted oracle SQL, BPE merges,
+vector widths, and the paths / catalog names of trees written under the
+session tmp root. Every key is a tuple led by a kind string naming
+what it holds (``("ivf_sql", sf_dir)``, ``("sample", app_id, sf_dir)``;
+an ANN operator given ``model_cache=MEMO`` derives its keys from a
+kind-tagged ``cache_key``), so entries of different kinds never
+collide. :func:`clear` unpersists the DataFrame values and empties it.
 """
 
 from __future__ import annotations
@@ -36,6 +50,7 @@ MAX_PERSISTED = 96  # one full bench pass registers 57 entries (r15
 # relations here are vocabulary/sample-bounded, so the wider bound
 # costs no meaningful memory
 _PERSISTED: list[tuple[int | None, DataFrame]] = []
+MEMO: dict[tuple, object] = {}
 
 
 def _evict_overflow() -> None:
@@ -108,10 +123,13 @@ def register(df: DataFrame) -> DataFrame:
 
 
 def clear() -> None:
-    """Unpersist and drop every registered DataFrame."""
-    for _, df in _PERSISTED:
+    """Unpersist every registered plan and every DataFrame in
+    :data:`MEMO`, then empty both."""
+    memo_dfs = [v for v in MEMO.values() if isinstance(v, DataFrame)]
+    for df in [df for _, df in _PERSISTED] + memo_dfs:
         try:
             df.unpersist()
         except Exception:
             pass  # session may already be stopped
     _PERSISTED.clear()
+    MEMO.clear()

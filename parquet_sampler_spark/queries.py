@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from parquet_sampler_spark.functions.hashing import lehmer_hash_sql
 from parquet_sampler_spark.operators.sample import sample_exact
 from parquet_sampler_spark.operators.semijoin import semi_join_reduce
+from parquet_sampler_spark.plans import cache
 from parquet_sampler_spark.sources.io import read_parquet
 
 TABLES = [
@@ -88,65 +89,13 @@ import atexit  # noqa: E402  (registration, not an import-order concern)
 atexit.register(_cleanup_tmp_roots)
 
 
-# The sampled fact is the build side of every semi-join in the workflow;
-# computing it once per (session, sf_dir) and persisting the ~ratio·n
-# rows avoids re-running the sample job for each dimension reduction —
-# the Spark analog of the reference writing the sample to disk once and
-# reusing the file (README.md:15-26). Keyed on applicationId (stable),
-# not id(spark) (reused by the allocator after GC).
-_SAMPLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def clear_caches() -> None:
-    """Unpersist and drop every cached DataFrame held by the query
-    registry (the sampled fact here, the Jaccard pairs in queries_ext,
-    the sampler's prefilter candidate sets, the fitted IVF models).
+    """Drop all session state: unpersist every cached DataFrame and
+    empty the persisted-plan registry and the memo (``plans.cache``),
+    then remove the session tmp roots the memo's paths pointed into.
     Call between scale factors / sessions in long-lived processes —
-    nothing evicts these automatically."""
-    from parquet_sampler_spark import queries_ext, queries_olap
-    from parquet_sampler_spark.operators import sample as _sample_mod
-
-    for cache in (_SAMPLE_CACHE, queries_ext._PAIRS_CACHE,
-                  queries_olap._MERGE_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session may already be stopped
-        cache.clear()
-    _sample_mod.clear_candidate_cache()
-    queries_ext._IVF_MODEL_CACHE.clear()
-    queries_ext._EMBIVF_MODEL_CACHE.clear()
-    queries_ext._SEM_MODEL_CACHE.clear()
-    queries_ext._PQ_MODEL_CACHE.clear()
-    queries_ext._IVFPQ_MODEL_CACHE.clear()
-    # catalog-table cache: the build path drops + rewrites the
-    # warehouse tables when the entry is absent, so clearing makes the
-    # next _q_bucketed_join pay the full write (bench r14: the median
-    # protocol resets caches between passes so setup rows re-pay their
-    # builds every pass instead of inheriting pass-1's noise)
-    queries_ext._BUCKETED_CACHE.clear()
-    # the data-fitted oracle SQL caches (keyed by sf_dir) hold INLINED
-    # centroid/codebook literals — stale if an sf_dir's
-    # embeddings.parquet is regenerated within one process
-    queries_ext._IVF_SQL_CACHE.clear()
-    queries_ext._PQ_SQL_CACHE.clear()
-    queries_ext._IVFPQ_SQL_CACHE.clear()
-    queries_ext._IVFPQR_SQL_CACHE.clear()
-    queries_ext._IVF_HIER_SQL_CACHE.clear()
-    queries_ext._ANN_SIZED_SQL_CACHE.clear()
-    queries_ext._SEM_SQL_CACHE.clear()
-    queries_ext._CORESET_SQL_CACHE.clear()
-    # plain-value caches (no DataFrames to unpersist)
-    queries_ext._BPE_MERGES_CACHE.clear()
-    from parquet_sampler_spark.operators import similarity as _sim_mod
-
-    _sim_mod._DIM_CACHE.clear()
-    # path caches (written trees under the tmp roots wiped below)
-    queries_ext._DPP_CACHE.clear()
-    from parquet_sampler_spark.plans import cache as _plan_cache
-
-    _plan_cache.clear()
+    nothing evicts the memo automatically."""
+    cache.clear()
     _cleanup_tmp_roots()
 
 
@@ -157,9 +106,14 @@ def clear_caches() -> None:
 def lineitem_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic exact-count sample of lineitem (reference `sample`
     binary, sample.rs:36-79, seeded + reproducible per SURVEY.md §7.2.1)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SAMPLE_CACHE:
-        return _SAMPLE_CACHE[key]
+    # the sampled fact is the build side of every semi-join in the
+    # workflow: sample once per (session, sf_dir) and persist the
+    # ~ratio·n rows — the Spark analog of the reference writing the
+    # sample to disk once and reusing the file (README.md:15-26). Keyed
+    # on applicationId (stable), not id(spark) (reused after GC).
+    key = ("sample", spark.sparkContext.applicationId, sf_dir)
+    if key in cache.MEMO:
+        return cache.MEMO[key]
     from parquet_sampler_spark.sources.io import metadata_row_count
 
     li = table(spark, sf_dir, "lineitem")
@@ -169,7 +123,7 @@ def lineitem_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         # footer-only count: no scan job just to size the sample
         total_rows=metadata_row_count(f"{sf_dir}/lineitem.parquet"),
     ).persist()
-    _SAMPLE_CACHE[key] = s
+    cache.MEMO[key] = s
     return s
 
 

@@ -39,7 +39,9 @@ from parquet_sampler_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
+from parquet_sampler_spark.plans.cache import MEMO
 from parquet_sampler_spark.queries import table as _t
+from parquet_sampler_spark.sources.io import read_parquet
 
 
 def _normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -219,9 +221,6 @@ SELECT doc_id, source, rn FROM (
 """
 
 
-_BUCKETED_CACHE: dict = {}
-
-
 def _q_bucketed_join(spark, sf_dir):
     """Co-bucketed storage join: orders and customer written ONCE per
     session as catalog tables bucketed by custkey (the shuffle moves to
@@ -256,8 +255,8 @@ def _q_bucketed_join(spark, sf_dir):
         hashlib.sha1(norm.encode()).hexdigest()[:8],
     )
     names = (f"psx_orders_b_{tag}", f"psx_cust_b_{tag}")
-    key = (spark.sparkContext.applicationId, norm)
-    if key not in _BUCKETED_CACHE:
+    key = ("bucketed", spark.sparkContext.applicationId, norm)
+    if key not in MEMO:
         import shutil
         from urllib.parse import urlparse
 
@@ -285,8 +284,8 @@ def _q_bucketed_join(spark, sf_dir):
             c, names[1], ["c_custkey"], num_buckets=8,
             sort_cols=["c_custkey"],
         )
-        _BUCKETED_CACHE[key] = names
-    lt, rt = _BUCKETED_CACHE[key]
+        MEMO[key] = names
+    lt, rt = MEMO[key]
     j = cobucketed_join(spark, lt, rt, "c_custkey")
     return j.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -949,21 +948,18 @@ jpairs AS (
 """
 
 
-# jaccard_pairs feeds both the pairs query and the dedup query; persist
-# one copy per (session, sf_dir) — mirrors the sample cache in queries.py.
-# Keyed on applicationId, not id(spark): Python reuses id() after GC, so
-# a new session at the same address must not inherit stale cached plans.
-_PAIRS_CACHE = {}
-
-
 def _jaccard_pairs_cached(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS_CACHE:
-        _PAIRS_CACHE[key] = ngram_jaccard_pairs(
+    # jaccard_pairs feeds both the pairs query and the dedup query:
+    # persist one copy per (session, sf_dir). Keyed on applicationId,
+    # not id(spark): Python reuses id() after GC, so a new session at
+    # the same address must not inherit stale cached plans.
+    key = ("pairs", spark.sparkContext.applicationId, sf_dir)
+    if key not in MEMO:
+        MEMO[key] = ngram_jaccard_pairs(
             _t(spark, sf_dir, "documents"), "doc_id", "text",
             n=_JACCARD_N, threshold=_JACCARD_T,
         ).persist()
-    return _PAIRS_CACHE[key]
+    return MEMO[key]
 
 
 def _q_jaccard_pairs(spark, sf_dir):
@@ -1003,13 +999,13 @@ def _dup_graph_cached(spark, sf_dir):
     exact = os.environ.get("PSX_EXACT_PAIR_GRAPH", "") not in ("", "0")
     if exact:
         return _jaccard_pairs_cached(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "lsh")
-    if key not in _PAIRS_CACHE:
-        _PAIRS_CACHE[key] = minhash_lsh_pairs(
+    key = ("pairs", spark.sparkContext.applicationId, sf_dir, "lsh")
+    if key not in MEMO:
+        MEMO[key] = minhash_lsh_pairs(
             _t(spark, sf_dir, "documents"), "doc_id", "text",
             n=_JACCARD_N, threshold=_JACCARD_T, num_hashes=32, bands=8,
         ).persist()
-    return _PAIRS_CACHE[key]
+    return MEMO[key]
 
 
 _SQL_JACCARD_PAIRS = (
@@ -1662,7 +1658,6 @@ def _sql_embedding_neardup_incremental():
     )
 
 
-_EMBIVF_MODEL_CACHE: dict = {}
 _EMBIVF_NLIST, _EMBIVF_NPROBE = 16, 2
 
 
@@ -1696,8 +1691,8 @@ def _q_embedding_neardup_incremental_ivf(spark, sf_dir):
     return embedding_neardup_incremental_ivf(
         emb, twins, "vec_id", "embedding", threshold=_NEARDUP_HI,
         nlist=_EMBIVF_NLIST, nprobe=_EMBIVF_NPROBE,
-        model_cache=_EMBIVF_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        model_cache=MEMO,
+        cache_key=("embivf_model", spark.sparkContext.applicationId, sf_dir,
                    _EMBIVF_NLIST),
     )
 
@@ -1734,8 +1729,8 @@ def _q_embedding_neardup_incremental_ivf_sized(spark, sf_dir):
         emb, twins, "vec_id", "embedding", threshold=_NEARDUP_HI,
         nlist=nlist, nprobe=_EMBIVF_NPROBE,
         train_per_cell=_ann_sized_tpc(nlist),
-        model_cache=_EMBIVF_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        model_cache=MEMO,
+        cache_key=("embivf_model", spark.sparkContext.applicationId, sf_dir,
                    "sized", nlist),
     )
 
@@ -1914,12 +1909,6 @@ SELECT query_id, neighbor_id, score, rank FROM (
 """
 
 
-# fitted IVF coarse quantizers, keyed (applicationId, sf_dir, params) —
-# the index is built once per corpus and shared by every ann_ivf call
-# (cleared via queries.clear_caches)
-_IVF_MODEL_CACHE: dict = {}
-
-
 _IVF_NLIST, _IVF_NPROBE, _IVF_SEED = 16, 8, 42
 
 
@@ -1937,8 +1926,8 @@ def _q_ann_ivf(spark, sf_dir):
     return ivf_topk(
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=_IVF_NPROBE, seed=_IVF_SEED,
-        model_cache=_IVF_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        model_cache=MEMO,
+        cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    _IVF_NLIST, _IVF_SEED),
     )
 
@@ -2037,13 +2026,10 @@ def _q_ivf_coreset(spark, sf_dir):
     return ivf_coreset(
         e, "vec_id", "embedding",
         m=_CORESET_M, nlist=_IVF_NLIST, seed=_IVF_SEED,
-        model_cache=_IVF_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        model_cache=MEMO,
+        cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    _IVF_NLIST, _IVF_SEED),
     )
-
-
-_CORESET_SQL_CACHE: dict[str, str] = {}
 
 
 def _sql_ivf_coreset() -> str:
@@ -2064,8 +2050,9 @@ def _sql_ivf_coreset() -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    if sf_dir in _CORESET_SQL_CACHE:
-        return _CORESET_SQL_CACHE[sf_dir]
+    key = ("coreset_sql", sf_dir)
+    if key in MEMO:
+        return MEMO[key]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -2110,13 +2097,8 @@ SELECT vec_id, CAST(cell AS INTEGER) AS cell, CAST(d AS BIGINT) AS d,
   FROM assign
 ) WHERE rank <= {_CORESET_M}
 """
-    _CORESET_SQL_CACHE[sf_dir] = sql
+    MEMO[key] = sql
     return sql
-
-
-# built oracle strings keyed by sf_dir: training the quantizer twice
-# per queries()/oracle_sql() pair would be wasted work
-_IVF_SQL_CACHE: dict[str, str] = {}
 
 
 def _ivf_flat_oracle_sql(cents_int, nprobe: int) -> str:
@@ -2198,8 +2180,9 @@ def _sql_ann_ivf() -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    if sf_dir in _IVF_SQL_CACHE:
-        return _IVF_SQL_CACHE[sf_dir]
+    key = ("ivf_sql", sf_dir)
+    if key in MEMO:
+        return MEMO[key]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -2210,13 +2193,11 @@ def _sql_ann_ivf() -> str:
     )
     ci = np.floor(cents * _IVF_QSCALE).astype(np.int64)
     sql = _ivf_flat_oracle_sql(ci, _IVF_NPROBE)
-    _IVF_SQL_CACHE[sf_dir] = sql
+    MEMO[key] = sql
     return sql
 
 
 _PQ_M, _PQ_NCODES, _PQ_RERANK, _PQ_SEED = 16, 16, 100, 42
-_PQ_MODEL_CACHE: dict = {}
-_PQ_SQL_CACHE: dict = {}
 
 
 def _q_ann_pq(spark, sf_dir):
@@ -2239,8 +2220,8 @@ def _q_ann_pq(spark, sf_dir):
     return pq_topk(
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, m_sub=_PQ_M, ncodes=_PQ_NCODES, rerank=_PQ_RERANK,
-        seed=_PQ_SEED, model_cache=_PQ_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        seed=_PQ_SEED, model_cache=MEMO,
+        cache_key=("pq_model", spark.sparkContext.applicationId, sf_dir,
                    _PQ_M, _PQ_NCODES, _PQ_SEED),
     )
 
@@ -2267,8 +2248,9 @@ def _sql_ann_pq() -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    if sf_dir in _PQ_SQL_CACHE:
-        return _PQ_SQL_CACHE[sf_dir]
+    key = ("pq_sql", sf_dir)
+    if key in MEMO:
+        return MEMO[key]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -2336,12 +2318,8 @@ SELECT query_id, neighbor_id, score, rank FROM (
             JOIN normed c ON c.vec_id = cand.neighbor_id
 ) WHERE rank <= {_ANN_K}
 """
-    _PQ_SQL_CACHE[sf_dir] = sql
+    MEMO[key] = sql
     return sql
-
-
-_IVFPQ_MODEL_CACHE: dict = {}
-_IVFPQ_SQL_CACHE: dict = {}
 
 
 def _q_ann_ivfpq(spark, sf_dir):
@@ -2363,8 +2341,8 @@ def _q_ann_ivfpq(spark, sf_dir):
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=8, m_sub=_PQ_M,
         ncodes=_PQ_NCODES, rerank=_PQ_RERANK, seed=_PQ_SEED,
-        model_cache=_IVFPQ_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir),
+        model_cache=MEMO,
+        cache_key=("ivfpq_model", spark.sparkContext.applicationId, sf_dir),
     )
 
 
@@ -2389,8 +2367,9 @@ def _sql_ann_ivfpq() -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    if sf_dir in _IVFPQ_SQL_CACHE:
-        return _IVFPQ_SQL_CACHE[sf_dir]
+    key = ("ivfpq_sql", sf_dir)
+    if key in MEMO:
+        return MEMO[key]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -2488,11 +2467,8 @@ SELECT query_id, neighbor_id, score, rank FROM (
             JOIN normed c ON c.vec_id = cand.neighbor_id
 ) WHERE rank <= {_ANN_K}
 """
-    _IVFPQ_SQL_CACHE[sf_dir] = sql
+    MEMO[key] = sql
     return sql
-
-
-_IVFPQR_SQL_CACHE: dict = {}
 
 
 def _q_ann_ivfpq_residual(spark, sf_dir):
@@ -2518,8 +2494,8 @@ def _q_ann_ivfpq_residual(spark, sf_dir):
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=8, m_sub=_PQ_M,
         ncodes=_PQ_NCODES, rerank=_PQ_RERANK, seed=_PQ_SEED,
         residual=True,
-        model_cache=_IVFPQ_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir),
+        model_cache=MEMO,
+        cache_key=("ivfpq_model", spark.sparkContext.applicationId, sf_dir),
     )
 
 
@@ -2545,9 +2521,9 @@ def _sql_ann_ivfpq_residual(ncodes: int = _PQ_NCODES) -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    ck = (sf_dir, ncodes)
-    if ck in _IVFPQR_SQL_CACHE:
-        return _IVFPQR_SQL_CACHE[ck]
+    ck = ("ivfpqr_sql", sf_dir, ncodes)
+    if ck in MEMO:
+        return MEMO[ck]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -2664,7 +2640,7 @@ SELECT query_id, neighbor_id, score, rank FROM (
             JOIN normed c ON c.vec_id = cand.neighbor_id
 ) WHERE rank <= {_ANN_K}
 """
-    _IVFPQR_SQL_CACHE[ck] = sql
+    MEMO[ck] = sql
     return sql
 
 
@@ -2685,15 +2661,15 @@ def _q_ann_ivfpq_residual8(spark, sf_dir):
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=8, m_sub=_PQ_M,
         ncodes=256, rerank=_PQ_RERANK, seed=_PQ_SEED,
         residual=True,
-        model_cache=_IVFPQ_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir, 256),
+        model_cache=MEMO,
+        cache_key=("ivfpq_model", spark.sparkContext.applicationId, sf_dir,
+                   256),
     )
 
 
 # hierarchical-probe IVF: nlist ABOVE the two-level threshold, so both
 # assignment and probing route super -> sub (VERDICT r9 #2)
 _IVF_HIER_NLIST, _IVF_HIER_NPROBE, _IVF_HIER_NSUP = 128, 16, 4
-_IVF_HIER_SQL_CACHE: dict[str, str] = {}
 
 
 def _q_ann_ivf_hier(spark, sf_dir):
@@ -2713,8 +2689,8 @@ def _q_ann_ivf_hier(spark, sf_dir):
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, nlist=_IVF_HIER_NLIST, nprobe=_IVF_HIER_NPROBE,
         seed=_IVF_SEED, nprobe_super=_IVF_HIER_NSUP,
-        model_cache=_IVF_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        model_cache=MEMO,
+        cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    _IVF_HIER_NLIST, _IVF_SEED),
     )
 
@@ -2739,8 +2715,9 @@ def _sql_ann_ivf_hier() -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    if sf_dir in _IVF_HIER_SQL_CACHE:
-        return _IVF_HIER_SQL_CACHE[sf_dir]
+    key = ("ivf_hier_sql", sf_dir)
+    if key in MEMO:
+        return MEMO[key]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -2759,7 +2736,7 @@ def _sql_ann_ivf_hier() -> str:
     sql = _ivf_hier_oracle_sql(
         si, ci, owner, _IVF_HIER_NPROBE, _IVF_HIER_NSUP
     )
-    _IVF_HIER_SQL_CACHE[sf_dir] = sql
+    MEMO[key] = sql
     return sql
 
 
@@ -2858,7 +2835,6 @@ _ANN_SIZED_NPROBE = 8
 # the corpus grows (256 down to a floor of 4), which is exactly how
 # FAISS trains million-cell quantizers.
 _ANN_SIZED_SKETCH_CAP = 1 << 18
-_ANN_SIZED_SQL_CACHE: dict[str, str] = {}
 
 
 def _ann_sized_tpc(nlist: int) -> int:
@@ -2900,8 +2876,8 @@ def _q_ann_ivf_sized(spark, sf_dir):
         k=_ANN_K, nlist=nlist, nprobe=_ANN_SIZED_NPROBE,
         seed=_IVF_SEED, nprobe_super=_IVF_HIER_NSUP,
         train_per_cell=_ann_sized_tpc(nlist),
-        model_cache=_IVF_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        model_cache=MEMO,
+        cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    nlist, _IVF_SEED),
     )
 
@@ -2925,8 +2901,9 @@ def _sql_ann_ivf_sized() -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    if sf_dir in _ANN_SIZED_SQL_CACHE:
-        return _ANN_SIZED_SQL_CACHE[sf_dir]
+    key = ("ann_sized_sql", sf_dir)
+    if key in MEMO:
+        return MEMO[key]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -2945,7 +2922,7 @@ def _sql_ann_ivf_sized() -> str:
         sql = _ivf_hier_oracle_sql(
             si, ci, owner, _ANN_SIZED_NPROBE, _IVF_HIER_NSUP
         )
-    _ANN_SIZED_SQL_CACHE[sf_dir] = sql
+    MEMO[key] = sql
     return sql
 
 
@@ -5709,9 +5686,6 @@ FROM exact LEFT JOIN est USING (o_orderpriority)
 """
 
 
-_ZORDER_CACHE: dict = {}
-
-
 def _q_zorder_scan(spark, sf_dir):
     """OPTIMIZE ZORDER BY on the correctness surface (r07): events
     written ONCE per (session, sf_dir) z-order-clustered on
@@ -5734,10 +5708,8 @@ def _q_zorder_scan(spark, sf_dir):
     from parquet_sampler_spark.sources.io import write_parquet
 
     norm = os.path.abspath(os.path.normpath(sf_dir))
-    key = (spark.sparkContext.applicationId, norm)
-    # re-validate the cached dir: clear_caches() rmtree's the session
-    # tmp roots, so a cache hit must re-check the bytes are still there
-    if key not in _ZORDER_CACHE or not os.path.isdir(_ZORDER_CACHE[key]):
+    key = ("zorder", spark.sparkContext.applicationId, norm)
+    if key not in MEMO:
         tag = hashlib.sha1(norm.encode()).hexdigest()[:8]
         out = os.path.join(
             session_tmp_dir(spark, "zorder_events"), tag
@@ -5749,8 +5721,8 @@ def _q_zorder_scan(spark, sf_dir):
             ),
             out,
         )
-        _ZORDER_CACHE[key] = out
-    z = spark.read.parquet(_ZORDER_CACHE[key])
+        MEMO[key] = out
+    z = read_parquet(spark, MEMO[key])
     return z.filter(
         (F.col("user_id") <= 50)
         & (F.col("value") >= 100.0) & (F.col("value") <= 200.0)
@@ -5763,7 +5735,6 @@ WHERE user_id <= 50 AND value >= 100.0 AND value <= 200.0
 """
 
 
-_COMPACT_CACHE: dict = {}
 _COMPACT_SMALL_FILES = 64
 _COMPACT_TARGET_FILES = 4
 
@@ -5784,7 +5755,7 @@ def _q_compaction_scan(spark, sf_dir):
     the raw table: a hash-green full read of the compacted layout
     proves losslessness end-to-end. File-count and clustering
     properties are pinned by pytest (test_scale_smoke)."""
-    return spark.read.parquet(_compacted_events_path(spark, sf_dir))
+    return read_parquet(spark, _compacted_events_path(spark, sf_dir))
 
 
 def _compacted_events_path(spark, sf_dir) -> str:
@@ -5797,8 +5768,8 @@ def _compacted_events_path(spark, sf_dir) -> str:
     from parquet_sampler_spark.queries import session_tmp_dir
 
     norm = os.path.abspath(os.path.normpath(sf_dir))
-    key = (spark.sparkContext.applicationId, norm)
-    if key not in _COMPACT_CACHE or not os.path.isdir(_COMPACT_CACHE[key]):
+    key = ("compact", spark.sparkContext.applicationId, norm)
+    if key not in MEMO:
         tag = hashlib.sha1(norm.encode()).hexdigest()[:8]
         base = os.path.join(session_tmp_dir(spark, "compact_events"), tag)
         small = os.path.join(base, "small")
@@ -5807,14 +5778,14 @@ def _compacted_events_path(spark, sf_dir) -> str:
         _events(spark, sf_dir).repartition(_COMPACT_SMALL_FILES) \
             .write.mode("overwrite").parquet(small)
         (
-            spark.read.parquet(small)
+            read_parquet(spark, small)
             .repartitionByRange(
                 _COMPACT_TARGET_FILES, "user_id", "event_id"
             )
             .write.mode("overwrite").parquet(compacted)
         )
-        _COMPACT_CACHE[key] = compacted
-    return _COMPACT_CACHE[key]
+        MEMO[key] = compacted
+    return MEMO[key]
 
 
 _SQL_COMPACTION_SCAN = """
@@ -6597,10 +6568,6 @@ FROM hist WHERE NOT is_deleted
 """
 
 
-# written-once-per-session partitioned orders tree for dpp_scan (same
-# per-(session, sf_dir) pattern as queries_olap's _MERGE_CACHE)
-_DPP_CACHE: dict = {}
-
 _DPP_PRIORITIES = (
     "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW",
 )
@@ -6629,22 +6596,21 @@ def _q_dpp_scan(spark, sf_dir):
 
     from parquet_sampler_spark.queries import session_tmp_dir
 
-    # normalized + sha1-suffixed like _ZORDER_CACHE: without the
-    # per-sf_dir path tag a second scale factor in the same session
-    # would overwrite the first's tree while its cache entry still
-    # passed the isdir guard — returning wrong-sf data
+    # written once per (session, sf_dir), path normalized and
+    # sha1-suffixed like the z-order tree: without the per-sf_dir path
+    # tag a second scale factor in the same session would overwrite
+    # the first's tree while its memo entry still pointed at it —
+    # returning wrong-sf data
     norm = os.path.abspath(os.path.normpath(sf_dir))
-    key = (spark.sparkContext.applicationId, norm)
-    # isdir guard: clear_caches() wipes the session tmp roots, so a
-    # cached path may dangle (same self-heal as _ZORDER_CACHE)
-    if key not in _DPP_CACHE or not os.path.isdir(_DPP_CACHE[key]):
+    key = ("dpp", spark.sparkContext.applicationId, norm)
+    if key not in MEMO:
         tag = hashlib.sha1(norm.encode()).hexdigest()[:8]
         out = f"{session_tmp_dir(spark, 'dpp')}/{tag}/orders"
         _t(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
             "o_orderpriority"
         ).parquet(out)
-        _DPP_CACHE[key] = out
-    fact = spark.read.parquet(_DPP_CACHE[key])
+        MEMO[key] = out
+    fact = read_parquet(spark, MEMO[key])
 
     dim = _t(spark, sf_dir, "region").select(
         F.element_at(
@@ -7210,8 +7176,6 @@ _SEM_TAU = 0.92          # ~constant size as the corpus grows
 _SEM_SEED = 42
 _SEM_INJECT_EVERY = 5
 _SEM_ID_OFFSET = 1_000_000_000
-_SEM_MODEL_CACHE: dict = {}
-_SEM_SQL_CACHE: dict[str, str] = {}
 
 
 def _sem_nlist(sf_dir: str) -> int:
@@ -7244,8 +7208,8 @@ def _q_semantic_dedup(spark, sf_dir):
     return semantic_dedup(
         corpus, "vec_id", "embedding",
         nlist=_sem_nlist(sf_dir), tau=_SEM_TAU, seed=_SEM_SEED,
-        model_cache=_SEM_MODEL_CACHE,
-        cache_key=(spark.sparkContext.applicationId, sf_dir,
+        model_cache=MEMO,
+        cache_key=("sem_model", spark.sparkContext.applicationId, sf_dir,
                    _SEM_NLIST_DIV, _SEM_SEED),
     )
 
@@ -7266,8 +7230,9 @@ def _sql_semantic_dedup() -> str:
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
-    if sf_dir in _SEM_SQL_CACHE:
-        return _SEM_SQL_CACHE[sf_dir]
+    key = ("sem_sql", sf_dir)
+    if key in MEMO:
+        return MEMO[key]
     tbl = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -7371,7 +7336,7 @@ dropped AS (
 SELECT a.vec_id, a.cell FROM assign a
 WHERE a.vec_id NOT IN (SELECT vec_id FROM dropped)
 """
-    _SEM_SQL_CACHE[sf_dir] = sql
+    MEMO[key] = sql
     return sql
 
 
@@ -7444,25 +7409,22 @@ FROM cand WHERE rn = 1
 
 _BPE_ROUNDS = 4
 
-# session-scoped merge tables: the trainer is deterministic given
-# (corpus, rounds), so the four BPE rows legitimately share ONE fit —
-# the _PAIRS_CACHE pattern. The cached value is the COLLECTED K-row
-# table (bounded by construction), not a DataFrame, so there is
-# nothing to unpersist; bench charges the fit to setup_bpe_model /
-# setup_bpe_holdout_model. Cleared by queries.clear_caches().
-_BPE_MERGES_CACHE: dict = {}
-
-
 def _bpe_merges_cached(spark, sf_dir, train_sources=None):
+    """Session-scoped merge table: the trainer is deterministic given
+    (corpus, rounds), so the four BPE rows legitimately share ONE fit.
+    The memoized value is the COLLECTED K-row table (bounded by
+    construction), not a DataFrame; bench charges the fit to
+    setup_bpe_model / setup_bpe_holdout_model."""
     import os as _os
 
     key = (
+        "bpe_merges",
         spark.sparkContext.applicationId,
         _os.path.abspath(_os.path.normpath(sf_dir)),
         _BPE_ROUNDS,
         tuple(train_sources or ()),
     )
-    if key not in _BPE_MERGES_CACHE:
+    if key not in MEMO:
         from parquet_sampler_spark.operators.vocab import bpe_merge_rounds
 
         d = _t(spark, sf_dir, "documents")
@@ -7471,10 +7433,10 @@ def _bpe_merges_cached(spark, sf_dir, train_sources=None):
         rows = bpe_merge_rounds(
             d, "doc_id", "text", rounds=_BPE_ROUNDS
         ).collect()
-        _BPE_MERGES_CACHE[key] = [
+        MEMO[key] = [
             (r["round"], r["pair"], r["merged"], r["cnt"]) for r in rows
         ]
-    return _BPE_MERGES_CACHE[key]
+    return MEMO[key]
 
 
 def _q_bpe_merges(spark, sf_dir):

@@ -14,6 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_sampler_spark.plans.cache import MEMO
 from parquet_sampler_spark.queries import table as _t
 
 
@@ -819,12 +820,6 @@ SELECT * FROM (
 """
 
 
-# merge_upsert's result feeds both its own query and diff_snapshots;
-# persist one copy per (session, sf_dir) — mirrors the pairs cache in
-# queries_ext (so diff_snapshots benches the diff, not the merge twice).
-_MERGE_CACHE: dict = {}
-
-
 def _merge_batch(spark, sf_dir):
     """The deterministic synthetic CDC batch: every 100th customer
     re-priced, every 250th deleted, 3 inserts. Shared by merge_upsert
@@ -851,9 +846,12 @@ def _q_merge_upsert(spark, sf_dir):
     the customer snapshot."""
     from parquet_sampler_spark.operators.merge import merge_upsert
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MERGE_CACHE:
-        return _MERGE_CACHE[key]
+    # the merge feeds both this query and diff_snapshots: persist one
+    # copy per (session, sf_dir), so diff_snapshots benches the diff,
+    # not the merge twice
+    key = ("merge", spark.sparkContext.applicationId, sf_dir)
+    if key in MEMO:
+        return MEMO[key]
 
     c = _t(spark, sf_dir, "customer")
     batch = _merge_batch(spark, sf_dir)
@@ -862,7 +860,7 @@ def _q_merge_upsert(spark, sf_dir):
                  "c_mktsegment"),
         batch, ["c_custkey"], delete_col="is_deleted",
     ).persist()
-    _MERGE_CACHE[key] = merged
+    MEMO[key] = merged
     return merged
 
 

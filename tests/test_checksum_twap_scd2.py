@@ -230,7 +230,8 @@ def test_dpp_scan_prunes_partitions(spark):
     (dynamicpruningexpression in the scan's PartitionFilters) and every
     surviving row must come from the single matching partition
     directory — the 100 TB fact⋈dim read-only-matching-dirs property."""
-    from parquet_sampler_spark.queries_ext import _DPP_CACHE, _q_dpp_scan
+    from parquet_sampler_spark.plans.cache import MEMO
+    from parquet_sampler_spark.queries_ext import _q_dpp_scan
     from tests.conftest import SF_MED
 
     q = _q_dpp_scan(spark, SF_MED)
@@ -239,7 +240,7 @@ def test_dpp_scan_prunes_partitions(spark):
     )
     assert "dynamicpruningexpression" in plan
 
-    fact_dir = _DPP_CACHE[(spark.sparkContext.applicationId, SF_MED)]
+    fact_dir = MEMO[("dpp", spark.sparkContext.applicationId, SF_MED)]
     fact = spark.read.parquet(fact_dir)
     from pyspark.sql import functions as F
     dim = spark.createDataFrame([("3-MEDIUM",)], "priority string")

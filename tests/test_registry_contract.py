@@ -62,10 +62,11 @@ def test_clear_caches_drops_coreset_oracle_sql(monkeypatch):
     data-fitted oracle caches, or a regenerated directory is checked
     against stale literals."""
     from parquet_sampler_spark import queries_ext
+    from parquet_sampler_spark.plans.cache import MEMO
     from parquet_sampler_spark.queries import clear_caches
 
     monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_SMALL)
     sql = queries_ext._sql_ivf_coreset()
-    assert queries_ext._CORESET_SQL_CACHE[SF_SMALL] == sql
+    assert MEMO[("coreset_sql", SF_SMALL)] == sql
     clear_caches()
-    assert queries_ext._CORESET_SQL_CACHE == {}
+    assert ("coreset_sql", SF_SMALL) not in MEMO

@@ -313,11 +313,12 @@ def test_compaction_restores_file_count_and_clusters(spark):
     import pyarrow.parquet as pq
 
     from parquet_sampler_spark import queries_ext as QX
+    from parquet_sampler_spark.plans.cache import MEMO
 
     sf = "/root/testdata/sf0.01"
     out = QX._q_compaction_scan(spark, sf)
-    compacted = QX._COMPACT_CACHE[
-        (spark.sparkContext.applicationId, os.path.abspath(sf))
+    compacted = MEMO[
+        ("compact", spark.sparkContext.applicationId, os.path.abspath(sf))
     ]
     small = os.path.join(os.path.dirname(compacted), "small")
 

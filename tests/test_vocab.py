@@ -177,19 +177,25 @@ def test_bpe_merge_cache_keys_on_sfdir_and_filter(spark):
     # holdout fit (train half) and the full-corpus fit are different
     # tables, and repeat calls return the cached object, not a retrain
     from parquet_sampler_spark import queries_ext as qe
+    from parquet_sampler_spark.plans.cache import MEMO
 
-    qe._BPE_MERGES_CACHE.clear()
+    def fits():
+        return [k for k in MEMO if k[0] == "bpe_merges"]
+
+    for k in fits():
+        del MEMO[k]
     full = qe._bpe_merges_cached(spark, "/root/testdata/sf0.001")
     again = qe._bpe_merges_cached(spark, "/root/testdata/sf0.001")
     assert again is full
     half = qe._bpe_merges_cached(
         spark, "/root/testdata/sf0.001", qe._BPE_TRAIN_SRC
     )
-    assert len(qe._BPE_MERGES_CACHE) == 2
+    assert len(fits()) == 2
     assert len(full) == len(half) == qe._BPE_ROUNDS
     # counts must differ: the train half sees ~half the corpus tokens
     assert [r[3] for r in full] != [r[3] for r in half]
-    qe._BPE_MERGES_CACHE.clear()
+    for k in fits():
+        del MEMO[k]
 
 
 def test_bpe_decode_inverts_encode(spark):
