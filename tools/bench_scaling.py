@@ -10,10 +10,11 @@ dominates, and alpha well above 1 at the largest step flags a plan
 whose cost grows super-linearly in data volume (the 100 TB red flag).
 
 Caveats: local[32] with JVM warm-up and noisy-neighbor variance (the
-container shares a host); each timing is the min of REPS runs with
-operator caches cleared between runs, and only the largest step
-(sf0.01 -> sf0.1, 60k -> 600k lineitem rows) is big enough for the
-exponent to mean much — the smaller step is reported for trend only.
+container shares a host); each timing is the min of REPS cold runs
+of bench.time_cell (a consumer's setup_* build is its own row), and
+only the largest step (sf0.01 -> sf0.1, 60k -> 600k lineitem rows) is
+big enough for the exponent to mean much — the smaller step is
+reported for trend only.
 
 Usage: python tools/bench_scaling.py [query ...]
 Prints a markdown table (for SCALING.md) and one JSON line.
@@ -24,11 +25,12 @@ from __future__ import annotations
 import json
 import math
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import SETUP_OF, time_cell, with_setups  # noqa: E402
 
 SF_DIRS = [
     ("0.001", "/root/testdata/sf0.001"),
@@ -45,10 +47,6 @@ SF1_TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-# Round-7: the allowlist that used to live here is gone — the
-# round-6 generator emits the full 10-table star, so EVERY registry
-# query can take an sf1 cell; the file check below is the only gate
-# (a stale 3-table sf1 still degrades to the 3-sf run).
 
 # the most expensive entries of BENCH_r02 — the queries whose growth
 # behavior decides whether the suite survives a scale-up
@@ -64,148 +62,6 @@ DEFAULT_QUERIES = [
 
 REPS = 2
 SUPERLINEAR_ALPHA = 1.25
-
-# Queries whose first call after clear_caches() pays a ONE-TIME
-# session fixture build (bench.py's setup_* pattern): time the
-# fixture and the query separately, else the per-rep rebuild is
-# charged to the operator and its exponent measures the fixture
-# write, not the plan (r8 VERDICT #3 — manifest_prune's α 0.41 was
-# its 64-shard rewrite). The builder is invoked first (cold), then
-# the query runs against the warm fixture.
-FIXTURES: dict[str, str] = {
-    "manifest_prune": "setup_manifest",
-    "compaction_scan": "setup_compaction",
-    "semantic_dedup": "setup_sem_model",
-    "ann_ivfpq_residual": "setup_ivfpqr_model",
-    "ann_ivfpq_residual8": "setup_ivfpqr8_model",
-    "ann_ivf_hier": "setup_ivf_hier_model",
-    "ann_ivf_sized": "setup_ivf_sized_model",
-    "bpe_merges": "setup_bpe_model",
-    "bpe_encode": "setup_bpe_model",
-    "pack_sequences_bpe": "setup_bpe_model",
-    "bpe_encode_holdout": "setup_bpe_holdout_model",
-    "dup_triangles": "setup_dup_graph",
-    "minhash_incremental": "setup_minhash_index",
-    "quality_rarity_bigram": "setup_bigram_model",
-    "quality_rarity_trigram": "setup_trigram_model",
-    "embedding_neardup_incremental": "setup_embneardup_index",
-    "embedding_neardup_incremental_ivf": "setup_embneardup_ivf_index",
-    "embedding_neardup_incremental_ivf_sized":
-        "setup_embneardup_ivf_sized_index",
-    # admit's corpus probe reuses the sign-bit gate's standing state
-    # (identical plan semantics -> shared persisted relations)
-    "embedding_admit": "setup_embneardup_index",
-    # admit reuses the same standing state as the probe row; its
-    # timed cost = index probe + batch-internal self-join + anti-joins
-    "minhash_admit": "setup_minhash_index",
-    # the two-chunk staging WRITE is data-volume bound; the timed row
-    # should measure the stream drain
-    "streaming_sample": "setup_stream_chunks",
-    # yesterday's snapshot store is standing state; the timed row is
-    # drift-diff + selective re-publish + read-back (r12 VERDICT #4)
-    "star_snapshot_refresh": "setup_star_v1",
-}
-
-
-def _fixture_builder(name: str):
-    from parquet_sampler_spark import queries_ext
-
-    if name in ("manifest_prune", "compaction_scan"):
-        return queries_ext._compacted_events_path
-    if name == "semantic_dedup":
-        # warm the KMeans model cache (bounded sketch + driver Lloyd):
-        # one full run trains it; the timed query then reuses it, so
-        # its exponent measures assign+pair+anti-join, not training
-        return lambda spark, sf_dir: queries_ext._q_semantic_dedup(
-            spark, sf_dir
-        ).count()
-    if name == "ann_ivfpq_residual":
-        # same contract: one run trains centroids + residual codebooks
-        return lambda spark, sf_dir: queries_ext._q_ann_ivfpq_residual(
-            spark, sf_dir
-        ).count()
-    if name == "ann_ivfpq_residual8":
-        return lambda spark, sf_dir: queries_ext._q_ann_ivfpq_residual8(
-            spark, sf_dir
-        ).count()
-    if name == "ann_ivf_hier":
-        return lambda spark, sf_dir: queries_ext._q_ann_ivf_hier(
-            spark, sf_dir
-        ).count()
-    if name == "ann_ivf_sized":
-        return lambda spark, sf_dir: queries_ext._q_ann_ivf_sized(
-            spark, sf_dir
-        ).count()
-    if name in ("bpe_merges", "bpe_encode", "pack_sequences_bpe"):
-        return lambda spark, sf_dir: queries_ext._bpe_merges_cached(
-            spark, sf_dir
-        )
-    if name == "bpe_encode_holdout":
-        return lambda spark, sf_dir: queries_ext._bpe_merges_cached(
-            spark, sf_dir, queries_ext._BPE_TRAIN_SRC
-        )
-    if name in ("minhash_incremental", "minhash_admit"):
-        # one full run builds + persists the corpus index and shingle
-        # relation (the standing state); the timed row then measures
-        # the batch probe — the operator's incremental cost
-        return lambda spark, sf_dir: queries_ext._q_minhash_incremental(
-            spark, sf_dir
-        ).count()
-    if name == "quality_rarity_bigram":
-        # one full run fits + persists the bigram/unigram model
-        # tables; the timed row then measures holdout scoring
-        return lambda spark, sf_dir: queries_ext._q_quality_rarity_bigram(
-            spark, sf_dir
-        ).count()
-    if name == "quality_rarity_trigram":
-        return (
-            lambda spark, sf_dir:
-            queries_ext._q_quality_rarity_trigram(spark, sf_dir).count()
-        )
-    if name in ("embedding_neardup_incremental", "embedding_admit"):
-        # one full run builds + persists the sign-bit bucket index and
-        # the normalized corpus vectors; the timed row measures the
-        # batch probe
-        return (
-            lambda spark, sf_dir:
-            queries_ext._q_embedding_neardup_incremental(
-                spark, sf_dir
-            ).count()
-        )
-    if name == "embedding_neardup_incremental_ivf":
-        # one full run fits the coarse quantizer and persists the
-        # cell-assignment index + normalized corpus; the timed row
-        # measures the batch probe (routing + cell join + verify)
-        return (
-            lambda spark, sf_dir:
-            queries_ext._q_embedding_neardup_incremental_ivf(
-                spark, sf_dir
-            ).count()
-        )
-    if name == "embedding_neardup_incremental_ivf_sized":
-        return (
-            lambda spark, sf_dir:
-            queries_ext._q_embedding_neardup_incremental_ivf_sized(
-                spark, sf_dir
-            ).count()
-        )
-    if name == "streaming_sample":
-        return lambda spark, sf_dir: queries_ext._stream_sample_staging(
-            spark, sf_dir
-        )
-    if name == "star_snapshot_refresh":
-        from parquet_sampler_spark import queries as _q
-
-        return lambda spark, sf_dir: _q._star_v1_store(spark, sf_dir)
-    if name == "dup_triangles":
-        # warm the shared LSH-verified pair graph (persisted per
-        # session): the triangle row should time the wedge joins,
-        # not the graph build the other graph rows already charge
-        # to setup_dup_graph
-        return lambda spark, sf_dir: queries_ext._dup_graph_cached(
-            spark, sf_dir
-        ).count()
-    raise KeyError(name)
 
 
 def main() -> None:
@@ -236,31 +92,16 @@ def main() -> None:
     if with_sf1:
         sf_dirs.append(("1", str(SF1_DIR)))
 
-    out_names = []
-    for n in names:
-        if n in FIXTURES:
-            out_names.append(FIXTURES[n])
-        out_names.append(n)
-    times: dict[str, dict[str, float]] = {n: {} for n in out_names}
+    times: dict[str, dict[str, float]] = {n: {} for n in with_setups(names)}
     for sf, sf_dir in sf_dirs:
         for name in names:
-            best = math.inf
-            best_setup = math.inf
-            for _ in range(REPS):
-                registry.clear_caches()
-                if name in FIXTURES:
-                    t0 = time.perf_counter()
-                    _fixture_builder(name)(spark, sf_dir)
-                    best_setup = min(
-                        best_setup, time.perf_counter() - t0
-                    )
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-            times[name][sf] = round(best, 3)
-            if name in FIXTURES:
-                times[FIXTURES[name]][sf] = round(best_setup, 3)
-    names = out_names
+            cells = [time_cell(spark, qs, name, sf_dir)
+                     for _ in range(REPS)]
+            times[name][sf] = round(min(c[1] for c in cells), 3)
+            if name in SETUP_OF:
+                times[SETUP_OF[name]][sf] = round(
+                    min(c[0] for c in cells), 3)
+    names = list(times)
 
     def alpha(lo_t: float, hi_t: float) -> float:
         return round(math.log(hi_t / lo_t) / math.log(10.0), 2)

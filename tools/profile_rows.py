@@ -12,10 +12,13 @@ bench's job) after one untimed warm pass of the FIRST rep absorbing
 plan compilation. The formatted plan lands in
 ``<plans-dir>/<name>_<suffix>.txt``.
 
-Setup rows (``setup_*``) are resolved through bench.py's own builders
-so the timed thing is exactly what the bench times; registry rows come
-from the queries() registry. Caches are cleared before each rep so
-fit-once state is re-paid — matching the bench's cache-reset protocol.
+Setup rows (``setup_*``) are resolved through bench.SETUPS, so the
+timed thing is exactly what the bench times (no plan is dumped for
+them); registry rows come from the queries() registry. Caches are
+cleared before each rep so fit-once state is re-paid — matching the
+bench's cache-reset protocol, which charges it to the setup row: a
+registry row that consumes one runs that setup's builder untimed
+first.
 """
 
 from __future__ import annotations
@@ -27,6 +30,8 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import SETUP_OF, SETUPS  # noqa: E402
 
 
 def noop(df) -> None:
@@ -70,22 +75,27 @@ def main() -> int:
     qs = registry.queries()
     out: dict[str, float] = {}
     for name in names:
-        if name not in qs:
-            print(f"?? {name}: not in registry", file=sys.stderr)
+        if name not in qs and name not in SETUPS:
+            print(f"?? {name}: not in registry or bench.SETUPS",
+                  file=sys.stderr)
             continue
-        fn = qs[name]
         best = None
         plan_txt = None
         for r in range(reps):
             if clear_between:
                 clear_caches()
+            if name in SETUP_OF:
+                SETUPS[SETUP_OF[name]][0](spark, sf_dir)
             spark.sparkContext.setJobDescription(f"profile:{name}#{r}")
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            noop(df)
+            if name in SETUPS:
+                SETUPS[name][0](spark, sf_dir)
+            else:
+                df = qs[name](spark, sf_dir)
+                noop(df)
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-            if plan_txt is None:
+            if plan_txt is None and name in qs:
                 plan_txt = df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"
                 )

@@ -12,9 +12,10 @@ An exponent near the noise floor at ONE decade can't distinguish
 measured decade closes the question: stable or falling exponents are
 the sub-linear claim, α > 1 names a plan to fix.
 
-Queries with a one-time session fixture (bench_scaling.FIXTURES) are
-split into a setup row and a warm-fixture query row, so the operator
-exponent never charges the fixture rewrite (r8 VERDICT #3).
+Each cell is bench.time_cell: a query that consumes a setup row
+(bench.SETUPS) is split into that setup row and a warm query row, so
+the operator exponent never charges the fixture rewrite (r8 VERDICT
+#3).
 
 Usage: python tools/scale_decade2.py [query ...]
 (defaults to the r07 tail; run tools/make_sf1.py + make_sf10.py first)
@@ -26,34 +27,17 @@ from __future__ import annotations
 import json
 import math
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
-sys.path.insert(0, str(REPO / "tools"))
 
-from bench_scaling import FIXTURES, _fixture_builder  # noqa: E402
+from bench import SETUP_OF, time_cell, with_setups  # noqa: E402
 
 DEFAULT_QUERIES = [
     "tpch_q13", "sql_correlated_subquery", "streaming_sessionize",
 ]
 REPS = 2
-
-
-def _force(df, name):
-    """Force full execution: FULL_EVAL_ROWS' count-plans eliminate
-    their real work (bench.py) — hash-fold every column instead."""
-    from bench import FULL_EVAL_ROWS
-
-    if name in FULL_EVAL_ROWS:
-        from pyspark.sql import functions as F
-
-        df.agg(F.expr(
-            "bit_xor(xxhash64(" + ", ".join(df.columns) + "))"
-        )).collect()
-        return df.count()
-    return df.count()
 
 
 def main() -> int:
@@ -74,35 +58,20 @@ def main() -> int:
         raise SystemExit(f"unknown queries: {unknown}")
     spark.read.parquet(f"{sf1}/lineitem.parquet").count()  # warmup
 
-    out_names = []
-    for n in names:
-        if n in FIXTURES:
-            out_names.append(FIXTURES[n])
-        out_names.append(n)
-    times: dict[str, dict[str, float]] = {n: {} for n in out_names}
+    times: dict[str, dict[str, float]] = {n: {} for n in with_setups(names)}
     for sf, sf_dir in (("1", str(sf1)), ("10", str(sf10))):
         for name in names:
-            best = math.inf
-            best_setup = math.inf
-            for _ in range(REPS):
-                registry.clear_caches()
-                if name in FIXTURES:
-                    t0 = time.perf_counter()
-                    _fixture_builder(name)(spark, sf_dir)
-                    best_setup = min(
-                        best_setup, time.perf_counter() - t0
-                    )
-                t0 = time.perf_counter()
-                _force(qs[name](spark, sf_dir), name)
-                best = min(best, time.perf_counter() - t0)
-            times[name][sf] = round(best, 3)
-            if name in FIXTURES:
-                times[FIXTURES[name]][sf] = round(best_setup, 3)
+            cells = [time_cell(spark, qs, name, sf_dir)
+                     for _ in range(REPS)]
+            times[name][sf] = round(min(c[1] for c in cells), 3)
+            if name in SETUP_OF:
+                times[SETUP_OF[name]][sf] = round(
+                    min(c[0] for c in cells), 3)
 
     print("| query | sf1 s | sf10 s | α(1→10) |")
     print("|---|---|---|---|")
     alphas = {}
-    for name in out_names:
+    for name in times:
         t1, t10 = times[name]["1"], times[name]["10"]
         a = round(math.log(t10 / t1) / math.log(10.0), 2)
         alphas[name] = a

@@ -6,10 +6,10 @@ orders / documents / events, so the default query set is the slice's
 reason to exist: the reference workflow (sample_lineitem →
 semijoin_orders), manifest_prune (events fixture), and the
 documents-heavy LLM rows (ngram_dup_spans, bloom_decontaminate,
-pack_sequences). Queries with a one-time session fixture
-(bench_scaling.FIXTURES) split into setup + warm rows exactly like
-the earlier decades, so the operator exponent never charges the
-fixture write.
+pack_sequences). Each cell is bench.time_cell, like the earlier
+decades: a query that consumes a setup row (bench.SETUPS) splits into
+setup + warm rows, so the operator exponent never charges the fixture
+write.
 
 Usage: python tools/scale_decade3.py [query ...]
 (run tools/make_sf1.py, make_sf10.py, make_sf100.py first)
@@ -22,14 +22,12 @@ import json
 import math
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
-sys.path.insert(0, str(REPO / "tools"))
 
-from bench_scaling import FIXTURES, _fixture_builder  # noqa: E402
+from bench import SETUP_OF, time_cell, with_setups  # noqa: E402
 
 DEFAULT_QUERIES = [
     "sample_lineitem", "semijoin_orders", "manifest_prune",
@@ -39,21 +37,6 @@ DEFAULT_QUERIES = [
 # dedup family at sf100) where 2 cold reps would double a multi-hour
 # measurement for a best-of that host noise dominates anyway
 REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
-
-
-def _force(df, name):
-    """Force full execution: FULL_EVAL_ROWS' count-plans eliminate
-    their real work (bench.py) — hash-fold every column instead."""
-    from bench import FULL_EVAL_ROWS
-
-    if name in FULL_EVAL_ROWS:
-        from pyspark.sql import functions as F
-
-        df.agg(F.expr(
-            "bit_xor(xxhash64(" + ", ".join(df.columns) + "))"
-        )).collect()
-        return df.count()
-    return df.count()
 
 
 def main() -> int:
@@ -82,55 +65,28 @@ def main() -> int:
     sf1 = REPO / ".scratch" / "sf1"
     if sf1.is_dir():
         for name in names:
-            registry.clear_caches()
-            if name in FIXTURES:
-                _fixture_builder(name)(spark, str(sf1))
-            _force(qs[name](spark, str(sf1)), name)
-        registry.clear_caches()
-        spark.sparkContext._jvm.System.gc()
+            time_cell(spark, qs, name, str(sf1))
 
-    out_names = []
-    for n in names:
-        if n in FIXTURES:
-            out_names.append(FIXTURES[n])
-        out_names.append(n)
-    times: dict[str, dict[str, float]] = {n: {} for n in out_names}
+    times: dict[str, dict[str, float]] = {n: {} for n in with_setups(names)}
     for sf, sf_dir in (("10", str(sf10)), ("100", str(sf100))):
         for name in names:
-            best = math.inf
-            best_setup = math.inf
-            for _ in range(REPS):
-                registry.clear_caches()
-                # force ContextCleaner GC so the previous rep's /
-                # query's shuffle files are deleted NOW — in a long
-                # local session they otherwise accumulate until the
-                # JVM happens to GC, and the sf100 banded-dedup pass
-                # fills the disk with orphaned shuffle data (r11:
-                # two decade runs died on No-space-left before this)
-                spark.sparkContext._jvm.System.gc()
-                if name in FIXTURES:
-                    t0 = time.perf_counter()
-                    _fixture_builder(name)(spark, sf_dir)
-                    best_setup = min(
-                        best_setup, time.perf_counter() - t0
-                    )
-                t0 = time.perf_counter()
-                _force(qs[name](spark, sf_dir), name)
-                best = min(best, time.perf_counter() - t0)
-            times[name][sf] = round(best, 3)
-            if name in FIXTURES:
-                times[FIXTURES[name]][sf] = round(best_setup, 3)
+            cells = [time_cell(spark, qs, name, sf_dir)
+                     for _ in range(REPS)]
+            best = round(min(c[1] for c in cells), 3)
+            times[name][sf] = best
+            setup = ""
+            if name in SETUP_OF:
+                times[SETUP_OF[name]][sf] = round(
+                    min(c[0] for c in cells), 3)
+                setup = f" setup={times[SETUP_OF[name]][sf]}s"
             # incremental cell print: a crash on a later (bigger)
             # query must not lose completed measurements
-            print(f"[cell] {name} sf{sf} {round(best, 3)}s"
-                  + (f" setup={round(best_setup, 3)}s"
-                     if name in FIXTURES else ""),
-                  flush=True)
+            print(f"[cell] {name} sf{sf} {best}s{setup}", flush=True)
 
     print("| query | sf10 s | sf100 s | α(10→100) |")
     print("|---|---|---|---|")
     alphas = {}
-    for name in out_names:
+    for name in times:
         t10, t100 = times[name]["10"], times[name]["100"]
         a = round(math.log(t100 / t10) / math.log(10.0), 2)
         alphas[name] = a

@@ -5,14 +5,13 @@ the cells measure the OPERATOR's exponent, not the standard fixture's
 bounded-vocabulary artifact (see SCALING.md r11 census).
 
 Protocol mirrors tools/scale_decade3.py: sf1-tier plan warmup (cold
-first execution ≈ 3× warm), cache clear + forced shuffle-file GC
-before each timed cell, single rep (SPARK_DRIVER_MEMORY=32g
+first execution ≈ 3× warm), then one bench.time_cell per timed cell
+(cache clear + forced shuffle-file GC first; SPARK_DRIVER_MEMORY=32g
 recommended). Queries run the REGISTRY functions over the fixture
-dirs — same code path as the gate rows. Queries with a one-time
-standing-state fixture (bench_scaling.FIXTURES — e.g. the
-minhash_incremental/minhash_admit corpus index) split into setup +
-warm rows (r12 VERDICT #3: the Θ(batch) probe claim needs a cell
-that does not carry the index build).
+dirs — same code path as the gate rows. A query that consumes a setup
+row (bench.SETUPS — e.g. the minhash_incremental/minhash_admit corpus
+index) splits into setup + warm rows (r12 VERDICT #3: the Θ(batch)
+probe claim needs a cell that does not carry the index build).
 
 Usage: SPARK_DRIVER_MEMORY=32g python tools/scale_decade3_heaps.py \
     [query ...]   (default: minhash_pairs minhash_pairs_weighted_win)
@@ -23,28 +22,14 @@ from __future__ import annotations
 import json
 import math
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import SETUP_OF, time_cell, with_setups  # noqa: E402
+
 DEFAULT = ["minhash_pairs", "minhash_pairs_weighted_win"]
-
-
-def _force(df, name):
-    """Force full execution: FULL_EVAL_ROWS' count-plans eliminate
-    their real work (bench.py) — hash-fold every column instead."""
-    from bench import FULL_EVAL_ROWS
-
-    if name in FULL_EVAL_ROWS:
-        from pyspark.sql import functions as F
-
-        df.agg(F.expr(
-            "bit_xor(xxhash64(" + ", ".join(df.columns) + "))"
-        )).collect()
-        return df.count()
-    return df.count()
 
 
 def main() -> int:
@@ -62,44 +47,25 @@ def main() -> int:
     spark = get_spark("scale-decade3-heaps")
     qs = registry.queries()
 
-    sys.path.insert(0, str(REPO / "tools"))
-    from bench_scaling import FIXTURES, _fixture_builder
-
-    def run(name, tier):
-        registry.clear_caches()
-        spark.sparkContext._jvm.System.gc()
-        setup = None
-        if name in FIXTURES:
-            t0 = time.perf_counter()
-            _fixture_builder(name)(spark, str(root / tier))
-            setup = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        cnt = _force(qs[name](spark, str(root / tier)), name)
-        return round(time.perf_counter() - t0, 3), cnt, setup
-
-    out_names = []
-    for n in names:
-        if n in FIXTURES:
-            out_names.append(FIXTURES[n])
-        out_names.append(n)
-    times: dict[str, dict[str, float]] = {n: {} for n in out_names}
+    times: dict[str, dict[str, float]] = {n: {} for n in with_setups(names)}
     rows: dict[str, dict[str, int]] = {n: {} for n in names}
     for name in names:
-        run(name, "sf1")  # plan warmup, untimed tier
+        time_cell(spark, qs, name, str(root / "sf1"))  # plan warmup
         for tier in ("sf10", "sf100"):
-            dt, cnt, setup = run(name, tier)
-            times[name][tier] = dt
+            setup, dt, cnt = time_cell(spark, qs, name, str(root / tier))
+            times[name][tier] = round(dt, 3)
             rows[name][tier] = cnt
+            note = ""
             if setup is not None:
-                times[FIXTURES[name]][tier] = setup
-            print(f"[cell] {name} {tier} {dt}s rows={cnt}"
-                  + (f" setup={setup}s" if setup is not None else ""),
+                times[SETUP_OF[name]][tier] = round(setup, 3)
+                note = f" setup={round(setup, 3)}s"
+            print(f"[cell] {name} {tier} {round(dt, 3)}s rows={cnt}{note}",
                   flush=True)
 
     print("| query | sf10 s | sf100 s | α(10→100) | pairs sf10 → sf100 |")
     print("|---|---|---|---|---|")
     alphas = {}
-    for n in out_names:
+    for n in times:
         t10, t100 = times[n]["sf10"], times[n]["sf100"]
         a = round(math.log(t100 / t10) / math.log(10.0), 2)
         alphas[n] = a
