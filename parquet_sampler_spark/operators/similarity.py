@@ -182,33 +182,32 @@ def _unit_dot_arrow(va: pd.Series, vb: pd.Series) -> pd.Series:
     """
     al = va.tolist()
     bl = vb.tolist()
-    if not al:
-        return pd.Series([], dtype=np.float64)
     # degenerate rows follow the fold exactly (r14 ADVICE): a NULL
-    # array on either side → NULL (zip_with propagates null through
-    # aggregate); a zero-length pair → 0.0 (the fold's init)
+    # array on either side, or two arrays of different lengths
+    # (zip_with pads the shorter with NULL, which the sum propagates)
+    # → NULL; a zero-length pair → 0.0 (the fold's init)
     null_mask = np.array(
-        [a is None or b is None for a, b in zip(al, bl)], dtype=bool
+        [a is None or b is None or len(a) != len(b)
+         for a, b in zip(al, bl)],
+        dtype=bool,
     )
     out = np.zeros(len(al), dtype=np.float64)
-    if not null_mask.any():
-        lens = {len(x) for x in al}
-        if len(lens) == 1:
-            d = next(iter(lens))
-            if d > 0:
-                a = np.array(al, dtype=np.float64)
-                b = np.array(bl, dtype=np.float64)
-                out[:] = np.add.accumulate(a * b, axis=1)[:, -1]
-            return pd.Series(out)
+    if not null_mask.any() and len({len(x) for x in al}) == 1:
+        # the embedding-column shape: one width on both sides
+        if len(al[0]):
+            a = np.array(al, dtype=np.float64)
+            b = np.array(bl, dtype=np.float64)
+            out[:] = np.add.accumulate(a * b, axis=1)[:, -1]
+        return pd.Series(out)
     # ragged / partially-null rows (not the embedding-column shape,
-    # but keep the general contract): group by length, same
-    # sequential fold; zero-length rows keep the 0.0 init
-    by_len: dict[int, list[int]] = {}
-    for i, x in enumerate(al):
-        if null_mask[i] or len(x) == 0:
-            continue
-        by_len.setdefault(len(x), []).append(i)
-    for d, idxs in by_len.items():
+    # but keep the general contract): group the equal-width pairs by
+    # (len(a), len(b)), same sequential fold; zero-length pairs keep
+    # the 0.0 init
+    by_len: dict[tuple[int, int], list[int]] = {}
+    for i, (x, y) in enumerate(zip(al, bl)):
+        if not null_mask[i] and len(x):
+            by_len.setdefault((len(x), len(y)), []).append(i)
+    for idxs in by_len.values():
         a = np.array([al[i] for i in idxs], dtype=np.float64)
         b = np.array([bl[i] for i in idxs], dtype=np.float64)
         out[idxs] = np.add.accumulate(a * b, axis=1)[:, -1]

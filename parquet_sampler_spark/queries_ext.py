@@ -14,7 +14,6 @@ Determinism notes (driver hashes values):
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -40,6 +39,7 @@ from parquet_sampler_spark.operators.similarity import (
     lsh_topk,
 )
 from parquet_sampler_spark.plans.cache import MEMO
+from parquet_sampler_spark.queries import fitted, row
 from parquet_sampler_spark.queries import table as _t
 from parquet_sampler_spark.sources.io import read_parquet
 
@@ -76,6 +76,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis
 # ---------------------------------------------------------------------------
 
+@row("text_stats", lambda: _sql_text_stats())
 def _q_text_stats(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -98,6 +99,7 @@ def _sql_text_stats():
     )
 
 
+@row("doc_fingerprint", lambda: _sql_doc_fingerprint())
 def _q_doc_fingerprint(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return d.select("doc_id", TX.fingerprint("text").alias("fp"))
@@ -109,6 +111,7 @@ def _sql_doc_fingerprint():
     )
 
 
+@row("text_clean", lambda: _sql_text_clean())
 def _q_text_clean(spark, sf_dir):
     """Normalization + PII redaction over documents. PII is synthesized
     deterministically INSIDE the query (the corpus itself contains
@@ -141,6 +144,7 @@ def _sql_text_clean():
     )
 
 
+@row("dataset_split", lambda: _sql_dataset_split())
 def _q_dataset_split(spark, sf_dir):
     """Deterministic train/val/test assignment by portable integer hash
     thresholds — any row's split is recomputable from its key alone, on
@@ -160,6 +164,7 @@ def _sql_dataset_split():
     )
 
 
+@row("repetition_stats", lambda: _sql_repetition_stats())
 def _q_repetition_stats(spark, sf_dir):
     """Gopher-style within-document repetition signals: duplicate
     bigram/trigram fractions per doc (degenerate-loop detector)."""
@@ -182,6 +187,7 @@ _QUOTA_CAP = 10
 _QUOTA_SEED = 7
 
 
+@row("source_quota", lambda: _sql_source_quota())
 def _q_source_quota(spark, sf_dir):
     """Per-source document quota (the RefinedWeb/C4-style per-domain
     cap): keep at most ``_QUOTA_CAP`` docs per source, chosen by the
@@ -221,6 +227,7 @@ SELECT doc_id, source, rn FROM (
 """
 
 
+@row("bucketed_join", lambda: _SQL_BUCKETED_JOIN)
 def _q_bucketed_join(spark, sf_dir):
     """Co-bucketed storage join: orders and customer written ONCE per
     session as catalog tables bucketed by custkey (the shuffle moves to
@@ -307,6 +314,7 @@ GROUP BY c_mktsegment
 _HLL_EPS = 0.05
 
 
+@row("hll_rollup", lambda: _SQL_HLL_ROLLUP)
 def _q_hll_rollup(spark, sf_dir):
     """Mergeable-sketch re-aggregation as a query: per-(day, type) HLL
     sketches of user_id built in one pass, then UNIONED per event_type
@@ -362,6 +370,7 @@ _QR_CAP = 512
 _QR_EPS = 0.01
 
 
+@row("quantile_rollup", lambda: _SQL_QUANTILE_ROLLUP)
 def _q_quantile_rollup(spark, sf_dir):
     """Mergeable-quantile re-aggregation as a query — the percentile
     analog of hll_rollup: per-(day, event_type) rank-grid summaries of
@@ -454,6 +463,7 @@ GROUP BY event_type
 _HH_K = 30
 
 
+@row("heavy_hitters", lambda: _SQL_HEAVY_HITTERS)
 def _q_heavy_hitters(spark, sf_dir):
     """Exact heavy hitters over the corpus token stream: every term in
     strictly more than 1/30 of all tokens, with exact counts — the
@@ -486,6 +496,7 @@ HAVING count(*) * {_HH_K} > (SELECT count(*) FROM t2)
 """
 
 
+@row("streaming_heavy_hitters", lambda: _SQL_HEAVY_HITTERS)
 def _q_streaming_heavy_hitters(spark, sf_dir):
     """Heavy hitters maintained ONLINE (r08) — third member of the
     sketch-as-streaming-state family (reservoir, quantiles, now
@@ -548,6 +559,7 @@ def _q_streaming_heavy_hitters(spark, sf_dir):
     )
 
 
+@row("streaming_late_watermark", lambda: _SQL_STREAMING_LATE_WATERMARK)
 def _q_streaming_late_watermark(spark, sf_dir):
     """Watermark DISCARD semantics pinned against a batch oracle that
     replicates the drop rule (r8 VERDICT #8): the events table is
@@ -666,6 +678,7 @@ GROUP BY win_start_us
 """
 
 
+@row("bigram_novelty", lambda: _sql_bigram_novelty())
 def _q_bigram_novelty(spark, sf_dir):
     """N-gram language-model commonality score per document: the mean
     corpus document-frequency of a doc's distinct bigrams — high means
@@ -735,6 +748,7 @@ GROUP BY doc_id
 """
 
 
+@row("bigram_novelty_salted", lambda: _sql_bigram_novelty())
 def _q_bigram_novelty_salted(spark, sf_dir):
     """The hot-gram skew-safe sibling of bigram_novelty (r11, VERDICT
     r10 #3): same statistic, but the per-gram document frequency comes
@@ -792,6 +806,7 @@ _BENCH_CUT = 20
 _DECON_T = 0.5
 
 
+@row("contamination_pairs", lambda: _SQL_CONTAMINATION_PAIRS)
 def _q_contamination_pairs(spark, sf_dir):
     """Cross-corpus (bipartite) n-gram overlap: training docs vs the
     benchmark slice — the decontamination primitive."""
@@ -807,6 +822,7 @@ def _q_contamination_pairs(spark, sf_dir):
     )
 
 
+@row("decontaminated", lambda: _SQL_DECONTAMINATED)
 def _q_decontaminated(spark, sf_dir):
     """Training corpus with benchmark-overlapping docs removed."""
     from parquet_sampler_spark.operators.dedup import decontaminate
@@ -856,6 +872,7 @@ _SQL_DECONTAMINATED = (
 )
 
 
+@row("corpus_pipeline", lambda: _sql_corpus_pipeline())
 def _q_corpus_pipeline(spark, sf_dir):
     """The flagship training-data journey as ONE composed plan:
     normalize → language + quality filter → exact dedup on the
@@ -910,6 +927,7 @@ FROM deduped
 # Dedup
 # ---------------------------------------------------------------------------
 
+@row("dedup_exact", lambda: _SQL_DEDUP_EXACT)
 def _q_dedup_exact(spark, sf_dir):
     return exact_dedup(_t(spark, sf_dir, "documents"), ["text"], "doc_id")
 
@@ -962,6 +980,7 @@ def _jaccard_pairs_cached(spark, sf_dir):
     return MEMO[key]
 
 
+@row("jaccard_pairs", lambda: _SQL_JACCARD_PAIRS)
 def _q_jaccard_pairs(spark, sf_dir):
     return _jaccard_pairs_cached(spark, sf_dir)
 
@@ -1032,6 +1051,7 @@ _SQL_JACCARD_PAIRS = (
 _JACCARD_DF_CAP = 42
 
 
+@row("jaccard_pairs_capped", lambda: _SQL_JACCARD_PAIRS_CAPPED)
 def _q_jaccard_pairs_capped(spark, sf_dir):
     """The scale form of jaccard_pairs: hot-shingle-capped exact join
     (``max_shingle_df`` — shingles over the df cap are dropped from
@@ -1085,6 +1105,7 @@ _SQL_JACCARD_PAIRS_CAPPED = (
 )
 
 
+@row("jaccard_dedup", lambda: _SQL_JACCARD_DEDUP)
 def _q_jaccard_dedup(spark, sf_dir):
     """Greedy keep-first near-dup filter. Rewired (r07) onto the
     shared LSH pair graph (`_dup_graph_cached`) — the registered scale
@@ -1111,6 +1132,7 @@ _SQL_JACCARD_DEDUP = (
 _CONTAIN_T = 0.8
 
 
+@row("containment_pairs", lambda: _SQL_CONTAINMENT_PAIRS)
 def _q_containment_pairs(spark, sf_dir):
     """Broder containment join (r12): the ASYMMETRIC near-dup
     statistic — max(|A∩B|/|A|, |A∩B|/|B|) over 2-gram shingle sets —
@@ -1166,6 +1188,7 @@ FROM cpairs WHERE greatest(cont_a, cont_b) >= {_CONTAIN_T}
 """
 
 
+@row("minhash_pairs", lambda: _SQL_JACCARD_PAIRS)
 def _q_minhash_pairs(spark, sf_dir):
     """MinHash-LSH near-dup candidates, exact-Jaccard verified.
 
@@ -1180,6 +1203,7 @@ def _q_minhash_pairs(spark, sf_dir):
     return _dup_graph_cached(spark, sf_dir)
 
 
+@row("minhash_incremental", lambda: _SQL_MINHASH_INCREMENTAL)
 def _q_minhash_incremental(spark, sf_dir):
     """Incremental (batch-vs-index) near-dup: every 10th document
     (doc_id % 10 = 0) plays the NEW crawl batch; the rest is the
@@ -1241,6 +1265,7 @@ def _incremental_split(spark, sf_dir):
     return corpus, batch
 
 
+@row("dedup_exact_incremental", lambda: _SQL_DEDUP_EXACT_INCREMENTAL)
 def _q_dedup_exact_incremental(spark, sf_dir):
     """The cheapest gate in the incremental-ingest stack (r12): which
     batch docs are VERBATIM copies of standing-corpus text? The corpus
@@ -1275,6 +1300,7 @@ FROM batch b JOIN cidx ON md5(concat_ws(chr(31), coalesce('v' || b.text, 'n'))) 
 """
 
 
+@row("curation_incremental", lambda: _sql_curation_incremental())
 def _q_curation_incremental(spark, sf_dir):
     """The incremental-ingest journey END TO END as one plan (r12, the
     session's capstone composite, mirroring curation_pipeline's
@@ -1392,6 +1418,7 @@ FROM hscore
 """
 
 
+@row("minhash_admit", lambda: _SQL_MINHASH_ADMIT)
 def _q_minhash_admit(spark, sf_dir):
     """The full incremental-ingest decision (the other half of
     minhash_incremental): which batch documents get APPENDED to the
@@ -1441,6 +1468,7 @@ WHERE jaccard >= {_JACCARD_T}
 """
 
 
+@row("simhash_pairs", lambda: _sql_simhash_pairs())
 def _q_simhash_pairs(spark, sf_dir):
     """SimHash Hamming-distance near-dup pairs, full value-hash oracle.
     max_hamming=1: this corpus's token sets are so self-similar that
@@ -1469,6 +1497,8 @@ def _q_simhash_pairs(spark, sf_dir):
 _SIMHASH_BAND_CAP = 48
 
 
+@row("simhash_pairs_capped",
+     lambda: _sql_simhash_pairs(max_band_df=_SIMHASH_BAND_CAP))
 def _q_simhash_pairs_capped(spark, sf_dir):
     """The scale form of simhash_pairs: hot-bucket-capped banding
     (``max_band_df`` — SCALING.md's fix for the measured sf1
@@ -1548,6 +1578,7 @@ _NEARDUP_DUP_MOD = 7    # every 7th vector gets a scaled twin (see below)
 _NEARDUP_DUP_OFF = 100_000
 
 
+@row("embedding_neardup", lambda: _sql_embedding_neardup())
 def _q_embedding_neardup(spark, sf_dir):
     """Near-IDENTICAL embedding dedup via the sub-quadratic plan:
     ``method="auto"`` resolves to sign-bit LSH banding + exact verify at
@@ -1600,6 +1631,8 @@ def _sql_embedding_neardup():
     )
 
 
+@row("embedding_neardup_incremental",
+     lambda: _sql_embedding_neardup_incremental())
 def _q_embedding_neardup_incremental(spark, sf_dir):
     """Incremental embedding near-dup (the SemDeDup ingest gate, r12):
     the scaled twins play the NEW batch and the raw embeddings table
@@ -1661,6 +1694,11 @@ def _sql_embedding_neardup_incremental():
 _EMBIVF_NLIST, _EMBIVF_NPROBE = 16, 2
 
 
+# the IVF-routed gate reproduces the sign-bit gate's exact output on
+# this corpus (recall 1 for the planted twins, exact verify) — the
+# oracle is shared verbatim
+@row("embedding_neardup_incremental_ivf",
+     lambda: _sql_embedding_neardup_incremental())
 def _q_embedding_neardup_incremental_ivf(spark, sf_dir):
     """IVF-routed form of the SemDeDup ingest gate (r13, VERDICT r12
     #5): same twins-as-batch construction, but the standing index is
@@ -1697,6 +1735,11 @@ def _q_embedding_neardup_incremental_ivf(spark, sf_dir):
     )
 
 
+# the sized form also keeps recall 1 for the qualifying set at any
+# nlist (unit twins share the argmin cell), so it shares the same
+# exact-cosine oracle too
+@row("embedding_neardup_incremental_ivf_sized",
+     lambda: _sql_embedding_neardup_incremental())
 def _q_embedding_neardup_incremental_ivf_sized(spark, sf_dir):
     """The IVF ingest gate at the SIZED operating point (r14): nlist
     derived from the parquet footer count by the same
@@ -1735,6 +1778,7 @@ def _q_embedding_neardup_incremental_ivf_sized(spark, sf_dir):
     )
 
 
+@row("embedding_admit", lambda: _sql_embedding_admit())
 def _q_embedding_admit(spark, sf_dir):
     """The embedding ingest DECISION (r13): which batch vectors get
     APPENDED to the standing corpus? Batch = the scaled twins (every
@@ -1829,6 +1873,7 @@ def _sql_embedding_admit():
     )
 
 
+@row("embedding_neardup_block", lambda: _sql_embedding_neardup_block())
 def _q_embedding_neardup_block(spark, sf_dir):
     """Loose-threshold (exploratory) near-dup sweep via the EXACT
     block-GEMM plan. Below ~0.9 the pair angle is wide enough that any
@@ -1862,6 +1907,7 @@ _ANN_NQ = 5  # query set: vec_id < 5
 _ANN_RANGE_T = 0.3  # radius: all neighbors at cosine >= 0.3
 
 
+@row("ann_topk", lambda: _sql_ann_topk())
 def _q_ann_topk(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     return cosine_topk(
@@ -1870,6 +1916,7 @@ def _q_ann_topk(spark, sf_dir):
     )
 
 
+@row("ann_range", lambda: _sql_ann_range())
 def _q_ann_range(spark, sf_dir):
     """Exact radius search (r12): all corpus vectors at cosine >=
     threshold from each query — the fixed-similarity complement of
@@ -1912,6 +1959,7 @@ SELECT query_id, neighbor_id, score, rank FROM (
 _IVF_NLIST, _IVF_NPROBE, _IVF_SEED = 16, 8, 42
 
 
+@row("ann_ivf", lambda: fitted(_sql_ann_ivf))
 def _q_ann_ivf(spark, sf_dir):
     """IVF (KMeans coarse quantizer) approximate top-k, full value-hash
     oracle since r5: the quantizer is data-fitted but DETERMINISTIC —
@@ -1938,6 +1986,7 @@ _JL_SEED = 4242
 _JL_EMB_DIM = 64
 
 
+@row("ann_jl", lambda: _sql_ann_jl())
 def _q_ann_jl(spark, sf_dir):
     """Johnson-Lindenstrauss projected top-k (r12): project to 16 dims
     with seeded Gaussian planes, shortlist 40 per query by PROJECTED
@@ -2011,6 +2060,7 @@ SELECT query_id, neighbor_id, score, rank FROM (
 _CORESET_M = 5
 
 
+@row("ivf_coreset", lambda: fitted(_sql_ivf_coreset))
 def _q_ivf_coreset(spark, sf_dir):
     """Cluster-balanced coreset (r12, Sorscher et al. 2022): the 5
     most prototypical vectors (smallest int64 quantized squared
@@ -2200,6 +2250,7 @@ def _sql_ann_ivf() -> str:
 _PQ_M, _PQ_NCODES, _PQ_RERANK, _PQ_SEED = 16, 16, 100, 42
 
 
+@row("ann_pq", lambda: fitted(_sql_ann_pq))
 def _q_ann_pq(spark, sf_dir):
     """Product-quantization approximate top-k (similarity.pq_topk) —
     the memory-bound ANN architecture: 16 codes × 4 bits per vector
@@ -2322,6 +2373,7 @@ SELECT query_id, neighbor_id, score, rank FROM (
     return sql
 
 
+@row("ann_ivfpq", lambda: fitted(_sql_ann_ivfpq))
 def _q_ann_ivfpq(spark, sf_dir):
     """IVF+PQ approximate top-k (similarity.ivfpq_topk) — the
     production large-corpus ANN composition: the IVF coarse quantizer
@@ -2471,6 +2523,7 @@ SELECT query_id, neighbor_id, score, rank FROM (
     return sql
 
 
+@row("ann_ivfpq_residual", lambda: fitted(_sql_ann_ivfpq_residual))
 def _q_ann_ivfpq_residual(spark, sf_dir):
     """IVF+PQ with RESIDUAL (FAISS IVFADC) codes — the production ANN
     shape promoted to the correctness surface (r10, VERDICT r9 #1):
@@ -2644,6 +2697,8 @@ SELECT query_id, neighbor_id, score, rank FROM (
     return sql
 
 
+@row("ann_ivfpq_residual8",
+     lambda: fitted(_sql_ann_ivfpq_residual, ncodes=256))
 def _q_ann_ivfpq_residual8(spark, sf_dir):
     """The FULL production ANN shape (r10): residual (IVFADC) coding
     at BYTE-wide codebooks (ncodes=256, the FAISS-standard
@@ -2672,6 +2727,7 @@ def _q_ann_ivfpq_residual8(spark, sf_dir):
 _IVF_HIER_NLIST, _IVF_HIER_NPROBE, _IVF_HIER_NSUP = 128, 16, 4
 
 
+@row("ann_ivf_hier", lambda: fitted(_sql_ann_ivf_hier))
 def _q_ann_ivf_hier(spark, sf_dir):
     """IVF top-k at nlist = 128 — ABOVE the two-level threshold, so
     the quantizer is the two-level fit and BOTH passes route
@@ -2853,6 +2909,7 @@ def _ann_sized_nlist(n: int) -> int:
     return max(16, n // _ANN_SIZED_POP)
 
 
+@row("ann_ivf_sized", lambda: fitted(_sql_ann_ivf_sized))
 def _q_ann_ivf_sized(spark, sf_dir):
     """IVF top-k at the SIZED operating point — the registry row that
     carries the 100 TB ANN shape (r14): ``nlist`` is derived
@@ -2929,6 +2986,7 @@ def _sql_ann_ivf_sized() -> str:
 _ANN_LSH_BITS, _ANN_LSH_TABLES, _ANN_LSH_DIM, _ANN_LSH_SEED = 4, 16, 64, 42
 
 
+@row("ann_lsh", lambda: _sql_ann_lsh())
 def _q_ann_lsh(spark, sf_dir):
     """LSH-bucketed approximate top-k, full value-hash oracle: the
     hyperplanes are seed-generated constants independent of the data,
@@ -2997,6 +3055,7 @@ SELECT query_id, neighbor_id, score, rank FROM (
 # OLAP: aggregation, window, time-window, sessionization
 # ---------------------------------------------------------------------------
 
+@row("pricing_summary", lambda: _SQL_PRICING)
 def _q_pricing_summary(spark, sf_dir):
     """TPC-H Q1-style pricing summary. Money sums rounded to 2 decimals
     in both engines (double addition isn't associative; partial-agg
@@ -3035,6 +3094,7 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 """
 
 
+@row("topk_orders", lambda: _SQL_TOPK_ORDERS)
 def _q_topk_orders(spark, sf_dir):
     """Top-3 orders by totalprice per priority class — windowed top-k
     with total-order tie-break."""
@@ -3059,6 +3119,7 @@ SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
 """
 
 
+@row("events_hourly", lambda: _SQL_EVENTS_HOURLY)
 def _q_events_hourly(spark, sf_dir):
     """Tumbling 1-hour event rollup (batch analog of the streaming
     windowed agg in streaming/). ``value`` is quantized to e4
@@ -3099,6 +3160,7 @@ FROM events GROUP BY 1, 2
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
 
 
+@row("sessionize", lambda: _SQL_SESSIONIZE)
 def _q_sessionize(spark, sf_dir):
     """Sessionization: per-user session count with a 30-minute
     inactivity gap — lag + cumulative-gap pattern, integer-exact."""
@@ -3135,340 +3197,6 @@ FROM (
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "text_stats": _q_text_stats,
-        "text_clean": _q_text_clean,
-        "dataset_split": _q_dataset_split,
-        "corpus_pipeline": _q_corpus_pipeline,
-        "repetition_stats": _q_repetition_stats,
-        "contamination_pairs": _q_contamination_pairs,
-        "decontaminated": _q_decontaminated,
-        "doc_fingerprint": _q_doc_fingerprint,
-        "dedup_exact": _q_dedup_exact,
-        "jaccard_pairs": _q_jaccard_pairs,
-        "jaccard_pairs_capped": _q_jaccard_pairs_capped,
-        "containment_pairs": _q_containment_pairs,
-        "jaccard_dedup": _q_jaccard_dedup,
-        "minhash_pairs": _q_minhash_pairs,
-        "minhash_incremental": _q_minhash_incremental,
-        "minhash_admit": _q_minhash_admit,
-        "dedup_exact_incremental": _q_dedup_exact_incremental,
-        "curation_incremental": _q_curation_incremental,
-        "minhash_pairs_weighted": _q_minhash_pairs_weighted,
-        "minhash_pairs_weighted_win": _q_minhash_pairs_weighted_win,
-        "simhash_pairs": _q_simhash_pairs,
-        "embedding_neardup": _q_embedding_neardup,
-        "embedding_neardup_incremental": _q_embedding_neardup_incremental,
-        "embedding_neardup_incremental_ivf":
-            _q_embedding_neardup_incremental_ivf,
-        "embedding_neardup_incremental_ivf_sized":
-            _q_embedding_neardup_incremental_ivf_sized,
-        "embedding_admit": _q_embedding_admit,
-        "embedding_neardup_block": _q_embedding_neardup_block,
-        "ann_topk": _q_ann_topk,
-        "ann_range": _q_ann_range,
-        "ann_lsh": _q_ann_lsh,
-        "ann_ivf": _q_ann_ivf,
-        "ann_jl": _q_ann_jl,
-        "ivf_coreset": _q_ivf_coreset,
-        "ann_pq": _q_ann_pq,
-        "ann_ivfpq": _q_ann_ivfpq,
-        "ann_ivfpq_residual": _q_ann_ivfpq_residual,
-        "ann_ivfpq_residual8": _q_ann_ivfpq_residual8,
-        "ann_ivf_hier": _q_ann_ivf_hier,
-        "ann_ivf_sized": _q_ann_ivf_sized,
-        "pricing_summary": _q_pricing_summary,
-        "topk_orders": _q_topk_orders,
-        "events_hourly": _q_events_hourly,
-        "sessionize": _q_sessionize,
-        **EXTRA_QUERIES,
-        "multimodal_features": _q_multimodal_features,
-        "multimodal_frames": _q_multimodal_frames,
-        "multimodal_resize": _q_multimodal_resize,
-        "dup_clusters": _q_dup_clusters,
-        "cluster_dedup": _q_cluster_dedup,
-        "cluster_dedup_best": _q_cluster_dedup_best,
-        "events_multi_rollup": _q_events_multi_rollup,
-        "streaming_hourly": _q_streaming_hourly,
-        "streaming_sample": _q_streaming_sample,
-        "streaming_sessionize": _q_streaming_sessionize,
-        "streaming_sessionize_native": _q_streaming_sessionize_native,
-        "streaming_dedup": _q_streaming_dedup,
-        "streaming_attribution": _q_streaming_attribution,
-        "streaming_reservoir": _q_streaming_reservoir,
-        "source_quota": _q_source_quota,
-        "bigram_novelty": _q_bigram_novelty,
-        "bigram_novelty_salted": _q_bigram_novelty_salted,
-        "heavy_hitters": _q_heavy_hitters,
-        "hll_rollup": _q_hll_rollup,
-        "quantile_rollup": _q_quantile_rollup,
-        "bucketed_join": _q_bucketed_join,
-        "simhash_pairs_capped": _q_simhash_pairs_capped,
-        "sample_weighted": _q_sample_weighted,
-        "range_join_events": _q_range_join_events,
-        "top_terms": _q_top_terms,
-        "edit_distance_pairs": _q_edit_distance_pairs,
-        "funnel": _q_funnel,
-        "sequence_pack": _q_sequence_pack,
-        "corpus_mixture": _q_corpus_mixture,
-        "vocab_topk": _q_vocab_topk,
-        "cube_pricing": _q_cube_pricing,
-        "salted_agg_events": _q_salted_agg_events,
-        "salted_join_orders": _q_salted_join_orders,
-        "zorder_scan": _q_zorder_scan,
-        "dq_checks": _q_dq_checks,
-        "dq_quarantine": _q_dq_quarantine,
-        "aqp_revenue": _q_aqp_revenue,
-        "split_leakage": _q_split_leakage,
-        "streaming_reservoir_grouped": _q_streaming_reservoir_grouped,
-        "streaming_quantiles": _q_streaming_quantiles,
-        "schema_evolution": _q_schema_evolution,
-        "streaming_heavy_hitters": _q_streaming_heavy_hitters,
-        "streaming_late_watermark": _q_streaming_late_watermark,
-        "compaction_scan": _q_compaction_scan,
-        "winsorize_values": _q_winsorize_values,
-        "gap_fill_events": _q_gap_fill_events,
-        "rolling_window_events": _q_rolling_window_events,
-        "value_histogram": _q_value_histogram,
-        "pagerank_dups": _q_pagerank_dups,
-        "dup_triangles": _q_dup_triangles,
-        "udtf_chunk_windows": _q_udtf_chunk_windows,
-        "normalize_values": _q_normalize_values,
-        "hourly_deltas": _q_hourly_deltas,
-        "twap_events": _q_twap_events,
-        "mixture_drift": _q_mixture_drift,
-        "table_checksum": _q_table_checksum,
-        "scd2_history": _q_scd2_history,
-        "dpp_scan": _q_dpp_scan,
-        "manifest_prune": _q_manifest_prune,
-        "ngram_dup_spans": _q_ngram_dup_spans,
-        "winnow_pairs": _q_winnow_pairs,
-        "winnow_pairs_capped": _q_winnow_pairs_capped,
-        "winnow_pairs_censused": _q_winnow_pairs_censused,
-        "decontaminate_spans": _q_decontaminate_spans,
-        "decontaminate_scrub": _q_decontaminate_scrub,
-        "bloom_decontaminate": _q_bloom_decontaminate,
-        "streaming_enrich": _q_streaming_enrich,
-        "pack_sequences": _q_pack_sequences,
-        "mixture_resample": _q_mixture_resample,
-        "semantic_dedup": _q_semantic_dedup,
-        "asof_nearest": _q_asof_nearest,
-        "bpe_merges": _q_bpe_merges,
-        "bpe_encode": _q_bpe_encode,
-        "quality_rarity": _q_quality_rarity,
-        "quality_rarity_inline": _q_quality_rarity_inline,
-        "quality_rarity_holdout": _q_quality_rarity_holdout,
-        "quality_rarity_bigram": _q_quality_rarity_bigram,
-        "quality_rarity_bigram_inline": _q_quality_rarity_bigram_inline,
-        "quality_rarity_trigram": _q_quality_rarity_trigram,
-        "quality_rarity_trigram_inline": _q_quality_rarity_trigram_inline,
-        "tfidf_topk": _q_tfidf_topk,
-        "quality_gopher": _q_quality_gopher,
-        "bm25_topk": _q_bm25_topk,
-        "ngram_diversity": _q_ngram_diversity,
-        "dsir_select": _q_dsir_select,
-        "ccnet_buckets": _q_ccnet_buckets,
-        "cooccurrence_topk": _q_cooccurrence_topk,
-        "pack_sequences_bpe": _q_pack_sequences_bpe,
-        "curation_pipeline": _q_curation_pipeline,
-        "curation_pipeline_bpe": _q_curation_pipeline_bpe,
-        "bpe_encode_holdout": _q_bpe_encode_holdout,
-        "bpe_roundtrip": _q_bpe_roundtrip,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    # every queries_ext entry now carries an exact oracle: ann_ivf
-    # (deterministic re-trained centroid literals) and
-    # multimodal_resize (closed-form BMP byte stream + in-SQL crc32)
-    # joined in r5.
-    out = {
-        "minhash_pairs": _SQL_JACCARD_PAIRS,
-        "minhash_incremental": _SQL_MINHASH_INCREMENTAL,
-        "minhash_admit": _SQL_MINHASH_ADMIT,
-        "dedup_exact_incremental": _SQL_DEDUP_EXACT_INCREMENTAL,
-        "curation_incremental": _sql_curation_incremental(),
-        "minhash_pairs_weighted": _sql_minhash_pairs_weighted(),
-        "minhash_pairs_weighted_win": _sql_minhash_pairs_weighted(),
-        "multimodal_frames": _SQL_MULTIMODAL_FRAMES,
-        "ann_lsh": _sql_ann_lsh(),
-        "multimodal_resize": _sql_multimodal_resize(),
-        "simhash_pairs": _sql_simhash_pairs(),
-        "multimodal_features": _sql_multimodal_features(),
-        "text_stats": _sql_text_stats(),
-        "text_clean": _sql_text_clean(),
-        "dataset_split": _sql_dataset_split(),
-        "corpus_pipeline": _sql_corpus_pipeline(),
-        "repetition_stats": _sql_repetition_stats(),
-        "contamination_pairs": _SQL_CONTAMINATION_PAIRS,
-        "decontaminated": _SQL_DECONTAMINATED,
-        "doc_fingerprint": _sql_doc_fingerprint(),
-        "dedup_exact": _SQL_DEDUP_EXACT,
-        "jaccard_pairs": _SQL_JACCARD_PAIRS,
-        "jaccard_pairs_capped": _SQL_JACCARD_PAIRS_CAPPED,
-        "containment_pairs": _SQL_CONTAINMENT_PAIRS,
-        "jaccard_dedup": _SQL_JACCARD_DEDUP,
-        "embedding_neardup": _sql_embedding_neardup(),
-        "embedding_neardup_incremental":
-            _sql_embedding_neardup_incremental(),
-        # the IVF-routed gate reproduces the sign-bit gate's exact
-        # output on this corpus (recall 1 for the planted twins, exact
-        # verify) — the oracle is shared verbatim
-        "embedding_neardup_incremental_ivf":
-            _sql_embedding_neardup_incremental(),
-        # ... and the sized form keeps recall 1 for the qualifying set
-        # at any nlist (unit twins share the argmin cell), so it shares
-        # the same exact-cosine oracle too
-        "embedding_neardup_incremental_ivf_sized":
-            _sql_embedding_neardup_incremental(),
-        "embedding_admit": _sql_embedding_admit(),
-        "embedding_neardup_block": _sql_embedding_neardup_block(),
-        "ann_topk": _sql_ann_topk(),
-        "ann_range": _sql_ann_range(),
-        "pricing_summary": _SQL_PRICING,
-        "topk_orders": _SQL_TOPK_ORDERS,
-        "events_hourly": _SQL_EVENTS_HOURLY,
-        "sessionize": _SQL_SESSIONIZE,
-        "sample_stratified": _sql_sample_stratified(),
-        "asof_attribution": _SQL_ASOF,
-        "asof_nearest": _SQL_ASOF_NEAREST,
-        "bpe_merges": _sql_bpe_merges(),
-        "bpe_encode": _sql_bpe_encode(),
-        "anti_join_orders": _sql_anti_join_orders(),
-        "rollup_pricing": _SQL_ROLLUP,
-        "revenue_per_nation": _SQL_REVENUE,
-        "dup_clusters": _SQL_DUP_CLUSTERS,
-        "cluster_dedup": _SQL_CLUSTER_DEDUP,
-        "cluster_dedup_best": _SQL_CLUSTER_DEDUP_BEST,
-        "events_multi_rollup": _SQL_EVENTS_MULTI_ROLLUP,
-        "streaming_hourly": _SQL_EVENTS_HOURLY,
-        "streaming_sample": _sql_streaming_sample(),
-        "streaming_sessionize": _SQL_STREAMING_SESSIONIZE,
-        "streaming_sessionize_native": _SQL_STREAMING_SESSIONIZE,
-        "streaming_dedup": _SQL_STREAMING_DEDUP,
-        "streaming_attribution": _SQL_STREAMING_ATTRIBUTION,
-        "streaming_reservoir": _sql_streaming_reservoir(),
-        "source_quota": _sql_source_quota(),
-        "bigram_novelty": _sql_bigram_novelty(),
-        "bigram_novelty_salted": _sql_bigram_novelty(),
-        "heavy_hitters": _SQL_HEAVY_HITTERS,
-        "hll_rollup": _SQL_HLL_ROLLUP,
-        "quantile_rollup": _SQL_QUANTILE_ROLLUP,
-        "bucketed_join": _SQL_BUCKETED_JOIN,
-        "simhash_pairs_capped": _sql_simhash_pairs(
-            max_band_df=_SIMHASH_BAND_CAP
-        ),
-        "sample_weighted": _sql_sample_weighted(),
-        "range_join_events": _SQL_RANGE_JOIN_EVENTS,
-        "top_terms": _SQL_TOP_TERMS,
-        "edit_distance_pairs": _SQL_EDIT_DISTANCE_PAIRS,
-        "funnel": _SQL_FUNNEL,
-        "sequence_pack": _sql_sequence_pack(),
-        "corpus_mixture": _sql_corpus_mixture(),
-        "vocab_topk": _SQL_VOCAB_TOPK,
-        "cube_pricing": _SQL_CUBE_PRICING,
-        "salted_agg_events": _SQL_SALTED_AGG_EVENTS,
-        "salted_join_orders": _SQL_SALTED_JOIN_ORDERS,
-        "zorder_scan": _SQL_ZORDER_SCAN,
-        "dq_checks": _SQL_DQ_CHECKS,
-        "dq_quarantine": _SQL_DQ_QUARANTINE,
-        "aqp_revenue": _sql_aqp_revenue(),
-        "split_leakage": _sql_split_leakage(),
-        "streaming_reservoir_grouped": _sql_streaming_reservoir_grouped(),
-        "streaming_quantiles": _SQL_QUANTILE_ROLLUP,
-        "schema_evolution": _SQL_SCHEMA_EVOLUTION,
-        "streaming_heavy_hitters": _SQL_HEAVY_HITTERS,
-        "streaming_late_watermark": _SQL_STREAMING_LATE_WATERMARK,
-        "compaction_scan": _SQL_COMPACTION_SCAN,
-        "winsorize_values": _SQL_WINSORIZE_VALUES,
-        "gap_fill_events": _SQL_GAP_FILL_EVENTS,
-        "rolling_window_events": _SQL_ROLLING_WINDOW_EVENTS,
-        "value_histogram": _SQL_VALUE_HISTOGRAM,
-        "pagerank_dups": _sql_pagerank_dups(),
-        "dup_triangles": _sql_dup_triangles(),
-        "udtf_chunk_windows": _SQL_UDTF_CHUNK_WINDOWS,
-        "normalize_values": _SQL_NORMALIZE_VALUES,
-        "hourly_deltas": _SQL_HOURLY_DELTAS,
-        "twap_events": _SQL_TWAP_EVENTS,
-        "mixture_drift": _sql_mixture_drift(),
-        "table_checksum": _sql_table_checksum(),
-        "scd2_history": _SQL_SCD2_HISTORY,
-        "dpp_scan": _sql_dpp_scan(),
-        "manifest_prune": _SQL_MANIFEST_PRUNE,
-        "ngram_dup_spans": _sql_ngram_dup_spans(),
-        "winnow_pairs": _sql_winnow_pairs(),
-        "winnow_pairs_capped": _sql_winnow_pairs(cap=_WINNOW_CAP),
-        "winnow_pairs_censused": _sql_winnow_pairs(census=True),
-        "decontaminate_spans": _sql_decontaminate_spans(),
-        "decontaminate_scrub": _sql_decontaminate_scrub(),
-        "bloom_decontaminate": _sql_bloom_decontaminate(),
-        "streaming_enrich": _SQL_STREAMING_ENRICH,
-        "pack_sequences": _sql_pack_sequences(),
-        "mixture_resample": _sql_mixture_resample(),
-        "semantic_dedup": _sql_semantic_dedup(),
-        "quality_rarity": _sql_quality_rarity(),
-        "quality_rarity_inline": _sql_quality_rarity(),
-        "quality_rarity_holdout": _sql_quality_rarity_holdout(),
-        "quality_rarity_bigram": _sql_quality_rarity_bigram(),
-        "quality_rarity_bigram_inline": _sql_quality_rarity_bigram(),
-        "quality_rarity_trigram": _sql_quality_rarity_trigram(),
-        "quality_rarity_trigram_inline": _sql_quality_rarity_trigram(),
-        "tfidf_topk": _sql_tfidf_topk(),
-        "quality_gopher": _sql_quality_gopher(),
-        "bm25_topk": _sql_bm25_topk(),
-        "ngram_diversity": _sql_ngram_diversity(),
-        "dsir_select": _sql_dsir_select(),
-        "ccnet_buckets": _sql_ccnet_buckets(),
-        "cooccurrence_topk": _sql_cooccurrence_topk(),
-        "pack_sequences_bpe": _sql_pack_sequences_bpe(),
-        "curation_pipeline": _sql_curation_pipeline(),
-        "curation_pipeline_bpe": _sql_curation_pipeline_bpe(),
-        "bpe_encode_holdout": _sql_bpe_encode_holdout(),
-        "bpe_roundtrip": _sql_bpe_roundtrip(),
-        "ann_jl": _sql_ann_jl(),
-    }
-    # ann_ivf's oracle is trained from the comparison sf dir's parquet;
-    # if that dir is absent (unusual environment), degrade the one
-    # query to a rows-only check instead of breaking the whole oracle
-    # contract (queries() consults oracle_sql() for capture ordering)
-    # ann_pq / ann_ivfpq share ann_ivf's degrade contract (trained
-    # oracle — an unreadable embeddings file must not take down every
-    # oracle)
-    for name, builder in (
-        ("ann_pq", _sql_ann_pq), ("ann_ivfpq", _sql_ann_ivfpq),
-        ("ann_ivfpq_residual", _sql_ann_ivfpq_residual),
-        ("ann_ivfpq_residual8",
-         lambda: _sql_ann_ivfpq_residual(ncodes=256)),
-        ("ann_ivf_hier", _sql_ann_ivf_hier),
-        ("ann_ivf_sized", _sql_ann_ivf_sized),
-        ("ivf_coreset", _sql_ivf_coreset),
-    ):
-        try:
-            out[name] = builder()
-        except Exception as ex:  # noqa: BLE001 — same as ann_ivf
-            import sys
-
-            print(
-                f"warning: {name} oracle unavailable ({ex!r}); "
-                "degrading to rows-only",
-                file=sys.stderr,
-            )
-    try:
-        out["ann_ivf"] = _sql_ann_ivf()
-    except Exception as ex:  # noqa: BLE001 — pyarrow raises
-        # ArrowInvalid/KeyError (not just OSError) on a corrupt or
-        # schema-drifted embeddings file; one unreadable file must
-        # degrade ann_ivf to rows-only, not take down every oracle
-        import sys
-
-        print(
-            f"warning: ann_ivf oracle unavailable ({ex!r}); "
-            "degrading to rows-only",
-            file=sys.stderr,
-        )
-    return out
-
 # ---------------------------------------------------------------------------
 # OLAP round 2: stratified sample, as-of join, anti-join, rollup, multi-join
 # ---------------------------------------------------------------------------
@@ -3476,6 +3204,7 @@ def oracle_sql() -> dict[str, str]:
 _STRAT_RATIO = 0.01
 
 
+@row("sample_stratified", lambda: _sql_sample_stratified())
 def _q_sample_stratified(spark, sf_dir):
     """Exact per-stratum sampling of orders by priority class — group
     proportions preserved exactly (operators/sample.py)."""
@@ -3504,6 +3233,7 @@ FROM (
 """
 
 
+@row("asof_attribution", lambda: _SQL_ASOF)
 def _q_asof_attribution(spark, sf_dir):
     """Attribute each purchase to the user's most recent click at or
     before it (as-of join, operators/asof.py). Timestamps are compared
@@ -3540,6 +3270,7 @@ FROM p ASOF JOIN c ON p.user_id = c.user_id AND p.ts_us >= c.ts_us
 """
 
 
+@row("anti_join_orders", lambda: _sql_anti_join_orders())
 def _q_anti_join_orders(spark, sf_dir):
     """Left anti-join: orders with NO sampled lineitem — the complement
     of the reference's semi-join reduction (same operator, how flag)."""
@@ -3562,6 +3293,7 @@ def _sql_anti_join_orders():
     )
 
 
+@row("rollup_pricing", lambda: _SQL_ROLLUP)
 def _q_rollup_pricing(spark, sf_dir):
     """ROLLUP aggregation: subtotals per returnflag and grand total.
     gid disambiguates NULL-as-subtotal from NULL data; like
@@ -3595,6 +3327,7 @@ FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
 
 
+@row("revenue_per_nation", lambda: _SQL_REVENUE)
 def _q_revenue_per_nation(spark, sf_dir):
     """Multi-join aggregate: lineitem⋈orders⋈customer⋈nation revenue
     rollup. Only the genuine dimension (nation, 25 rows at any sf) gets
@@ -3636,14 +3369,7 @@ GROUP BY n_name
 """
 
 
-EXTRA_QUERIES = {
-    "sample_stratified": _q_sample_stratified,
-    "asof_attribution": _q_asof_attribution,
-    "anti_join_orders": _q_anti_join_orders,
-    "rollup_pricing": _q_rollup_pricing,
-    "revenue_per_nation": _q_revenue_per_nation,
-}
-
+@row("multimodal_features", lambda: _sql_multimodal_features())
 def _q_multimodal_features(spark, sf_dir):
     """Multimodal plumbing as a query: deterministic synthetic media
     (seeded — no external files; image rows are REAL encoded BMPs) →
@@ -3758,6 +3484,7 @@ LEFT JOIN imgs ON imgs.i = m.i
 """
 
 
+@row("multimodal_frames", lambda: _SQL_MULTIMODAL_FRAMES)
 def _q_multimodal_frames(spark, sf_dir):
     """Video frame-sampling plan (media.frame_sample): one row per
     sampled frame timestamp, non-video rows pass through with a NULL
@@ -3793,6 +3520,7 @@ FROM media
 """
 
 
+@row("multimodal_resize", lambda: _sql_multimodal_resize())
 def _q_multimodal_resize(spark, sf_dir):
     """Image resize over Arrow batches (media.resize_images) on the
     REAL pixel path: BMP decode → box-average resample → BMP re-encode
@@ -3940,6 +3668,7 @@ def _env_checkpoint() -> dict:
     return kw
 
 
+@row("dup_clusters", lambda: _SQL_DUP_CLUSTERS)
 def _q_dup_clusters(spark, sf_dir):
     """Connected-components duplicate clustering: every doc labeled
     with the min id of its component. Built on the LSH-verified pair
@@ -4024,6 +3753,7 @@ JOIN q q2 ON q2.doc_id = d.doc_id
 )
 
 
+@row("cluster_dedup_best", lambda: _SQL_CLUSTER_DEDUP_BEST)
 def _q_cluster_dedup_best(spark, sf_dir):
     """Best-copy dedup (r10): of every duplicate cluster keep the
     HIGHEST-quality document (composite quality score; ties -> min
@@ -4042,6 +3772,7 @@ def _q_cluster_dedup_best(spark, sf_dir):
     ).select("doc_id", "quality")
 
 
+@row("cluster_dedup", lambda: _SQL_CLUSTER_DEDUP)
 def _q_cluster_dedup(spark, sf_dir):
     """Connected-components dedup: one survivor (the min-id
     representative) per duplicate cluster — the transitive-closure
@@ -4126,6 +3857,7 @@ def _stream_sample_staging(spark, sf_dir) -> str:
     return data
 
 
+@row("streaming_sample", lambda: _sql_streaming_sample())
 def _q_streaming_sample(spark, sf_dir):
     """Stream/batch parity for the incremental sampler (r12): the
     hash-threshold predicate is STATELESS — a row's membership depends
@@ -4167,6 +3899,7 @@ def _sql_streaming_sample() -> str:
     return _sql_sample_threshold()
 
 
+@row("streaming_dedup", lambda: _SQL_STREAMING_DEDUP)
 def _q_streaming_dedup(spark, sf_dir):
     """Bounded-state streaming deduplication
     (``dropDuplicatesWithinWatermark``) with a batch oracle: the events
@@ -4222,6 +3955,7 @@ FROM events
 """
 
 
+@row("streaming_attribution", lambda: _SQL_STREAMING_ATTRIBUTION)
 def _q_streaming_attribution(spark, sf_dir):
     """Watermarked STREAM-STREAM interval join (purchases x clicks from
     the same user within a 1-hour lookback), value-checked against the
@@ -4299,6 +4033,7 @@ def _stage_split_stream(sf_dir, table, src_dir, columns=None, prefix=None):
         os.replace(tmp, dst)
 
 
+@row("streaming_reservoir", lambda: _sql_streaming_reservoir())
 def _q_streaming_reservoir(spark, sf_dir):
     """The online exact-k reservoir sampler (foreachBatch maintaining
     "k smallest Lehmer-hash rows seen so far" as a parquet reservoir)
@@ -4359,6 +4094,7 @@ SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value FROM (
 """
 
 
+@row("streaming_quantiles", lambda: _SQL_QUANTILE_ROLLUP)
 def _q_streaming_quantiles(spark, sf_dir):
     """Per-type p50/p90 maintained ONLINE (r08): the quantile_rollup
     summary architecture run as streaming state — each micro-batch of
@@ -4413,6 +4149,7 @@ def _q_streaming_quantiles(spark, sf_dir):
 _GROUPED_RES_K = 10
 
 
+@row("streaming_reservoir_grouped", lambda: _sql_streaming_reservoir_grouped())
 def _q_streaming_reservoir_grouped(spark, sf_dir):
     """Per-STRATUM online reservoir (r08): k exemplars per event_type
     maintained across micro-batches (streaming/joins.
@@ -4489,6 +4226,7 @@ FROM events p JOIN events c
 """
 
 
+@row("streaming_hourly", lambda: _SQL_EVENTS_HOURLY)
 def _q_streaming_hourly(spark, sf_dir):
     """The hourly rollup executed through Structured Streaming: the
     events parquet replayed as a file-source stream, windowed streaming
@@ -4527,6 +4265,7 @@ def _q_streaming_hourly(spark, sf_dir):
         q.awaitTermination()
     return spark.table(name)
 
+@row("streaming_sessionize", lambda: _SQL_STREAMING_SESSIONIZE)
 def _q_streaming_sessionize(spark, sf_dir):
     """The STATEFUL sessionizer (applyInPandasWithState, event-time
     timeout) run over the events parquet replayed as a file stream,
@@ -4620,6 +4359,7 @@ def _sentinel_sessionize_stream(spark, sf_dir):
     return read_event_stream(spark, src).withWatermark("ts", "1 minute")
 
 
+@row("streaming_sessionize_native", lambda: _SQL_STREAMING_SESSIONIZE)
 def _q_streaming_sessionize_native(spark, sf_dir):
     """JVM-NATIVE streaming sessionization (VERDICT r06 task 3):
     Spark's built-in ``session_window`` aggregation — public API since
@@ -4691,6 +4431,7 @@ FROM (
 """
 
 
+@row("events_multi_rollup", lambda: _SQL_EVENTS_MULTI_ROLLUP)
 def _q_events_multi_rollup(spark, sf_dir):
     """Hypertable-style continuous aggregate: one pass producing BOTH
     hourly and daily rollups via GROUPING SETS (the multi-granularity
@@ -4735,6 +4476,7 @@ GROUP BY GROUPING SETS ((hr, event_type), (dy, event_type))
 _WS_K, _WS_SEED = 200, 11
 
 
+@row("sample_weighted", lambda: _sql_sample_weighted())
 def _q_sample_weighted(spark, sf_dir):
     """Exact-k weighted document sample, inclusion odds proportional to
     n_chars (operators/sample.py weighted_sample — A-ES ranks from the
@@ -4765,6 +4507,7 @@ LIMIT {_WS_K}
 """
 
 
+@row("range_join_events", lambda: _SQL_RANGE_JOIN_EVENTS)
 def _q_range_join_events(spark, sf_dir):
     """Interval containment join (operators/rangejoin.py, bucket
     strategy): the 50 highest-value events each open a 30-minute
@@ -4810,6 +4553,7 @@ GROUP BY window_id
 """
 
 
+@row("top_terms", lambda: _SQL_TOP_TERMS)
 def _q_top_terms(spark, sf_dir):
     """Per-document top terms by (tf DESC, df ASC, term) — the
     inverted-index aggregation underlying TF-IDF, kept fully integer
@@ -4867,6 +4611,7 @@ _EDIT_MAX_DIST = 4
 _EDIT_PREFIX = 60
 
 
+@row("edit_distance_pairs", lambda: _SQL_EDIT_DISTANCE_PAIRS)
 def _q_edit_distance_pairs(spark, sf_dir):
     """Edit-distance near-duplicate pairs over blocked candidates:
     documents sharing (lang, first token, length bucket) are compared
@@ -4931,6 +4676,7 @@ WHERE levenshtein(x.pfx, y.pfx) <= {_EDIT_MAX_DIST}
 """
 
 
+@row("funnel", lambda: _SQL_FUNNEL)
 def _q_funnel(spark, sf_dir):
     """Ordered-step funnel (view -> click -> purchase): each stage is
     the per-user min event time AFTER the previous stage's time — the
@@ -4996,6 +4742,7 @@ _PACK_BUDGET = 512   # tokens per training sequence
 _PACK_SHARD = 200    # doc_ids per packing shard (bounds each window)
 
 
+@row("sequence_pack", lambda: _sql_sequence_pack())
 def _q_sequence_pack(spark, sf_dir):
     """Training-sequence packing: assign each document to a
     fixed-token-budget training sequence by greedy contiguous fill —
@@ -5052,6 +4799,7 @@ _MIX_RATES = {"en": 1.0, "zh": 0.8, "es": 0.6, "de": 0.4, "fr": 0.2}
 _MIX_DEFAULT = 0.1
 
 
+@row("corpus_mixture", lambda: _sql_corpus_mixture())
 def _q_corpus_mixture(spark, sf_dir):
     """Mixture resampling: downweight per-language corpus shares with
     deterministic Bernoulli-by-hash keeps (the data-mixture step of a
@@ -5097,6 +4845,7 @@ def _sql_corpus_mixture() -> str:
 _VOCAB_K = 500
 
 
+@row("vocab_topk", lambda: _SQL_VOCAB_TOPK)
 def _q_vocab_topk(spark, sf_dir):
     """Corpus-global vocabulary build: the K most frequent tokens with
     total and document frequencies — the counting pass behind a BPE /
@@ -5137,6 +4886,7 @@ LIMIT {_VOCAB_K}
 """
 
 
+@row("cube_pricing", lambda: _SQL_CUBE_PRICING)
 def _q_cube_pricing(spark, sf_dir):
     """CUBE aggregation: all four grouping levels of
     (returnflag, linestatus) in one pass — subtotals per flag, per
@@ -5176,6 +4926,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 """
 
 
+@row("salted_agg_events", lambda: _SQL_SALTED_AGG_EVENTS)
 def _q_salted_agg_events(spark, sf_dir):
     """Hot-key-safe aggregation as a query: per-event-type totals via
     plans/skew.salted_agg — phase 1 on (key, salt16), phase 2 merge.
@@ -5207,6 +4958,7 @@ GROUP BY event_type
 """
 
 
+@row("salted_join_orders", lambda: _SQL_SALTED_JOIN_ORDERS)
 def _q_salted_join_orders(spark, sf_dir):
     """Hot-key-safe fact⋈dim JOIN as a query (r07, the join twin of
     salted_agg_events): plans/skew.salted_join gives every orders row
@@ -5242,6 +4994,7 @@ GROUP BY c_nationkey
 """
 
 
+@row("dq_checks", lambda: _SQL_DQ_CHECKS)
 def _q_dq_checks(spark, sf_dir):
     """Data-quality gate as a query (r07) — the validation suite a
     100 TB ingest pipeline runs before publishing a snapshot: primary-
@@ -5319,6 +5072,7 @@ SELECT check_name, violations, violations = 0 AS passed FROM (
 """
 
 
+@row("dq_quarantine", lambda: _SQL_DQ_QUARANTINE)
 def _q_dq_quarantine(spark, sf_dir):
     """Violating-ROW extraction for the DQ gate (VERDICT r07 #5):
     `dq_checks` emits counts; a real ingest gate also quarantines the
@@ -5390,6 +5144,7 @@ WHERE NOT (o_totalprice > 0)
 """
 
 
+@row("split_leakage", lambda: _sql_split_leakage())
 def _q_split_leakage(spark, sf_dir):
     """Train/val/test LEAKAGE audit (r08): the hash split
     (`dataset_split`) assigns by doc_id, so two docs with IDENTICAL
@@ -5489,6 +5244,7 @@ FROM g
 """
 
 
+@row("winsorize_values", lambda: _SQL_WINSORIZE_VALUES)
 def _q_winsorize_values(spark, sf_dir):
     """Per-group outlier clipping (winsorization, r08): every event's
     value clipped to its event_type's [p1, p99] — the standard
@@ -5530,6 +5286,7 @@ WHERE value IS NOT NULL
 """
 
 
+@row("schema_evolution", lambda: _SQL_SCHEMA_EVOLUTION)
 def _q_schema_evolution(spark, sf_dir):
     """Schema-on-read evolution (r08): a table whose files were
     written under TWO schema versions — v1 before a column existed,
@@ -5588,6 +5345,7 @@ _AQP_SEED = 77
 _AQP_PCT = 5  # 5% hash-threshold sample
 
 
+@row("aqp_revenue", lambda: _sql_aqp_revenue())
 def _q_aqp_revenue(spark, sf_dir):
     """Approximate query processing from the reference's own sampling
     primitive (r08): revenue per order priority ESTIMATED from a 5%
@@ -5686,6 +5444,7 @@ FROM exact LEFT JOIN est USING (o_orderpriority)
 """
 
 
+@row("zorder_scan", lambda: _SQL_ZORDER_SCAN)
 def _q_zorder_scan(spark, sf_dir):
     """OPTIMIZE ZORDER BY on the correctness surface (r07): events
     written ONCE per (session, sf_dir) z-order-clustered on
@@ -5739,6 +5498,7 @@ _COMPACT_SMALL_FILES = 64
 _COMPACT_TARGET_FILES = 4
 
 
+@row("compaction_scan", lambda: _SQL_COMPACTION_SCAN)
 def _q_compaction_scan(spark, sf_dir):
     """OPTIMIZE-style small-file compaction (r08) — the OTHER half of
     table maintenance beside z-order clustering: a table that
@@ -5793,6 +5553,7 @@ SELECT * FROM events
 """
 
 
+@row("gap_fill_events", lambda: _SQL_GAP_FILL_EVENTS)
 def _q_gap_fill_events(spark, sf_dir):
     """Time-series regularization: resample per-type event values onto
     a dense hourly grid with last-observation-carried-forward — the
@@ -5873,6 +5634,7 @@ FROM grid LEFT JOIN hourly h
 _ROLL_US = 3 * 3600 * 1_000_000  # trailing 3-hour window, microseconds
 
 
+@row("rolling_window_events", lambda: _SQL_ROLLING_WINDOW_EVENTS)
 def _q_rolling_window_events(spark, sf_dir):
     """Time-interval rolling aggregate: per event, the trailing-3-hour
     event count and exact value sum within its type — a RANGE frame
@@ -5975,6 +5737,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY epoch_us(ts)
 _HIST_BINS = 20
 
 
+@row("value_histogram", lambda: _SQL_VALUE_HISTOGRAM)
 def _q_value_histogram(spark, sf_dir):
     """Equal-width histogram of event values in 20 bins — the profiling
     primitive behind data-quality dashboards. All-integer binning:
@@ -6019,6 +5782,7 @@ GROUP BY 1
 _PR_ITERS, _PR_DAMP, _PR_SCALE = 5, 85, 10**9
 
 
+@row("dup_triangles", lambda: _sql_dup_triangles())
 def _q_dup_triangles(spark, sf_dir):
     """Per-document triangle counts over the duplicate graph (r12) —
     the cliquishness signal: true re-crawl groups are near-CLIQUES
@@ -6057,6 +5821,7 @@ FROM documents d LEFT JOIN credit ON credit.v = d.doc_id
 """)
 
 
+@row("pagerank_dups", lambda: _sql_pagerank_dups())
 def _q_pagerank_dups(spark, sf_dir):
     """PageRank over the duplicate-similarity graph (jaccard >= 0.5
     pairs, symmetrized) — centrality of each document in its duplicate
@@ -6128,6 +5893,7 @@ deg AS MATERIALIZED (SELECT src, count(*) AS d FROM edges GROUP BY src),
 _CHUNK_W, _CHUNK_STRIDE = 120, 100
 
 
+@row("udtf_chunk_windows", lambda: _SQL_UDTF_CHUNK_WINDOWS)
 def _q_udtf_chunk_windows(spark, sf_dir):
     """Overlapping context-window chunking (the LLM-training text
     chunker: 120-char windows every 100 chars) implemented as a Python
@@ -6171,6 +5937,7 @@ WHERE r.i * {_CHUNK_STRIDE} < greatest(n, 1)
 """
 
 
+@row("normalize_values", lambda: _SQL_NORMALIZE_VALUES)
 def _q_normalize_values(spark, sf_dir):
     """Per-group min-max feature scaling: each event's value normalized
     to [0, 1] within its event type — the feature-engineering step
@@ -6216,6 +5983,7 @@ FROM v JOIN b ON v.event_type = b.event_type
 """
 
 
+@row("hourly_deltas", lambda: _SQL_HOURLY_DELTAS)
 def _q_hourly_deltas(spark, sf_dir):
     """Hour-over-hour deltas and percent change per event type — the
     lag-based derivative series every monitoring dashboard computes.
@@ -6259,6 +6027,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY hour)
 # distributed table fingerprint, SCD2 dimension history
 # ---------------------------------------------------------------------------
 
+@row("twap_events", lambda: _SQL_TWAP_EVENTS)
 def _q_twap_events(spark, sf_dir):
     """Time-WEIGHTED average value per user — the time-series mean where
     each observation holds until the next one (TWAP / last-observation-
@@ -6328,6 +6097,7 @@ HAVING sum(dur_ms) > 0
 _DRIFT_LANGS = ("de", "en", "es", "fr", "zh")
 
 
+@row("mixture_drift", lambda: _sql_mixture_drift())
 def _q_mixture_drift(spark, sf_dir):
     """Per-source language-mixture drift vs the whole corpus — the
     chi-square statistic every corpus-monitoring job computes to catch
@@ -6409,6 +6179,7 @@ FROM per_src CROSS JOIN corpus
 """
 
 
+@row("table_checksum", lambda: _sql_table_checksum())
 def _q_table_checksum(spark, sf_dir):
     """Distributed table fingerprint: an order-independent per-bucket
     checksum of lineitem, the anti-entropy primitive for verifying two
@@ -6483,6 +6254,7 @@ FROM hashed GROUP BY bucket
 """
 
 
+@row("scd2_history", lambda: _SQL_SCD2_HISTORY)
 def _q_scd2_history(spark, sf_dir):
     """Slowly-changing-dimension type-2 history build: the base
     customer snapshot (epoch 0) plus two deterministic CDC change
@@ -6573,6 +6345,7 @@ _DPP_PRIORITIES = (
 )
 
 
+@row("dpp_scan", lambda: _sql_dpp_scan())
 def _q_dpp_scan(spark, sf_dir):
     """Dynamic partition pruning on a Hive-partitioned fact: orders
     written once per session partitioned by o_orderpriority, then
@@ -6651,6 +6424,7 @@ GROUP BY o_orderpriority, r_name
 _MANIFEST_LO, _MANIFEST_HI = 10, 40
 
 
+@row("manifest_prune", lambda: _SQL_MANIFEST_PRUNE)
 def _q_manifest_prune(spark, sf_dir):
     """Manifest-level file skipping (Iceberg/Delta's data-skipping
     step on plain parquet): the range-clustered compacted events
@@ -6707,6 +6481,7 @@ _DUP_SPAN_N = 8
 _DUP_SPAN_MIN_DF = 2
 
 
+@row("ngram_dup_spans", lambda: _sql_ngram_dup_spans())
 def _q_ngram_dup_spans(spark, sf_dir):
     """Span-level cross-document duplicated text (r09): the maximal
     token spans covered by sliding 8-token windows that occur in >= 2
@@ -6778,6 +6553,7 @@ FROM isl2 GROUP BY doc_id, island
 _CONTAM_SPAN_N = 4
 
 
+@row("decontaminate_spans", lambda: _sql_decontaminate_spans())
 def _q_decontaminate_spans(spark, sf_dir):
     """Cross-corpus SPAN-level decontamination (r12): per training
     document (doc_id >= bench cut), the maximal token spans covered by
@@ -6848,6 +6624,7 @@ FROM isl2 GROUP BY doc_id, island
 """
 
 
+@row("decontaminate_scrub", lambda: _sql_decontaminate_scrub())
 def _q_decontaminate_scrub(spark, sf_dir):
     """The write side of decontaminate_spans (r12): the training
     corpus with every contaminated span CUT OUT — token counts
@@ -6935,6 +6712,7 @@ _BLOOM_INJECT_EVERY = 7
 _BLOOM_ID_OFFSET = 1_000_000_000
 
 
+@row("bloom_decontaminate", lambda: _sql_bloom_decontaminate())
 def _q_bloom_decontaminate(spark, sf_dir):
     """Exact-duplicate decontamination through a Bloom prefilter (r09):
     bit-identical output to the plain fingerprint anti-join (which IS
@@ -6984,6 +6762,7 @@ WHERE t.text IS NULL
 # ---------------------------------------------------------------------------
 
 
+@row("streaming_enrich", lambda: _SQL_STREAMING_ENRICH)
 def _q_streaming_enrich(spark, sf_dir):
     """STREAM-STATIC enrichment join (r09), the one streaming join
     shape the family didn't cover (streaming_attribution is
@@ -7041,6 +6820,7 @@ _PACK_CAP = 2048
 _PACK_SHARDS = 8
 
 
+@row("pack_sequences", lambda: _sql_pack_sequences())
 def _q_pack_sequences(spark, sf_dir):
     """GPT-style training-sequence packing (r09): every document's
     place under concat-then-chunk — the corpus hash-sharded, each
@@ -7099,6 +6879,7 @@ _MIX_WEIGHTS = {f"src{k}": k % 5 + 1 for k in range(20)}
 _MIX_SEED = 29
 
 
+@row("mixture_resample", lambda: _sql_mixture_resample())
 def _q_mixture_resample(spark, sf_dir):
     """Domain-mixture resampling (r09): deterministic hash-downsample
     per source so the kept corpus's expected token mixture matches a
@@ -7185,6 +6966,7 @@ def _sem_nlist(sf_dir: str) -> int:
     return max(16, n // _SEM_NLIST_DIV)
 
 
+@row("semantic_dedup", lambda: fitted(_sql_semantic_dedup))
 def _q_semantic_dedup(spark, sf_dir):
     """SemDeDup semantic deduplication (Abbas et al. 2023, r09): KMeans
     cells bound the pairwise-cosine sweep (only within-cell pairs are
@@ -7347,6 +7129,7 @@ WHERE a.vec_id NOT IN (SELECT vec_id FROM dropped)
 _ASOF_NEAREST_TOL_US = 1_800_000_000  # 30 minutes in epoch micros
 
 
+@row("asof_nearest", lambda: _SQL_ASOF_NEAREST)
 def _q_asof_nearest(spark, sf_dir):
     """Attribution by the NEAREST click within +/-30 minutes (r09):
     asof_join's full merge_asof surface — direction='nearest' picks
@@ -7439,6 +7222,7 @@ def _bpe_merges_cached(spark, sf_dir, train_sources=None):
     return MEMO[key]
 
 
+@row("bpe_merges", lambda: _sql_bpe_merges())
 def _q_bpe_merges(spark, sf_dir):
     """Tokenizer vocabulary induction (r09): the first 4 rounds of the
     BPE trainer loop (Sennrich et al. 2016) over the documents corpus —
@@ -7509,6 +7293,7 @@ def _sql_bpe_merges() -> str:
             + "\nUNION ALL ".join(selects))
 
 
+@row("bpe_encode", lambda: _sql_bpe_encode())
 def _q_bpe_encode(spark, sf_dir):
     """BPE encode/apply (r10, VERDICT r9 #3): induce the 4-round merge
     table (bpe_merge_rounds), then APPLY it to the corpus —
@@ -7546,6 +7331,7 @@ FROM {last}
 """)
 
 
+@row("bpe_roundtrip", lambda: _sql_bpe_roundtrip())
 def _q_bpe_roundtrip(spark, sf_dir):
     """BPE decode inverts encode (r12): apply the fitted merge table,
     then replay it in REVERSE (bpe_decode) and compare with the
@@ -7610,6 +7396,7 @@ _TFIDF_K = 3
 _TFIDF_SCALE = 1_000_000
 
 
+@row("quality_rarity", lambda: _sql_quality_rarity())
 def _q_quality_rarity(spark, sf_dir):
     """CCNet-style unigram-LM quality filter (r10), exact-arithmetic
     variant: corpus unigram counts -> per-token integer rarity
@@ -7665,6 +7452,7 @@ FROM rscore
 """)
 
 
+@row("ccnet_buckets", lambda: _sql_ccnet_buckets())
 def _q_ccnet_buckets(spark, sf_dir):
     """CCNet head/middle/tail perplexity buckets (r12, Wenzek et al.
     2020): per language, documents split into 3 equal-count tiles by
@@ -7710,6 +7498,7 @@ _WINNOW_W = 4
 _WINNOW_MIN_SHARED = 2
 
 
+@row("winnow_pairs", lambda: _sql_winnow_pairs())
 def _q_winnow_pairs(spark, sf_dir):
     """Winnowing-fingerprint pairs (r12, Schleimer et al. 2003 /
     MOSS): docs sharing >= 2 winnowed fingerprints (k=4-token grams,
@@ -7730,6 +7519,7 @@ def _q_winnow_pairs(spark, sf_dir):
 _WINNOW_CAP = 2
 
 
+@row("winnow_pairs_capped", lambda: _sql_winnow_pairs(cap=_WINNOW_CAP))
 def _q_winnow_pairs_capped(spark, sf_dir):
     """The hot-fingerprint-capped sibling (r12): same selection, but
     fingerprints in more than ``max_fp_df`` docs are excluded from
@@ -7754,6 +7544,7 @@ def _q_winnow_pairs_capped(spark, sf_dir):
     )
 
 
+@row("winnow_pairs_censused", lambda: _sql_winnow_pairs(census=True))
 def _q_winnow_pairs_censused(spark, sf_dir):
     """The CALIBRATED cap (r13, VERDICT r12 #2): ``max_fp_df`` set
     from the corpus's own fingerprint-df census — exact p99.9 of the
@@ -7836,6 +7627,7 @@ _DIVERSITY_N = 2
 _DIVERSITY_SCALE = 1_000_000
 
 
+@row("ngram_diversity", lambda: _sql_ngram_diversity())
 def _q_ngram_diversity(spark, sf_dir):
     """Per-source corpus bigram diversity (r12): distinct grams over
     total gram occurrences — the corpus-level inverse of the Gopher
@@ -7888,6 +7680,7 @@ _BM25_K = 10
 _BM25_SCALE = 1_000_000
 
 
+@row("bm25_topk", lambda: _sql_bm25_topk())
 def _q_bm25_topk(spark, sf_dir):
     """Fixed-point BM25 retrieval (r12, Robertson/Okapi k1=1.2,
     b=0.75): top-10 documents for a 4-term query. The Okapi quotient
@@ -7959,6 +7752,7 @@ _DSIR_TARGET_SOURCES = ("src0", "src1")
 _DSIR_SELECT_AT = 0
 
 
+@row("dsir_select", lambda: _sql_dsir_select())
 def _q_dsir_select(spark, sf_dir):
     """DSIR-style importance selection (r12, Xie et al. 2023): fit
     unigram models on the TARGET slice (src0-src1 — the wiki-like
@@ -8015,6 +7809,7 @@ FROM sc
 """
 
 
+@row("quality_gopher", lambda: _sql_quality_gopher())
 def _q_quality_gopher(spark, sf_dir):
     """Gopher-style rule gate (r12, Rae et al. 2021 App. A1.1): five
     per-rule boolean flags (token count, mean word length, symbol
@@ -8057,6 +7852,7 @@ FROM documents
 """
 
 
+@row("cooccurrence_topk", lambda: _sql_cooccurrence_topk())
 def _q_cooccurrence_topk(spark, sf_dir):
     """Top-20 token associations by fixed-point lift (r12): the PMI
     argument (scale · pair_docs · n_docs) DIV (df_a · df_b) over
@@ -8102,6 +7898,7 @@ ORDER BY lift_scaled DESC, tok_a, tok_b LIMIT 20
 """
 
 
+@row("tfidf_topk", lambda: _sql_tfidf_topk())
 def _q_tfidf_topk(spark, sf_dir):
     """Per-document top-3 terms by fixed-point TF-IDF (r10): tf =
     in-doc occurrence count, idf = (scale * n_docs) DIV df(term) —
@@ -8146,6 +7943,7 @@ FROM ranked WHERE rank <= {_TFIDF_K}
 """
 
 
+@row("pack_sequences_bpe", lambda: _sql_pack_sequences_bpe())
 def _q_pack_sequences_bpe(spark, sf_dir):
     """Vocabulary-true sequence packing (r10, VERDICT r9 #3 follow-
     through): induce the 4-round BPE merge table, ENCODE the corpus
@@ -8200,6 +7998,7 @@ FROM c
 # ---------------------------------------------------------------------------
 
 
+@row("curation_pipeline", lambda: _sql_curation_pipeline())
 def _q_curation_pipeline(spark, sf_dir):
     """The full training-data curation journey as ONE composed plan
     (r10): unigram-rarity quality filter (keep the low-perplexity
@@ -8274,6 +8073,7 @@ FROM c
 """)
 
 
+@row("curation_pipeline_bpe", lambda: _sql_curation_pipeline_bpe())
 def _q_curation_pipeline_bpe(spark, sf_dir):
     """The curation composite made vocabulary-true end-to-end (r11,
     VERDICT r10 #8): rarity quality filter -> exact dedup -> DoReMi
@@ -8381,6 +8181,7 @@ FROM c
 _BPE_TRAIN_SRC = [f"src{k}" for k in range(10)]
 
 
+@row("bpe_encode_holdout", lambda: _sql_bpe_encode_holdout())
 def _q_bpe_encode_holdout(spark, sf_dir):
     """Tokenizer train/apply split (r10): induce the 4-round merge
     table on the TRAIN half of the corpus (sources src0–src9), then
@@ -8437,6 +8238,7 @@ FROM h{_BPE_ROUNDS}
 """)
 
 
+@row("quality_rarity_inline", lambda: _sql_quality_rarity())
 def _q_quality_rarity_inline(spark, sf_dir):
     """The inline (model-shipped) rarity scorer as its own correctness
     row (r10): same statistic as quality_rarity, computed the way
@@ -8459,6 +8261,7 @@ def _q_quality_rarity_inline(spark, sf_dir):
     )
 
 
+@row("quality_rarity_holdout", lambda: _sql_quality_rarity_holdout())
 def _q_quality_rarity_holdout(spark, sf_dir):
     """Cross-corpus rarity scoring (r11, VERDICT r10 #1): fit the
     unigram model on the TRAIN half of the corpus (sources src0–src9,
@@ -8531,6 +8334,7 @@ FROM hscore
 _BIGRAM_PENALTY = 3
 
 
+@row("quality_rarity_bigram", lambda: _sql_quality_rarity_bigram())
 def _q_quality_rarity_bigram(spark, sf_dir):
     """Order-2 rarity with stupid-backoff (the continuity-notes depth
     candidate): fit bigram + unigram models on the TRAIN sources,
@@ -8552,6 +8356,7 @@ def _q_quality_rarity_bigram(spark, sf_dir):
     )
 
 
+@row("quality_rarity_bigram_inline", lambda: _sql_quality_rarity_bigram())
 def _q_quality_rarity_bigram_inline(spark, sf_dir):
     """The zero-Exchange inline shape of the order-2 scorer (r12):
     both model tables collected (vocabulary-bounded) and shipped into
@@ -8649,6 +8454,7 @@ def _rarity_holdout_split(spark, sf_dir):
     return fit, hold
 
 
+@row("quality_rarity_trigram", lambda: _sql_quality_rarity_trigram())
 def _q_quality_rarity_trigram(spark, sf_dir):
     """Order-3 rarity with the FULL stupid-backoff chain (r13,
     VERDICT r12 #6 — the order CCNet-style filters actually ship):
@@ -8672,6 +8478,7 @@ def _q_quality_rarity_trigram(spark, sf_dir):
     )
 
 
+@row("quality_rarity_trigram_inline", lambda: _sql_quality_rarity_trigram())
 def _q_quality_rarity_trigram_inline(spark, sf_dir):
     """The zero-Exchange inline shape of the order-3 scorer (r13):
     all THREE model tables collected (each cardinality-guarded
@@ -8771,6 +8578,7 @@ FROM hscore
 _WMH_T = 0.8
 
 
+@row("minhash_pairs_weighted", lambda: _sql_minhash_pairs_weighted())
 def _q_minhash_pairs_weighted(spark, sf_dir):
     """TF-weighted near-dup pairs (r10): integer-weighted Jaccard
     Σmin(tf)/Σmax(tf) — repeated terms count with multiplicity, so a
@@ -8796,6 +8604,7 @@ def _q_minhash_pairs_weighted(spark, sf_dir):
     ).select("id_a", "id_b", F.col("jaccard").alias("jaccard_w"))
 
 
+@row("minhash_pairs_weighted_win", lambda: _sql_minhash_pairs_weighted())
 def _q_minhash_pairs_weighted_win(spark, sf_dir):
     """The long-document escape for weighted near-dup (r11, VERDICT
     r10 #2; redesigned r12): identical statistic and output to

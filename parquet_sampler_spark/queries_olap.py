@@ -9,19 +9,22 @@ aggregations are rounded identically on both sides.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from parquet_sampler_spark.plans.cache import MEMO
+from parquet_sampler_spark.queries import row
 from parquet_sampler_spark.queries import table as _t
+# a top-level import, so queries_ext's rows are declared before these in
+# any import order
+from parquet_sampler_spark.queries_ext import _events
 
 
 # ---------------------------------------------------------------------------
 # Set operations
 # ---------------------------------------------------------------------------
 
+@row("set_ops", lambda: _SQL_SET_OPS)
 def _q_set_ops(spark, sf_dir):
     """INTERSECT / EXCEPT demo over customer key sets: customers with
     orders vs customers in the BUILDING market segment."""
@@ -56,6 +59,7 @@ SELECT custkey, 'orders_only' AS tag FROM (
 # Scalar function suite (string / date / math)
 # ---------------------------------------------------------------------------
 
+@row("scalar_suite", lambda: _SQL_SCALAR_SUITE)
 def _q_scalar_suite(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     return o.select(
@@ -91,6 +95,7 @@ FROM orders
 # Distinct aggregation
 # ---------------------------------------------------------------------------
 
+@row("distinct_agg", lambda: _SQL_DISTINCT_AGG)
 def _q_distinct_agg(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
@@ -116,12 +121,11 @@ FROM lineitem GROUP BY l_returnflag
 _EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 
 
+@row("pivot_events", lambda: _SQL_PIVOT_EVENTS)
 def _q_pivot_events(spark, sf_dir):
     """Daily event-type count matrix via pivot. The oracle uses
     equivalent conditional aggregation (FILTER), which is what pivot
     compiles to anyway."""
-    from parquet_sampler_spark.queries_ext import _events
-
     e = _events(spark, sf_dir)
     return (
         e.groupBy(F.to_date("ts").alias("day"))
@@ -146,6 +150,7 @@ FROM events GROUP BY 1
 # Window-function suite
 # ---------------------------------------------------------------------------
 
+@row("window_suite", lambda: _SQL_WINDOW_SUITE)
 def _q_window_suite(spark, sf_dir):
     """rank / dense_rank / lag / ntile / running sum over customer
     account balances per market segment. acctbal is two-decimal money:
@@ -180,101 +185,11 @@ WINDOW w AS (PARTITION BY c_mktsegment
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "set_ops": _q_set_ops,
-        "scalar_suite": _q_scalar_suite,
-        "distinct_agg": _q_distinct_agg,
-        "pivot_events": _q_pivot_events,
-        "window_suite": _q_window_suite,
-        "tpch_q3": _q_tpch_q3,
-        "tpch_q4": _q_tpch_q4,
-        "tpch_q5": _q_tpch_q5,
-        "tpch_q6": _q_tpch_q6,
-        "tpch_q7": _q_tpch_q7,
-        "tpch_q10": _q_tpch_q10,
-        "tpch_q11": _q_tpch_q11,
-        "tpch_q14": _q_tpch_q14,
-        "tpch_q18": _q_tpch_q18,
-        "tpch_q19": _q_tpch_q19,
-        "sql_correlated_subquery": _q_sql_api,
-        "percentiles": _q_percentiles,
-        "json_extract": _q_json_extract,
-        "array_stats": _q_array_stats,
-        "grouped_udaf_quantiles": _q_grouped_udaf,
-        "merge_upsert": _q_merge_upsert,
-        "ivm_rollup": _q_ivm_rollup,
-        "approx_distinct": _q_approx_distinct,
-        "approx_quantiles": _q_approx_quantiles,
-        "column_stats": _q_column_stats,
-        "tpch_q13": _q_tpch_q13,
-        "tpch_q15": _q_tpch_q15,
-        "tpch_q16": _q_tpch_q16,
-        "tpch_q17": _q_tpch_q17,
-        "tpch_q22": _q_tpch_q22,
-        "grouped_topk": _q_grouped_topk,
-        "diff_snapshots": _q_diff_snapshots,
-        "tpch_q2": _q_tpch_q2,
-        "tpch_q8": _q_tpch_q8,
-        "tpch_q9": _q_tpch_q9,
-        "tpch_q12": _q_tpch_q12,
-        "tpch_q20": _q_tpch_q20,
-        "tpch_q21": _q_tpch_q21,
-        "cdc_time_travel": _q_cdc_time_travel,
-        "cdc_incremental": _q_cdc_incremental,
-        "unpivot_events": _q_unpivot_events,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "set_ops": _SQL_SET_OPS,
-        "scalar_suite": _SQL_SCALAR_SUITE,
-        "distinct_agg": _SQL_DISTINCT_AGG,
-        "pivot_events": _SQL_PIVOT_EVENTS,
-        "window_suite": _SQL_WINDOW_SUITE,
-        "tpch_q3": _SQL_TPCH_Q3,
-        "tpch_q4": _SQL_TPCH_Q4,
-        "tpch_q5": _SQL_TPCH_Q5,
-        "tpch_q6": _SQL_TPCH_Q6,
-        "tpch_q7": _SQL_TPCH_Q7,
-        "tpch_q10": _SQL_TPCH_Q10,
-        "tpch_q11": _SQL_TPCH_Q11,
-        "tpch_q14": _SQL_TPCH_Q14,
-        "tpch_q18": _SQL_TPCH_Q18,
-        "tpch_q19": _SQL_TPCH_Q19,
-        "sql_correlated_subquery": _SQL_API_QUERY,
-        "percentiles": _SQL_PERCENTILES,
-        "json_extract": _SQL_JSON_EXTRACT,
-        "array_stats": _SQL_ARRAY_STATS,
-        "grouped_udaf_quantiles": _SQL_GROUPED_UDAF,
-        "merge_upsert": _SQL_MERGE_UPSERT,
-        "ivm_rollup": _SQL_IVM_ROLLUP,
-        "tpch_q13": _SQL_TPCH_Q13,
-        "tpch_q15": _SQL_TPCH_Q15,
-        "tpch_q16": _SQL_TPCH_Q16,
-        "tpch_q17": _SQL_TPCH_Q17,
-        "tpch_q22": _SQL_TPCH_Q22,
-        "grouped_topk": _SQL_GROUPED_TOPK,
-        "diff_snapshots": _SQL_DIFF_SNAPSHOTS,
-        "tpch_q2": _SQL_TPCH_Q2,
-        "tpch_q8": _SQL_TPCH_Q8,
-        "tpch_q9": _SQL_TPCH_Q9,
-        "tpch_q12": _SQL_TPCH_Q12,
-        "tpch_q20": _SQL_TPCH_Q20,
-        "tpch_q21": _SQL_TPCH_Q21,
-        "cdc_time_travel": _SQL_CDC_TIME_TRAVEL,
-        "cdc_incremental": _SQL_MERGE_UPSERT,
-        "unpivot_events": _SQL_UNPIVOT_EVENTS,
-        "approx_distinct": _SQL_APPROX_DISTINCT,
-        "approx_quantiles": _SQL_APPROX_QUANTILES,
-        "column_stats": _SQL_COLUMN_STATS,
-    }
-
 # ---------------------------------------------------------------------------
 # TPC-H-style queries adapted to the testdata schema
 # ---------------------------------------------------------------------------
 
+@row("tpch_q6", lambda: _SQL_TPCH_Q6)
 def _q_tpch_q6(spark, sf_dir):
     """Q6 forecasting-revenue-change: tight filter + single aggregate.
     The predicates push down into the parquet scan."""
@@ -314,6 +229,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
 """
 
 
+@row("tpch_q3", lambda: _SQL_TPCH_Q3)
 def _q_tpch_q3(spark, sf_dir):
     """Q3 shipping-priority: 3-way join, revenue per order, top 10 with
     a deterministic (revenue, orderkey) ordering. orders/customer scale
@@ -358,6 +274,7 @@ LIMIT 10
 """
 
 
+@row("tpch_q5", lambda: _SQL_TPCH_Q5)
 def _q_tpch_q5(spark, sf_dir):
     """Q5 local-supplier-volume (adapted: no suppkey filter — join the
     full region→nation→customer→orders→lineitem chain)."""
@@ -408,6 +325,7 @@ WHERE (SELECT count(*) FROM lineitem l
 """
 
 
+@row("sql_correlated_subquery", lambda: _SQL_API_QUERY)
 def _q_sql_api(spark, sf_dir):
     """The same engine surface through pure SQL: temp views + a
     correlated scalar subquery (Catalyst decorrelates it into an
@@ -417,6 +335,7 @@ def _q_sql_api(spark, sf_dir):
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_SQL_API_QUERY)
 
+@row("tpch_q10", lambda: _SQL_TPCH_Q10)
 def _q_tpch_q10(spark, sf_dir):
     """Q10 returned-item reporting: 4-way join, quarter filter,
     top-20 customers by revenue (deterministic tie-break)."""
@@ -463,6 +382,7 @@ LIMIT 20
 """
 
 
+@row("tpch_q18", lambda: _SQL_TPCH_Q18)
 def _q_tpch_q18(spark, sf_dir):
     """Q18 large-volume customers: HAVING subquery (semi-join on an
     aggregate) + join + re-aggregate. Quantities are integral doubles —
@@ -506,6 +426,7 @@ ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 100
 """
 
+@row("percentiles", lambda: _SQL_PERCENTILES)
 def _q_percentiles(spark, sf_dir):
     """Exact linear-interpolation percentiles per priority class —
     Spark `percentile` and DuckDB `quantile_cont` agree bit-for-bit
@@ -530,11 +451,10 @@ SELECT o_orderpriority,
 FROM orders GROUP BY o_orderpriority
 """
 
+@row("json_extract", lambda: _SQL_JSON_EXTRACT)
 def _q_json_extract(spark, sf_dir):
     """Semi-structured access: extract a JSON field from the events
     props column, bucket it, aggregate — the JSON-functions surface."""
-    from parquet_sampler_spark.queries_ext import _events
-
     e = _events(spark, sf_dir)
     # guard with an integral-pattern match before casting: engines
     # disagree on non-integral strings (Spark try_cast -> NULL, DuckDB
@@ -578,6 +498,7 @@ GROUP BY 1, 2
 """
 
 
+@row("array_stats", lambda: _SQL_ARRAY_STATS)
 def _q_array_stats(spark, sf_dir):
     """Array-function surface over embeddings: per-vector min / max /
     mean / dim. Mean uses an explicit left-to-right sum over double
@@ -608,6 +529,7 @@ SELECT vec_id,
 FROM embeddings
 """
 
+@row("tpch_q4", lambda: _SQL_TPCH_Q4)
 def _q_tpch_q4(spark, sf_dir):
     """Q4 order-priority checking (adapted: no commit/receipt dates in
     this schema — "late" = any lineitem shipped > 60 days after the
@@ -638,6 +560,7 @@ WHERE EXISTS (SELECT 1 FROM lineitem l
 GROUP BY o_orderpriority
 """
 
+@row("grouped_udaf_quantiles", lambda: _SQL_GROUPED_UDAF)
 def _q_grouped_udaf(spark, sf_dir):
     """Grouped-map UDAF (applyInPandas): per-segment account-balance
     quantiles. numpy's linear interpolation is the same formula as
@@ -660,6 +583,7 @@ SELECT c_mktsegment,
 FROM customer GROUP BY c_mktsegment
 """
 
+@row("approx_distinct", lambda: _SQL_APPROX_DISTINCT)
 def _q_approx_distinct(spark, sf_dir):
     """HLL++ approximate distinct counts checked against the exact
     answer — the one-pass mergeable-sketch pattern that replaces
@@ -708,6 +632,7 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
+@row("approx_quantiles", lambda: _SQL_APPROX_QUANTILES)
 def _q_approx_quantiles(spark, sf_dir):
     """Mergeable quantile sketch (``percentile_approx``, Greenwald-
     Khanna) checked against the exact answer — the sketch that replaces
@@ -758,6 +683,7 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
+@row("column_stats", lambda: _SQL_COLUMN_STATS)
 def _q_column_stats(spark, sf_dir):
     """ANALYZE-style one-pass table profile: per-column row/null/ndv
     counts and min/max for lineitem, unpivoted to one row per column.
@@ -840,6 +766,7 @@ def _merge_batch(spark, sf_dir):
     return updates.unionByName(inserts)
 
 
+@row("merge_upsert", lambda: _SQL_MERGE_UPSERT)
 def _q_merge_upsert(spark, sf_dir):
     """CDC MERGE emulation: apply a deterministic synthetic update batch
     (every 100th customer re-priced, every 250th deleted, 3 inserts) to
@@ -884,6 +811,7 @@ SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
 FROM updates WHERE NOT is_deleted
 """
 
+@row("tpch_q14", lambda: _SQL_TPCH_Q14)
 def _q_tpch_q14(spark, sf_dir):
     """Q14 promo-effect: one-month lineitem slice joined to part, share
     of revenue from PROMO-type parts. Conditional aggregation + exact
@@ -935,6 +863,7 @@ FROM (
 """
 
 
+@row("tpch_q19", lambda: _SQL_TPCH_Q19)
 def _q_tpch_q19(spark, sf_dir):
     """Q19 discounted-revenue (adapted to this schema): DISJUNCTIVE
     brand/size/quantity predicate branches — the case Catalyst handles
@@ -981,6 +910,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
 """
 
 
+@row("tpch_q11", lambda: _SQL_TPCH_Q11)
 def _q_tpch_q11(spark, sf_dir):
     """Q11 important-stock (adapted): per-supplier revenue, keeping
     suppliers above a fraction of TOTAL revenue — an aggregate compared
@@ -1033,6 +963,7 @@ WHERE CAST(rev_e4 AS DOUBLE)
 """
 
 
+@row("tpch_q7", lambda: _SQL_TPCH_Q7)
 def _q_tpch_q7(spark, sf_dir):
     """Q7 volume shipping (adapted): revenue between (supplier nation,
     customer nation) pairs — the dual-dimension join where the fact
@@ -1096,6 +1027,7 @@ GROUP BY n1.n_name, n2.n_name
 # snapshot diff
 # ---------------------------------------------------------------------------
 
+@row("ivm_rollup", lambda: _SQL_IVM_ROLLUP)
 def _q_ivm_rollup(spark, sf_dir):
     """Incremental view maintenance (r08): a per-nation customer
     aggregate (count, exact-cents balance sum) maintained under the
@@ -1205,6 +1137,7 @@ GROUP BY c_nationkey
 """
 
 
+@row("tpch_q13", lambda: _SQL_TPCH_Q13)
 def _q_tpch_q13(spark, sf_dir):
     """Q13 customer-order-count distribution: LEFT OUTER join preserving
     order-less customers, then a two-level aggregation (count per
@@ -1237,6 +1170,7 @@ GROUP BY c_count
 """
 
 
+@row("tpch_q15", lambda: _SQL_TPCH_Q15)
 def _q_tpch_q15(spark, sf_dir):
     """Q15 top supplier: quarterly revenue per supplier, keeping the
     supplier(s) whose revenue equals the maximum — an aggregate
@@ -1282,6 +1216,7 @@ WHERE rev_e4 = (SELECT max(rev_e4) FROM revenue)
 """
 
 
+@row("tpch_q16", lambda: _SQL_TPCH_Q16)
 def _q_tpch_q16(spark, sf_dir):
     """Q16 supplier diversity per part attribute (adapted to the
     partsupp-less schema: supplier-part relationships come from
@@ -1317,6 +1252,7 @@ GROUP BY p_brand, p_type, p_size
 """
 
 
+@row("tpch_q17", lambda: _SQL_TPCH_Q17)
 def _q_tpch_q17(spark, sf_dir):
     """Q17 small-quantity-order revenue: the classic correlated
     aggregate — compare each row against 0.2x the per-part average
@@ -1364,6 +1300,7 @@ WHERE l_quantity < qty_thresh
 """
 
 
+@row("tpch_q22", lambda: _SQL_TPCH_Q22)
 def _q_tpch_q22(spark, sf_dir):
     """Q22 global-sales-opportunity (adapted): customers with
     above-average positive balances and NO RECENT orders (every
@@ -1414,14 +1351,13 @@ GROUP BY cntrycode
 """
 
 
+@row("grouped_topk", lambda: _SQL_GROUPED_TOPK)
 def _q_grouped_topk(spark, sf_dir):
     """Per-group top-k: 3 highest-value events per event type via a
     ranked window. Spark 4 rewrites the rn <= k filter into
     WindowGroupLimit — per-partition k-heaps BEFORE the shuffle, so
     only ~k rows per group per input partition move (asserted in
     tools/explain_audit.py); without the rewrite every row shuffles."""
-    from parquet_sampler_spark.queries_ext import _events
-
     e = _events(spark, sf_dir).select("event_type", "event_id", "value")
     w = Window.partitionBy("event_type").orderBy(
         F.col("value").desc(), F.col("event_id")
@@ -1444,6 +1380,7 @@ WHERE rn <= 3
 """
 
 
+@row("diff_snapshots", lambda: _SQL_DIFF_SNAPSHOTS)
 def _q_diff_snapshots(spark, sf_dir):
     """Row-level snapshot diff (operators/diff.py): classify every key
     as added/deleted/changed between the customer table and the CDC
@@ -1488,6 +1425,7 @@ WHERE CASE WHEN c.c_custkey IS NULL THEN 'added'
 # l_shipdate > o_orderdate + interval — each documented per query.
 # ---------------------------------------------------------------------------
 
+@row("tpch_q2", lambda: _SQL_TPCH_Q2)
 def _q_tpch_q2(spark, sf_dir):
     """Q2 minimum-cost supplier (adapted: supplier's cost for a part =
     the minimum line price it ever charged, exact cents — the testdata
@@ -1554,6 +1492,7 @@ JOIN eur ON costs.l_suppkey = eur.s_suppkey
 """
 
 
+@row("tpch_q8", lambda: _SQL_TPCH_Q8)
 def _q_tpch_q8(spark, sf_dir):
     """Q8 national market share: NATION_8's share of EUROPE's STANDARD-
     part import volume per year — a 7-relation join tree whose share
@@ -1630,6 +1569,7 @@ GROUP BY o_year
 """
 
 
+@row("tpch_q9", lambda: _SQL_TPCH_Q9)
 def _q_tpch_q9(spark, sf_dir):
     """Q9 product-type profit (adapted: unit cost = 0.6 × p_retailprice
     — no partsupp supplycost in the testdata): profit per supplier
@@ -1677,6 +1617,7 @@ GROUP BY n_name, year(o_orderdate)
 """
 
 
+@row("tpch_q12", lambda: _SQL_TPCH_Q12)
 def _q_tpch_q12(spark, sf_dir):
     """Q12 shipping-priority classes (adapted: late = shipped more than
     60 days after order date; grouped by l_returnflag — the testdata
@@ -1788,6 +1729,7 @@ def _tpch_views(spark, sf_dir, *names):
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
+@row("tpch_q20", lambda: _SQL_TPCH_Q20)
 def _q_tpch_q20(spark, sf_dir):
     """Q20 potential-part-promotion (adapted to supplier granularity —
     per-(supplier, part) lineitem pairs are too sparse in this testdata
@@ -1803,6 +1745,7 @@ def _q_tpch_q20(spark, sf_dir):
     return spark.sql(_SQL_TPCH_Q20)
 
 
+@row("tpch_q21", lambda: _SQL_TPCH_Q21)
 def _q_tpch_q21(spark, sf_dir):
     """Q21 waiting-suppliers (adapted: late = shipped > 90 days after
     order date): multi-supplier 'F' orders where THIS nation's supplier
@@ -1813,6 +1756,7 @@ def _q_tpch_q21(spark, sf_dir):
     return spark.sql(_SQL_TPCH_Q21)
 
 
+@row("cdc_time_travel", lambda: _SQL_CDC_TIME_TRAVEL)
 def _q_cdc_time_travel(spark, sf_dir):
     """Snapshot time travel (streaming/sinks.py VERSION-AS-OF read):
     publish two versions through the real commit protocol — v0 = the
@@ -1858,6 +1802,7 @@ FROM customer
 """
 
 
+@row("cdc_incremental", lambda: _SQL_MERGE_UPSERT)
 def _q_cdc_incremental(spark, sf_dir):
     """Bucket-granular copy-on-write CDC (streaming/incremental.py):
     the customer snapshot loads as batch 0, the shared synthetic CDC
@@ -1895,6 +1840,7 @@ def _q_cdc_incremental(spark, sf_dir):
     return read_incremental_snapshot(spark, base).select(*cols)
 
 
+@row("unpivot_events", lambda: _SQL_UNPIVOT_EVENTS)
 def _q_unpivot_events(spark, sf_dir):
     """Pivot's inverse (DataFrame.unpivot / melt): the wide daily
     event-type matrix from pivot_events back to long (day, event_type,

@@ -34,7 +34,7 @@ def test_route_probe_empty_queries_both_paths():
 # ---------------------------------------------------------------------------
 # ADVICE low: _unit_dot_arrow must match the _unit_dot fold on
 # degenerate inputs — zero-length vectors -> 0.0 (the fold's init),
-# NULL arrays (either side) -> NULL
+# NULL arrays (either side) and mixed-width pairs -> NULL
 # ---------------------------------------------------------------------------
 
 def test_unit_dot_arrow_degenerate_parity_with_fold(spark):
@@ -50,6 +50,9 @@ def test_unit_dot_arrow_degenerate_parity_with_fold(spark):
         ([1.0, 2.0], None),              # NULL right -> NULL
         ([3.0, 1.0, -2.0], [1.0, 1.0, 1.0]),  # ragged vs row 1
         ([7.0], [0.25]),                 # second length class
+        ([1.0, 2.0, 3.0], [1.0, 2.0]),   # mixed widths -> NULL
+        ([1.0], [1.0, 2.0]),             # mixed widths -> NULL
+        ([], [1.0]),                     # zero-length vs one -> NULL
     ]
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(rows)],
@@ -75,3 +78,4 @@ def test_unit_dot_arrow_degenerate_parity_with_fold(spark):
             )
     assert got[1][0] == 0.0 and got[1][1] == 0.0
     assert got[2] == (None, None) and got[3] == (None, None)
+    assert got[6] == got[7] == got[8] == (None, None)

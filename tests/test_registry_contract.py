@@ -21,7 +21,10 @@ every entry.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
+
+from tests.conftest import SF_MED
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -70,3 +73,79 @@ def test_clear_caches_drops_coreset_oracle_sql(monkeypatch):
     assert MEMO[("coreset_sql", SF_SMALL)] == sql
     clear_caches()
     assert ("coreset_sql", SF_SMALL) not in MEMO
+
+
+# ---------------------------------------------------------------------------
+# One @row(name, oracle) declaration per registry row
+# ---------------------------------------------------------------------------
+
+# the oracles whose SQL inlines literals fitted to embeddings.parquet:
+# the only ones that degrade to rows-only when that file is missing
+_FITTED = {
+    "ann_ivf", "ann_pq", "ann_ivfpq", "ann_ivfpq_residual",
+    "ann_ivfpq_residual8", "ann_ivf_hier", "ann_ivf_sized",
+    "ivf_coreset", "semantic_dedup",
+}
+
+
+def test_row_rejects_a_second_declaration_of_a_name():
+    from parquet_sampler_spark import queries as R
+
+    declared = R.queries()["sample_lineitem"]
+    with pytest.raises(ValueError, match="sample_lineitem"):
+        R.row("sample_lineitem", lambda: "SELECT 1")
+    assert R.queries()["sample_lineitem"] is declared
+
+
+def test_every_row_has_exactly_one_oracle(monkeypatch):
+    from parquet_sampler_spark.queries import (
+        clear_caches,
+        oracle_sql,
+        queries,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_MED)
+    try:
+        qs, sql = queries(), oracle_sql()
+    finally:
+        clear_caches()
+    assert set(qs) == set(sql)
+    assert len(qs) == 203
+    assert all(isinstance(s, str) and s.strip() for s in sql.values())
+
+
+def test_queries_builds_no_oracle(monkeypatch):
+    from parquet_sampler_spark.plans.cache import MEMO
+    from parquet_sampler_spark.queries import clear_caches, queries
+
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_MED)
+    clear_caches()
+    queries()
+    assert not MEMO, sorted(map(str, MEMO))
+
+
+def test_fitted_oracles_degrade_without_their_data(monkeypatch, tmp_path):
+    from parquet_sampler_spark.queries import (
+        clear_caches,
+        oracle_sql,
+        queries,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", str(tmp_path))
+    try:
+        qs = queries()
+        sql = oracle_sql()
+    finally:
+        clear_caches()
+    assert len(qs) == 203
+    assert set(qs) - set(sql) == _FITTED
+    assert len(sql) == 194
+
+
+def test_other_oracle_failures_still_raise(monkeypatch):
+    from parquet_sampler_spark import queries as R
+
+    fn = R.queries()["sample_lineitem"]
+    monkeypatch.setitem(R._ROWS, "sample_lineitem", (fn, lambda: 1 // 0))
+    with pytest.raises(ZeroDivisionError):
+        R.oracle_sql()

@@ -29,6 +29,7 @@ def main() -> int:
     from parquet_sampler_spark.session import get_spark
 
     spark = get_spark("explain_audit")
+    qs = R.queries()
     failures = []
 
     def check(name, df, must_contain=(), must_not=()):
@@ -51,7 +52,7 @@ def main() -> int:
     # it would cost a shuffle-map job the semi-join does not need)
     check(
         "semijoin_orders",
-        R.queries()["semijoin_orders"](spark, sf_dir),
+        qs["semijoin_orders"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "LeftSemi"],
         must_not=["HashAggregate"],
     )
@@ -60,7 +61,7 @@ def main() -> int:
     # sides exchange on the key, NO BroadcastExchange anywhere
     check(
         "semijoin_orders_shuffle",
-        R.queries()["semijoin_orders_shuffle"](spark, sf_dir),
+        qs["semijoin_orders_shuffle"](spark, sf_dir),
         must_contain=["ShuffledHashJoin", "LeftSemi"],
         must_not=["BroadcastExchange", "BroadcastHashJoin"],
     )
@@ -68,7 +69,7 @@ def main() -> int:
     # single-partition window the row_number() formulation degraded to)
     check(
         "sample_lineitem",
-        R.queries()["sample_lineitem"](spark, sf_dir),
+        qs["sample_lineitem"](spark, sf_dir),
         must_contain=["TakeOrderedAndProject"],
         must_not=["Window", "SinglePartition"],
     )
@@ -80,7 +81,7 @@ def main() -> int:
     # 4. predicate pushdown on tpch_q6
     check(
         "tpch_q6",
-        R.queries()["tpch_q6"](spark, sf_dir),
+        qs["tpch_q6"](spark, sf_dir),
         must_contain=["PushedFilters: ["],
     )
     # 5. multi-join: joins resolve to broadcast at this sf (nation by
@@ -88,7 +89,7 @@ def main() -> int:
     # plan shuffles at 100 TB instead of broadcasting a fact table)
     check(
         "revenue_per_nation",
-        R.queries()["revenue_per_nation"](spark, sf_dir),
+        qs["revenue_per_nation"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["SortMergeJoin"],
     )
@@ -98,7 +99,7 @@ def main() -> int:
     # threshold sibling is the one allowed to spend exact block FLOPs
     check(
         "embedding_neardup",
-        R.queries()["embedding_neardup"](spark, sf_dir),
+        qs["embedding_neardup"](spark, sf_dir),
         must_not=[
             "FlatMapGroupsInPandas",
             "BroadcastNestedLoopJoin",
@@ -107,7 +108,7 @@ def main() -> int:
     )
     check(
         "embedding_neardup_block",
-        R.queries()["embedding_neardup_block"](spark, sf_dir),
+        qs["embedding_neardup_block"](spark, sf_dir),
         must_contain=["FlatMapGroupsInPandas"],
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
@@ -115,7 +116,7 @@ def main() -> int:
     # join-side IsNotNull conjuncts
     check(
         "tpch_q19",
-        R.queries()["tpch_q19"](spark, sf_dir),
+        qs["tpch_q19"](spark, sf_dir),
         must_contain=["PushedFilters: ["],
         must_not=["l_shipdate"],  # unused column never read
     )
@@ -145,13 +146,13 @@ def main() -> int:
     # without it every event row moves in the window exchange
     check(
         "grouped_topk",
-        R.queries()["grouped_topk"](spark, sf_dir),
+        qs["grouped_topk"](spark, sf_dir),
         must_contain=["WindowGroupLimit"],
     )
     # 10. weighted sampler: top-k heap + merge, not a global sort
     check(
         "sample_weighted",
-        R.queries()["sample_weighted"](spark, sf_dir),
+        qs["sample_weighted"](spark, sf_dir),
         must_contain=["TakeOrderedAndProject"],
         must_not=["Window"],
     )
@@ -159,14 +160,14 @@ def main() -> int:
     # bucket key — never a nested-loop/cartesian over the fact side
     check(
         "range_join_events",
-        R.queries()["range_join_events"](spark, sf_dir),
+        qs["range_join_events"](spark, sf_dir),
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
 
     # 12. q8's 7-relation tree: dims broadcast, no nested loop anywhere
     check(
         "tpch_q8",
-        R.queries()["tpch_q8"](spark, sf_dir),
+        qs["tpch_q8"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
@@ -174,28 +175,28 @@ def main() -> int:
     # semi joins + aggregates — never a per-row nested loop
     check(
         "tpch_q20",
-        R.queries()["tpch_q20"](spark, sf_dir),
+        qs["tpch_q20"](spark, sf_dir),
         must_contain=["LeftSemi"],
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
     # 14. q21's EXISTS / NOT EXISTS pair decorrelates to semi + anti
     check(
         "tpch_q21",
-        R.queries()["tpch_q21"](spark, sf_dir),
+        qs["tpch_q21"](spark, sf_dir),
         must_contain=["LeftSemi", "LeftAnti"],
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
     # 15. mixture resampling is a pure scan-side filter: zero exchanges
     check(
         "corpus_mixture",
-        R.queries()["corpus_mixture"](spark, sf_dir),
+        qs["corpus_mixture"](spark, sf_dir),
         must_not=["Exchange"],
     )
     # 16. sequence packing windows per (lang, shard), never a global
     # single-partition sort
     check(
         "sequence_pack",
-        R.queries()["sequence_pack"](spark, sf_dir),
+        qs["sequence_pack"](spark, sf_dir),
         must_contain=["Window"],
         must_not=["SinglePartition"],
     )
@@ -204,7 +205,7 @@ def main() -> int:
     # on the key for the join), and the one aggregation partial-combines
     check(
         "heavy_hitters",
-        R.queries()["heavy_hitters"](spark, sf_dir),
+        qs["heavy_hitters"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "HashAggregate"],
         must_not=["SortMergeJoin"],
     )
@@ -213,7 +214,7 @@ def main() -> int:
     # (WindowGroupLimit), never a single global partition
     check(
         "source_quota",
-        R.queries()["source_quota"](spark, sf_dir),
+        qs["source_quota"](spark, sf_dir),
         must_contain=["WindowGroupLimit"],
         must_not=["SinglePartition"],
     )
@@ -222,7 +223,7 @@ def main() -> int:
     # (which would tokenize twice and add a third shuffle)
     check(
         "bigram_novelty",
-        R.queries()["bigram_novelty"](spark, sf_dir),
+        qs["bigram_novelty"](spark, sf_dir),
         must_contain=["Window"],
         must_not=["SortMergeJoin", "BroadcastHashJoin"],
     )
@@ -233,7 +234,7 @@ def main() -> int:
     # bounded at cap² by construction so an equi plan is all it needs
     check(
         "jaccard_pairs_capped",
-        R.queries()["jaccard_pairs_capped"](spark, sf_dir),
+        qs["jaccard_pairs_capped"](spark, sf_dir),
         must_contain=["HashAggregate"],
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
@@ -242,7 +243,7 @@ def main() -> int:
     # (one pass per check), never a per-row nested loop
     check(
         "dq_checks",
-        R.queries()["dq_checks"](spark, sf_dir),
+        qs["dq_checks"](spark, sf_dir),
         must_contain=["LeftAnti"],
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
@@ -252,7 +253,7 @@ def main() -> int:
     # layout's per-file min/max ranges into actual skipped IO
     check(
         "zorder_scan",
-        R.queries()["zorder_scan"](spark, sf_dir),
+        qs["zorder_scan"](spark, sf_dir),
         must_contain=["PushedFilters: ["],
     )
 
@@ -263,7 +264,7 @@ def main() -> int:
     # scan never degrades to a non-broadcast cartesian
     check(
         "ann_pq",
-        R.queries()["ann_pq"](spark, sf_dir),
+        qs["ann_pq"](spark, sf_dir),
         must_contain=["WindowGroupLimit"],
         must_not=["CartesianProduct"],
     )
@@ -274,7 +275,7 @@ def main() -> int:
     # scan), not a union of per-check passes
     check(
         "dq_quarantine",
-        R.queries()["dq_quarantine"](spark, sf_dir),
+        qs["dq_quarantine"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "Generate"],
         must_not=["SortMergeJoin", "CartesianProduct"],
     )
@@ -284,7 +285,7 @@ def main() -> int:
     # the cents sums), and nothing may degrade to a cartesian
     check(
         "aqp_revenue",
-        R.queries()["aqp_revenue"](spark, sf_dir),
+        qs["aqp_revenue"](spark, sf_dir),
         must_contain=["partial_sum"],
         must_not=["CartesianProduct"],
     )
@@ -294,7 +295,7 @@ def main() -> int:
     # the row hash must stay whole-stage-codegen JVM expressions
     check(
         "table_checksum",
-        R.queries()["table_checksum"](spark, sf_dir),
+        qs["table_checksum"](spark, sf_dir),
         must_contain=["partial_count", "HashAggregate"],
         must_not=["CartesianProduct", "BatchEvalPython"],
     )
@@ -305,7 +306,7 @@ def main() -> int:
     # per-source conditional counts must partially aggregate
     check(
         "mixture_drift",
-        R.queries()["mixture_drift"](spark, sf_dir),
+        qs["mixture_drift"](spark, sf_dir),
         must_contain=["BroadcastNestedLoopJoin", "partial_count"],
         must_not=["SortMergeJoin", "CartesianProduct"],
     )
@@ -315,7 +316,7 @@ def main() -> int:
     # user_id exchange; no Python evaluation anywhere
     check(
         "twap_events",
-        R.queries()["twap_events"](spark, sf_dir),
+        qs["twap_events"](spark, sf_dir),
         must_contain=["Window", "partial_sum"],
         must_not=["BatchEvalPython", "CartesianProduct"],
     )
@@ -327,7 +328,7 @@ def main() -> int:
     # join must be a broadcast, never a shuffle
     check(
         "dpp_scan",
-        R.queries()["dpp_scan"](spark, sf_dir),
+        qs["dpp_scan"](spark, sf_dir),
         must_contain=["dynamicpruningexpression", "BroadcastHashJoin"],
         must_not=["SortMergeJoin", "CartesianProduct"],
     )
@@ -338,7 +339,7 @@ def main() -> int:
     # of an unsharded cumsum)
     check(
         "pack_sequences",
-        R.queries()["pack_sequences"](spark, sf_dir),
+        qs["pack_sequences"](spark, sf_dir),
         must_contain=["Window"],
         must_not=["BatchEvalPython", "ArrowEvalPython",
                   "SinglePartition", "SortMergeJoin"],
@@ -351,7 +352,7 @@ def main() -> int:
     # map-side partial is a separate sub-job, not in this plan.)
     check(
         "mixture_resample",
-        R.queries()["mixture_resample"](spark, sf_dir),
+        qs["mixture_resample"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["SortMergeJoin", "CartesianProduct",
                   "BatchEvalPython"],
@@ -363,7 +364,7 @@ def main() -> int:
     # broadcast anti-join
     check(
         "semantic_dedup",
-        R.queries()["semantic_dedup"](spark, sf_dir),
+        qs["semantic_dedup"](spark, sf_dir),
         must_contain=["FlatMapGroupsInPandas"],
         must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
     )
@@ -402,7 +403,7 @@ def main() -> int:
     # broadcast nested loop)
     check(
         "ann_ivfpq_residual",
-        R.queries()["ann_ivfpq_residual"](spark, sf_dir),
+        qs["ann_ivfpq_residual"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "SortMergeJoin"],
@@ -413,7 +414,7 @@ def main() -> int:
     # broadcast equi-join on the cell id
     check(
         "ann_ivf_hier",
-        R.queries()["ann_ivf_hier"](spark, sf_dir),
+        qs["ann_ivf_hier"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "SortMergeJoin"],
@@ -441,7 +442,7 @@ def main() -> int:
     # whole-group-in-one-task skew surface exists in the plan
     check(
         "bigram_novelty_salted",
-        R.queries()["bigram_novelty_salted"](spark, sf_dir),
+        qs["bigram_novelty_salted"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["Window", "CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -452,7 +453,7 @@ def main() -> int:
     # shuffle-join), everything JVM-side
     check(
         "quality_rarity",
-        R.queries()["quality_rarity"](spark, sf_dir),
+        qs["quality_rarity"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython", "SortMergeJoin"],
@@ -466,7 +467,7 @@ def main() -> int:
     # aggregate, so it is not forbidden here.
     check(
         "tfidf_topk",
-        R.queries()["tfidf_topk"](spark, sf_dir),
+        qs["tfidf_topk"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "WindowGroupLimit"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython", "SortMergeJoin"],
@@ -477,7 +478,7 @@ def main() -> int:
     # blocking, no cartesian candidate generation, no Python anywhere
     check(
         "minhash_pairs_weighted",
-        R.queries()["minhash_pairs_weighted"](spark, sf_dir),
+        qs["minhash_pairs_weighted"](spark, sf_dir),
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
     )
@@ -490,7 +491,7 @@ def main() -> int:
     # of the element stream was the measured α 1.16 term)
     check(
         "minhash_pairs_weighted_win",
-        R.queries()["minhash_pairs_weighted_win"](spark, sf_dir),
+        qs["minhash_pairs_weighted_win"](spark, sf_dir),
         must_not=["Window", "CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython", "SinglePartition"],
     )
@@ -501,7 +502,7 @@ def main() -> int:
     # any kind (the whole point of the 10^9-doc shape)
     check(
         "quality_rarity_inline",
-        R.queries()["quality_rarity_inline"](spark, sf_dir),
+        qs["quality_rarity_inline"](spark, sf_dir),
         must_not=["Exchange", "BroadcastHashJoin", "SortMergeJoin",
                   "CartesianProduct", "BatchEvalPython"],
     )
@@ -513,7 +514,7 @@ def main() -> int:
     # handling inside the shipped dict
     check(
         "quality_rarity_holdout",
-        R.queries()["quality_rarity_holdout"](spark, sf_dir),
+        qs["quality_rarity_holdout"](spark, sf_dir),
         must_not=["Exchange", "BroadcastHashJoin", "SortMergeJoin",
                   "CartesianProduct", "BatchEvalPython"],
     )
@@ -524,7 +525,7 @@ def main() -> int:
     # cartesian, no Python) with zero added joins for the encode
     check(
         "curation_pipeline_bpe",
-        R.queries()["curation_pipeline_bpe"](spark, sf_dir),
+        qs["curation_pipeline_bpe"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -536,7 +537,7 @@ def main() -> int:
     # no Python anywhere in the chain
     check(
         "curation_pipeline",
-        R.queries()["curation_pipeline"](spark, sf_dir),
+        qs["curation_pipeline"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -548,7 +549,7 @@ def main() -> int:
     # window, never Python
     check(
         "ann_range",
-        R.queries()["ann_range"](spark, sf_dir),
+        qs["ann_range"](spark, sf_dir),
         must_contain=["BroadcastNestedLoopJoin"],
         must_not=["SortMergeJoin", "ShuffledHashJoin", "Window",
                   "CartesianProduct", "BatchEvalPython",
@@ -560,7 +561,7 @@ def main() -> int:
     # Window operator anywhere); no Python
     check(
         "decontaminate_scrub",
-        R.queries()["decontaminate_scrub"](spark, sf_dir),
+        qs["decontaminate_scrub"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "LeftAnti"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -573,7 +574,7 @@ def main() -> int:
     # Python anywhere
     check(
         "decontaminate_spans",
-        R.queries()["decontaminate_spans"](spark, sf_dir),
+        qs["decontaminate_spans"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "LeftSemi"],
         must_not=["SortMergeJoin", "CartesianProduct",
                   "BatchEvalPython", "ArrowEvalPython"],
@@ -584,7 +585,7 @@ def main() -> int:
     # shortlist and rerank joins
     check(
         "ann_jl",
-        R.queries()["ann_jl"](spark, sf_dir),
+        qs["ann_jl"](spark, sf_dir),
         must_contain=["BroadcastNestedLoopJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -595,7 +596,7 @@ def main() -> int:
     # is corpus/nlist-sized); no join anywhere
     check(
         "ivf_coreset",
-        R.queries()["ivf_coreset"](spark, sf_dir),
+        qs["ivf_coreset"](spark, sf_dir),
         must_contain=["WindowGroupLimit"],
         must_not=["Join", "CartesianProduct"],
     )
@@ -606,7 +607,7 @@ def main() -> int:
     # the sf100 tier
     check(
         "winnow_pairs_capped",
-        R.queries()["winnow_pairs_capped"](spark, sf_dir),
+        qs["winnow_pairs_capped"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "LeftAnti"],
         must_not=["CartesianProduct", "Window",
                   "BatchEvalPython", "ArrowEvalPython"],
@@ -617,7 +618,7 @@ def main() -> int:
     # the self-join is the one exchange
     check(
         "winnow_pairs",
-        R.queries()["winnow_pairs"](spark, sf_dir),
+        qs["winnow_pairs"](spark, sf_dir),
         must_contain=["HashAggregate"],
         must_not=["CartesianProduct", "Window",
                   "BatchEvalPython", "ArrowEvalPython"],
@@ -628,7 +629,7 @@ def main() -> int:
     # -> agg -> agg
     check(
         "ngram_diversity",
-        R.queries()["ngram_diversity"](spark, sf_dir),
+        qs["ngram_diversity"](spark, sf_dir),
         must_contain=["HashAggregate"],
         must_not=["Join", "CartesianProduct", "Window",
                   "BatchEvalPython", "ArrowEvalPython"],
@@ -639,7 +640,7 @@ def main() -> int:
     # corpus); the df table broadcasts; no Python
     check(
         "bm25_topk",
-        R.queries()["bm25_topk"](spark, sf_dir),
+        qs["bm25_topk"](spark, sf_dir),
         must_contain=["TakeOrderedAndProject", "BroadcastHashJoin"],
         must_not=["BatchEvalPython", "ArrowEvalPython"],
     )
@@ -649,7 +650,7 @@ def main() -> int:
     # broadcast 1-row totals
     check(
         "dsir_select",
-        R.queries()["dsir_select"](spark, sf_dir),
+        qs["dsir_select"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -661,7 +662,7 @@ def main() -> int:
     # Python, no cartesian
     check(
         "ccnet_buckets",
-        R.queries()["ccnet_buckets"](spark, sf_dir),
+        qs["ccnet_buckets"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -674,7 +675,7 @@ def main() -> int:
     # global sort anywhere)
     check(
         "star_snapshot",
-        R.queries()["star_snapshot"](spark, sf_dir),
+        qs["star_snapshot"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "LeftSemi",
                       "InMemoryTableScan"],
         must_not=["SortMergeJoin", "CartesianProduct", "Window"],
@@ -684,7 +685,7 @@ def main() -> int:
     # broadcast candidate verify; NEVER an all-pairs shape, no Python
     check(
         "minhash_incremental",
-        R.queries()["minhash_incremental"](spark, sf_dir),
+        qs["minhash_incremental"](spark, sf_dir),
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
                   "BatchEvalPython", "ArrowEvalPython"],
     )
@@ -693,7 +694,7 @@ def main() -> int:
     # anti-joins; never all-pairs, no Python in the decision path
     check(
         "minhash_admit",
-        R.queries()["minhash_admit"](spark, sf_dir),
+        qs["minhash_admit"](spark, sf_dir),
         must_contain=["LeftAnti"],
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
                   "BatchEvalPython", "ArrowEvalPython"],
@@ -705,7 +706,7 @@ def main() -> int:
     # nested-loop/cartesian all-pairs shape
     check(
         "embedding_neardup_incremental",
-        R.queries()["embedding_neardup_incremental"](spark, sf_dir),
+        qs["embedding_neardup_incremental"](spark, sf_dir),
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
                   "FlatMapGroupsInPandas", "BatchEvalPython"],
     )
@@ -717,7 +718,7 @@ def main() -> int:
     # exactly one cell, so pairs are unique by construction)
     check(
         "embedding_neardup_incremental_ivf",
-        R.queries()["embedding_neardup_incremental_ivf"](spark, sf_dir),
+        qs["embedding_neardup_incremental_ivf"](spark, sf_dir),
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
                   "FlatMapGroupsInPandas", "BatchEvalPython"],
     )
@@ -729,7 +730,7 @@ def main() -> int:
     # probe stays a cell equi-join, never all-pairs
     check(
         "ann_ivf_sized",
-        R.queries()["ann_ivf_sized"](spark, sf_dir),
+        qs["ann_ivf_sized"](spark, sf_dir),
         must_contain=["InMemoryTableScan"],
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
                   "FlatMapGroupsInPandas", "BatchEvalPython"],
@@ -740,7 +741,7 @@ def main() -> int:
     # zero-Exchange shape (scan -> project -> Arrow scorer)
     check(
         "quality_rarity_bigram_inline",
-        R.queries()["quality_rarity_bigram_inline"](spark, sf_dir),
+        qs["quality_rarity_bigram_inline"](spark, sf_dir),
         must_not=["Exchange", "BroadcastHashJoin", "SortMergeJoin",
                   "CartesianProduct", "BatchEvalPython"],
     )
@@ -750,7 +751,7 @@ def main() -> int:
     # Python anywhere
     check(
         "dedup_exact_incremental",
-        R.queries()["dedup_exact_incremental"](spark, sf_dir),
+        qs["dedup_exact_incremental"](spark, sf_dir),
         must_contain=["InMemoryTableScan"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython", "SortMergeJoin"],
@@ -761,7 +762,7 @@ def main() -> int:
     # nothing may degrade to sort-merge/cartesian
     check(
         "star_snapshot_drift",
-        R.queries()["star_snapshot_drift"](spark, sf_dir),
+        qs["star_snapshot_drift"](spark, sf_dir),
         must_contain=["BroadcastHashJoin", "LeftSemi"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
@@ -772,7 +773,7 @@ def main() -> int:
     # scan + partial-agg union, no joins of any kind
     check(
         "star_snapshot_refresh",
-        R.queries()["star_snapshot_refresh"](spark, sf_dir),
+        qs["star_snapshot_refresh"](spark, sf_dir),
         must_not=["CartesianProduct", "SortMergeJoin",
                   "BatchEvalPython", "ArrowEvalPython", "Window"],
     )
@@ -782,7 +783,7 @@ def main() -> int:
     # beyond the broadcast 1-row totals
     check(
         "quality_rarity_bigram",
-        R.queries()["quality_rarity_bigram"](spark, sf_dir),
+        qs["quality_rarity_bigram"](spark, sf_dir),
         must_contain=["BroadcastHashJoin"],
         must_not=["CartesianProduct", "BatchEvalPython",
                   "ArrowEvalPython"],
