@@ -34,7 +34,11 @@ _RN = "__psx_rn"
 
 # operator-persisted relations are registered with the shared
 # session-lifetime registry (plans/cache.py)
-from parquet_sampler_spark.plans.cache import persist as _persist  # noqa: E402
+from parquet_sampler_spark.plans.cache import (  # noqa: E402
+    persist as _persist,
+    register,
+    release,
+)
 from parquet_sampler_spark.plans.lineage import (  # noqa: E402
     truncate_lineage as _truncate_lineage,
 )
@@ -1264,6 +1268,9 @@ def duplicate_clusters(
         F.col(id_col), F.col(id_col).alias("cluster")
     ).persist()
     cached = labels  # df actually holding the persisted blocks
+    # the latest checkpointed generation: the persisted generations
+    # after it recompute from its blocks, so it lives until the next one
+    ckpt = None
 
     changed = -1
     for i in range(max_iterations):
@@ -1289,14 +1296,20 @@ def duplicate_clusters(
                 (upd < F.col("cluster")).cast("long").alias("__chg"),
             )
         )
-        if (i + 1) % checkpoint_interval == 0:
+        truncate = (i + 1) % checkpoint_interval == 0
+        if truncate:
             # truncate lineage: materializes eagerly and replaces the
             # logical plan with the stored blocks
             new_full = _truncate_lineage(new_full, checkpoint_dir)
         else:
             new_full = new_full.persist()
         changed = new_full.agg(F.sum("__chg")).first()[0] or 0
-        cached.unpersist()
+        if cached is not ckpt:
+            cached.unpersist()
+        if truncate:
+            if ckpt is not None:
+                release(ckpt)
+            ckpt = new_full
         cached = new_full
         labels = new_full.drop("__chg")
         if changed == 0:
@@ -1314,11 +1327,12 @@ def duplicate_clusters(
             import warnings
 
             warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    # the final label relation stays persisted for the caller's plan;
-    # register the df that owns the blocks so clear_caches() can evict it
-    from parquet_sampler_spark.plans.cache import register
-
+    # the final label relation (and the checkpoint it recomputes from)
+    # stays persisted for the caller's plan; register the dfs that own
+    # the blocks so clear_caches() releases them
     register(cached)
+    if ckpt is not None and ckpt is not cached:
+        register(ckpt)
     return labels
 
 

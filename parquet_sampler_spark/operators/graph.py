@@ -65,7 +65,11 @@ def pagerank(
         raise ValueError("damping_pct must be in (0, 100)")
     if num_iterations < 1:
         raise ValueError("num_iterations must be >= 1")
-    from parquet_sampler_spark.plans.cache import persist as _plan_persist
+    from parquet_sampler_spark.plans.cache import (
+        persist as _plan_persist,
+        register,
+        release,
+    )
 
     # edges and the out-degree table are read by EVERY iteration's
     # contribution join; unpersisted, each of the num_iterations
@@ -73,7 +77,8 @@ def pagerank(
     # num_iterations extra scans of the edge table plus one degree
     # aggregate per sweep). Persist once — the standard iterative-
     # graph shape (guide §2.4 / §5: cache exactly the relations every
-    # iteration re-reads). Registered for eviction via plans.cache.
+    # iteration re-reads). Registered in plans.cache, so
+    # clear_caches() releases them.
     e = _plan_persist(edges.select(F.col("src"), F.col("dst")))
     if nodes is None:
         nodes = (
@@ -88,9 +93,9 @@ def pagerank(
     )
     base = (100 - damping_pct) * scale // 100
 
-    pr = nodes.select("id", F.lit(scale).cast("bigint").alias("pr"))
-    cached = pr.persist()
-    pr = cached
+    pr = nodes.select(
+        "id", F.lit(scale).cast("bigint").alias("pr")
+    ).persist()
     for _ in range(num_iterations):
         contrib = (
             e.join(pr, pr["id"] == e["src"])
@@ -114,15 +119,14 @@ def pagerank(
                 ).alias("pr"),
             )
         )
+        # the truncation materialized the new generation and cut its
+        # lineage, so the previous one's blocks (a checkpointed RDD
+        # after the first round) are read by nothing
         new_pr = _truncate_lineage(new_pr, checkpoint_dir)
-        cached.unpersist()
-        cached = new_pr
+        release(pr)
         pr = new_pr
 
-    from parquet_sampler_spark.plans.cache import register
-
-    register(cached)
-    return pr
+    return register(pr)
 
 
 def triangle_counts(

@@ -1198,8 +1198,8 @@ def _signbit_candidates(
                 all_sigs(F.col(vec_col)).alias("__sigs"))
         .select("__id", F.posexplode("__sigs").alias("tbl", "sig"))
     )
-    # both self-join sides read `banded`; registered for eviction like
-    # the normalized relation
+    # both self-join sides read `banded`; registered like the
+    # normalized relation, so clear_caches() releases it
     banded = _cache_persist(banded)
     a, b = banded.alias("a"), banded.alias("b")
     return (

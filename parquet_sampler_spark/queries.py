@@ -131,11 +131,11 @@ atexit.register(_cleanup_tmp_roots)
 
 
 def clear_caches() -> None:
-    """Drop all session state: unpersist every cached DataFrame and
+    """Drop all session state: release every persisted frame and
     empty the persisted-plan registry and the memo (``plans.cache``),
     then remove the session tmp roots the memo's paths pointed into.
     Call between scale factors / sessions in long-lived processes —
-    nothing evicts the memo automatically."""
+    it is the only release: nothing is evicted before it."""
     cache.clear()
     _cleanup_tmp_roots()
 
@@ -158,12 +158,12 @@ def lineitem_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_sampler_spark.sources.io import metadata_row_count
 
     li = table(spark, sf_dir, "lineitem")
-    s = sample_exact(
+    s = cache.persist(sample_exact(
         li, SAMPLE_RATIO, seed=SAMPLE_SEED,
         key_cols=["l_orderkey", "l_linenumber"], tie_cols=_LINEITEM_TIE,
         # footer-only count: no scan job just to size the sample
         total_rows=metadata_row_count(f"{sf_dir}/lineitem.parquet"),
-    ).persist()
+    ))
     cache.MEMO[key] = s
     return s
 

@@ -15,6 +15,7 @@ Determinism notes (driver hashes values):
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import wraps
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,7 +39,7 @@ from parquet_sampler_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
-from parquet_sampler_spark.plans.cache import MEMO
+from parquet_sampler_spark.plans.cache import MEMO, persist
 from parquet_sampler_spark.queries import fitted, row
 from parquet_sampler_spark.queries import table as _t
 from parquet_sampler_spark.sources.io import read_parquet
@@ -973,10 +974,10 @@ def _jaccard_pairs_cached(spark, sf_dir):
     # the same address must not inherit stale cached plans.
     key = ("pairs", spark.sparkContext.applicationId, sf_dir)
     if key not in MEMO:
-        MEMO[key] = ngram_jaccard_pairs(
+        MEMO[key] = persist(ngram_jaccard_pairs(
             _t(spark, sf_dir, "documents"), "doc_id", "text",
             n=_JACCARD_N, threshold=_JACCARD_T,
-        ).persist()
+        ))
     return MEMO[key]
 
 
@@ -1020,10 +1021,10 @@ def _dup_graph_cached(spark, sf_dir):
         return _jaccard_pairs_cached(spark, sf_dir)
     key = ("pairs", spark.sparkContext.applicationId, sf_dir, "lsh")
     if key not in MEMO:
-        MEMO[key] = minhash_lsh_pairs(
+        MEMO[key] = persist(minhash_lsh_pairs(
             _t(spark, sf_dir, "documents"), "doc_id", "text",
             n=_JACCARD_N, threshold=_JACCARD_T, num_hashes=32, bands=8,
-        ).persist()
+        ))
     return MEMO[key]
 
 
@@ -2082,32 +2083,54 @@ def _q_ivf_coreset(spark, sf_dir):
     )
 
 
-def _sql_ivf_coreset() -> str:
+def _embedding_fit(kind: str):
+    """Decorator for the oracle builders whose SQL inlines literals
+    fitted to ``embeddings.parquet`` in ``$SPARK_GRAFT_ORACLE_SF_DIR``
+    (sf0.01 unless set; tools/check_oracle.py sets it to the sf dir it
+    checks). The decorated
+    ``build(ids, vecs, **kw)`` gets the parquet's ids and float64
+    vectors; the wrapper takes ``**kw`` only and memoizes the SQL in
+    MEMO under ``(kind, sf_dir, *kw.values())``."""
+
+    def deco(build):
+        @wraps(build)
+        def sql(**kw) -> str:
+            import os
+
+            import numpy as np
+            import pyarrow.parquet as pq
+
+            sf_dir = os.environ.get(
+                "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+            )
+            key = (kind, sf_dir, *kw.values())
+            if key not in MEMO:
+                tbl = pq.read_table(f"{sf_dir}/embeddings.parquet",
+                                    columns=["vec_id", "embedding"])
+                vecs = np.array(tbl.column("embedding").to_pylist(),
+                                dtype=np.float64)
+                MEMO[key] = build(tbl.column("vec_id").to_numpy(), vecs,
+                                  **kw)
+            return MEMO[key]
+
+        return sql
+
+    return deco
+
+
+@_embedding_fit("coreset_sql")
+def _sql_ivf_coreset(ids, vecs) -> str:
     """DuckDB twin of _q_ivf_coreset: identical centroid literals to
     _sql_ann_ivf (same sketch + seeded Lloyd re-run on the raw
     parquet), assignment as argmin over int64 squared distances, d
     carried through, per-cell row_number <= m."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import (
         _IVF_QSCALE,
         ivf_train_centroids_numpy,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    key = ("coreset_sql", sf_dir)
-    if key in MEMO:
-        return MEMO[key]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     cents = ivf_train_centroids_numpy(
         ids, vecs, nlist=_IVF_NLIST, seed=_IVF_SEED
     )
@@ -2147,7 +2170,6 @@ SELECT vec_id, CAST(cell AS INTEGER) AS cell, CAST(d AS BIGINT) AS d,
   FROM assign
 ) WHERE rank <= {_CORESET_M}
 """
-    MEMO[key] = sql
     return sql
 
 
@@ -2207,7 +2229,8 @@ SELECT query_id, neighbor_id, score, rank FROM (
 """
 
 
-def _sql_ann_ivf() -> str:
+@_embedding_fit("ivf_sql")
+def _sql_ann_ivf(ids, vecs) -> str:
     """DuckDB twin of _q_ann_ivf. The centroids depend on the corpus,
     so the oracle is built for the sf dir the driver compares at
     (sf0.01; override with $SPARK_GRAFT_ORACLE_SF_DIR —
@@ -2217,34 +2240,18 @@ def _sql_ann_ivf() -> str:
     floor-quantized integer centroids. Assignment and probing compare
     int64 squared distances (exact in both engines); the rerank is the
     same normalized left-to-right dot as ann_topk/ann_lsh."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import (
         _IVF_QSCALE,
         ivf_train_centroids_numpy,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    key = ("ivf_sql", sf_dir)
-    if key in MEMO:
-        return MEMO[key]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     cents = ivf_train_centroids_numpy(
         ids, vecs, nlist=_IVF_NLIST, seed=_IVF_SEED
     )
     ci = np.floor(cents * _IVF_QSCALE).astype(np.int64)
-    sql = _ivf_flat_oracle_sql(ci, _IVF_NPROBE)
-    MEMO[key] = sql
-    return sql
+    return _ivf_flat_oracle_sql(ci, _IVF_NPROBE)
 
 
 _PQ_M, _PQ_NCODES, _PQ_RERANK, _PQ_SEED = 16, 16, 100, 42
@@ -2277,7 +2284,8 @@ def _q_ann_pq(spark, sf_dir):
     )
 
 
-def _sql_ann_pq() -> str:
+@_embedding_fit("pq_sql")
+def _sql_ann_pq(ids, vecs) -> str:
     """DuckDB twin of _q_ann_pq, built like _sql_ann_ivf: the codebooks
     depend on the corpus, so the builder re-runs the operator's exact
     sketch + per-subspace Lloyd fit via pq_train_codebooks_numpy on
@@ -2286,27 +2294,13 @@ def _sql_ann_pq() -> str:
     assignment, the per-query LUT, and the ADC fold all compare int64
     values (exact in both engines, ties to the lowest code / neighbor
     id); the rerank is the shared normalized left-to-right dot."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import (
         _IVF_QSCALE,
         pq_train_codebooks_numpy,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    key = ("pq_sql", sf_dir)
-    if key in MEMO:
-        return MEMO[key]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     cbs = pq_train_codebooks_numpy(
         ids, vecs, m_sub=_PQ_M, ncodes=_PQ_NCODES, seed=_PQ_SEED
     )
@@ -2369,7 +2363,6 @@ SELECT query_id, neighbor_id, score, rank FROM (
             JOIN normed c ON c.vec_id = cand.neighbor_id
 ) WHERE rank <= {_ANN_K}
 """
-    MEMO[key] = sql
     return sql
 
 
@@ -2398,17 +2391,15 @@ def _q_ann_ivfpq(spark, sf_dir):
     )
 
 
-def _sql_ann_ivfpq() -> str:
+@_embedding_fit("ivfpq_sql")
+def _sql_ann_ivfpq(ids, vecs) -> str:
     """DuckDB twin of _q_ann_ivfpq: the ann_ivf assign/probe CTEs and
     the ann_pq codes/LUT CTEs composed — candidates are probed-cell
     members, ranked by summed int64 subspace distances, reranked by
     the shared normalized dot. Both trainers re-run on the raw parquet
     for $SPARK_GRAFT_ORACLE_SF_DIR exactly as the operator's one
     sketch does."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import (
         _IVF_QSCALE,
@@ -2416,17 +2407,6 @@ def _sql_ann_ivfpq() -> str:
         pq_train_codebooks_numpy,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    key = ("ivfpq_sql", sf_dir)
-    if key in MEMO:
-        return MEMO[key]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     cents = ivf_train_centroids_numpy(
         ids, vecs, nlist=_IVF_NLIST, seed=_PQ_SEED
     )
@@ -2519,7 +2499,6 @@ SELECT query_id, neighbor_id, score, rank FROM (
             JOIN normed c ON c.vec_id = cand.neighbor_id
 ) WHERE rank <= {_ANN_K}
 """
-    MEMO[key] = sql
     return sql
 
 
@@ -2552,7 +2531,8 @@ def _q_ann_ivfpq_residual(spark, sf_dir):
     )
 
 
-def _sql_ann_ivfpq_residual(ncodes: int = _PQ_NCODES) -> str:
+@_embedding_fit("ivfpqr_sql")
+def _sql_ann_ivfpq_residual(ids, vecs, ncodes: int = _PQ_NCODES) -> str:
     """DuckDB twin of _q_ann_ivfpq_residual: the ann_ivfpq CTEs with
     the coding target switched to residuals — corpus rows code
     ``v − cv[assigned cell]`` against residual-trained codebook
@@ -2561,27 +2541,13 @@ def _sql_ann_ivfpq_residual(ncodes: int = _PQ_NCODES) -> str:
     m, code). All integer arithmetic (quantized grid), so the ADC sums
     are exact in both engines. ``ncodes`` parameterizes the builder
     for the 8-bit production-width row (ann_ivfpq_residual8)."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import (
         _IVF_QSCALE,
         ivfpq_train_numpy,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    ck = ("ivfpqr_sql", sf_dir, ncodes)
-    if ck in MEMO:
-        return MEMO[ck]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     supers, cents, owner, cbs = ivfpq_train_numpy(
         ids, vecs, nlist=_IVF_NLIST, m_sub=_PQ_M, ncodes=ncodes,
         seed=_PQ_SEED, residual=True,
@@ -2693,7 +2659,6 @@ SELECT query_id, neighbor_id, score, rank FROM (
             JOIN normed c ON c.vec_id = cand.neighbor_id
 ) WHERE rank <= {_ANN_K}
 """
-    MEMO[ck] = sql
     return sql
 
 
@@ -2751,49 +2716,34 @@ def _q_ann_ivf_hier(spark, sf_dir):
     )
 
 
-def _sql_ann_ivf_hier() -> str:
+@_embedding_fit("ivf_hier_sql")
+def _sql_ann_ivf_hier(ids, vecs) -> str:
     """DuckDB twin of _q_ann_ivf_hier: super/sub centroid literals
     from the shared hierarchy trainer; assignment = nearest super
     (ties lowest s) then argmin over its subs (ties lowest cell);
     probing = top-4 supers per query then the 16 nearest of their
     subs — ORDER BY d, cell replays numpy's stable sort over
     ascending cell ids exactly."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import (
         _IVF_QSCALE,
         ivf_train_hierarchy_numpy,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    key = ("ivf_hier_sql", sf_dir)
-    if key in MEMO:
-        return MEMO[key]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     supers, cents, owner = ivf_train_hierarchy_numpy(
         ids, vecs, nlist=_IVF_HIER_NLIST, seed=_IVF_SEED
     )
     if supers is None:  # corpus smaller than the two-level cut
         raise ValueError(
             f"ann_ivf_hier needs a corpus large enough for "
-            f"nlist > 64 two-level routing; {sf_dir} fit flat"
+            f"nlist > 64 two-level routing; {len(ids)} vectors fit flat"
         )
     si = np.floor(supers * _IVF_QSCALE).astype(np.int64)
     ci = np.floor(cents * _IVF_QSCALE).astype(np.int64)
-    sql = _ivf_hier_oracle_sql(
+    return _ivf_hier_oracle_sql(
         si, ci, owner, _IVF_HIER_NPROBE, _IVF_HIER_NSUP
     )
-    MEMO[key] = sql
-    return sql
 
 
 def _ivf_hier_oracle_sql(si, ci, owner, nprobe: int, nsup: int) -> str:
@@ -2939,33 +2889,20 @@ def _q_ann_ivf_sized(spark, sf_dir):
     )
 
 
-def _sql_ann_ivf_sized() -> str:
+@_embedding_fit("ann_sized_sql")
+def _sql_ann_ivf_sized(ids, vecs) -> str:
     """DuckDB twin of _q_ann_ivf_sized: derives nlist from the SAME
     corpus count (len of the parquet ids — identical to the footer
     row count), re-trains the shared hierarchy trainer, and emits the
     flat template below the two-level threshold or the hierarchical
     one above it — the derivation itself is what this row pins."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import (
         _IVF_QSCALE,
         ivf_train_hierarchy_numpy,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    key = ("ann_sized_sql", sf_dir)
-    if key in MEMO:
-        return MEMO[key]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     nlist = _ann_sized_nlist(len(ids))
     supers, cents, owner = ivf_train_hierarchy_numpy(
         ids, vecs, nlist=nlist, seed=_IVF_SEED,
@@ -2979,7 +2916,6 @@ def _sql_ann_ivf_sized() -> str:
         sql = _ivf_hier_oracle_sql(
             si, ci, owner, _ANN_SIZED_NPROBE, _IVF_HIER_NSUP
         )
-    MEMO[key] = sql
     return sql
 
 
@@ -6996,30 +6932,17 @@ def _q_semantic_dedup(spark, sf_dir):
     )
 
 
-def _sql_semantic_dedup() -> str:
+@_embedding_fit("sem_sql")
+def _sql_semantic_dedup(ids, vecs) -> str:
     """DuckDB twin of _q_semantic_dedup, built like _sql_ann_ivf: the
     injected corpus is reassembled from the raw parquet, the identical
     centroids are re-trained in shared numpy and inlined as integer
     literals, and assignment/pairing/dropping replay in exact integer
     (cells) and IEEE-exact (cosines) arithmetic."""
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     from parquet_sampler_spark.operators.similarity import _IVF_QSCALE
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    key = ("sem_sql", sf_dir)
-    if key in MEMO:
-        return MEMO[key]
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
     mask = ids % _SEM_INJECT_EVERY == 0
     all_ids = np.concatenate([ids, ids[mask] + _SEM_ID_OFFSET])
     all_vecs = np.concatenate([vecs, vecs[mask]])
@@ -7118,7 +7041,6 @@ dropped AS (
 SELECT a.vec_id, a.cell FROM assign a
 WHERE a.vec_id NOT IN (SELECT vec_id FROM dropped)
 """
-    MEMO[key] = sql
     return sql
 
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from parquet_sampler_spark.plans.cache import MEMO
+from parquet_sampler_spark.plans.cache import MEMO, persist
 from parquet_sampler_spark.queries import row
 from parquet_sampler_spark.queries import table as _t
 # a top-level import, so queries_ext's rows are declared before these in
@@ -782,11 +782,11 @@ def _q_merge_upsert(spark, sf_dir):
 
     c = _t(spark, sf_dir, "customer")
     batch = _merge_batch(spark, sf_dir)
-    merged = merge_upsert(
+    merged = persist(merge_upsert(
         c.select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
                  "c_mktsegment"),
         batch, ["c_custkey"], delete_col="is_deleted",
-    ).persist()
+    ))
     MEMO[key] = merged
     return merged
 

@@ -1,10 +1,11 @@
 """Session state lives in ``plans.cache`` only, and one call drains it.
 
 ``queries.clear_caches()`` is ``plans.cache.clear()`` plus the tmp-root
-cleanup. The drain test fills one memo entry of every kind, clears, and
-checks nothing survives: no memo entry, no registered plan, no persisted
-RDD, no session tmp root. The guard test keeps new module-level caches
-from growing back beside the memo.
+cleanup. The drain test fills one memo entry of every kind and runs the
+checkpointing graph operators, clears, and checks nothing survives: no
+memo entry, no registered plan, no persisted RDD, no session tmp root.
+The registry keeps every plan until that clear. The guard test keeps
+new module-level caches from growing back beside the memo.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import os
 import tempfile
 from pathlib import Path
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -79,6 +81,8 @@ def test_no_module_level_cache_outside_plans_cache():
 def test_clear_caches_drains_every_kind(spark, monkeypatch):
     from parquet_sampler_spark import queries, queries_ext, queries_olap
     from parquet_sampler_spark.operators import sample, similarity
+    from parquet_sampler_spark.operators.dedup import duplicate_clusters
+    from parquet_sampler_spark.operators.graph import pagerank
     from parquet_sampler_spark.plans import cache
 
     jsc = spark.sparkContext._jsc
@@ -115,6 +119,19 @@ def test_clear_caches_drains_every_kind(spark, monkeypatch):
     big = spark.range(250_000).withColumnRenamed("id", "k")
     assert sample.sample_exact(big, 0.01, key_cols=["k"]).count() == 2500
     assert sample.PREFILTER_STATS["hit"] == hits + 1
+    # localCheckpoint generations: every PageRank round, and every
+    # label-propagation round at checkpoint_interval=1
+    queries_ext._q_pagerank_dups(spark, SF_SMALL).count()
+    queries_ext._q_dup_clusters(spark, SF_SMALL).count()
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 5)], "src long, dst long")
+    assert pagerank(edges, num_iterations=3).count() == 5
+    docs = spark.range(1, 7).withColumnRenamed("id", "doc_id")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5)], "id_a long, id_b long")
+    labels = duplicate_clusters(docs, pairs, "doc_id", checkpoint_interval=1)
+    assert sorted(labels.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)]
 
     kinds = {k[0] for k in cache.MEMO if isinstance(k[0], str)}
     assert {
@@ -125,6 +142,11 @@ def test_clear_caches_drains_every_kind(spark, monkeypatch):
                for k in cache.MEMO)
     assert ("pairs", app, SF_SMALL, "lsh") in cache.MEMO
     assert cache._PERSISTED
+    # every persisted frame the memo hands out is one clear() releases
+    registered = [df for _, df in cache._PERSISTED]
+    memo_dfs = [v for v in cache.MEMO.values() if isinstance(v, DataFrame)]
+    assert len(memo_dfs) == 4
+    assert all(any(v is df for df in registered) for v in memo_dfs)
     assert jsc.getPersistentRDDs().size() > 0
     assert os.path.isdir(root)
 
@@ -143,9 +165,9 @@ def test_clear_caches_drains_every_kind(spark, monkeypatch):
     queries.clear_caches()
 
 
-def test_prefilter_candidates_register_in_plan_lru(spark):
+def test_prefilter_candidates_register_in_plan_registry(spark):
     """The sampler keeps its prefilter candidate set alive through the
-    plan LRU, deduped by plan: repeating a sample adds no entry."""
+    plan registry, deduped by plan: repeating a sample adds no entry."""
     from parquet_sampler_spark.operators.sample import sample_exact
     from parquet_sampler_spark.plans import cache
     from parquet_sampler_spark.queries import clear_caches
@@ -158,3 +180,21 @@ def test_prefilter_candidates_register_in_plan_lru(spark):
     assert len(cache._PERSISTED) == 1
     assert sorted(first.collect()) == sorted(again.collect())
     clear_caches()
+
+
+def test_registry_keeps_every_plan_until_clear(spark):
+    """The registry has no bound: after 100 distinct persisted plans the
+    first is still served from its cache entry."""
+    from parquet_sampler_spark.plans import cache
+
+    def plan(k):
+        return spark.range(10).selectExpr(f"id + {k} AS x")
+
+    cache.clear()
+    for k in range(100):
+        cache.persist(plan(k))
+    executed = plan(0)._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in executed
+    assert len(cache._PERSISTED) == 100
+    cache.clear()
+    assert cache._PERSISTED == []
