@@ -49,12 +49,6 @@ sys.path.insert(0, str(REPO))
 from parquet_sampler_spark import queries as registry  # noqa: E402
 from parquet_sampler_spark import queries_ext, queries_olap  # noqa: E402
 
-# rows whose output shape (left join against an aggregate-unique
-# relation, no right column needed by count) lets Catalyst eliminate
-# their real work under a bare .count() — forced with a full-row hash
-# fold instead so the bench measures what a user materializes
-FULL_EVAL_ROWS = frozenset({"decontaminate_scrub", "dup_triangles"})
-
 # rows that absorb once-per-SESSION warmup (not cache builds): a cache
 # reset cannot bring the cost back, so the median would record ~0 of
 # what they exist to capture — they keep the pass-1 time
@@ -64,14 +58,15 @@ SESSION_WARM_ROWS = frozenset({"setup_streaming", "setup_ngram_warm"})
 def force(df, name: str) -> int:
     """Execute registry row ``name``'s plan in full; return its row count.
 
-    A bare ``count()`` on a FULL_EVAL_ROWS row lets Catalyst drop the
-    expensive branch (with no right-side column consumed, the join
-    against an aggregate-unique relation is eliminated — measured:
-    dup_triangles 0.3 s counted vs 39 s materialized at sf10). A user
-    of those rows materializes every column, so they are forced with
-    a column-consuming hash fold (bit_xor: sum would overflow int64
-    under ANSI), counted in the same job."""
-    if name in FULL_EVAL_ROWS:
+    A bare ``count()`` on a row declared ``@row(..., full_eval=True)``
+    lets Catalyst drop the expensive branch (with no right-side column
+    consumed, the join against an aggregate-unique relation is
+    eliminated — measured: dup_triangles 0.3 s counted vs 39 s
+    materialized at sf10). A user of those rows materializes every
+    column, so they are forced with a column-consuming hash fold
+    (bit_xor: sum would overflow int64 under ANSI), counted in the
+    same job."""
+    if registry.rows()[name].full_eval:
         from pyspark.sql import functions as F
 
         return df.agg(F.count("*"), F.expr(

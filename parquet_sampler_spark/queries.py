@@ -15,7 +15,8 @@ sorted column name).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,22 +29,41 @@ from parquet_sampler_spark.sources.io import read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# row name -> (Spark callable, oracle), in declaration order: this
-# module, then queries_ext, then queries_olap
-_ROWS: dict[str, tuple[QueryFn, Callable[[], str]]] = {}
+
+class Row(NamedTuple):
+    """One registry row, as :func:`row` declared it."""
+
+    fn: QueryFn
+    oracle: Callable[[], str]
+    plan: tuple[str, ...]
+    full_eval: bool
 
 
-def row(name: str, oracle: Callable[[], str]) -> Callable[[QueryFn], QueryFn]:
+# row name -> Row, in declaration order: this module, then queries_ext,
+# then queries_olap
+_ROWS: dict[str, Row] = {}
+
+
+def row(name: str, oracle: Callable[[], str], *,
+        plan: Iterable[str] = (), full_eval: bool = False
+        ) -> Callable[[QueryFn], QueryFn]:
     """Declare the decorated function as registry row ``name``, checked
     against the DuckDB SQL that ``oracle()`` returns. The oracle is
     called only by :func:`oracle_sql`, so it may name SQL defined
-    further down the module and may fit literals to data. The function
-    is returned unchanged."""
+    further down the module and may fit literals to data. ``plan``
+    lists fragments the row's executed physical plan must contain; a
+    leading ``!`` forbids one (tests/test_plan_contracts.py checks
+    them). ``full_eval`` rows are forced by evaluating every column
+    (``bench.force``), because a bare count lets Catalyst skip their
+    work. The function is returned unchanged."""
     if name in _ROWS:
         raise ValueError(f"registry row {name!r} is declared twice")
+    if isinstance(plan, str):
+        raise TypeError(f"registry row {name!r}: plan must be a tuple of "
+                        "fragments, not one string")
 
     def declare(fn: QueryFn) -> QueryFn:
-        _ROWS[name] = (fn, oracle)
+        _ROWS[name] = Row(fn, oracle, tuple(plan), full_eval)
         return fn
 
     return declare
@@ -230,12 +250,19 @@ def _sql_customer_red() -> str:
 # ---------------------------------------------------------------------------
 
 @row("sample_lineitem",
-     lambda: f"WITH {_sample_cte()} SELECT * FROM lineitem_sample")
+     lambda: f"WITH {_sample_cte()} SELECT * FROM lineitem_sample",
+     # sampler: top-k heap, not a global sort (and never the
+     # single-partition window the row_number() formulation degraded to)
+     plan=("TakeOrderedAndProject", "!Window", "!SinglePartition"))
 def _q_sample_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lineitem_sample(spark, sf_dir)
 
 
-@row("semijoin_orders", lambda: _sql_orders_red())
+@row("semijoin_orders", lambda: _sql_orders_red(),
+     # semi-join reduction: broadcast, no probe shuffle, and the build
+     # keys broadcast as projected (no de-duplicating aggregate: it would
+     # cost a shuffle-map job the semi-join does not need)
+     plan=("BroadcastHashJoin", "LeftSemi", "!HashAggregate"))
 def _q_semijoin_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders_reduced(spark, sf_dir)
 
@@ -293,7 +320,12 @@ def _q_semijoin_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@row("semijoin_orders_shuffle", lambda: _sql_orders_red())
+@row("semijoin_orders_shuffle", lambda: _sql_orders_red(),
+     # non-broadcast semi-join escape: past the broadcast ceiling the
+     # reduction must take a shuffled-hash join — both sides exchange on
+     # the key, NO BroadcastExchange anywhere
+     plan=("ShuffledHashJoin", "LeftSemi", "!BroadcastExchange",
+           "!BroadcastHashJoin"))
 def _q_semijoin_orders_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The past-broadcast-limit escape (r11, VERDICT r10 #5): same
     reduction as semijoin_orders, forced onto the SHUFFLE-HASH path —
@@ -489,7 +521,13 @@ def _snap_fp(df: DataFrame, tbl: str, int_cols) -> DataFrame:
     )
 
 
-@row("star_snapshot", lambda: _sql_star_snapshot())
+@row("star_snapshot", lambda: _sql_star_snapshot(),
+     # the composed reference workflow — every dimension reduction is a
+     # broadcast semi-join; the persisted sample is read from cache
+     # (InMemoryTableScan), never re-sampled per branch; manifest rows are
+     # partial-aggregated (no Window, no global sort anywhere)
+     plan=("BroadcastHashJoin", "LeftSemi", "InMemoryTableScan",
+           "!SortMergeJoin", "!CartesianProduct", "!Window"))
 def _q_star_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ENTIRE intended workflow (README.md:15-26) as one
     plan: sample the fact table, then semi-join-reduce every dimension
@@ -683,7 +721,12 @@ def _q_star_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DRIFT_SEED = 43
 
 
-@row("star_snapshot_drift", lambda: _sql_star_snapshot_drift())
+@row("star_snapshot_drift", lambda: _sql_star_snapshot_drift(),
+     # both manifests keep star_snapshot's broadcast semi-join shape; the
+     # diff is a 7-row full-outer join — nothing may degrade to
+     # sort-merge/cartesian
+     plan=("BroadcastHashJoin", "LeftSemi", "!CartesianProduct",
+           "!BatchEvalPython", "!ArrowEvalPython"))
 def _q_star_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-entropy composed with the workflow (r12): fingerprint two
     snapshot VERSIONS (sample seeds 42 vs 43 — e.g. yesterday's and
@@ -759,7 +802,12 @@ def _parallel_writes(jobs: list[tuple[DataFrame, str]],
             f.result()  # surface the first failure, if any
 
 
-@row("star_snapshot_refresh", lambda: _sql_star_snapshot_refresh())
+@row("star_snapshot_refresh", lambda: _sql_star_snapshot_refresh(),
+     # reads back the merged store and fingerprints it — the read-back
+     # manifest must stay a pure scan + partial-agg union, no joins of any
+     # kind
+     plan=("!CartesianProduct", "!SortMergeJoin", "!BatchEvalPython",
+           "!ArrowEvalPython", "!Window"))
 def _q_star_snapshot_refresh(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -944,7 +992,8 @@ def _capture_order(keys: list[str]) -> list[str]:
     return sorted(keys, key=key)
 
 
-def _declared() -> dict[str, tuple[QueryFn, Callable[[], str]]]:
+def rows() -> dict[str, Row]:
+    """Every declared registry row, by name, in declaration order."""
     # importing the extension modules runs their @row declarations
     from parquet_sampler_spark import queries_ext, queries_olap  # noqa: F401
 
@@ -952,17 +1001,17 @@ def _declared() -> dict[str, tuple[QueryFn, Callable[[], str]]]:
 
 
 def queries() -> dict[str, QueryFn]:
-    rows = _declared()
-    return {k: rows[k][0] for k in _capture_order(list(rows))}
+    declared = rows()
+    return {k: declared[k].fn for k in _capture_order(list(declared))}
 
 
 def oracle_sql() -> dict[str, str]:
     import sys
 
     out = {}
-    for name, (_, oracle) in _declared().items():
+    for name, r in rows().items():
         try:
-            out[name] = oracle()
+            out[name] = r.oracle()
         except OracleUnavailable as ex:
             print(
                 f"warning: {name} oracle unavailable ({ex}); "

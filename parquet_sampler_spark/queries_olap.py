@@ -189,7 +189,9 @@ WINDOW w AS (PARTITION BY c_mktsegment
 # TPC-H-style queries adapted to the testdata schema
 # ---------------------------------------------------------------------------
 
-@row("tpch_q6", lambda: _SQL_TPCH_Q6)
+@row("tpch_q6", lambda: _SQL_TPCH_Q6,
+     # predicate pushdown reaches the parquet reader
+     plan=("PushedFilters: [",))
 def _q_tpch_q6(spark, sf_dir):
     """Q6 forecasting-revenue-change: tight filter + single aggregate.
     The predicates push down into the parquet scan."""
@@ -863,7 +865,11 @@ FROM (
 """
 
 
-@row("tpch_q19", lambda: _SQL_TPCH_Q19)
+@row("tpch_q19", lambda: _SQL_TPCH_Q19,
+     # disjunctive-predicate query still prunes columns (the unused
+     # l_shipdate is never read) + pushes the join-side IsNotNull
+     # conjuncts
+     plan=("PushedFilters: [", "!l_shipdate"))
 def _q_tpch_q19(spark, sf_dir):
     """Q19 discounted-revenue (adapted to this schema): DISJUNCTIVE
     brand/size/quantity predicate branches — the case Catalyst handles
@@ -1351,13 +1357,17 @@ GROUP BY cntrycode
 """
 
 
-@row("grouped_topk", lambda: _SQL_GROUPED_TOPK)
+@row("grouped_topk", lambda: _SQL_GROUPED_TOPK,
+     # grouped top-k: the rn <= k filter must rewrite into
+     # WindowGroupLimit (per-partition k-heaps before the shuffle) —
+     # without it every event row moves in the window exchange
+     plan=("WindowGroupLimit",))
 def _q_grouped_topk(spark, sf_dir):
     """Per-group top-k: 3 highest-value events per event type via a
     ranked window. Spark 4 rewrites the rn <= k filter into
     WindowGroupLimit — per-partition k-heaps BEFORE the shuffle, so
-    only ~k rows per group per input partition move (asserted in
-    tools/explain_audit.py); without the rewrite every row shuffles."""
+    only ~k rows per group per input partition move (the row's plan
+    contract asserts it); without the rewrite every row shuffles."""
     e = _events(spark, sf_dir).select("event_type", "event_id", "value")
     w = Window.partitionBy("event_type").orderBy(
         F.col("value").desc(), F.col("event_id")
@@ -1492,7 +1502,10 @@ JOIN eur ON costs.l_suppkey = eur.s_suppkey
 """
 
 
-@row("tpch_q8", lambda: _SQL_TPCH_Q8)
+@row("tpch_q8", lambda: _SQL_TPCH_Q8,
+     # q8's 7-relation tree: dims broadcast, no nested loop anywhere
+     plan=("BroadcastHashJoin", "!BroadcastNestedLoopJoin",
+           "!CartesianProduct"))
 def _q_tpch_q8(spark, sf_dir):
     """Q8 national market share: NATION_8's share of EUROPE's STANDARD-
     part import volume per year — a 7-relation join tree whose share
@@ -1729,7 +1742,10 @@ def _tpch_views(spark, sf_dir, *names):
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-@row("tpch_q20", lambda: _SQL_TPCH_Q20)
+@row("tpch_q20", lambda: _SQL_TPCH_Q20,
+     # q20's nested-IN + correlated scalar agg must decorrelate to semi
+     # joins + aggregates — never a per-row nested loop
+     plan=("LeftSemi", "!BroadcastNestedLoopJoin", "!CartesianProduct"))
 def _q_tpch_q20(spark, sf_dir):
     """Q20 potential-part-promotion (adapted to supplier granularity —
     per-(supplier, part) lineitem pairs are too sparse in this testdata
@@ -1745,7 +1761,10 @@ def _q_tpch_q20(spark, sf_dir):
     return spark.sql(_SQL_TPCH_Q20)
 
 
-@row("tpch_q21", lambda: _SQL_TPCH_Q21)
+@row("tpch_q21", lambda: _SQL_TPCH_Q21,
+     # q21's EXISTS / NOT EXISTS pair decorrelates to semi + anti
+     plan=("LeftSemi", "LeftAnti", "!BroadcastNestedLoopJoin",
+           "!CartesianProduct"))
 def _q_tpch_q21(spark, sf_dir):
     """Q21 waiting-suppliers (adapted: late = shipped > 90 days after
     order date): multi-supplier 'F' orders where THIS nation's supplier

@@ -403,25 +403,21 @@ def test_shingle_df_cap_underestimates_never_false_pairs(documents):
     assert any(j < exact[p] - 1e-12 for p, j in capped.items())
 
 
-def test_exact_pair_graph_env_fallback(spark, monkeypatch):
-    """PSX_EXACT_PAIR_GRAPH=1 (ADVICE r06 triage hatch) swaps the
-    shared dup-pair graph from LSH candidates to the exact
-    inverted-index join without code edits; both must produce the
-    same qualifying pairs on this corpus (the empirical equivalence
-    the minhash_pairs oracle pins)."""
+def test_lsh_pair_graph_matches_exact_pairs(spark):
+    """The shared dup-pair graph (LSH candidates + exact verify) and
+    the exact inverted-index join produce the same qualifying pairs on
+    this corpus: the empirical equivalence the minhash_pairs oracle
+    pins, and the comparison to run when a graph consumer goes red on
+    a new corpus."""
     from parquet_sampler_spark import queries_ext as QX
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.delenv("PSX_EXACT_PAIR_GRAPH", raising=False)
-    lsh = {
-        (r.id_a, r.id_b)
-        for r in QX._dup_graph_cached(spark, sf).collect()
-    }
-    monkeypatch.setenv("PSX_EXACT_PAIR_GRAPH", "1")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in QX._dup_graph_cached(spark, sf).collect()
-    }
+
+    def pairs(df):
+        return {(r.id_a, r.id_b) for r in df.collect()}
+
+    lsh = pairs(QX._dup_graph_cached(spark, sf))
+    exact = pairs(QX._jaccard_pairs_cached(spark, sf))
     assert lsh == exact and lsh
 
 

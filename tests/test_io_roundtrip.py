@@ -114,6 +114,27 @@ def test_projected_read_prunes_scan(spark):
     assert "l_partkey" not in plan  # column pruned out of the scan
 
 
+def test_partitioned_write_prunes_directories(spark, tmp_path):
+    """``write_parquet(partition_by=...)`` writes one directory per
+    value, and a filter on the partition column prunes whole
+    directories (PartitionFilters in the scan), not rows."""
+    from pyspark.sql import functions as F
+
+    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    out = tmp_path / "orders"
+    write_parquet(orders, str(out), partition_by=["o_orderpriority"])
+    n_values = orders.select("o_orderpriority").distinct().count()
+    dirs = [p.name for p in out.iterdir() if p.is_dir()]
+    assert len(dirs) == n_values
+    assert all(d.startswith("o_orderpriority=") for d in dirs)
+
+    urgent = F.col("o_orderpriority") == "1-URGENT"
+    pruned = spark.read.parquet(str(out)).filter(urgent)
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(o_orderpriority" in plan, plan
+    assert pruned.count() == orders.filter(urgent).count() > 0
+
+
 def test_compact_parquet_reduces_files(spark, tmp_path):
     """64 tiny files → compaction produces the byte-sized file count
     with identical data."""

@@ -145,7 +145,34 @@ def test_fitted_oracles_degrade_without_their_data(monkeypatch, tmp_path):
 def test_other_oracle_failures_still_raise(monkeypatch):
     from parquet_sampler_spark import queries as R
 
-    fn = R.queries()["sample_lineitem"]
-    monkeypatch.setitem(R._ROWS, "sample_lineitem", (fn, lambda: 1 // 0))
+    declared = R.rows()["sample_lineitem"]
+    monkeypatch.setitem(R._ROWS, "sample_lineitem",
+                        declared._replace(oracle=lambda: 1 // 0))
     with pytest.raises(ZeroDivisionError):
         R.oracle_sql()
+
+
+def test_row_rejects_a_bare_string_plan():
+    from parquet_sampler_spark import queries as R
+
+    with pytest.raises(TypeError, match="plan"):
+        R.row("one_string_plan", lambda: "SELECT 1", plan="LeftSemi")
+    assert "one_string_plan" not in R.rows()
+
+
+def test_plan_fragments_are_nonempty_strings():
+    from parquet_sampler_spark.queries import rows
+
+    plans = {n: r.plan for n, r in rows().items() if r.plan}
+    assert len(plans) == 65
+    for name, plan in plans.items():
+        for frag in plan:
+            assert isinstance(frag, str) and frag.removeprefix("!"), (
+                name, frag)
+
+
+def test_full_eval_rows():
+    from parquet_sampler_spark.queries import rows
+
+    assert {n for n, r in rows().items() if r.full_eval} == {
+        "decontaminate_scrub", "dup_triangles"}

@@ -4,8 +4,10 @@
 cleanup. The drain test fills one memo entry of every kind and runs the
 checkpointing graph operators, clears, and checks nothing survives: no
 memo entry, no registered plan, no persisted RDD, no session tmp root.
-The registry keeps every plan until that clear. The guard test keeps
-new module-level caches from growing back beside the memo.
+The registry keeps every plan until that clear. The guard tests keep
+new module-level caches from growing back beside the memo, and keep
+environment variables from becoming hidden switches between code
+paths.
 """
 
 from __future__ import annotations
@@ -78,6 +80,49 @@ def test_no_module_level_cache_outside_plans_cache():
     )
 
 
+# the environment variables the package may read: deployment settings,
+# not switches between code paths
+_ENV_SETTINGS = {
+    "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY", "SPARK_GRAFT_ORACLE_SF_DIR",
+    "PSX_CHECKPOINT_DIR", "PSX_CHECKPOINT_INTERVAL",
+}
+_ENVIRON = {"os.environ", "environ"}
+
+
+def _env_reads(tree):
+    """The key expression of every environment read in ``tree``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            func = node.func
+            if ast.unparse(func) in ("os.getenv", "getenv") or (
+                isinstance(func, ast.Attribute)
+                and ast.unparse(func.value) in _ENVIRON
+                and func.attr in ("get", "setdefault", "pop")
+            ):
+                yield node.args[0] if node.args else func
+        elif (isinstance(node, ast.Subscript)
+              and ast.unparse(node.value) in _ENVIRON):
+            yield node.slice
+        elif isinstance(node, ast.Compare) and any(
+                ast.unparse(c) in _ENVIRON for c in node.comparators):
+            yield node.left
+
+
+def test_package_reads_only_deployment_env_vars():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for key in _env_reads(tree):
+            name = key.value if isinstance(key, ast.Constant) else None
+            if name not in _ENV_SETTINGS:
+                found.append(f"{path.relative_to(PKG).as_posix()}:"
+                             f"{key.lineno} {ast.unparse(key)}")
+    assert not found, (
+        "environment reads outside the deployment settings (pass a "
+        "parameter or use a constant instead): " + ", ".join(found)
+    )
+
+
 def test_clear_caches_drains_every_kind(spark, monkeypatch):
     from parquet_sampler_spark import queries, queries_ext, queries_olap
     from parquet_sampler_spark.operators import sample, similarity
@@ -88,7 +133,6 @@ def test_clear_caches_drains_every_kind(spark, monkeypatch):
     jsc = spark.sparkContext._jsc
     app = spark.sparkContext.applicationId
     root = os.path.join(tempfile.gettempdir(), f"psx_{app}")
-    monkeypatch.delenv("PSX_EXACT_PAIR_GRAPH", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_SMALL)
     # start from a clean session: earlier tests in this process may
     # hold persists of their own

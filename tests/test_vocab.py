@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from parquet_sampler_spark.operators.vocab import bpe_merge_rounds
+from tests.conftest import SF_MED
 
 
 def _merges(spark, texts, rounds):
@@ -229,3 +230,37 @@ def test_bpe_decode_inverts_encode(spark):
     for i, text in [(1, "a b c a b"), (2, "a a a"), (3, "x y"),
                     (6, "c c c c")]:
         assert got[i][1] == text, i
+
+
+def test_pair_count_rounds_stay_one_scan_and_a_top1_heap(spark, monkeypatch):
+    """Each trainer round collects one winner from an all-JVM plan: the
+    pair explode fused into the scan, a map-side partial count and a
+    TakeOrderedAndProject(1); no Python evaluation, no global sort."""
+    docs = spark.read.parquet(f"{SF_MED}/documents.parquet")
+    plans = []
+    collect = type(docs).collect
+
+    def recording(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(type(docs), "collect", recording)
+    bpe_merge_rounds(docs, "doc_id", "text", rounds=2)
+    assert len(plans) == 2
+    for plan in plans:
+        assert "TakeOrderedAndProject" in plan, plan
+        assert "partial_count" in plan, plan
+        for frag in ("BatchEvalPython", "ArrowEvalPython", "Sort "):
+            assert frag not in plan, plan
+
+
+def test_encode_plan_is_scan_side_expressions(spark):
+    """The K-merge apply is stacked string expressions fused into the
+    scan: no shuffle, no sort, no Python evaluation."""
+    from parquet_sampler_spark.operators.vocab import bpe_encode
+
+    docs = spark.read.parquet(f"{SF_MED}/documents.parquet")
+    enc = bpe_encode(docs, "text", ["a b", "a_b c"])
+    plan = enc._jdf.queryExecution().executedPlan().toString()
+    for frag in ("Exchange", "BatchEvalPython", "ArrowEvalPython", "Sort "):
+        assert frag not in plan, plan
