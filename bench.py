@@ -48,6 +48,9 @@ sys.path.insert(0, str(REPO))
 
 from parquet_sampler_spark import queries as registry  # noqa: E402
 from parquet_sampler_spark import queries_ext, queries_olap  # noqa: E402
+from parquet_sampler_spark.streaming.sampling import (  # noqa: E402
+    run_stream_to_memory,
+)
 
 # rows that absorb once-per-SESSION warmup (not cache builds): a cache
 # reset cannot bring the cost back, so the median would record ~0 of
@@ -94,11 +97,7 @@ def _warm_streaming(spark, sf_dir: str) -> None:
         .parquet(sf_dir)
         .groupBy("r_regionkey").count()
     )
-    (
-        warm.writeStream.format("memory")
-        .queryName("psx_bench_stream_warm").outputMode("complete")
-        .trigger(availableNow=True).start()
-    ).awaitTermination()
+    run_stream_to_memory(warm, "complete")
 
 
 # Setup rows. State a session builds once and several rows then reuse

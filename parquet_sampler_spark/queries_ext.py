@@ -43,6 +43,7 @@ from parquet_sampler_spark.plans.cache import MEMO, persist
 from parquet_sampler_spark.queries import fitted, row
 from parquet_sampler_spark.queries import table as _t
 from parquet_sampler_spark.sources.io import read_parquet
+from parquet_sampler_spark.streaming.sampling import run_stream_to_memory
 
 
 def _normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -520,8 +521,6 @@ def _q_streaming_heavy_hitters(spark, sf_dir):
     restored by one bounded verify at read time."""
     import os
 
-    import pyarrow.parquet as pq
-
     from parquet_sampler_spark.queries import session_tmp_dir
     from parquet_sampler_spark.streaming.frequency import (
         heavy_hitters_from_stream,
@@ -639,13 +638,7 @@ def _q_streaming_late_watermark(spark, sf_dir):
                 "n_events",
             )
         )
-        name = f"psx_stream_late_{next(_STREAM_SEQ)}"
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return run_stream_to_memory(agg)
 
 
 # the streaming drop rule, replayed declaratively: the watermark
@@ -3916,13 +3909,7 @@ def _q_streaming_sample(spark, sf_dir):
         sampled = sample_threshold(
             src, _OP_RATIO, key_cols=["o_orderkey"], seed=_OP_SEED
         )
-        name = f"psx_stream_sample_{next(_STREAM_SEQ)}"
-        q = (
-            sampled.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return run_stream_to_memory(sampled)
 
 
 def _sql_streaming_sample() -> str:
@@ -3968,17 +3955,11 @@ def _q_streaming_dedup(spark, sf_dir):
     with _stream_shuffle(spark):
         src = read_event_stream(spark, d)
         deduped = streaming_dedup(src, ["event_id"], "ts", "31 days")
-        name = f"psx_stream_dedup_{next(_STREAM_SEQ)}"
-        q = (
-            deduped.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
+        return run_stream_to_memory(deduped).select(
+            "event_id",
+            F.unix_micros(F.col("ts")).alias("ts_us"),
+            "user_id", "event_type", "value",
         )
-        q.awaitTermination()
-    return spark.table(name).select(
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "user_id", "event_type", "value",
-    )
 
 
 _SQL_STREAMING_DEDUP = """
@@ -4017,19 +3998,13 @@ def _q_streaming_attribution(spark, sf_dir):
             lookback="1 hour",
             watermark="62 days",
         )
-        name = f"psx_stream_attr_{next(_STREAM_SEQ)}"
-        q = (
-            joined.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
+        return run_stream_to_memory(joined).select(
+            "purchase_id",
+            F.col("p_user").alias("user_id"),
+            F.unix_micros("p_ts").alias("p_ts_us"),
+            "click_id",
+            F.unix_micros("c_ts").alias("c_ts_us"),
         )
-        q.awaitTermination()
-    return spark.table(name).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        F.unix_micros("p_ts").alias("p_ts_us"),
-        "click_id",
-        F.unix_micros("c_ts").alias("c_ts_us"),
-    )
 
 
 _RESERVOIR_K = 50
@@ -4080,13 +4055,9 @@ def _q_streaming_reservoir(spark, sf_dir):
     import os
     import shutil
 
-    import pyarrow.parquet as pq
-
     from parquet_sampler_spark.queries import session_tmp_dir
-    from parquet_sampler_spark.streaming.joins import (
-        read_reservoir,
-        streaming_exact_sample,
-    )
+    from parquet_sampler_spark.streaming.joins import streaming_exact_sample
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
     from parquet_sampler_spark.streaming.sampling import read_event_stream
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -4108,7 +4079,7 @@ def _q_streaming_reservoir(spark, sf_dir):
         )
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-    return read_reservoir(spark, res_path).select(
+    return read_snapshot(spark, res_path).select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         "user_id", "event_type", "value",
@@ -4143,14 +4114,12 @@ def _q_streaming_quantiles(spark, sf_dir):
     import os
     import shutil
 
-    import pyarrow.parquet as pq
-
     from parquet_sampler_spark.operators.sketches import merged_quantiles
     from parquet_sampler_spark.queries import session_tmp_dir
     from parquet_sampler_spark.streaming.quantiles import (
-        read_quantile_summaries,
         streaming_quantile_summaries,
     )
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
     from parquet_sampler_spark.streaming.sampling import read_event_stream
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -4173,7 +4142,7 @@ def _q_streaming_quantiles(spark, sf_dir):
             .trigger(availableNow=True).start()
         )
         q.awaitTermination()
-    summ = read_quantile_summaries(spark, sum_path)
+    summ = read_snapshot(spark, sum_path)
     est = merged_quantiles(summ, ["event_type"], [0.5, 0.9])
     return _quantile_envelope(spark, sf_dir, est)
 
@@ -4196,13 +4165,9 @@ def _q_streaming_reservoir_grouped(spark, sf_dir):
     import os
     import shutil
 
-    import pyarrow.parquet as pq
-
     from parquet_sampler_spark.queries import session_tmp_dir
-    from parquet_sampler_spark.streaming.joins import (
-        read_reservoir,
-        streaming_grouped_sample,
-    )
+    from parquet_sampler_spark.streaming.joins import streaming_grouped_sample
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
     from parquet_sampler_spark.streaming.sampling import read_event_stream
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -4222,7 +4187,7 @@ def _q_streaming_reservoir_grouped(spark, sf_dir):
         )
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-    return read_reservoir(spark, res_path).select(
+    return read_snapshot(spark, res_path).select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         "user_id", "event_type", "value",
@@ -4289,13 +4254,8 @@ def _q_streaming_hourly(spark, sf_dir):
                 "n_events", "sum_value",
             )
         )
-        name = f"psx_stream_hourly_{next(_STREAM_SEQ)}"
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return run_stream_to_memory(agg, "complete")
+
 
 @row("streaming_sessionize", lambda: _SQL_STREAMING_SESSIONIZE)
 def _q_streaming_sessionize(spark, sf_dir):
@@ -4321,13 +4281,7 @@ def _q_streaming_sessionize(spark, sf_dir):
         sessions = sessionize_stream(
             stream, gap_minutes=30, event_time_timeout=True
         )
-        name = f"psx_stream_sessions_{next(_STREAM_SEQ)}"
-        q = (
-            sessions.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name).filter(F.col("user_id") >= 0)
+        return run_stream_to_memory(sessions).filter(F.col("user_id") >= 0)
 
 
 def _sentinel_sessionize_stream(spark, sf_dir):
@@ -4431,13 +4385,7 @@ def _q_streaming_sessionize_native(spark, sf_dir):
                 "n_events",
             )
         )
-        name = f"psx_stream_sessions_nat_{next(_STREAM_SEQ)}"
-        q = (
-            sessions.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name).filter(F.col("user_id") >= 0)
+        return run_stream_to_memory(sessions).filter(F.col("user_id") >= 0)
 
 
 _SQL_STREAMING_SESSIONIZE = f"""
@@ -6891,13 +6839,7 @@ def _q_streaming_enrich(spark, sf_dir):
                 _value_e4_sum().alias("sum_value"),
             )
         )
-        name = f"psx_stream_enrich_{next(_STREAM_SEQ)}"
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return run_stream_to_memory(agg, "complete")
 
 
 _SQL_STREAMING_ENRICH = f"""

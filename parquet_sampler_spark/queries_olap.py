@@ -1788,7 +1788,7 @@ def _q_cdc_time_travel(spark, sf_dir):
     from parquet_sampler_spark.queries import session_tmp_dir
     from parquet_sampler_spark.streaming.sinks import (
         apply_cdc_batch,
-        read_merge_snapshot,
+        read_snapshot,
     )
 
     # key the snapshot dir by sf_dir: without it, a second scale factor
@@ -1812,7 +1812,7 @@ def _q_cdc_time_travel(spark, sf_dir):
         batch, 1, base, ["c_custkey"], delete_col="is_deleted",
         retain_versions=2,
     )
-    return read_merge_snapshot(spark, base, version=0)
+    return read_snapshot(spark, base, version=0)
 
 
 _SQL_CDC_TIME_TRAVEL = """

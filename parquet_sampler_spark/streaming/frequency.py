@@ -9,25 +9,34 @@ stored k-1-counter summary — the classic mergeability result: folding
 decrement rule keeps the combined undercount ≤ n_total/k, so the
 merged summary still proposes a SUPERSET of every globally-heavy key.
 State is k-1 counters + one running row count, kilobytes forever,
-committed through the shared crash-atomic snapshot protocol.
+maintained by ``sinks.snapshot_stream``, which owns the crash-atomic
+commit and the replayed-epoch guard.
 
 Reading the answer stays a two-phase plan: the stream maintains
 CANDIDATES cheaply; :func:`verify_heavy_hitters` runs one exact
 bounded aggregation over the accumulated data (or any superset store)
 to keep only true heavy hitters with exact counts — which is why the
 registered row can carry the same plain-SQL HAVING oracle as the
-batch operator. Like the quantile state, the merge is ADDITIVE, so
-each batch gates on ``published_epoch`` and a replayed
-already-published epoch is skipped — without it, a crash between the
-pointer swap and the checkpoint commit would fold the same counts in
-twice and inflate ``n``, which can silently drop a true heavy hitter
-at the 1/k boundary.
+batch operator. Like the quantile state, the merge is ADDITIVE: the
+guard's replayed-epoch skip is what keeps a crash between the pointer
+swap and the checkpoint commit from folding the same counts in twice
+and inflating ``n``, which can silently drop a true heavy hitter at
+the 1/k boundary.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from parquet_sampler_spark.operators.sketches import (
+    _mg_update,
+    mg_weighted_updates,
+)
+from parquet_sampler_spark.streaming.sinks import (
+    read_snapshot,
+    snapshot_stream,
+)
 
 
 def streaming_heavy_hitters(
@@ -54,46 +63,21 @@ def streaming_heavy_hitters(
     over the key-sorted updates, so the merged summary keeps the
     mergeability undercount bound AND deterministic bytes.
 
-    ``checkpoint_dir``, when given, is attached as the stream's
-    ``checkpointLocation`` and its stable query id scopes the
-    replayed-epoch guard (see ``sinks.guard_epoch`` — a fresh
-    checkpoint driving existing state raises instead of silently
-    skipping its early epochs)."""
+    The commit protocol and ``checkpoint_dir`` are
+    ``sinks.snapshot_stream``'s."""
     if k < 2:
         raise ValueError(f"streaming_heavy_hitters needs k >= 2, got {k}")
-
-    from parquet_sampler_spark.operators.sketches import (
-        _mg_update,
-        mg_weighted_updates,
-    )
-    from parquet_sampler_spark.streaming.sinks import (
-        checkpoint_query_id,
-        current_snapshot_path,
-        guard_epoch,
-        publish_snapshot,
-    )
-
     spark = keyed.sparkSession
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        # additive state: skip a replayed published epoch (see module
-        # docstring — double-counting inflates n and drops true HHs);
-        # run-scoped when a managed checkpoint identifies the query
-        run_id = (
-            checkpoint_query_id(checkpoint_dir)
-            if checkpoint_dir is not None else None
-        )
-        if guard_epoch(summary_path, epoch_id, run_id):
-            return
+    def fold(batch: DataFrame, current: DataFrame | None) -> DataFrame:
         # bounded candidate pass: ≤ k-1 weighted counters + 1 exact
         # row-count marker PER PARTITION, key-sorted for a
         # deterministic fold (MG summary contents are order-dependent)
         updates, batch_n = mg_weighted_updates(batch, col, k)
         counters: dict = {}
         n = 0
-        cur = current_snapshot_path(summary_path)
-        if cur is not None:
-            for r in spark.read.parquet(cur).collect():
+        if current is not None:
+            for r in current.collect():
                 if r.key is None:
                     n = r.cnt
                 else:
@@ -103,17 +87,9 @@ def streaming_heavy_hitters(
         n += batch_n
         rows = [(key, int(c)) for key, c in sorted(counters.items())]
         rows.append((None, n))
-        publish_snapshot(
-            spark.createDataFrame(rows, "key string, cnt long"),
-            summary_path,
-            epoch_id,
-            run_id=run_id,
-        )
+        return spark.createDataFrame(rows, "key string, cnt long")
 
-    writer = keyed.writeStream.foreachBatch(merge_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return snapshot_stream(keyed, summary_path, fold, checkpoint_dir)
 
 
 def verify_heavy_hitters(
@@ -127,12 +103,7 @@ def verify_heavy_hitters(
     candidate's EXACT count in ``data`` and ``n`` is the summary's
     running row count — :func:`heavy_hitters_from_stream` applies the
     strict ``cnt·k > n`` BIGINT threshold to finish the read-out."""
-    from parquet_sampler_spark.streaming.sinks import current_snapshot_path
-
-    cur = current_snapshot_path(summary_path)
-    if cur is None:
-        raise FileNotFoundError(f"no published summary at {summary_path}")
-    snap = spark.read.parquet(cur)
+    snap = read_snapshot(spark, summary_path)
     n_row = snap.filter(F.col("key").isNull()).collect()
     if len(n_row) != 1:
         raise ValueError(

@@ -189,7 +189,6 @@ def apply_cdc_batch_incremental(
     delete_col: str | None = None,
     order_col: str | None = None,
     retain_versions: int = 1,
-    _fail_before_publish: frozenset[int] | set[int] | None = None,
 ) -> None:
     """Merge ONE CDC batch into the bucketed snapshot, rewriting only
     the buckets the batch's keys hash into. ``nbuckets`` must stay
@@ -254,10 +253,6 @@ def apply_cdc_batch_incremental(
         json.dump(new_manifest, f, sort_keys=True)
         f.flush()
         os.fsync(f.fileno())
-    if _fail_before_publish and batch_id in _fail_before_publish:
-        raise RuntimeError(
-            f"injected crash before publishing manifest {batch_id}"
-        )
     _publish(base_path, batch_id)
     _prune(base_path, retain_versions)
 
@@ -271,7 +266,6 @@ def incremental_merge_sink(
     order_col: str | None = None,
     checkpoint_dir: str | None = None,
     retain_versions: int = 1,
-    _fail_before_publish: frozenset[int] | set[int] | None = None,
 ):
     """Streaming wrapper: a started-ready ``DataStreamWriter`` that
     applies every micro-batch through
@@ -285,7 +279,6 @@ def incremental_merge_sink(
             batch_df, batch_id, base_path, key_cols,
             nbuckets=nbuckets, delete_col=delete_col,
             order_col=order_col, retain_versions=retain_versions,
-            _fail_before_publish=_fail_before_publish,
         )
 
     writer = updates.writeStream.foreachBatch(apply_batch)

@@ -5,21 +5,26 @@
   window. The watermark bounds both sides' join state; without it a
   stream-stream join must keep everything forever.
 * :func:`streaming_exact_sample` — the reference's exact-count-sample
-  semantic, online: a ``foreachBatch`` loop maintains a k-row reservoir
-  as "k smallest Lehmer-hash rows seen so far". Deterministic (same
-  hash as the batch sampler), so after consuming the whole input the
-  reservoir EQUALS the batch ``sample_exact`` top-k for the same seed —
-  a streaming/batch consistency property most samplers can't offer.
-  State is the k-row parquet reservoir itself; each batch does a
-  union + top-k, cost O(batch + k) — independent of stream length.
+  semantic, online: a k-row reservoir kept as "k smallest Lehmer-hash
+  rows seen so far". Deterministic (same hash as the batch sampler),
+  so after consuming the whole input the reservoir EQUALS the batch
+  ``sample_exact`` top-k for the same seed — a streaming/batch
+  consistency property most samplers can't offer. State is the k-row
+  parquet reservoir itself; each batch does a union + top-k, cost
+  O(batch + k) — independent of stream length.
+
+Both reservoirs are folds driven by ``sinks.snapshot_stream``, which
+owns the crash-atomic commit and the replayed-epoch guard; read them
+with ``sinks.read_snapshot``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from parquet_sampler_spark.functions.hashing import lehmer_hash
+from parquet_sampler_spark.streaming.sinks import snapshot_stream
 
 
 def stream_stream_attribution(
@@ -66,64 +71,18 @@ def streaming_exact_sample(
     checkpoint_dir: str | None = None,
 ):
     """Maintain a k-row deterministic reservoir of the stream at
-    ``reservoir_path`` (a versioned parquet table — read it with
-    :func:`read_reservoir`).
+    ``reservoir_path`` through ``sinks.snapshot_stream`` (the commit
+    protocol, ``checkpoint_dir`` and the returned ``DataStreamWriter``
+    are its).
 
     Invariant after each batch: reservoir = k smallest (pr, key) rows
     over ALL events consumed so far — so a replayed batch is a no-op
     (idempotent, exactly-once under the snapshot sink).
-
-    Crash atomicity (r08, found by the kill-restart test): a plain
-    ``mode("overwrite")`` of the reservoir dir deletes the old state
-    BEFORE the new write completes, so a kill mid-write leaves a
-    corrupt reservoir the restart cannot read. The sink therefore uses
-    the same versioned-snapshot + pointer commit as the CDC merge sink
-    (streaming/sinks.py): each batch writes ``v<epoch>`` as a NEW
-    directory and atomically swaps the ``_CURRENT`` pointer; a crash
-    during the write leaves the pointer on the last published
-    snapshot, and the replayed epoch overwrites the uncommitted dir
-    wholesale. Writing to a fresh dir also removes the old
-    collect-then-rewrite workaround (the sink is no longer its own
-    source mid-write).
-
-    Returns the ``DataStreamWriter`` (caller adds a trigger and calls
-    ``.start()``). Local-filesystem reservoir paths only (POSIX rename
-    atomicity; on object stores this layer is a table format's job).
-    ``checkpoint_dir``, when given, is attached as the stream's
-    ``checkpointLocation`` and its stable query id scopes the
-    replayed-epoch guard (``sinks.guard_epoch``).
     """
-    from parquet_sampler_spark.streaming.sinks import (
-        checkpoint_query_id,
-        current_snapshot_path,
-        guard_epoch,
-        publish_snapshot,
-    )
-
-    spark = events.sparkSession
     pr = lehmer_hash(key_cols, seed)
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        # exactly-once: a crash after publish but before the
-        # checkpoint commit replays this epoch — already published, so
-        # skip (re-merging would also lazily read v<N> while
-        # overwriting v<N>, which Spark refuses — stream wedge);
-        # run-scoped when a managed checkpoint identifies the query
-        run_id = (
-            checkpoint_query_id(checkpoint_dir)
-            if checkpoint_dir is not None else None
-        )
-        if guard_epoch(reservoir_path, epoch_id, run_id):
-            return
+    def fold(batch: DataFrame, current: DataFrame | None) -> DataFrame:
         tagged = batch.withColumn("__pr", pr)
-        # pointer-resolved read: an uncommitted v* dir from a crashed
-        # attempt is invisible here; a transient READ error on a
-        # published snapshot must fail the batch (stream retries),
-        # never silently reset accumulated state
-        cur_path = current_snapshot_path(reservoir_path)
-        current = (
-            spark.read.parquet(cur_path) if cur_path is not None else None
-        )
         merged = (
             tagged if current is None else current.unionByName(tagged)
         )
@@ -131,16 +90,12 @@ def streaming_exact_sample(
         # rows already in the reservoir, and without this both copies
         # would survive the top-k — breaking replay idempotence
         # (observed in testing)
-        top = (
+        return (
             merged.dropDuplicates(key_cols)
             .orderBy(F.col("__pr"), *key_cols).limit(k)
         )
-        publish_snapshot(top, reservoir_path, epoch_id, run_id=run_id)
 
-    writer = events.writeStream.foreachBatch(merge_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return snapshot_stream(events, reservoir_path, fold, checkpoint_dir)
 
 
 def streaming_grouped_sample(
@@ -160,65 +115,28 @@ def streaming_grouped_sample(
     appear as the stream first sees them; no pre-declared stratum
     list.
 
-    Same invariant and commit protocol as
-    :func:`streaming_exact_sample` (versioned snapshot + atomic
-    pointer, replay-idempotent merge; read with
-    :func:`read_reservoir`). The per-batch merge ranks
-    ``row_number() <= k`` over (group → pr, keys): Catalyst rewrites
-    the rank filter into WindowGroupLimit, so each partition keeps
-    per-group k-heaps — O(batch + groups·k) work per batch, never a
-    global sort. State is the reservoir itself: groups·k rows.
+    Same invariant and driver as :func:`streaming_exact_sample`. The
+    per-batch merge ranks ``row_number() <= k`` over (group → pr,
+    keys): Catalyst rewrites the rank filter into WindowGroupLimit, so
+    each partition keeps per-group k-heaps — O(batch + groups·k) work
+    per batch, never a global sort. State is the reservoir itself:
+    groups·k rows.
     """
-    from pyspark.sql import Window
-
-    from parquet_sampler_spark.streaming.sinks import (
-        checkpoint_query_id,
-        current_snapshot_path,
-        guard_epoch,
-        publish_snapshot,
-    )
-
-    spark = events.sparkSession
     pr = lehmer_hash(key_cols, seed)
     w = Window.partitionBy(*group_cols).orderBy(
         F.col("__pr"), *[F.col(c) for c in key_cols]
     )
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        # exactly-once epoch skip — see streaming_exact_sample
-        run_id = (
-            checkpoint_query_id(checkpoint_dir)
-            if checkpoint_dir is not None else None
-        )
-        if guard_epoch(reservoir_path, epoch_id, run_id):
-            return
+    def fold(batch: DataFrame, current: DataFrame | None) -> DataFrame:
         tagged = batch.withColumn("__pr", pr)
-        cur_path = current_snapshot_path(reservoir_path)
         merged = (
-            tagged if cur_path is None
-            else spark.read.parquet(cur_path).unionByName(tagged)
+            tagged if current is None else current.unionByName(tagged)
         )
-        top = (
+        return (
             merged.dropDuplicates(key_cols)
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .drop("__rn")
         )
-        publish_snapshot(top, reservoir_path, epoch_id, run_id=run_id)
 
-    writer = events.writeStream.foreachBatch(merge_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
-
-
-def read_reservoir(spark: SparkSession, reservoir_path: str) -> DataFrame:
-    """Read the live (pointer-published) reservoir snapshot."""
-    from parquet_sampler_spark.streaming.sinks import current_snapshot_path
-
-    snap = current_snapshot_path(reservoir_path)
-    if snap is None:
-        raise FileNotFoundError(
-            f"no published reservoir at {reservoir_path}"
-        )
-    return spark.read.parquet(snap)
+    return snapshot_stream(events, reservoir_path, fold, checkpoint_dir)

@@ -13,20 +13,21 @@ percentiles per refresh rescans everything; a mergeable summary makes
 the refresh incremental, which at 100 TB stream rates is the
 difference between a dashboard and a backfill job.
 
-State commits through the shared versioned-snapshot + pointer
-protocol (streaming/sinks.publish_snapshot) — crash-atomic, replayed
-batches overwrite their own uncommitted dir. The merge is ADDITIVE
-(re-merging the same batch's values would double their weight), so
-each batch is gated on ``published_epoch``: a replayed
-already-published epoch is SKIPPED, turning the checkpoint's
-at-least-once delivery into exactly-once state — the same guard the
-CDC merge sink uses, and the standard contract for additive streaming
-state (counts and sums share it).
+The fold is driven by ``sinks.snapshot_stream``, which owns the
+crash-atomic commit and the replayed-epoch guard. The merge is
+ADDITIVE (re-merging the same batch's values would double their
+weight), which is why that guard matters here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from parquet_sampler_spark.operators.sketches import (
+    _partition_quantile_summaries,
+    merge_summaries,
+)
+from parquet_sampler_spark.streaming.sinks import snapshot_stream
 
 
 def streaming_quantile_summaries(
@@ -38,66 +39,19 @@ def streaming_quantile_summaries(
     checkpoint_dir: str | None = None,
 ):
     """Maintain one quantile summary per ``group_cols`` value over the
-    stream at ``summary_path`` (versioned snapshots; read the live one
-    with :func:`read_quantile_summaries`, answer quantiles with
-    operators/sketches.merged_quantiles). Returns the
-    ``DataStreamWriter``. ``checkpoint_dir``, when given, is attached
-    as the stream's ``checkpointLocation`` and its stable query id
-    scopes the replayed-epoch guard (``sinks.guard_epoch`` — a fresh
-    checkpoint over existing state raises instead of silently
-    skipping its early epochs)."""
-    from parquet_sampler_spark.operators.sketches import (
-        _partition_quantile_summaries,
-        merge_summaries,
-    )
-    from parquet_sampler_spark.streaming.sinks import (
-        checkpoint_query_id,
-        current_snapshot_path,
-        guard_epoch,
-        publish_snapshot,
-    )
+    stream at ``summary_path`` through ``sinks.snapshot_stream`` (read
+    the live summaries with ``sinks.read_snapshot``, answer quantiles
+    with operators/sketches.merged_quantiles). Returns the
+    ``DataStreamWriter``."""
 
-    spark = events.sparkSession
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        # additive state: a replayed published epoch would double the
-        # batch's weight — skip it (exactly-once by epoch id),
-        # run-scoped when a managed checkpoint identifies the query
-        run_id = (
-            checkpoint_query_id(checkpoint_dir)
-            if checkpoint_dir is not None else None
-        )
-        if guard_epoch(summary_path, epoch_id, run_id):
-            return
+    def fold(batch: DataFrame, current: DataFrame | None) -> DataFrame:
         # partition-local summaries only; ONE merge covers both the
         # batch's partials and the stored state (merging twice would
         # waste a shuffle and an extra lossy compression level)
         part = _partition_quantile_summaries(
             batch, group_cols, [], value_col, cap
         )
-        cur_path = current_snapshot_path(summary_path)
-        merged_in = (
-            part if cur_path is None
-            else spark.read.parquet(cur_path).unionByName(part)
-        )
-        out = merge_summaries(merged_in, group_cols, cap)
-        publish_snapshot(out, summary_path, epoch_id, run_id=run_id)
+        merged_in = part if current is None else current.unionByName(part)
+        return merge_summaries(merged_in, group_cols, cap)
 
-    writer = events.writeStream.foreachBatch(merge_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
-
-
-def read_quantile_summaries(
-    spark: SparkSession, summary_path: str
-) -> DataFrame:
-    """Read the live (pointer-published) summary snapshot."""
-    from parquet_sampler_spark.streaming.sinks import current_snapshot_path
-
-    snap = current_snapshot_path(summary_path)
-    if snap is None:
-        raise FileNotFoundError(
-            f"no published summaries at {summary_path}"
-        )
-    return spark.read.parquet(snap)
+    return snapshot_stream(events, summary_path, fold, checkpoint_dir)

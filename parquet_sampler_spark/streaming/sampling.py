@@ -4,7 +4,8 @@ rollups over an event stream.
 The reference is strictly batch (SURVEY.md §2.2) — this module is the
 beyond-reference streaming surface, built on the public Structured
 Streaming API: ``readStream`` → transforms → ``writeStream``, watermarks
-for late data, ``foreachBatch`` for the stateful exact-count sampler.
+for late data, and :func:`run_stream_to_memory`, the one memory-sink
+drain.
 
 Design for scale: the streaming hash-sampler is embarrassingly parallel
 (a pushdown filter per micro-batch, no state); the windowed rollup is
@@ -14,10 +15,13 @@ holds one row per (window, event_type).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_sampler_spark.functions.hashing import MODULUS, lehmer_hash
+from parquet_sampler_spark.sources.io import read_parquet
 
 
 def read_event_stream(
@@ -42,7 +46,7 @@ def read_event_stream(
     # externally created non-UTC session can't shift streaming instants.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # streaming requires an explicit schema
-    static = spark.read.parquet(path)
+    static = read_parquet(spark, path)
     # the file-stream source only accepts directories: stream the parent
     # dir with a glob filter when pointed at a single file
     if path.endswith(".parquet") and os.path.isfile(path):
@@ -105,22 +109,24 @@ def windowed_rollup(
 
 def run_stream_to_memory(
     stream_df: DataFrame,
-    query_name: str,
     output_mode: str = "append",
 ) -> DataFrame:
     """Drive a streaming plan to completion against the current file set
-    (memory sink, synchronous) and return the materialized result —
-    local smoke-test harness for the streaming operators."""
-    q = (
+    (memory sink, ``availableNow``) and return the materialized result.
+    A query failure re-raises here. The sink's view is dropped before
+    returning: the returned frame still reads every drained row, so the
+    rows live exactly as long as the frame and no view outlives it."""
+    name = f"psx_stream_{uuid.uuid4().hex}"
+    (
         stream_df.writeStream.outputMode(output_mode)
-        .format("memory").queryName(query_name)
+        .format("memory").queryName(name)
         .trigger(availableNow=True)
         .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    ).awaitTermination()
     spark = stream_df.sparkSession
-    return spark.sql(f"SELECT * FROM {query_name}")
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 def streaming_dedup(

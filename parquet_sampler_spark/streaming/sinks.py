@@ -1,5 +1,10 @@
-"""Streaming CDC apply: merge each micro-batch into a parquet snapshot.
+"""Versioned parquet snapshots: the commit protocol every streaming
+state maintainer shares, and the CDC merge sink built on it.
 
+:func:`snapshot_stream` is the one ``foreachBatch`` loop whose state is
+"the current snapshot": the reservoir samplers and the quantile and
+heavy-hitter maintainers each supply only a fold of one micro-batch
+into the live snapshot. :func:`stream_merge_sink` applies CDC:
 ``foreachBatch`` + :func:`~parquet_sampler_spark.operators.merge.
 merge_upsert` gives MERGE-into-table semantics without a table format:
 every micro-batch of upserts/deletes is merged against the current
@@ -18,7 +23,7 @@ Crash atomicity — versioned snapshots + pointer file. The snapshot
 A batch writes its merged result to a NEW versioned directory, then
 publishes by atomically replacing ``_CURRENT`` (``os.replace`` of a
 same-directory temp file — atomic on POSIX). Readers resolve the
-pointer via :func:`read_merge_snapshot`. Consequences:
+pointer via :func:`read_snapshot`. Consequences:
 
 - Crash DURING the snapshot write (or between write and publish):
   ``_CURRENT`` still names the old snapshot, which was never touched —
@@ -38,7 +43,7 @@ jars not present in this environment); this module is the engine-level
 emulation of the same commit protocol (versioned data files + an
 atomically-swapped pointer is exactly Delta's ``_last_checkpoint`` /
 Iceberg's ``version-hint.text`` scheme). ``retain_versions`` keeps the
-newest N published snapshots, and ``read_merge_snapshot(version=...)``
+newest N published snapshots, and ``read_snapshot(version=...)``
 time-travels to any retained one — the ``VERSION AS OF`` read path.
 Local-filesystem paths only: ``os.replace`` atomicity is a POSIX
 rename guarantee; on S3 this layer is replaced by the table format.
@@ -57,11 +62,13 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_sampler_spark.operators.merge import merge_upsert
+from parquet_sampler_spark.sources.io import read_parquet
 
 _POINTER = "_CURRENT"
 
@@ -138,7 +145,7 @@ def guard_epoch(
     fresh-checkpoint-over-live-state hazard; callers that reuse state
     paths across checkpoints must pass ``checkpoint_dir`` so identity
     is enforced."""
-    pub = _published_batch_id(base_path)
+    pub = published_epoch(base_path)
     if pub is None:
         return False
     stored = published_run_id(base_path)
@@ -154,10 +161,12 @@ def guard_epoch(
     return pub >= epoch_id
 
 
-def read_merge_snapshot(
+def read_snapshot(
     spark: SparkSession, base_path: str, version: int | None = None
 ) -> DataFrame:
-    """Read a snapshot of a :func:`stream_merge_sink` table.
+    """Read a snapshot of a versioned state directory: the CDC table of
+    :func:`stream_merge_sink` or the state of any :func:`snapshot_stream`
+    maintainer.
 
     ``version=None`` reads the live snapshot (pointer-resolved).
     Passing a batch id time-travels to that published version if it is
@@ -169,20 +178,20 @@ def read_merge_snapshot(
     uncommitted data and is never served (r4 ADVICE finding)."""
     if version is not None:
         p = os.path.join(base_path, f"v{version:08d}")
-        published = _published_batch_id(base_path)
+        published = published_epoch(base_path)
         if not os.path.isdir(p) or published is None \
                 or version > published:
             raise FileNotFoundError(
                 f"version {version} not retained at {base_path}; "
                 f"available: {list_snapshot_versions(base_path)}"
             )
-        return spark.read.parquet(p)
+        return read_parquet(spark, p)
     snap = current_snapshot_path(base_path)
     if snap is None:
         raise FileNotFoundError(
             f"no published snapshot at {base_path} (no {_POINTER})"
         )
-    return spark.read.parquet(snap)
+    return read_parquet(spark, snap)
 
 
 def list_snapshot_versions(base_path: str) -> list[int]:
@@ -192,7 +201,7 @@ def list_snapshot_versions(base_path: str) -> list[int]:
     batch overwrites it wholesale."""
     if not os.path.isdir(base_path):
         return []
-    published = _published_batch_id(base_path)
+    published = published_epoch(base_path)
     if published is None:
         return []
     out = []
@@ -202,13 +211,6 @@ def list_snapshot_versions(base_path: str) -> list[int]:
                 and int(d[1:]) <= published:
             out.append(int(d[1:]))
     return sorted(out)
-
-
-def _published_batch_id(base_path: str) -> int | None:
-    snap = current_snapshot_path(base_path)
-    if snap is None:
-        return None
-    return int(os.path.basename(snap)[1:])
 
 
 def _publish(
@@ -261,29 +263,89 @@ def published_epoch(base_path: str) -> int | None:
     — or (b) for additive state, silently fold the same batch in
     twice. Skipping is what makes at-least-once delivery exactly-once
     state."""
-    return _published_batch_id(base_path)
+    snap = current_snapshot_path(base_path)
+    if snap is None:
+        return None
+    return int(os.path.basename(snap)[1:])
 
 
 def publish_snapshot(
     df: DataFrame, base_path: str, epoch_id: int, retain: int = 2,
     run_id: str | None = None,
 ) -> None:
-    """The shared foreachBatch state-commit (r08): write ``df`` as a
-    fresh ``v<epoch>`` dir, atomically swap the ``_CURRENT`` pointer,
-    prune to the ``retain`` newest PUBLISHED versions. Crash at any
-    byte offset leaves the pointer on the last published snapshot;
-    the replayed epoch overwrites its uncommitted dir wholesale. Used
-    by the reservoir samplers and the streaming quantile/frequency
-    maintainers — any foreachBatch loop whose state is 'the current
-    snapshot'. Callers must gate on :func:`published_epoch` FIRST
-    (see its docstring for the crash window this closes); passing the
-    same ``run_id`` given to :func:`guard_epoch` records the
-    publishing query's identity on the pointer so the guard can
-    detect a fresh checkpoint reusing this state path."""
+    """The shared state-commit (r08): write ``df`` as a fresh
+    ``v<epoch>`` dir, atomically swap the ``_CURRENT`` pointer, prune
+    to the ``retain`` newest PUBLISHED versions. Crash at any byte
+    offset leaves the pointer on the last published snapshot; the
+    replayed epoch overwrites its uncommitted dir wholesale. Used by
+    :func:`snapshot_stream` and :func:`apply_cdc_batch`. Callers must
+    gate on :func:`guard_epoch` FIRST (see :func:`published_epoch` for
+    the crash window this closes); passing the same ``run_id`` given
+    to :func:`guard_epoch` records the publishing query's identity on
+    the pointer so the guard can detect a fresh checkpoint reusing
+    this state path."""
     vname = f"v{epoch_id:08d}"
     df.write.mode("overwrite").parquet(os.path.join(base_path, vname))
     _publish(base_path, vname, run_id=run_id)
     _prune(base_path, vname, retain_versions=retain)
+
+
+def snapshot_stream(
+    events: DataFrame,
+    path: str,
+    fold: Callable[[DataFrame, DataFrame | None], DataFrame],
+    checkpoint_dir: str | None = None,
+):
+    """The one ``foreachBatch`` loop whose state is "the current
+    snapshot" at ``path``: each micro-batch publishes
+    ``fold(batch, current)``, where ``current`` is the live snapshot
+    (``None`` before the first publish). Returns the
+    ``DataStreamWriter``; the caller adds a trigger and calls
+    ``.start()``. Read the state with :func:`read_snapshot`.
+
+    Crash atomicity (r08, found by the kill-restart test): a plain
+    ``mode("overwrite")`` of a state dir deletes the old state BEFORE
+    the new write completes, so a kill mid-write leaves corrupt state
+    the restart cannot read. Each epoch therefore commits through
+    :func:`publish_snapshot`: a NEW ``v<epoch>`` directory and an
+    atomic ``_CURRENT`` swap. Writing a fresh dir also means the sink
+    is never its own source mid-write.
+
+    Exactly-once: a crash after publish but before the checkpoint
+    commit replays the epoch, which :func:`guard_epoch` skips.
+    Re-folding it would double additive state (quantile weights,
+    heavy-hitter counts and ``n``), and would lazily read ``v<N>``
+    while overwriting ``v<N>``, which Spark refuses (stream wedge).
+    ``checkpoint_dir``, when given, is attached as the stream's
+    ``checkpointLocation`` and its stable query id scopes the guard:
+    a fresh checkpoint over existing state raises instead of silently
+    skipping its early epochs. Local-filesystem paths only (POSIX
+    rename atomicity; on object stores this layer is a table
+    format's job)."""
+    spark = events.sparkSession
+
+    def commit(batch: DataFrame, epoch_id: int) -> None:
+        run_id = (
+            checkpoint_query_id(checkpoint_dir)
+            if checkpoint_dir is not None else None
+        )
+        if guard_epoch(path, epoch_id, run_id):
+            return
+        # pointer-resolved read: an uncommitted v* dir from a crashed
+        # attempt is invisible here; a transient READ error on a
+        # published snapshot must fail the batch (stream retries),
+        # never silently reset accumulated state — read_parquet falls
+        # back to Spark's own read, which raises
+        snap = current_snapshot_path(path)
+        current = None if snap is None else read_parquet(spark, snap)
+        publish_snapshot(
+            fold(batch, current), path, epoch_id, run_id=run_id
+        )
+
+    writer = events.writeStream.foreachBatch(commit)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer
 
 
 def apply_cdc_batch(
@@ -294,18 +356,19 @@ def apply_cdc_batch(
     delete_col: str | None = None,
     order_col: str | None = None,
     retain_versions: int = 1,
-    _fail_before_publish: frozenset[int] | set[int] | None = None,
+    run_id: str | None = None,
 ) -> None:
     """Merge ONE batch of CDC events into the versioned snapshot table
     at ``base_path`` and publish the result — the full commit protocol
     (write new version → atomic pointer swap → prune), usable from a
     batch pipeline directly; :func:`stream_merge_sink` calls this per
     micro-batch. Exactly-once: a batch id at or below the published one
-    is skipped."""
+    is skipped. ``run_id`` is the streaming query's identity
+    (:func:`checkpoint_query_id`); with it, a different query driving
+    this state raises (see :func:`guard_epoch`)."""
     spark = batch_df.sparkSession
     os.makedirs(base_path, exist_ok=True)
-    applied = _published_batch_id(base_path)
-    if applied is not None and applied >= batch_id:
+    if guard_epoch(base_path, batch_id, run_id):
         # crash landed after publish but before the streaming
         # checkpoint committed: this batch is already in the
         # snapshot — exactly-once by skipping, not re-merging
@@ -323,7 +386,7 @@ def apply_cdc_batch(
     data_cols = [c for c in batch_df.columns if c != delete_col]
     snap = current_snapshot_path(base_path)
     if snap is not None:
-        base = spark.read.parquet(snap)
+        base = read_parquet(spark, snap)
     else:
         # empty base with the data schema: the first batch goes
         # through the SAME merge path (dup-key validation, delete
@@ -332,18 +395,10 @@ def apply_cdc_batch(
     merged = merge_upsert(
         base, batch_df, key_cols, delete_col=delete_col
     )
-    vname = f"v{batch_id:08d}"
-    # mode=overwrite: a partial dir left by a crash mid-write of a
-    # prior attempt of THIS batch is replaced wholesale
-    merged.select(*data_cols).write.mode("overwrite").parquet(
-        os.path.join(base_path, vname)
+    publish_snapshot(
+        merged.select(*data_cols), base_path, batch_id,
+        retain=retain_versions, run_id=run_id,
     )
-    if _fail_before_publish and batch_id in _fail_before_publish:
-        raise RuntimeError(
-            f"injected crash before publishing {vname}"
-        )
-    _publish(base_path, vname)
-    _prune(base_path, keep=vname, retain_versions=retain_versions)
 
 
 def stream_merge_sink(
@@ -354,13 +409,12 @@ def stream_merge_sink(
     order_col: str | None = None,
     checkpoint_dir: str | None = None,
     retain_versions: int = 1,
-    _fail_before_publish: frozenset[int] | set[int] | None = None,
 ):
     """Return a started-ready ``DataStreamWriter`` that merges every
     micro-batch of ``updates`` into the versioned parquet snapshot at
     ``base_path`` (created on first batch). Caller picks the trigger
     and calls ``.start()``. Read the result with
-    :func:`read_merge_snapshot` (the directory holds versions plus a
+    :func:`read_snapshot` (the directory holds versions plus a
     pointer file, not bare parquet).
 
     ``order_col``: a column that totally orders CDC events per key
@@ -374,11 +428,11 @@ def stream_merge_sink(
 
     ``retain_versions``: how many published snapshot versions to keep
     on disk — versions older than the newest N are pruned after each
-    publish. N > 1 enables :func:`read_merge_snapshot` time travel.
+    publish. N > 1 enables :func:`read_snapshot` time travel.
 
-    ``_fail_before_publish``: crash-injection for tests only — batch
-    ids that raise after the snapshot write but before the pointer
-    publish, simulating a process kill in the commit window.
+    ``checkpoint_dir``: the stream's ``checkpointLocation``; its query
+    id scopes the replay guard, so a fresh checkpoint over existing
+    state raises instead of skipping its early epochs.
     """
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -386,7 +440,10 @@ def stream_merge_sink(
             batch_df, batch_id, base_path, key_cols,
             delete_col=delete_col, order_col=order_col,
             retain_versions=retain_versions,
-            _fail_before_publish=_fail_before_publish,
+            run_id=(
+                checkpoint_query_id(checkpoint_dir)
+                if checkpoint_dir else None
+            ),
         )
 
     writer = updates.writeStream.foreachBatch(apply_batch)

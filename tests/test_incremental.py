@@ -81,7 +81,7 @@ def test_incremental_merge_and_file_sharing(spark, tmp_path):
     assert len(rewritten) < NB
 
 
-def test_crash_in_commit_window_and_replay(spark, tmp_path):
+def test_crash_in_commit_window_and_replay(spark, tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -109,13 +109,24 @@ def test_crash_in_commit_window_and_replay(spark, tmp_path):
                 .schema("k long, v double, is_deleted boolean")
                 .option("maxFilesPerTrigger", 1).parquet(str(src)))
 
-    q = (incremental_merge_sink(stream(), base, ["k"], nbuckets=NB,
-                                delete_col="is_deleted",
-                                checkpoint_dir=ckpt,
-                                _fail_before_publish={1})
-         .trigger(availableNow=True).start())
-    with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination(120)
+    from parquet_sampler_spark.streaming import incremental
+
+    publish = incremental._publish
+
+    def crash_on_batch_1(base_path, batch_id):
+        if batch_id == 1:
+            raise RuntimeError(f"injected crash before publishing "
+                               f"manifest {batch_id}")
+        publish(base_path, batch_id)
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_publish", crash_on_batch_1)
+        q = (incremental_merge_sink(stream(), base, ["k"], nbuckets=NB,
+                                    delete_col="is_deleted",
+                                    checkpoint_dir=ckpt)
+             .trigger(availableNow=True).start())
+        with pytest.raises(Exception, match="injected crash"):
+            q.awaitTermination(120)
 
     # batch 0 still live; batch 1's manifest+data written but
     # uncommitted: neither listed nor servable

@@ -5,9 +5,11 @@ cleanup. The drain test fills one memo entry of every kind and runs the
 checkpointing graph operators, clears, and checks nothing survives: no
 memo entry, no registered plan, no persisted RDD, no session tmp root.
 The registry keeps every plan until that clear. The guard tests keep
-new module-level caches from growing back beside the memo, and keep
+new module-level caches from growing back beside the memo, keep
 environment variables from becoming hidden switches between code
-paths.
+paths, and keep streaming state on its two drivers: ``foreachBatch``
+loops in the three snapshot sinks, memory sinks in the one drain that
+drops its view.
 """
 
 from __future__ import annotations
@@ -121,6 +123,73 @@ def test_package_reads_only_deployment_env_vars():
         "environment reads outside the deployment settings (pass a "
         "parameter or use a constant instead): " + ", ".join(found)
     )
+
+
+def _calls_by_function(node, fn=None):
+    """``(outermost enclosing function name or None, call)`` for every
+    call under ``node``."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _calls_by_function(child, fn or child.name)
+            continue
+        if isinstance(child, ast.Call):
+            yield fn, child
+        yield from _calls_by_function(child, fn)
+
+
+def _method_calls_outside(method, allowed, arg=None):
+    """``path:line`` of every ``.method(...)`` call (whose first argument
+    is the constant ``arg``, when given) outside the ``allowed``
+    functions of the package."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn, call in _calls_by_function(tree):
+            func = call.func
+            if not (isinstance(func, ast.Attribute) and func.attr == method):
+                continue
+            if arg is not None and not (
+                    call.args and isinstance(call.args[0], ast.Constant)
+                    and call.args[0].value == arg):
+                continue
+            if fn not in allowed:
+                found.append(f"{path.relative_to(PKG).as_posix()}:"
+                             f"{call.lineno} in {fn}")
+    return found
+
+
+def test_foreach_batch_only_in_snapshot_sinks():
+    found = _method_calls_outside("foreachBatch", {
+        "snapshot_stream", "stream_merge_sink", "incremental_merge_sink",
+    })
+    assert not found, (
+        "foreachBatch outside the snapshot sinks (pass a fold to "
+        "streaming.sinks.snapshot_stream instead): " + ", ".join(found)
+    )
+
+
+def test_memory_sink_only_in_the_drain():
+    found = _method_calls_outside(
+        "format", {"run_stream_to_memory"}, arg="memory")
+    assert not found, (
+        "memory sink outside streaming.sampling.run_stream_to_memory "
+        "(its view would outlive the drain): " + ", ".join(found)
+    )
+
+
+def test_stream_drain_leaves_no_sink_view(spark):
+    """A registry row drained through the memory sink leaves no
+    ``psx_stream_*`` view behind, and the frame it returns still counts
+    every drained row."""
+    from parquet_sampler_spark import queries_ext
+
+    out = queries_ext._q_streaming_hourly(spark, SF_SMALL)
+    views = [t.name for t in spark.catalog.listTables()
+             if t.name.startswith("psx_stream_")]
+    assert views == []
+    hours = queries_ext._events(spark, SF_SMALL).groupBy(
+        F.window("ts", "1 hour"), "event_type").count().count()
+    assert out.count() == hours > 0
 
 
 def test_clear_caches_drains_every_kind(spark, monkeypatch):

@@ -24,7 +24,7 @@ def event_stream(spark):
 
 
 def test_stream_passthrough_counts(spark, event_stream):
-    out = run_stream_to_memory(event_stream, "all_events")
+    out = run_stream_to_memory(event_stream)
     static_n = spark.read.parquet(EVENTS).count()
     assert out.count() == static_n
 
@@ -33,7 +33,7 @@ def test_streaming_sample_matches_batch_filter(spark, event_stream):
     """The hash sample is deterministic: the streaming result equals the
     same filter applied in batch — replay-safe by construction."""
     sampled = streaming_hash_sample(event_stream, 0.2, seed=9)
-    out = run_stream_to_memory(sampled, "sampled_events")
+    out = run_stream_to_memory(sampled)
 
     from parquet_sampler_spark.queries_ext import _events
 
@@ -55,7 +55,7 @@ def test_streaming_sample_ratio_validation(event_stream):
 def test_windowed_rollup(spark, event_stream):
     agg = windowed_rollup(event_stream, window="1 hour",
                           watermark="2 hours")
-    out = run_stream_to_memory(agg, "rollup", output_mode="append")
+    out = run_stream_to_memory(agg, output_mode="append")
     rows = out.collect()
     assert len(rows) > 0
     # windows are hour-aligned and counts sum to ≤ total (append mode
@@ -72,7 +72,7 @@ def test_stateful_sessionize_stream(spark, event_stream):
     from parquet_sampler_spark.streaming.stateful import sessionize_stream
 
     out = run_stream_to_memory(
-        sessionize_stream(event_stream, gap_minutes=30), "sessions"
+        sessionize_stream(event_stream, gap_minutes=30)
     )
     rows = out.collect()
     assert len(rows) > 0
@@ -120,8 +120,7 @@ def test_stream_stream_attribution(spark, event_stream):
     purchases = event_stream.filter(F.col("event_type") == "purchase")
     clicks = event_stream.filter(F.col("event_type") == "click")
     out = run_stream_to_memory(
-        stream_stream_attribution(purchases, clicks, lookback="1 hour"),
-        "attribution",
+        stream_stream_attribution(purchases, clicks, lookback="1 hour")
     )
     rows = out.collect()
     assert rows
@@ -145,10 +144,8 @@ def test_stream_stream_attribution(spark, event_stream):
 def test_streaming_exact_sample_matches_batch(spark, event_stream, tmp_path):
     """After consuming the whole stream, the online reservoir equals the
     batch exact-count sample with the same seed."""
-    from parquet_sampler_spark.streaming.joins import (
-        read_reservoir,
-        streaming_exact_sample,
-    )
+    from parquet_sampler_spark.streaming.joins import streaming_exact_sample
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
     from parquet_sampler_spark.operators.sample import sample_exact
     from parquet_sampler_spark.queries_ext import _events
 
@@ -161,7 +158,7 @@ def test_streaming_exact_sample_matches_batch(spark, event_stream, tmp_path):
 
     got = sorted(
         r.event_id
-        for r in read_reservoir(spark, res).select("event_id").collect()
+        for r in read_snapshot(spark, res).select("event_id").collect()
     )
     e = _events(spark, "/root/testdata/sf0.001")
     n = e.count()
@@ -176,10 +173,8 @@ def test_streaming_exact_sample_replay_idempotent(spark, event_stream,
                                                   tmp_path):
     """Replaying the entire stream against an existing reservoir must be
     a no-op (exactly-once by idempotence)."""
-    from parquet_sampler_spark.streaming.joins import (
-        read_reservoir,
-        streaming_exact_sample,
-    )
+    from parquet_sampler_spark.streaming.joins import streaming_exact_sample
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
 
     res = str(tmp_path / "res")
     runs = []
@@ -190,7 +185,7 @@ def test_streaming_exact_sample_replay_idempotent(spark, event_stream,
         ).trigger(availableNow=True).start()
         q.awaitTermination(120)
         runs.append(sorted(
-            r.event_id for r in read_reservoir(spark, res).collect()))
+            r.event_id for r in read_snapshot(spark, res).collect()))
     assert runs[0] == runs[1]
     assert len(set(runs[0])) == 20
 
@@ -538,7 +533,7 @@ def test_stream_merge_sink_applies_cdc_batches(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_sampler_spark.streaming.sinks import (
-        read_merge_snapshot,
+        read_snapshot,
         stream_merge_sink,
     )
 
@@ -566,7 +561,7 @@ def test_stream_merge_sink_applies_cdc_batches(spark, tmp_path):
                            checkpoint_dir=str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    got = {r.k: r.v for r in read_merge_snapshot(spark, base).collect()}
+    got = {r.k: r.v for r in read_snapshot(spark, base).collect()}
     assert got == {2: 21.0, 3: 30.0}
 
 
@@ -581,7 +576,7 @@ def test_stream_merge_sink_compacts_multi_event_batches(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_sampler_spark.streaming.sinks import (
-        read_merge_snapshot,
+        read_snapshot,
         stream_merge_sink,
     )
 
@@ -604,11 +599,12 @@ def test_stream_merge_sink_compacts_multi_event_batches(spark, tmp_path):
                            checkpoint_dir=str(tmp_path / "ck2"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    got = {r.k: r.v for r in read_merge_snapshot(spark, base).collect()}
+    got = {r.k: r.v for r in read_snapshot(spark, base).collect()}
     assert got == {2: 20.0}
 
 
-def test_stream_merge_sink_survives_crash_before_publish(spark, tmp_path):
+def test_stream_merge_sink_survives_crash_before_publish(spark, tmp_path,
+                                                       monkeypatch):
     """Crash-injection through the commit window: kill the sink after
     batch 1's snapshot write but BEFORE the pointer publish. The old
     snapshot (batch 0's state) must remain the live, readable version;
@@ -619,8 +615,9 @@ def test_stream_merge_sink_survives_crash_before_publish(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from parquet_sampler_spark.streaming import sinks
     from parquet_sampler_spark.streaming.sinks import (
-        read_merge_snapshot,
+        read_snapshot,
         stream_merge_sink,
     )
 
@@ -649,15 +646,25 @@ def test_stream_merge_sink_survives_crash_before_publish(spark, tmp_path):
                 .option("maxFilesPerTrigger", 1).parquet(str(src)))
 
     # run 1: batch 0 commits, batch 1 crashes between write and publish
-    q = (stream_merge_sink(make_stream(), base, ["k"],
-                           delete_col="is_deleted", checkpoint_dir=ckpt,
-                           _fail_before_publish={1})
-         .trigger(availableNow=True).start())
-    with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination(120)
+    publish = sinks._publish
+
+    def crash_on_batch_1(base_path, version_name, run_id=None):
+        if version_name == "v00000001":
+            raise RuntimeError(f"injected crash before publishing "
+                               f"{version_name}")
+        publish(base_path, version_name, run_id)
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "_publish", crash_on_batch_1)
+        q = (stream_merge_sink(make_stream(), base, ["k"],
+                               delete_col="is_deleted",
+                               checkpoint_dir=ckpt)
+             .trigger(availableNow=True).start())
+        with pytest.raises(Exception, match="injected crash"):
+            q.awaitTermination(120)
 
     # old snapshot still live and readable: batch 0's state, untouched
-    got = {r.k: r.v for r in read_merge_snapshot(spark, base).collect()}
+    got = {r.k: r.v for r in read_snapshot(spark, base).collect()}
     assert got == {1: 10.0, 2: 20.0}
 
     # batch 1's dir was WRITTEN but never published: it is uncommitted
@@ -669,14 +676,14 @@ def test_stream_merge_sink_survives_crash_before_publish(spark, tmp_path):
     assert os.path.isdir(os.path.join(base, "v00000001"))
     assert list_snapshot_versions(base) == [0]
     with pytest.raises(FileNotFoundError, match=r"available: \[0\]"):
-        read_merge_snapshot(spark, base, version=1)
+        read_snapshot(spark, base, version=1)
 
     # run 2: same checkpoint, no fault — batch 1 replays and publishes
     q = (stream_merge_sink(make_stream(), base, ["k"],
                            delete_col="is_deleted", checkpoint_dir=ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    got = {r.k: r.v for r in read_merge_snapshot(spark, base).collect()}
+    got = {r.k: r.v for r in read_snapshot(spark, base).collect()}
     assert got == {2: 21.0, 3: 30.0}
 
 
@@ -691,8 +698,8 @@ def test_stream_merge_sink_skips_republished_batch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_sampler_spark.streaming.sinks import (
-        _published_batch_id,
-        read_merge_snapshot,
+        published_epoch,
+        read_snapshot,
         stream_merge_sink,
     )
 
@@ -705,31 +712,36 @@ def test_stream_merge_sink_skips_republished_batch(spark, tmp_path):
     pq.write_table(tbl, str(src / "a.parquet"))
 
     base = str(tmp_path / "snap4")
+    ckpt = str(tmp_path / "ckA")
 
     # first run publishes batch 0 with checkpoint A
     q = (stream_merge_sink(
             (spark.readStream.schema("k long, v double")
              .parquet(str(src))),
-            base, ["k"], checkpoint_dir=str(tmp_path / "ckA"))
+            base, ["k"], checkpoint_dir=ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    assert _published_batch_id(base) == 0
+    assert published_epoch(base) == 0
     snap_before = os.path.getmtime(
         os.path.join(base, "v00000000"))
 
-    # fresh checkpoint B replays the same file as batch 0 again —
-    # simulating a crash after publish, before checkpoint commit
+    # drop batch 0's commit record (and its checksum): the restart
+    # from checkpoint A replays batch 0, as after a crash after
+    # publish, before the checkpoint commit
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
     q = (stream_merge_sink(
             (spark.readStream.schema("k long, v double")
              .parquet(str(src))),
-            base, ["k"], checkpoint_dir=str(tmp_path / "ckB"))
+            base, ["k"], checkpoint_dir=ckpt)
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
     # skipped: same version dir, untouched on disk
-    assert _published_batch_id(base) == 0
+    assert published_epoch(base) == 0
     assert os.path.getmtime(
         os.path.join(base, "v00000000")) == snap_before
-    got = {r.k: r.v for r in read_merge_snapshot(spark, base).collect()}
+    got = {r.k: r.v for r in read_snapshot(spark, base).collect()}
     assert got == {1: 1.0}
 
 
@@ -746,7 +758,7 @@ def test_stream_merge_sink_time_travel_retention(spark, tmp_path):
 
     from parquet_sampler_spark.streaming.sinks import (
         list_snapshot_versions,
-        read_merge_snapshot,
+        read_snapshot,
         stream_merge_sink,
     )
 
@@ -777,12 +789,12 @@ def test_stream_merge_sink_time_travel_retention(spark, tmp_path):
 
     assert list_snapshot_versions(base) == [0, 1]
     v0 = {r.k: r.v for r in
-          read_merge_snapshot(spark, base, version=0).collect()}
+          read_snapshot(spark, base, version=0).collect()}
     assert v0 == {1: 10.0, 2: 20.0}
-    live = {r.k: r.v for r in read_merge_snapshot(spark, base).collect()}
+    live = {r.k: r.v for r in read_snapshot(spark, base).collect()}
     assert live == {2: 21.0}
     with pytest.raises(FileNotFoundError, match=r"available: \[0, 1\]"):
-        read_merge_snapshot(spark, base, version=7)
+        read_snapshot(spark, base, version=7)
 
 
 def test_streaming_dedup_bounded_state(spark, tmp_path):
@@ -973,10 +985,8 @@ def test_streaming_exact_sample_kill_restart_checkpoint(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_sampler_spark.streaming.joins import (
-        read_reservoir,
-        streaming_exact_sample,
-    )
+    from parquet_sampler_spark.streaming.joins import streaming_exact_sample
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
 
     src = tmp_path / "krsrc"
     src.mkdir()
@@ -1013,7 +1023,7 @@ def test_streaming_exact_sample_kill_restart_checkpoint(spark, tmp_path):
                                  checkpoint_dir=ckpt)
           .trigger(availableNow=True).start())
     q2.awaitTermination(120)
-    got = sorted(r.event_id for r in read_reservoir(spark, res).collect())
+    got = sorted(r.event_id for r in read_snapshot(spark, res).collect())
 
     # uninterrupted control: fresh checkpoint + fresh reservoir
     res2 = str(tmp_path / "res_ctl")
@@ -1023,7 +1033,7 @@ def test_streaming_exact_sample_kill_restart_checkpoint(spark, tmp_path):
           .trigger(availableNow=True).start())
     q3.awaitTermination(120)
     want = sorted(
-        r.event_id for r in read_reservoir(spark, res2).collect()
+        r.event_id for r in read_snapshot(spark, res2).collect()
     )
     assert len(got) == 25
     assert got == want
@@ -1037,10 +1047,8 @@ def test_streaming_grouped_sample_matches_batch(spark, event_stream,
     from pyspark.sql import Window
 
     from parquet_sampler_spark.queries_ext import _events
-    from parquet_sampler_spark.streaming.joins import (
-        read_reservoir,
-        streaming_grouped_sample,
-    )
+    from parquet_sampler_spark.streaming.joins import streaming_grouped_sample
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
     from parquet_sampler_spark.functions.hashing import lehmer_hash
 
     res = str(tmp_path / "gres")
@@ -1052,7 +1060,7 @@ def test_streaming_grouped_sample_matches_batch(spark, event_stream,
 
     got = sorted(
         (r.event_type, r.event_id)
-        for r in read_reservoir(spark, res).collect()
+        for r in read_snapshot(spark, res).collect()
     )
     e = _events(spark, "/root/testdata/sf0.001")
     w = Window.partitionBy("event_type").orderBy(
@@ -1085,9 +1093,9 @@ def test_streaming_quantile_summaries_envelope(spark, tmp_path):
 
     from parquet_sampler_spark.operators.sketches import merged_quantiles
     from parquet_sampler_spark.streaming.quantiles import (
-        read_quantile_summaries,
         streaming_quantile_summaries,
     )
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
 
     src = tmp_path / "qsrc"
     src.mkdir()
@@ -1110,12 +1118,12 @@ def test_streaming_quantile_summaries_envelope(spark, tmp_path):
     ).trigger(availableNow=True).start()
     q.awaitTermination(120)
 
-    summ = read_quantile_summaries(spark, sum_path).collect()
+    summ = read_snapshot(spark, sum_path).collect()
     # bounded state: ONE summary row per group, <= cap kept values
     assert len(summ) == 1 and len(summ[0].vals) <= 256
 
     est = merged_quantiles(
-        read_quantile_summaries(spark, sum_path), ["g"], [0.5, 0.9]
+        read_snapshot(spark, sum_path), ["g"], [0.5, 0.9]
     ).collect()[0]
     s = np.sort(vals)
     for p, v in ((0.5, est.q50), (0.9, est.q90)):
@@ -1194,10 +1202,12 @@ def test_additive_snapshot_state_skips_replayed_epoch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_sampler_spark.streaming.quantiles import (
-        read_quantile_summaries,
         streaming_quantile_summaries,
     )
-    from parquet_sampler_spark.streaming.sinks import published_epoch
+    from parquet_sampler_spark.streaming.sinks import (
+        published_epoch,
+        read_snapshot,
+    )
 
     src = tmp_path / "qsrc"
     src.mkdir()
@@ -1225,7 +1235,7 @@ def test_additive_snapshot_state_skips_replayed_epoch(spark, tmp_path):
 
     drain(str(src), "ckpt1")
     assert published_epoch(sum_path) == 1
-    before = read_quantile_summaries(spark, sum_path).collect()
+    before = read_snapshot(spark, sum_path).collect()
 
     # replay scenario: a fresh checkpoint over only file A re-delivers
     # epoch 0, whose weight is already in the snapshot
@@ -1234,7 +1244,7 @@ def test_additive_snapshot_state_skips_replayed_epoch(spark, tmp_path):
     os.link(str(src / "f0.parquet"), str(prefix / "f0.parquet"))
     drain(str(prefix), "ckpt2")
 
-    after = read_quantile_summaries(spark, sum_path).collect()
+    after = read_snapshot(spark, sum_path).collect()
     assert sorted(map(tuple, after)) == sorted(map(tuple, before))
     assert published_epoch(sum_path) == 1  # nothing republished
 
@@ -1255,9 +1265,9 @@ def test_streaming_quantiles_kill_restart_checkpoint(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_sampler_spark.streaming.quantiles import (
-        read_quantile_summaries,
         streaming_quantile_summaries,
     )
+    from parquet_sampler_spark.streaming.sinks import read_snapshot
 
     src = tmp_path / "qsrc"
     src.mkdir()
@@ -1304,7 +1314,7 @@ def test_streaming_quantiles_kill_restart_checkpoint(spark, tmp_path):
 
     def snap(p):
         return sorted(
-            tuple(r) for r in read_quantile_summaries(spark, p).collect()
+            tuple(r) for r in read_snapshot(spark, p).collect()
         )
 
     got, want = snap(sp), snap(sp_ctl)
@@ -1395,6 +1405,8 @@ def test_fresh_checkpoint_over_live_state_raises(spark, tmp_path):
     from parquet_sampler_spark.streaming.sinks import (
         published_epoch,
         published_run_id,
+        read_snapshot,
+        stream_merge_sink,
     )
 
     src = tmp_path / "rsrc"
@@ -1446,6 +1458,48 @@ def test_fresh_checkpoint_over_live_state_raises(spark, tmp_path):
     drain("ck1")
     assert published_epoch(sp) == 2
     assert published_run_id(sp) == run1
+
+    # the CDC merge sink takes the same guard: a fresh checkpoint over
+    # a live CDC table raises instead of skipping epochs 0..N
+    cdc = tmp_path / "cdcsrc"
+    cdc.mkdir()
+
+    def add_change(i, k, v):
+        pq.write_table(
+            pa.table({"k": pa.array([k], pa.int64()),
+                      "v": pa.array([v], pa.float64())}),
+            str(cdc / f"c{i}.parquet"),
+        )
+        os.utime(str(cdc / f"c{i}.parquet"), (1_000_000 * (i + 1),) * 2)
+
+    add_change(0, 1, 1.0)
+    add_change(1, 2, 2.0)
+    base = str(tmp_path / "cdc_state")
+
+    def merge(ckpt):
+        stream = (spark.readStream.schema("k long, v double")
+                  .option("maxFilesPerTrigger", 1).parquet(str(cdc)))
+        q = (stream_merge_sink(stream, base, ["k"],
+                               checkpoint_dir=str(tmp_path / ckpt))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    merge("cdc1")
+    assert published_epoch(base) == 1
+    cdc_run = published_run_id(base)
+    assert cdc_run is not None
+
+    add_change(2, 3, 3.0)
+    with pytest.raises(pyspark.errors.StreamingQueryException,
+                       match="fresh checkpoint"):
+        merge("cdc2")
+    assert published_epoch(base) == 1
+    assert published_run_id(base) == cdc_run
+
+    merge("cdc1")
+    assert published_epoch(base) == 2
+    got = {r.k: r.v for r in read_snapshot(spark, base).collect()}
+    assert got == {1: 1.0, 2: 2.0, 3: 3.0}
 
 
 def test_watermark_filter_lags_one_batch(spark, tmp_path):
