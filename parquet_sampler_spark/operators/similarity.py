@@ -27,6 +27,8 @@ vector math to one core.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from operator import itemgetter
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -96,17 +98,20 @@ def _normalized(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
-# collect-all cutover for _sketch_topk: relations at or below this
-# row count are small enough to collect and sort on the driver
-# (identical selection); larger ones take the distributed k-th-rank
-# path that the sf100 sized-quantizer sketch required
-_SKETCH_COLLECT_ALL_MAX = 1 << 17
+# collect-all cutover for _sketch_topk, in collected vector
+# components (rows × dim): relations at or below it are small enough
+# to collect and sort on the driver (identical selection); larger ones
+# take the distributed k-th-rank path that the sf100 sized-quantizer
+# sketch required. 2^22 doubles is 32 MB of float64 payload — 65 536
+# rows at the testdata's dim 64 (every sf ≤ 1 fit), 4 096 at dim 1024
+_SKETCH_COLLECT_ALL_MAX = 1 << 22
 
 
-def _sketch_topk(rel: DataFrame, id_name: str, k: int) -> list:
-    """Collect the ``k`` rows of ``rel`` with the smallest
-    ``(__h, id)`` — exactly ``rel.orderBy("__h", id).limit(k)
-    .collect()`` — WITHOUT TakeOrderedAndProject's Θ(k × partitions)
+def _sketch_topk(rel: DataFrame, k: int) -> list:
+    """Collect the ``k`` rows of the ``(__id, __v, __h)`` relation
+    ``rel`` with the smallest ``(__h, __id)`` — exactly
+    ``rel.orderBy("__h", "__id").limit(k).collect()`` — WITHOUT
+    TakeOrderedAndProject's Θ(k × partitions)
     driver partials (r14: the 250k-row sized-quantizer sketch over the
     320-partition sf100 tier returned a local top-k per task and blew
     ``spark.driver.maxResultSize`` at 1 GB; the un-partitioned runs
@@ -125,20 +130,22 @@ def _sketch_topk(rel: DataFrame, id_name: str, k: int) -> list:
         _kth_rank_value,
     )
 
-    total = rel.count()
-    if total <= max(k, _SKETCH_COLLECT_ALL_MAX):
+    # row count and vector width from ONE aggregation job (the job a
+    # bare count() ran): the collect size is rows × dim doubles
+    total, dim = rel.agg(F.count(F.lit(1)), F.max(F.size("__v"))).first()
+    key = itemgetter("__h", "__id")
+    if total <= k or total * (dim or 0) <= _SKETCH_COLLECT_ALL_MAX:
         # collect-all + driver sort + slice selects the IDENTICAL k
         # rows (same (__h, id) order) in ONE job instead of the
         # boundary-histogram's 2-3 aggregation passes — the right
-        # trade only while the relation is collect-sized (≤ 2^17
-        # narrow rows ≈ tens of MB, far under maxResultSize); the
-        # 250k-row sf100 sized-quantizer sketch that motivated the
-        # distributed selection stays on the distributed path
-        # (r15 optimization round, guide §1.2: ~10 fits per bench
-        # pass each paid the aggregation-job latencies).
-        rows = sorted(rel.collect(),
-                      key=lambda r: (r["__h"], r[id_name]))
-        return rows[:k]
+        # trade only while the relation is collect-sized (≤ 2^22
+        # collected doubles = 32 MB of vector payload, far under
+        # maxResultSize); the 250k-row sf100 sized-quantizer sketch
+        # that motivated the distributed selection stays on the
+        # distributed path (r15 optimization round, guide §1.2:
+        # ~10 fits per bench pass each paid the aggregation-job
+        # latencies).
+        return sorted(rel.collect(), key=key)[:k]
     t_star, c_lt = _kth_rank_value(
         rel.select(F.col("__h").alias(_PR)), k, MODULUS
     )
@@ -147,10 +154,44 @@ def _sketch_topk(rel: DataFrame, id_name: str, k: int) -> list:
     if need > 0:
         rows += (
             rel.filter(F.col("__h") == t_star)
-            .orderBy(id_name).limit(need).collect()
+            .orderBy("__id").limit(need).collect()
         )
-    rows.sort(key=lambda r: (r["__h"], r[id_name]))
+    rows.sort(key=key)
     return rows
+
+
+def _sketch_fit(
+    rel: DataFrame, id_col: str, vec_col: str, seed: int, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The quantizer-training sketch every ANN fit shares: the ``k``
+    rows of ``rel`` with the smallest portable Lehmer hash of the id
+    (ties by id — :func:`_sketch_topk`), as ``(int64 ids, float64
+    vectors)`` in ``(hash, id)`` order; :func:`_lehmer_order` is its
+    numpy replay."""
+    from parquet_sampler_spark.functions.hashing import lehmer_hash
+
+    rows = _sketch_topk(
+        rel.select(F.col(id_col).alias("__id"),
+                   F.col(vec_col).alias("__v"),
+                   lehmer_hash([id_col], seed).alias("__h")),
+        k,
+    )
+    return (np.array([r["__id"] for r in rows], dtype=np.int64),
+            np.array([r["__v"] for r in rows], dtype=np.float64))
+
+
+def _memo(key, build):
+    """``build()``, memoized in the session memo under ``key`` (the
+    operators' ``cache_key``; ``None`` builds fresh). An ANN index is
+    fitted once and queried many times, so a corpus-identifying
+    kind-led key — shared by ``ivf_topk`` and ``ivf_coreset`` over the
+    same corpus — amortizes the fit across the family, and
+    ``clear_caches()`` drops it with the rest of the memo."""
+    if key is None:
+        return build()
+    if key not in MEMO:
+        MEMO[key] = build()
+    return MEMO[key]
 
 
 def _unit_dot(a: str, b: str) -> Column:
@@ -218,6 +259,40 @@ def _unit_dot_arrow(va: pd.Series, vb: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best-scored neighbors per query of a ``(query_id,
+    neighbor_id, score)`` relation as ``query_id, neighbor_id, score,
+    rank`` (rank 1 = best). Equal scores break to the LOWEST neighbor
+    id, which the oracles' ``ORDER BY score DESC, neighbor_id`` replay,
+    so every top-k row is deterministic."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn(_RN, F.row_number().over(w))
+        .filter(F.col(_RN) <= k)
+        .select("query_id", "neighbor_id", "score",
+                F.col(_RN).alias("rank"))
+    )
+
+
+def _rerank_topk(
+    cand: DataFrame, qv: DataFrame, cv: DataFrame, k: int,
+    small=F.broadcast,
+) -> DataFrame:
+    """Exact-cosine rerank of candidate ``(query_id, neighbor_id)``
+    pairs against the normalized query (``__qv``) and corpus
+    (``__cv``) vectors, then :func:`_topk`. ``small`` marks the query
+    side for broadcast (identity for the shuffle escape). Zero-norm
+    rows are absent from :func:`_normalized`, so they drop here."""
+    return _topk(
+        cand.join(small(qv), "query_id")
+        .join(cv, "neighbor_id")
+        .withColumn("score", _unit_dot("__qv", "__cv")),
+        k,
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -233,18 +308,10 @@ def cosine_topk(
     """
     q = _normalized(queries, id_col, vec_col, "query_id", "__qv")
     c = _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv")
-    scored = (
+    return _topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", _unit_dot("__qv", "__cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn(_RN, F.row_number().over(w))
-        .filter(F.col(_RN) <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col(_RN).alias("rank"))
+        .withColumn("score", _unit_dot("__qv", "__cv")),
+        k,
     )
 
 
@@ -282,6 +349,46 @@ def cosine_range(
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((bits, dim)).tolist()
+
+
+def _sig_udf(dim: int, bits: int, tables: int, seed: int):
+    """Pandas UDF: a vector's ``tables`` sign-bit signatures of
+    ``bits`` bits each (table ``t`` seeds its hyperplanes with
+    ``seed + 1000·t``), as one ``array<long>``.
+
+    All tables' hyperplanes form one (tables*bits, dim) matrix, so the
+    per-row signature set is a single GEMM in an Arrow-batched Pandas
+    UDF — dense linear algebra is the one place where BLAS beats
+    interpreted array lambdas by orders of magnitude. (Safe here:
+    signatures are an internal blocking key, not oracle-facing.)"""
+    planes = np.concatenate([
+        np.array(_hyperplanes(dim, bits, seed + 1000 * t))
+        for t in range(tables)
+    ])  # (tables*bits, dim)
+    weights = (1 << np.arange(bits)).astype(np.int64)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def all_sigs(vs: pd.Series) -> pd.Series:
+        m = np.array(vs.tolist(), dtype=np.float64)  # (n, dim)
+        signs = (m @ planes.T) > 0                   # (n, tables*bits)
+        packed = signs.reshape(len(vs), tables, bits) @ weights
+        return pd.Series(packed.tolist())
+
+    return all_sigs
+
+
+def _banded(
+    df: DataFrame, id_col: str, vec_col: str, sigs, ident: str = "__id"
+) -> DataFrame:
+    """The band table ``(ident, tbl, sig)``: one row per (vector,
+    table) from the :func:`_sig_udf` kernel ``sigs`` (see
+    :func:`lsh_topk` for why it holds no vectors)."""
+    return (
+        spread(df)
+        .select(F.col(id_col).alias(ident),
+                sigs(F.col(vec_col)).alias("__sigs"))
+        .select(ident, F.posexplode("__sigs").alias("tbl", "sig"))
+    )
 
 
 def _seq_unroll_ok() -> bool:
@@ -616,55 +723,20 @@ def lsh_topk(
     """
     if dim is None:
         dim = _vec_dim(corpus, vec_col)
-    # All tables' hyperplanes as one (tables*bits, dim) matrix: the
-    # per-row signature set is then a single GEMM in an Arrow-batched
-    # Pandas UDF — dense linear algebra is the one place where BLAS
-    # beats interpreted array lambdas by orders of magnitude. (Safe
-    # here: signatures are an internal blocking key, not oracle-facing.)
-    planes = np.concatenate([
-        np.array(_hyperplanes(dim, bits, seed + 1000 * t))
-        for t in range(tables)
-    ])  # (tables*bits, dim)
-    weights = (1 << np.arange(bits)).astype(np.int64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def all_sigs(vs: pd.Series) -> pd.Series:
-        m = np.array(vs.tolist(), dtype=np.float64)  # (n, dim)
-        signs = (m @ planes.T) > 0                   # (n, tables*bits)
-        packed = signs.reshape(len(vs), tables, bits) @ weights
-        return pd.Series(packed.tolist())
-
-    def sig_rows(df: DataFrame, ident: str) -> DataFrame:
-        sigs = spread(df).select(
-            F.col(id_col).alias(ident), all_sigs(F.col(vec_col)).alias("__sigs")
-        )
-        return sigs.select(
-            ident, F.posexplode("__sigs").alias("tbl", "sig")
-        )
-
-    c = sig_rows(corpus, "neighbor_id")
-    q = sig_rows(queries, "query_id")
+    sigs = _sig_udf(dim, bits, tables, seed)
+    c = _banded(corpus, id_col, vec_col, sigs, "neighbor_id")
+    q = _banded(queries, id_col, vec_col, sigs, "query_id")
     cand = (
         c.join(F.broadcast(q), ["tbl", "sig"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    qv = _normalized(queries, id_col, vec_col, "query_id", "__qv")
-    cv = _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv")
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("score", _unit_dot("__qv", "__cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn(_RN, F.row_number().over(w))
-        .filter(F.col(_RN) <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col(_RN).alias("rank"))
+    return _rerank_topk(
+        cand,
+        _normalized(queries, id_col, vec_col, "query_id", "__qv"),
+        _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv"),
+        k,
     )
 
 
@@ -746,14 +818,25 @@ def embedding_neardup_pairs(
         )
     else:
         raise ValueError(f"unknown method {method!r}")
-    # exact verification via the Arrow-batched fold — BIT-IDENTICAL
-    # to the JVM HOF fold and the DuckDB oracle's list fold (see
-    # _unit_dot_arrow; pytest-pinned). Catalyst runs HOFs interpreted
-    # (one lambda call per element), which the gates measured as the
-    # dominant warm-probe cost at the sf100 planted tier; the sweep's
-    # verify volume has the same shape, so it takes the same path
-    # (r15 optimization round, guide §4.2).
     b = a.select(F.col("id_a").alias("id_b"), F.col("__va").alias("__vb"))
+    return _verify(cand, a, b, threshold)
+
+
+def _verify(
+    cand: DataFrame, a: DataFrame, b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verification of candidate ``(id_a, id_b)`` pairs against
+    the normalized ``(id_a, __va)`` / ``(id_b, __vb)`` relations:
+    ``(id_a, id_b, cos_sim)`` with cos_sim ≥ ``threshold``.
+
+    The score is the Arrow-batched fold — BIT-IDENTICAL to the JVM HOF
+    fold and the DuckDB oracle's list fold (see _unit_dot_arrow;
+    pytest-pinned). Catalyst runs HOFs interpreted (one lambda call per
+    element): the verify volume dominates the ingest gates' warm probe
+    (77.7 of 91 s at the sf100 planted tier) and the interpreted fold
+    was 10x the rest of the probe combined; the all-pairs sweep's
+    verify volume has the same shape, so it takes the same path (r15
+    optimization round, guide §4.2)."""
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -761,6 +844,22 @@ def embedding_neardup_pairs(
                                                F.col("__vb")))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
+    )
+
+
+def _standing_vectors(
+    corpus: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The ingest gates' normalized corpus ``(id_a, __va)``, persisted
+    beside the index (standing state, same rationale as
+    minhash_probe_pairs' shingle relation) and PRE-PARTITIONED on the
+    verify-join key (r14: the scaled-partitions decade cell showed the
+    verify_broadcast=False path dragging this corpus-sized relation
+    through an Exchange per batch — the same r13 bug class the band
+    index already had fixed)."""
+    return _cache_persist(
+        _normalized(corpus, id_col, vec_col, "id_a", "__va")
+        .repartition("id_a")
     )
 
 
@@ -813,28 +912,7 @@ def embedding_neardup_incremental(
     """
     if threshold <= 0:
         raise ValueError("threshold must be positive")
-    dim = _vec_dim(corpus, vec_col)
-    planes = np.concatenate([
-        np.array(_hyperplanes(dim, lsh_bits, seed + 1000 * t))
-        for t in range(lsh_tables)
-    ])
-    weights = (1 << np.arange(lsh_bits)).astype(np.int64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def all_sigs(vs: pd.Series) -> pd.Series:
-        m = np.array(vs.tolist(), dtype=np.float64)
-        signs = (m @ planes.T) > 0
-        packed = signs.reshape(len(vs), lsh_tables, lsh_bits) @ weights
-        return pd.Series(packed.tolist())
-
-    def banded(df: DataFrame) -> DataFrame:
-        return (
-            spread(df)
-            .select(F.col(id_col).alias("__id"),
-                    all_sigs(F.col(vec_col)).alias("__sigs"))
-            .select("__id", F.posexplode("__sigs").alias("tbl", "sig"))
-        )
-
+    sigs = _sig_udf(_vec_dim(corpus, vec_col), lsh_bits, lsh_tables, seed)
     # The standing index persists PRE-PARTITIONED on the join keys
     # (r13, found by the sized decade cells): unpartitioned, every
     # warm probe whose band list outgrows the broadcast threshold
@@ -844,8 +922,10 @@ def embedding_neardup_incremental(
     # cached partitioning matching the join's ClusteredDistribution,
     # only the Θ(batch) probe side shuffles — the in-memory analog of
     # the bucketed-by-(band,bucket) storage layout a deployment uses.
-    idx = _cache_persist(banded(corpus).repartition("tbl", "sig"))
-    probe = banded(batch)
+    idx = _cache_persist(
+        _banded(corpus, id_col, vec_col, sigs).repartition("tbl", "sig")
+    )
+    probe = _banded(batch, id_col, vec_col, sigs)
     cand = (
         idx.alias("a")
         .join(
@@ -857,30 +937,10 @@ def embedding_neardup_incremental(
                 F.col("b.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # normalized corpus vectors persist beside the index (standing
-    # state, same rationale as minhash_probe_pairs' shingle relation),
-    # PRE-PARTITIONED on the verify-join key (r14: the scaled-
-    # partitions decade cell showed the verify_broadcast=False path
-    # dragging this corpus-sized relation through an Exchange per
-    # batch — the same r13 bug class the band index already had fixed)
-    a = _cache_persist(
-        _normalized(corpus, id_col, vec_col, "id_a", "__va")
-        .repartition("id_a")
-    )
+    a = _standing_vectors(corpus, id_col, vec_col)
     b = _normalized(batch, id_col, vec_col, "id_b", "__vb")
-    cand_side = F.broadcast(cand) if verify_broadcast else cand
-    return (
-        cand_side.join(a, "id_a")
-        .join(b, "id_b")
-        # Arrow-batched exact verify (bit-identical to the HOF fold —
-        # see _unit_dot_arrow): the verify volume dominates the warm
-        # probe (77.7 of 91 s at the sf100 planted tier) and the
-        # interpreted fold was 10x the rest of the probe combined
-        .withColumn("cos_sim", _unit_dot_arrow(F.col("__va"),
-                                               F.col("__vb")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
+    return _verify(F.broadcast(cand) if verify_broadcast else cand,
+                   a, b, threshold)
 
 
 def embedding_neardup_incremental_ivf(
@@ -896,7 +956,6 @@ def embedding_neardup_incremental_ivf(
     train_max_iter: int = 20,
     nprobe_super: int = 4,
     verify_broadcast: bool = True,
-    model_cache: dict | None = None,
     cache_key=None,
 ) -> DataFrame:
     """IVF-routed form of :func:`embedding_neardup_incremental` — the
@@ -940,81 +999,33 @@ def embedding_neardup_incremental_ivf(
     candidate is re-verified with the JVM unit-dot at ``threshold``.
 
     ``verify_broadcast=False`` is the same shuffle escape as the
-    sign-bit form; ``model_cache``/``cache_key`` amortize the
-    quantizer fit across batches against the same corpus.
+    sign-bit form; ``cache_key`` memoizes the quantizer fit across
+    batches against the same corpus (see :func:`_memo`).
 
     Emits ``(id_a = corpus id, id_b = batch id, cos_sim)``; ids must
     be unique across ``corpus ∪ batch``.
     """
     if threshold <= 0:
         raise ValueError("threshold must be positive")
-    # pre-partitioned on the verify-join key (r14, same rationale as
-    # the sign-bit gate's relation — see that note)
-    a = _cache_persist(
-        _normalized(corpus, id_col, vec_col, "id_a", "__va")
-        .repartition("id_a")
-    )
-    if model_cache is not None and cache_key in model_cache:
-        supers, centroids, owner = model_cache[cache_key]
-    else:
-        from parquet_sampler_spark.functions.hashing import lehmer_hash
-
-        sketch = _sketch_topk(
-            a.select("id_a", "__va",
-                     lehmer_hash(["id_a"], seed).alias("__h")),
-            "id_a", train_per_cell * nlist,
-        )
-        X = np.array([r["__va"] for r in sketch], dtype=np.float64)
-        supers, centroids, owner = _fit_coarse_hierarchy(
-            X, nlist, seed, train_max_iter
-        )
-        if model_cache is not None:
-            model_cache[cache_key] = (supers, centroids, owner)
-
-    # broadcast the quantizer tables — closure capture re-ships
-    # Θ(nlist) bytes per TASK, and at nlist ∝ corpus with task count
-    # ∝ data that overhead is super-linear in the corpus (the r14
-    # scaled-partitions cell's probe α 1.52 at exactly-Θ(batch)
-    # candidate volume); handles cached beside the centroids so warm
-    # probes reuse the same broadcast ids and the persisted index's
-    # semantic hit survives (see ivf_topk)
-    sc = corpus.sparkSession.sparkContext
-    bkey = (cache_key, "__bc")
-    if model_cache is not None and bkey in model_cache:
-        b_cq, b_sq, b_owner = model_cache[bkey]
-    else:
-        b_cq = sc.broadcast(_ivf_quantize(centroids))
-        b_sq = sc.broadcast(
-            None if supers is None else _ivf_quantize(supers)
-        )
-        b_owner = sc.broadcast(owner)
-        if model_cache is not None:
-            model_cache[bkey] = (b_cq, b_sq, b_owner)
-
-    @F.pandas_udf(T.IntegerType())
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        return pd.Series(
-            _route_assign(m, b_cq.value, b_sq.value, b_owner.value)
-        )
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        m = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        return pd.Series(
-            _route_probe(m, b_cq.value, b_sq.value, b_owner.value,
-                         nprobe, nprobe_super)
-        )
-
+    a = _standing_vectors(corpus, id_col, vec_col)
+    # fitted on the UNIT vectors (scale-invariant routing, see above)
+    supers, centroids, owner = _memo(
+        cache_key, lambda: _fit_coarse_hierarchy(
+            _sketch_fit(a, "id_a", "__va", seed, train_per_cell * nlist)[1],
+            nlist, seed, train_max_iter,
+        ))
+    tables = _route_tables(corpus, cache_key, supers, centroids, owner)
     # pre-partitioned on the cell id for the same reason as the
     # sign-bit index (only the batch side shuffles on a warm probe)
     idx = _cache_persist(
-        a.select("id_a", cell_of(F.col("__va")).alias("__cell"))
+        a.select("id_a", _assign_udf(tables)(F.col("__va")).alias("__cell"))
         .repartition("__cell")
     )
     b = _normalized(batch, id_col, vec_col, "id_b", "__vb")
     probe = b.select(
-        "id_b", F.explode(probe_cells(F.col("__vb"))).alias("__cell")
+        "id_b",
+        F.explode(_probe_udf(tables, nprobe, nprobe_super)(F.col("__vb")))
+        .alias("__cell"),
     )
     # no dropDuplicates: a corpus row lives in exactly one cell and a
     # probe row's cell list is distinct, so each (id_a, id_b) pair can
@@ -1022,19 +1033,8 @@ def embedding_neardup_incremental_ivf(
     # sign-bit form needs (a pair can collide in several LSH tables)
     # is structurally unnecessary here
     cand = idx.join(probe, "__cell").select("id_a", "id_b")
-    cand_side = F.broadcast(cand) if verify_broadcast else cand
-    return (
-        cand_side.join(a, "id_a")
-        .join(b, "id_b")
-        # Arrow-batched exact verify (bit-identical to the HOF fold —
-        # see _unit_dot_arrow): the verify volume dominates the warm
-        # probe (77.7 of 91 s at the sf100 planted tier) and the
-        # interpreted fold was 10x the rest of the probe combined
-        .withColumn("cos_sim", _unit_dot_arrow(F.col("__va"),
-                                               F.col("__vb")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
+    return _verify(F.broadcast(cand) if verify_broadcast else cand,
+                   a, b, threshold)
 
 
 def embedding_admit_batch(
@@ -1178,29 +1178,10 @@ def _signbit_candidates(
     ``tables`` hash tables (the :func:`lsh_topk` banding, self-join
     form). Hyperplane dimension is inferred from the data (one
     footer-cheap first-row probe) so any embedding width works."""
-    dim = _vec_dim(df, vec_col)
-    planes = np.concatenate([
-        np.array(_hyperplanes(dim, bits, seed + 1000 * t))
-        for t in range(tables)
-    ])
-    weights = (1 << np.arange(bits)).astype(np.int64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def all_sigs(vs: pd.Series) -> pd.Series:
-        m = np.array(vs.tolist(), dtype=np.float64)
-        signs = (m @ planes.T) > 0
-        packed = signs.reshape(len(vs), tables, bits) @ weights
-        return pd.Series(packed.tolist())
-
-    banded = (
-        spread(df)
-        .select(F.col(id_col).alias("__id"),
-                all_sigs(F.col(vec_col)).alias("__sigs"))
-        .select("__id", F.posexplode("__sigs").alias("tbl", "sig"))
-    )
+    sigs = _sig_udf(_vec_dim(df, vec_col), bits, tables, seed)
     # both self-join sides read `banded`; registered like the
     # normalized relation, so clear_caches() releases it
-    banded = _cache_persist(banded)
+    banded = _cache_persist(_banded(df, id_col, vec_col, sigs))
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
@@ -1209,6 +1190,7 @@ def _signbit_candidates(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
+
 
 # quantization scale for IVF cell distances: vector components and
 # centroids are mapped to integers via floor(x * 2^20). Multiplying a
@@ -1225,17 +1207,192 @@ def _ivf_quantize(m: np.ndarray) -> np.ndarray:
     return np.floor(m * _IVF_QSCALE).astype(np.int64)
 
 
-def ivf_train_sketch_numpy(
-    ids: np.ndarray,
-    vecs: np.ndarray,
-    nlist: int,
-    seed: int,
-    train_per_cell: int = 256,
-) -> np.ndarray:
-    """The operator's portable training-sketch selection (smallest
-    Lehmer hash, ties by id) from in-memory arrays — shared by the
-    DuckDB oracle builders so trainers on both sides see the
-    byte-identical sketch."""
+def _qmat(vs: pd.Series) -> np.ndarray:
+    """An Arrow batch of vectors as quantized int64 rows."""
+    return _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
+
+
+def _route_tables(
+    df: DataFrame,
+    model_key,
+    supers: np.ndarray | None,
+    centroids: np.ndarray,
+    owner: np.ndarray | None,
+    codebooks: np.ndarray | None = None,
+) -> tuple:
+    """The quantized quantizer tables as Broadcast handles ``(cq, sq,
+    owner)`` — plus ``cbq`` when PQ ``codebooks`` are given; ``sq`` and
+    ``owner`` hold None below the two-level threshold.
+
+    The tables ship as BROADCAST VARIABLES, not closure captures (r14,
+    found by the scaled-partitions gate cell): a closure-pickled table
+    is re-sent and re-deserialized per TASK, so routing-stage overhead
+    grows with nlist × task count — both ∝ corpus at the sized
+    operating point (measured probe α 1.52 with candidate volume
+    exactly Θ(batch); the r13 fixed-32 GC attribution was refuted by
+    that cell). A broadcast value is torrent-shipped once per executor
+    and cached across tasks by the Python worker's broadcast registry.
+    The handles are memoized beside the model, under ``(model_key,
+    "__bc")``, so warm calls reuse the SAME objects — the persisted
+    index's semantic hit survives (a fresh broadcast id would change
+    the UDF bytes and fork the plan)."""
+    sc = df.sparkSession.sparkContext
+
+    def build() -> tuple:
+        handles = (
+            sc.broadcast(_ivf_quantize(centroids)),
+            sc.broadcast(None if supers is None else _ivf_quantize(supers)),
+            sc.broadcast(owner),
+        )
+        if codebooks is None:
+            return handles
+        return handles + (sc.broadcast(_ivf_quantize(codebooks)),)
+
+    return _memo(None if model_key is None else (model_key, "__bc"), build)
+
+
+def _assign_udf(tables: tuple):
+    """Pandas UDF: each vector's cell via :func:`_route_assign` over
+    the :func:`_route_tables` handles. argmin takes the FIRST minimum:
+    ties break to the lowest cell id, mirroring the oracle's ORDER BY
+    dist, cell."""
+    b_cq, b_sq, b_owner = tables[:3]
+
+    @F.pandas_udf(T.IntegerType())
+    def cell_of(vs: pd.Series) -> pd.Series:
+        return pd.Series(
+            _route_assign(_qmat(vs), b_cq.value, b_sq.value, b_owner.value)
+        )
+
+    return cell_of
+
+
+def _cell_dist_udf(tables: tuple):
+    """Pandas UDF: each vector's cell (as :func:`_assign_udf`) and its
+    int64 quantized squared distance to that cell's centroid, as a
+    ``cell int, d bigint`` struct."""
+    b_cq, b_sq, b_owner = tables[:3]
+
+    @F.pandas_udf("cell int, d bigint")
+    def cell_dist(vs: pd.Series) -> pd.DataFrame:
+        cq = b_cq.value
+        mtx = _qmat(vs)
+        cells = np.asarray(
+            _route_assign(mtx, cq, b_sq.value, b_owner.value)
+        )
+        diff = mtx - cq[cells]
+        return pd.DataFrame({
+            "cell": cells.astype(np.int32),
+            "d": (diff * diff).sum(axis=1).astype(np.int64),
+        })
+
+    return cell_dist
+
+
+def _probe_udf(tables: tuple, nprobe: int, nprobe_super: int):
+    """Pandas UDF: each query vector's ``nprobe`` probe cells via
+    :func:`_route_probe` (stable sort: equal distances keep ascending
+    cell order; super-routed above the two-level threshold)."""
+    b_cq, b_sq, b_owner = tables[:3]
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def probe_cells(vs: pd.Series) -> pd.Series:
+        return pd.Series(
+            _route_probe(_qmat(vs), b_cq.value, b_sq.value, b_owner.value,
+                         nprobe, nprobe_super)
+        )
+
+    return probe_cells
+
+
+def _pq_dists(x: np.ndarray, cbq: np.ndarray) -> np.ndarray:
+    """:func:`_pq_sqdists` of quantized rows ``x`` split into the
+    codebooks' ``m_sub`` subspaces."""
+    m_sub, _, dsub = cbq.shape
+    return _pq_sqdists(x.reshape(len(x), m_sub, dsub), cbq)
+
+
+def _codes_udf(cbq, route: tuple | None = None):
+    """Pandas UDF: each vector's PQ code per subspace against the
+    quantized codebooks ``cbq`` (a Broadcast handle, or any holder of
+    the array as ``.value``). argmin takes the FIRST minimum: ties
+    break to the lowest code id, mirroring the oracle's ORDER BY dist,
+    code. With ``route`` (the ``(cq, sq, owner)`` handles) the codes
+    quantize the RESIDUAL ``v − centroid[cell(v)]``, the cell routed
+    exactly like :func:`_assign_udf`."""
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def codes_of(vs: pd.Series) -> pd.Series:
+        x = _qmat(vs)
+        if route is not None:
+            cq = route[0].value
+            x = x - cq[_route_assign(x, cq, route[1].value, route[2].value)]
+        d = _pq_dists(x, cbq.value)
+        return pd.Series(d.argmin(axis=2).astype("int32").tolist())
+
+    return codes_of
+
+
+def _lut_udf(cbq, b_cq=None):
+    """Pandas UDF: each query's flattened ADC lookup table — the int64
+    squared distance from every query subvector to every code of the
+    quantized codebooks ``cbq`` (as in :func:`_codes_udf`).
+
+    With ``b_cq`` (the broadcast quantized centroids) the UDF takes
+    ``(vector, cell)`` and builds the RESIDUAL LUT of ``q −
+    centroid[cell]``: the query's LUT is cell-specific, so it runs
+    AFTER the probe-cell explode."""
+    if b_cq is None:
+        @F.pandas_udf(T.ArrayType(T.LongType()))
+        def lut_of(vs: pd.Series) -> pd.Series:
+            d = _pq_dists(_qmat(vs), cbq.value)
+            return pd.Series(d.reshape(len(vs), -1).tolist())
+
+        return lut_of
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def lut_res(vs: pd.Series, cells: pd.Series) -> pd.Series:
+        x = _qmat(vs) - b_cq.value[cells.to_numpy(dtype=np.int64)]
+        d = _pq_dists(x, cbq.value)
+        return pd.Series(d.reshape(len(vs), -1).tolist())
+
+    return lut_res
+
+
+def _adc(m_sub: int, ncodes: int) -> Column:
+    """The PQ scan score: a (query, corpus) pair folds its ``m_sub``
+    LUT entries JVM-side (``F.get``: 0-based array indexing with
+    Column indices) — integer adds on the code array, no Python in the
+    scan."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(m_sub - 1)),
+        F.lit(0).cast("bigint"),
+        lambda acc, mi: acc + F.get(
+            "__lut", (mi * ncodes + F.get("__codes", mi)).cast("int"),
+        ),
+    )
+
+
+def _adc_shortlist(scanned: DataFrame, rerank: int) -> DataFrame:
+    """The ``rerank`` lowest-ADC ``(query_id, neighbor_id)`` pairs per
+    query (ties by lowest neighbor id) — a per-query ``row_number``
+    window that compiles to WindowGroupLimit (per-partition R-heaps
+    before the shuffle)."""
+    wr = Window.partitionBy("query_id").orderBy(
+        F.col("__adc").asc(), F.col("neighbor_id")
+    )
+    return (
+        scanned.withColumn(_RN, F.row_number().over(wr))
+        .filter(F.col(_RN) <= rerank)
+        .select("query_id", "neighbor_id")
+    )
+
+
+def _lehmer_order(ids: np.ndarray, seed: int, n: int) -> np.ndarray:
+    """Positions of the ``n`` ids with the smallest portable Lehmer
+    hash, ties by id — :func:`_sketch_fit`'s selection, replayed on
+    in-memory arrays by the numpy trainers the DuckDB oracle builders
+    share, so trainers on both sides see the byte-identical sketch."""
     from parquet_sampler_spark.functions.hashing import (
         COLUMN_MULTIPLIERS,
         MODULUS,
@@ -1245,7 +1402,19 @@ def ivf_train_sketch_numpy(
     sm, sa = _seed_params(seed)
     ids = np.asarray(ids, dtype=np.int64)
     h = (ids * COLUMN_MULTIPLIERS[0] % MODULUS * sm + sa) % MODULUS
-    order = np.lexsort((ids, h))[: train_per_cell * nlist]
+    return np.lexsort((ids, h))[:n]
+
+
+def ivf_train_sketch_numpy(
+    ids: np.ndarray,
+    vecs: np.ndarray,
+    nlist: int,
+    seed: int,
+    train_per_cell: int = 256,
+) -> np.ndarray:
+    """The operator's training sketch (:func:`_lehmer_order`) from
+    in-memory arrays."""
+    order = _lehmer_order(ids, seed, train_per_cell * nlist)
     return np.asarray(vecs, dtype=np.float64)[order]
 
 
@@ -1292,11 +1461,10 @@ def ivf_topk(
     nlist: int = 16,
     nprobe: int = 6,
     seed: int = 42,
-    model_cache: dict | None = None,
     cache_key=None,
     train_per_cell: int = 256,
     train_max_iter: int = 20,
-    broadcast_queries: bool | str = "auto",
+    broadcast_queries: bool = True,
     nprobe_super: int = 4,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
@@ -1344,13 +1512,13 @@ def ivf_topk(
     a DuckDB oracle holding the centroid literals reproduces the whole
     assign→probe→rerank pipeline value-for-value.
 
-    ``model_cache``/``cache_key`` amortize training across invocations
-    against the same corpus (the IVF index is built once, queried many
-    times): pass any dict and a corpus-identifying key.
+    ``cache_key`` amortizes training across invocations against the
+    same corpus (the IVF index is built once, queried many times):
+    pass a corpus-identifying key (see :func:`_memo`).
 
     ``broadcast_queries`` — the probe join ships the exploded query set
     (``|queries| × nprobe`` rows) and the rerank join ships the
-    normalized query vectors to every executor. ``"auto"``/``True``
+    normalized query vectors to every executor. ``True`` (default)
     broadcasts both (right for the typical ANN shape: queries ≪
     corpus); pass ``False`` when the query side is itself large
     (batch-scoring millions of queries — broadcast would OOM executors
@@ -1364,60 +1532,13 @@ def ivf_topk(
     score 0 via raw cosine) and a zero-norm query returns no rows,
     matching :func:`cosine_topk` / :func:`lsh_topk` and the SQL oracle.
     """
-    if model_cache is not None and cache_key in model_cache:
-        supers, centroids, owner = model_cache[cache_key]
-    else:
-        from parquet_sampler_spark.functions.hashing import lehmer_hash
-
-        sketch = _sketch_topk(
-            spread(corpus)
-            .select(F.col(id_col).alias("__id"),
-                    F.col(vec_col).alias("__v"),
-                    lehmer_hash([id_col], seed).alias("__h")),
-            "__id", train_per_cell * nlist,
-        )
-        X = np.array([r["__v"] for r in sketch], dtype=np.float64)
-        supers, centroids, owner = _fit_coarse_hierarchy(
-            X, nlist, seed, train_max_iter
-        )
-        if model_cache is not None:
-            model_cache[cache_key] = (supers, centroids, owner)
-
-    # The quantizer tables ship as BROADCAST VARIABLES, not closure
-    # captures (r14, found by the scaled-partitions gate cell): a
-    # closure-pickled table is re-sent and re-deserialized per TASK,
-    # so routing-stage overhead grows with nlist × task count — both
-    # ∝ corpus at the sized operating point (measured probe α 1.52
-    # with candidate volume exactly Θ(batch); the r13 fixed-32 GC
-    # attribution was refuted by that cell). A broadcast value is
-    # torrent-shipped once per executor and cached across tasks by
-    # the Python worker's broadcast registry. The Broadcast handles
-    # are cached beside the centroids so warm calls reuse the SAME
-    # objects — the persisted index's semantic hit survives (a fresh
-    # broadcast id would change the UDF bytes and fork the plan).
-    sc = corpus.sparkSession.sparkContext
-    bkey = (cache_key, "__bc")
-    if model_cache is not None and bkey in model_cache:
-        b_cq, b_sq, b_owner = model_cache[bkey]
-    else:
-        b_cq = sc.broadcast(_ivf_quantize(centroids))
-        b_sq = sc.broadcast(
-            None if supers is None else _ivf_quantize(supers)
-        )
-        b_owner = sc.broadcast(owner)
-        if model_cache is not None:
-            model_cache[bkey] = (b_cq, b_sq, b_owner)
-
-    @F.pandas_udf(T.IntegerType())
-    def cell_of(vs: pd.Series) -> pd.Series:
-        # argmin takes the FIRST minimum: ties break to the lowest cell
-        # id, mirroring the oracle's ORDER BY dist, cell; hierarchical
-        # routing above the two-level threshold (_route_assign)
-        m = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        return pd.Series(
-            _route_assign(m, b_cq.value, b_sq.value, b_owner.value)
-        )
-
+    supers, centroids, owner = _memo(
+        cache_key, lambda: _fit_coarse_hierarchy(
+            _sketch_fit(spread(corpus), id_col, vec_col, seed,
+                        train_per_cell * nlist)[1],
+            nlist, seed, train_max_iter,
+        ))
+    tables = _route_tables(corpus, cache_key, supers, centroids, owner)
     # The INDEX — cell assignments + normalized vectors — is the
     # standing state, not just the centroids (r14, found by the
     # ann_ivf_sized decade cell): without the persist every call
@@ -1433,26 +1554,15 @@ def ivf_topk(
     assigned = _cache_persist(
         spread(corpus).select(
             F.col(id_col).alias("neighbor_id"),
-            cell_of(F.col(vec_col)).alias("__cell"),
+            _assign_udf(tables)(F.col(vec_col)).alias("__cell"),
         ).repartition("__cell")
     )
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        # stable sort: equal distances keep ascending cell order;
-        # super-routed above the two-level threshold (_route_probe)
-        m = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        return pd.Series(
-            _route_probe(m, b_cq.value, b_sq.value, b_owner.value,
-                         nprobe, nprobe_super)
-        )
-
     q = spread(queries).select(
         F.col(id_col).alias("query_id"),
-        F.explode(probe_cells(F.col(vec_col))).alias("__cell"),
+        F.explode(_probe_udf(tables, nprobe, nprobe_super)(F.col(vec_col)))
+        .alias("__cell"),
     )
-    bc = broadcast_queries in (True, "auto")
-    small = F.broadcast if bc else (lambda d: d)
+    small = F.broadcast if broadcast_queries else (lambda d: d)
     cand = (
         assigned.join(small(q), "__cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -1466,21 +1576,7 @@ def ivf_topk(
         _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv")
         .repartition("neighbor_id")
     )
-    scored = (
-        cand.join(small(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("score", _unit_dot("__qv", "__cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn(_RN, F.row_number().over(w))
-        .filter(F.col(_RN) <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col(_RN).alias("rank"))
-    )
-
+    return _rerank_topk(cand, qv, cv, k, small)
 
 
 def pq_train_codebooks_numpy(
@@ -1500,17 +1596,9 @@ def pq_train_codebooks_numpy(
     float64 codebooks. The DuckDB oracle builder calls this on the raw
     parquet to reproduce the operator's codebooks bit-for-bit without
     a Spark session."""
-    from parquet_sampler_spark.functions.hashing import (
-        COLUMN_MULTIPLIERS,
-        MODULUS,
-        _seed_params,
-    )
-
-    sm, sa = _seed_params(seed)
-    ids = np.asarray(ids, dtype=np.int64)
-    h = (ids * COLUMN_MULTIPLIERS[0] % MODULUS * sm + sa) % MODULUS
-    order = np.lexsort((ids, h))[:train_rows]
-    X = np.asarray(vecs, dtype=np.float64)[order]
+    X = np.asarray(vecs, dtype=np.float64)[
+        _lehmer_order(ids, seed, train_rows)
+    ]
     dim = X.shape[1]
     if dim % m_sub != 0:
         raise ValueError(
@@ -1549,11 +1637,10 @@ def pq_topk(
     ncodes: int = 16,
     rerank: int = 50,
     seed: int = 42,
-    model_cache: dict | None = None,
     cache_key=None,
     train_rows: int = 4096,
     train_max_iter: int = 20,
-    broadcast_queries: bool | str = "auto",
+    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Product-quantization approximate top-k — the MEMORY-bound ANN
     architecture: each corpus vector is compressed to ``m_sub`` small
@@ -1596,95 +1683,39 @@ def pq_topk(
     the rerank join against the normalized relation — same contract as
     :func:`cosine_topk` / :func:`lsh_topk` / :func:`ivf_topk`.
     """
-    if model_cache is not None and cache_key in model_cache:
-        codebooks = model_cache[cache_key]
-    else:
-        from parquet_sampler_spark.functions.hashing import lehmer_hash
-
-        sketch = _sketch_topk(
-            spread(corpus)
-            .select(F.col(id_col).alias("__id"),
-                    F.col(vec_col).alias("__v"),
-                    lehmer_hash([id_col], seed).alias("__h")),
-            "__id", train_rows,
-        )
-        codebooks = pq_train_codebooks_numpy(
-            np.array([r["__id"] for r in sketch], dtype=np.int64),
-            np.array([r["__v"] for r in sketch], dtype=np.float64),
-            m_sub, ncodes, seed,
+    def fit() -> np.ndarray:
+        ids, X = _sketch_fit(spread(corpus), id_col, vec_col, seed,
+                             train_rows)
+        return pq_train_codebooks_numpy(
+            ids, X, m_sub, ncodes, seed,
             train_rows=train_rows, train_max_iter=train_max_iter,
         )
-        if model_cache is not None:
-            model_cache[cache_key] = codebooks
 
-    cbq = _ivf_quantize(codebooks)  # (m_sub, ncodes, dsub) int64
-    n_codes_eff = cbq.shape[1]
-    dsub = cbq.shape[2]
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def codes_of(vs: pd.Series) -> pd.Series:
-        x = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        d = _pq_sqdists(x.reshape(len(vs), m_sub, dsub), cbq)
-        # argmin takes the FIRST minimum: ties break to the lowest
-        # code id, mirroring the oracle's ORDER BY dist, code
-        return pd.Series(d.argmin(axis=2).astype("int32").tolist())
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def lut_of(vs: pd.Series) -> pd.Series:
-        x = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        d = _pq_sqdists(x.reshape(len(vs), m_sub, dsub), cbq)
-        return pd.Series(d.reshape(len(vs), -1).tolist())
-
+    codebooks = _memo(cache_key, fit)
+    # (m_sub, ncodes, dsub) int64, shipped in the kernel closures: PQ
+    # codebooks are fixed-size, unlike the coarse tables that grow
+    # with nlist (_route_tables)
+    cbq = SimpleNamespace(value=_ivf_quantize(codebooks))
     coded = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"),
-        codes_of(F.col(vec_col)).alias("__codes"),
+        _codes_udf(cbq)(F.col(vec_col)).alias("__codes"),
     )
     q = spread(queries).select(
         F.col(id_col).alias("query_id"),
-        lut_of(F.col(vec_col)).alias("__lut"),
+        _lut_udf(cbq)(F.col(vec_col)).alias("__lut"),
     )
-    bc = broadcast_queries in (True, "auto")
-    small = F.broadcast if bc else (lambda d: d)
-
-    # the PQ scan: every (query, corpus) pair folds m_sub LUT entries
-    # JVM-side (F.get: 0-based array indexing with Column indices)
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, mi: acc + F.get(
-            "__lut",
-            (mi * n_codes_eff + F.get("__codes", mi)).cast("int"),
-        ),
-    )
+    small = F.broadcast if broadcast_queries else (lambda d: d)
     scanned = (
         coded.join(small(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("__adc", adc)
+        .withColumn("__adc", _adc(m_sub, codebooks.shape[1]))
         .select("query_id", "neighbor_id", "__adc")
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").asc(), F.col("neighbor_id")
-    )
-    cand = (
-        scanned.withColumn(_RN, F.row_number().over(wr))
-        .filter(F.col(_RN) <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qv = _normalized(queries, id_col, vec_col, "query_id", "__qv")
-    cv = _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv")
-    scored = (
-        cand.join(small(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("score", _unit_dot("__qv", "__cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn(_RN, F.row_number().over(w))
-        .filter(F.col(_RN) <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col(_RN).alias("rank"))
+    return _rerank_topk(
+        _adc_shortlist(scanned, rerank),
+        _normalized(queries, id_col, vec_col, "query_id", "__qv"),
+        _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv"),
+        k, small,
     )
 
 
@@ -1711,17 +1742,8 @@ def ivfpq_train_numpy(
     parquet to reproduce the operator's model bit-for-bit without a
     Spark session — the parity contract behind the ann_ivfpq /
     ann_ivfpq_residual value-hash rows."""
-    from parquet_sampler_spark.functions.hashing import (
-        COLUMN_MULTIPLIERS,
-        MODULUS,
-        _seed_params,
-    )
-
-    sm, sa = _seed_params(seed)
-    ids = np.asarray(ids, dtype=np.int64)
-    h = (ids * COLUMN_MULTIPLIERS[0] % MODULUS * sm + sa) % MODULUS
-    order = np.lexsort((ids, h))[: max(train_rows, 256 * nlist)]
-    sids = ids[order]
+    order = _lehmer_order(ids, seed, max(train_rows, 256 * nlist))
+    sids = np.asarray(ids, dtype=np.int64)[order]
     X = np.asarray(vecs, dtype=np.float64)[order]
     supers, centroids, owner = _fit_coarse_hierarchy(
         X[: 256 * nlist], nlist, seed, train_max_iter
@@ -1756,11 +1778,10 @@ def ivfpq_topk(
     ncodes: int = 16,
     rerank: int = 100,
     seed: int = 42,
-    model_cache: dict | None = None,
     cache_key=None,
     train_rows: int = 4096,
     train_max_iter: int = 20,
-    broadcast_queries: bool | str = "auto",
+    broadcast_queries: bool = True,
     residual: bool = False,
     nprobe_super: int = 4,
 ) -> DataFrame:
@@ -1824,157 +1845,61 @@ def ivfpq_topk(
     LUTs and the oracle's chained-argmin CTEs all agree. Ignored at
     flat nlist (all registered demonstration rows).
     """
-    ck = (cache_key, bool(residual))
-    if model_cache is not None and ck in model_cache:
-        supers, centroids, owner, codebooks = model_cache[ck]
-    else:
-        from parquet_sampler_spark.functions.hashing import lehmer_hash
-
-        sketch = _sketch_topk(
-            spread(corpus)
-            .select(F.col(id_col).alias("__id"),
-                    F.col(vec_col).alias("__v"),
-                    lehmer_hash([id_col], seed).alias("__h")),
-            "__id", max(train_rows, 256 * nlist),
-        )
+    def fit() -> tuple:
+        ids, X = _sketch_fit(spread(corpus), id_col, vec_col, seed,
+                             max(train_rows, 256 * nlist))
         # the shared numpy trainer (size-aware coarse fit + residual
         # codebook grid) is the SAME code the oracle builders run on
         # the raw parquet — parity by construction
-        supers, centroids, owner, codebooks = ivfpq_train_numpy(
-            np.array([r["__id"] for r in sketch], dtype=np.int64),
-            np.array([r["__v"] for r in sketch], dtype=np.float64),
-            nlist, m_sub, ncodes, seed,
+        return ivfpq_train_numpy(
+            ids, X, nlist, m_sub, ncodes, seed,
             train_rows=train_rows, train_max_iter=train_max_iter,
             residual=residual,
         )
-        if model_cache is not None:
-            model_cache[ck] = (supers, centroids, owner, codebooks)
 
-    cbq0 = _ivf_quantize(codebooks)     # (m_sub, ncodes, dsub)
-    n_codes_eff = cbq0.shape[1]
-    dsub = cbq0.shape[2]
-    # broadcast the Θ(nlist) coarse tables + codebooks instead of
-    # closure-capturing them (see ivf_topk's r14 note); handles
-    # cached under the model key so repeat calls reuse the same ids
-    sc = corpus.sparkSession.sparkContext
-    bkey = (ck, "__bc")
-    if model_cache is not None and bkey in model_cache:
-        b_cq, b_sq, b_owner, b_cbq = model_cache[bkey]
-    else:
-        b_cq = sc.broadcast(_ivf_quantize(centroids))
-        b_sq = sc.broadcast(
-            None if supers is None else _ivf_quantize(supers)
-        )
-        b_owner = sc.broadcast(owner)
-        b_cbq = sc.broadcast(cbq0)
-        if model_cache is not None:
-            model_cache[bkey] = (b_cq, b_sq, b_owner, b_cbq)
-
-    @F.pandas_udf(T.IntegerType())
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        return pd.Series(
-            _route_assign(m, b_cq.value, b_sq.value, b_owner.value)
-        )
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def codes_of(vs: pd.Series) -> pd.Series:
-        cq, cbq = b_cq.value, b_cbq.value
-        x = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        if residual:
-            x = x - cq[_route_assign(x, cq, b_sq.value, b_owner.value)]
-        d = _pq_sqdists(x.reshape(len(vs), m_sub, dsub), cbq)
-        return pd.Series(d.argmin(axis=2).astype("int32").tolist())
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        m = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        return pd.Series(
-            _route_probe(m, b_cq.value, b_sq.value, b_owner.value,
-                         nprobe, nprobe_super)
-        )
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def lut_of(vs: pd.Series) -> pd.Series:
-        cbq = b_cbq.value
-        x = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        d = _pq_sqdists(x.reshape(len(vs), m_sub, dsub), cbq)
-        return pd.Series(d.reshape(len(vs), -1).tolist())
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def lut_res(vs: pd.Series, cells: pd.Series) -> pd.Series:
-        # residual ADC: the query's LUT is cell-specific (q − that
-        # cell's centroid), so this runs AFTER the probe-cell explode
-        cbq = b_cbq.value
-        x = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        x = x - b_cq.value[cells.to_numpy(dtype=np.int64)]
-        d = _pq_sqdists(x.reshape(len(vs), m_sub, dsub), cbq)
-        return pd.Series(d.reshape(len(vs), -1).tolist())
-
+    ck = None if cache_key is None else (cache_key, bool(residual))
+    supers, centroids, owner, codebooks = _memo(ck, fit)
+    tables = _route_tables(corpus, ck, supers, centroids, owner, codebooks)
+    cbq = tables[3]
     coded = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"),
-        cell_of(F.col(vec_col)).alias("__cell"),
-        codes_of(F.col(vec_col)).alias("__codes"),
+        _assign_udf(tables)(F.col(vec_col)).alias("__cell"),
+        _codes_udf(cbq, tables[:3] if residual else None)(F.col(vec_col))
+        .alias("__codes"),
     )
+    probe = _probe_udf(tables, nprobe, nprobe_super)
     if residual:
         q = (
             spread(queries).select(
                 F.col(id_col).alias("query_id"),
                 F.col(vec_col).alias("__qvec"),
-                F.explode(probe_cells(F.col(vec_col))).alias("__cell"),
+                F.explode(probe(F.col(vec_col))).alias("__cell"),
             )
-            .withColumn("__lut", lut_res(F.col("__qvec"), F.col("__cell")))
+            .withColumn("__lut", _lut_udf(cbq, tables[0])(
+                F.col("__qvec"), F.col("__cell")))
             .drop("__qvec")
         )
     else:
         q = spread(queries).select(
             F.col(id_col).alias("query_id"),
-            F.explode(probe_cells(F.col(vec_col))).alias("__cell"),
-            lut_of(F.col(vec_col)).alias("__lut"),
+            F.explode(probe(F.col(vec_col))).alias("__cell"),
+            _lut_udf(cbq)(F.col(vec_col)).alias("__lut"),
         )
-    bc = broadcast_queries in (True, "auto")
-    small = F.broadcast if bc else (lambda d: d)
-
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, mi: acc + F.get(
-            "__lut",
-            (mi * n_codes_eff + F.get("__codes", mi)).cast("int"),
-        ),
-    )
+    small = F.broadcast if broadcast_queries else (lambda d: d)
     scanned = (
         coded.join(small(q), "__cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("__adc", adc)
+        .withColumn("__adc", _adc(m_sub, codebooks.shape[1]))
         # a (query, neighbor) pair can meet in several probed cells
         # when corpus rows tie across cells — dedup before the window
         .dropDuplicates(["query_id", "neighbor_id"])
         .select("query_id", "neighbor_id", "__adc")
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").asc(), F.col("neighbor_id")
-    )
-    cand = (
-        scanned.withColumn(_RN, F.row_number().over(wr))
-        .filter(F.col(_RN) <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qv = _normalized(queries, id_col, vec_col, "query_id", "__qv")
-    cv = _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv")
-    scored = (
-        cand.join(small(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("score", _unit_dot("__qv", "__cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn(_RN, F.row_number().over(w))
-        .filter(F.col(_RN) <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col(_RN).alias("rank"))
+    return _rerank_topk(
+        _adc_shortlist(scanned, rerank),
+        _normalized(queries, id_col, vec_col, "query_id", "__qv"),
+        _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv"),
+        k, small,
     )
 
 
@@ -1985,7 +1910,6 @@ def semantic_dedup(
     nlist: int = 16,
     tau: float = 0.92,
     seed: int = 42,
-    model_cache: dict | None = None,
     cache_key=None,
     train_per_cell: int = 256,
     train_max_iter: int = 20,
@@ -2059,56 +1983,16 @@ def semantic_dedup(
         raise ValueError(f"tau must be in (0, 1], got {tau}")
     if pairs not in ("pandas", "expr"):
         raise ValueError(f"pairs must be 'pandas' or 'expr', got {pairs!r}")
-    if model_cache is not None and cache_key in model_cache:
-        supers, centroids, owner = model_cache[cache_key]
-    else:
-        from parquet_sampler_spark.functions.hashing import lehmer_hash
-
-        sketch = _sketch_topk(
-            spread(corpus)
-            .select(F.col(id_col).alias("__id"),
-                    F.col(vec_col).alias("__v"),
-                    lehmer_hash([id_col], seed).alias("__h")),
-            "__id", train_per_cell * nlist,
-        )
-        X = np.array([r["__v"] for r in sketch], dtype=np.float64)
-        supers, centroids, owner = _fit_coarse_hierarchy(
-            X, nlist, seed, train_max_iter
-        )
-        if model_cache is not None:
-            model_cache[cache_key] = (supers, centroids, owner)
-
-    # broadcast, not closure-capture: Θ(nlist) tables re-ship per
-    # task otherwise (see ivf_topk's r14 note); handles cached so a
-    # cached-model call reuses the same broadcast ids
-    sc = corpus.sparkSession.sparkContext
-    bkey = (cache_key, "__bc")
-    if model_cache is not None and bkey in model_cache:
-        b_cq, b_sq, b_owner = model_cache[bkey]
-    else:
-        b_cq = sc.broadcast(_ivf_quantize(centroids))
-        b_sq = sc.broadcast(
-            None if supers is None else _ivf_quantize(supers)
-        )
-        b_owner = sc.broadcast(owner)
-        if model_cache is not None:
-            model_cache[bkey] = (b_cq, b_sq, b_owner)
-
-    @F.pandas_udf(T.IntegerType())
-    def cell_of(vs: pd.Series) -> pd.Series:
-        # flat argmin below the two-level threshold, HIERARCHICAL above
-        # it (nearest super-cell, then only its sub-centroids) — see
-        # _route_assign; removes assignment's n x nlist term (the
-        # SemDeDup trade: a boundary vector may land one cell off flat
-        # argmin; identically in both engines, oracle-replicated)
-        m = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        return pd.Series(
-            _route_assign(m, b_cq.value, b_sq.value, b_owner.value)
-        )
-
+    supers, centroids, owner = _memo(
+        cache_key, lambda: _fit_coarse_hierarchy(
+            _sketch_fit(spread(corpus), id_col, vec_col, seed,
+                        train_per_cell * nlist)[1],
+            nlist, seed, train_max_iter,
+        ))
+    tables = _route_tables(corpus, cache_key, supers, centroids, owner)
     assigned = spread(corpus).select(
         F.col(id_col).alias("__sid"),
-        cell_of(F.col(vec_col)).alias("cell"),
+        _assign_udf(tables)(F.col(vec_col)).alias("cell"),
     )
     normed = _normalized(corpus, id_col, vec_col, "__nid", "__nv")
     members = assigned.join(
@@ -2170,7 +2054,6 @@ def ivf_coreset(
     nlist: int = 16,
     seed: int = 42,
     keep: str = "central",
-    model_cache: dict | None = None,
     cache_key=None,
     train_per_cell: int = 256,
     train_max_iter: int = 20,
@@ -2191,13 +2074,13 @@ def ivf_coreset(
 
     Plan shape (the 100 TB contract): the quantizer is the SHARED
     bounded-sketch + seeded-Lloyd fit of :func:`ivf_topk` (pass the
-    same ``model_cache``/``cache_key`` and the index is trained once
-    per corpus across the ANN family); assignment + own-centroid
-    distance is ONE Arrow-batched map pass against the broadcast
-    centroids; per-cell top-m is a partitioned window that compiles
-    to WindowGroupLimit (m rows per cell survive the partial pass —
-    a cell is corpus/nlist-sized, the full-sort skew this pushdown
-    exists for). No join anywhere.
+    same ``cache_key`` and the index is trained once per corpus across
+    the ANN family); assignment + own-centroid distance is ONE
+    Arrow-batched map pass against the broadcast centroids; per-cell
+    top-m is a partitioned window that compiles to WindowGroupLimit
+    (m rows per cell survive the partial pass — a cell is
+    corpus/nlist-sized, the full-sort skew this pushdown exists for).
+    No join anywhere.
 
     Zero-norm vectors participate (assignment is raw squared
     distance — no normalization), unlike the cosine surfaces which
@@ -2209,54 +2092,15 @@ def ivf_coreset(
         raise ValueError(
             f"keep={keep!r}: expected 'central' or 'outlier'"
         )
-    if model_cache is not None and cache_key in model_cache:
-        supers, centroids, owner = model_cache[cache_key]
-    else:
-        from parquet_sampler_spark.functions.hashing import lehmer_hash
-
-        sketch = _sketch_topk(
-            spread(corpus)
-            .select(F.col(id_col).alias("__id"),
-                    F.col(vec_col).alias("__v"),
-                    lehmer_hash([id_col], seed).alias("__h")),
-            "__id", train_per_cell * nlist,
-        )
-        X = np.array([r["__v"] for r in sketch], dtype=np.float64)
-        supers, centroids, owner = _fit_coarse_hierarchy(
-            X, nlist, seed, train_max_iter
-        )
-        if model_cache is not None:
-            model_cache[cache_key] = (supers, centroids, owner)
-
-    # broadcast, not closure-capture (see ivf_topk's r14 note)
-    sc = corpus.sparkSession.sparkContext
-    bkey = (cache_key, "__bc")
-    if model_cache is not None and bkey in model_cache:
-        b_cq, b_sq, b_owner = model_cache[bkey]
-    else:
-        b_cq = sc.broadcast(_ivf_quantize(centroids))
-        b_sq = sc.broadcast(
-            None if supers is None else _ivf_quantize(supers)
-        )
-        b_owner = sc.broadcast(owner)
-        if model_cache is not None:
-            model_cache[bkey] = (b_cq, b_sq, b_owner)
-
-    @F.pandas_udf("cell int, d bigint")
-    def cell_dist(vs: pd.Series) -> pd.DataFrame:
-        cq = b_cq.value
-        mtx = _ivf_quantize(np.array(vs.tolist(), dtype=np.float64))
-        cells = np.asarray(
-            _route_assign(mtx, cq, b_sq.value, b_owner.value)
-        )
-        diff = mtx - cq[cells]
-        return pd.DataFrame({
-            "cell": cells.astype(np.int32),
-            "d": (diff * diff).sum(axis=1).astype(np.int64),
-        })
-
+    supers, centroids, owner = _memo(
+        cache_key, lambda: _fit_coarse_hierarchy(
+            _sketch_fit(spread(corpus), id_col, vec_col, seed,
+                        train_per_cell * nlist)[1],
+            nlist, seed, train_max_iter,
+        ))
+    tables = _route_tables(corpus, cache_key, supers, centroids, owner)
     assigned = spread(corpus).select(
-        F.col(id_col), cell_dist(F.col(vec_col)).alias("__cd")
+        F.col(id_col), _cell_dist_udf(tables)(F.col(vec_col)).alias("__cd")
     ).select(
         id_col,
         F.col("__cd.cell").alias("cell"),
@@ -2336,19 +2180,9 @@ def jl_topk(
     short = cosine_topk(pc, pq, id_col, "__jl", k=shortlist).select(
         "query_id", "neighbor_id"
     )
-    qv = _normalized(queries, id_col, vec_col, "query_id", "__qv")
-    cv = _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv")
-    scored = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("score", _unit_dot("__qv", "__cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn(_RN, F.row_number().over(w))
-        .filter(F.col(_RN) <= k)
-        .select("query_id", "neighbor_id", "score",
-                F.col(_RN).alias("rank"))
+    return _rerank_topk(
+        short,
+        _normalized(queries, id_col, vec_col, "query_id", "__qv"),
+        _normalized(corpus, id_col, vec_col, "neighbor_id", "__cv"),
+        k,
     )

@@ -38,9 +38,9 @@ and merges, fitted ANN models, data-fitted oracle SQL, BPE merges,
 vector widths, and the paths / catalog names of trees written under the
 session tmp root. Every key is a tuple led by a kind string naming
 what it holds (``("ivf_sql", sf_dir)``, ``("sample", app_id, sf_dir)``;
-an ANN operator given ``model_cache=MEMO`` derives its keys from a
-kind-tagged ``cache_key``), so entries of different kinds never
-collide. A DataFrame stored here is registered through :func:`persist`
+an ANN operator given a kind-tagged ``cache_key`` memoizes its fitted
+model under that key and derives its other keys from it), so entries
+of different kinds never collide. A DataFrame stored here is registered through :func:`persist`
 first, so :func:`clear` releases it with the registry and then empties
 the memo.
 """

@@ -1769,7 +1769,6 @@ def _q_embedding_neardup_incremental_ivf(spark, sf_dir):
     return embedding_neardup_incremental_ivf(
         emb, twins, "vec_id", "embedding", threshold=_NEARDUP_HI,
         nlist=_EMBIVF_NLIST, nprobe=_EMBIVF_NPROBE,
-        model_cache=MEMO,
         cache_key=("embivf_model", spark.sparkContext.applicationId, sf_dir,
                    _EMBIVF_NLIST),
     )
@@ -1812,7 +1811,6 @@ def _q_embedding_neardup_incremental_ivf_sized(spark, sf_dir):
         emb, twins, "vec_id", "embedding", threshold=_NEARDUP_HI,
         nlist=nlist, nprobe=_EMBIVF_NPROBE,
         train_per_cell=_ann_sized_tpc(nlist),
-        model_cache=MEMO,
         cache_key=("embivf_model", spark.sparkContext.applicationId, sf_dir,
                    "sized", nlist),
     )
@@ -2025,7 +2023,6 @@ def _q_ann_ivf(spark, sf_dir):
     return ivf_topk(
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=_IVF_NPROBE, seed=_IVF_SEED,
-        model_cache=MEMO,
         cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    _IVF_NLIST, _IVF_SEED),
     )
@@ -2135,7 +2132,6 @@ def _q_ivf_coreset(spark, sf_dir):
     return ivf_coreset(
         e, "vec_id", "embedding",
         m=_CORESET_M, nlist=_IVF_NLIST, seed=_IVF_SEED,
-        model_cache=MEMO,
         cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    _IVF_NLIST, _IVF_SEED),
     )
@@ -2342,7 +2338,7 @@ def _q_ann_pq(spark, sf_dir):
     return pq_topk(
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, m_sub=_PQ_M, ncodes=_PQ_NCODES, rerank=_PQ_RERANK,
-        seed=_PQ_SEED, model_cache=MEMO,
+        seed=_PQ_SEED,
         cache_key=("pq_model", spark.sparkContext.applicationId, sf_dir,
                    _PQ_M, _PQ_NCODES, _PQ_SEED),
     )
@@ -2450,7 +2446,6 @@ def _q_ann_ivfpq(spark, sf_dir):
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=8, m_sub=_PQ_M,
         ncodes=_PQ_NCODES, rerank=_PQ_RERANK, seed=_PQ_SEED,
-        model_cache=MEMO,
         cache_key=("ivfpq_model", spark.sparkContext.applicationId, sf_dir),
     )
 
@@ -2597,7 +2592,6 @@ def _q_ann_ivfpq_residual(spark, sf_dir):
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=8, m_sub=_PQ_M,
         ncodes=_PQ_NCODES, rerank=_PQ_RERANK, seed=_PQ_SEED,
         residual=True,
-        model_cache=MEMO,
         cache_key=("ivfpq_model", spark.sparkContext.applicationId, sf_dir),
     )
 
@@ -2752,7 +2746,6 @@ def _q_ann_ivfpq_residual8(spark, sf_dir):
         k=_ANN_K, nlist=_IVF_NLIST, nprobe=8, m_sub=_PQ_M,
         ncodes=256, rerank=_PQ_RERANK, seed=_PQ_SEED,
         residual=True,
-        model_cache=MEMO,
         cache_key=("ivfpq_model", spark.sparkContext.applicationId, sf_dir,
                    256),
     )
@@ -2786,7 +2779,6 @@ def _q_ann_ivf_hier(spark, sf_dir):
         e, e.filter(F.col("vec_id") < _ANN_NQ), "vec_id", "embedding",
         k=_ANN_K, nlist=_IVF_HIER_NLIST, nprobe=_IVF_HIER_NPROBE,
         seed=_IVF_SEED, nprobe_super=_IVF_HIER_NSUP,
-        model_cache=MEMO,
         cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    _IVF_HIER_NLIST, _IVF_SEED),
     )
@@ -2967,7 +2959,6 @@ def _q_ann_ivf_sized(spark, sf_dir):
         k=_ANN_K, nlist=nlist, nprobe=_ANN_SIZED_NPROBE,
         seed=_IVF_SEED, nprobe_super=_IVF_HIER_NSUP,
         train_per_cell=_ann_sized_tpc(nlist),
-        model_cache=MEMO,
         cache_key=("ivf_model", spark.sparkContext.applicationId, sf_dir,
                    nlist, _IVF_SEED),
     )
@@ -7047,7 +7038,6 @@ def _q_semantic_dedup(spark, sf_dir):
     return semantic_dedup(
         corpus, "vec_id", "embedding",
         nlist=_sem_nlist(sf_dir), tau=_SEM_TAU, seed=_SEM_SEED,
-        model_cache=MEMO,
         cache_key=("sem_model", spark.sparkContext.applicationId, sf_dir,
                    _SEM_NLIST_DIV, _SEM_SEED),
     )

@@ -8,7 +8,7 @@ is that storage model at hash-bucket granularity, built only on
 parquet + the same atomic-pointer commit protocol::
 
     base_path/
-        _CURRENT                      # text: name of the live manifest
+        _CURRENT                      # live manifest name + query id
         manifests/m00000007.json      # {"3": "data/v00000007/__b=3", …}
         data/v00000003/__b=5/*.parquet
 
@@ -18,8 +18,9 @@ via :func:`~parquet_sampler_spark.operators.merge.merge_upsert`, and
 rewritten under the new batch's ``data/v{batch}/`` directory in ONE
 partitioned write job; every other bucket's manifest entry carries
 over verbatim, so unchanged bytes are SHARED by all retained versions
-that reference them. Commit = write ``m{batch}.json``, fsync, atomic
-``os.replace`` of the pointer. Crash consequences mirror sinks.py:
+that reference them. Commit = write ``m{batch}.json``, fsync, then
+sinks.py's atomic pointer swap, which also records the publishing
+streaming query's id. Crash and replay consequences mirror sinks.py:
 
 - crash before publish: the old manifest stays live; the replayed
   batch overwrites ``data/v{batch}`` and ``m{batch}.json`` wholesale.
@@ -27,6 +28,8 @@ that reference them. Commit = write ``m{batch}.json``, fsync, atomic
   replay sees a published id ≥ its own and SKIPS — exactly-once.
 - a manifest or data dir whose id is beyond the published pointer is
   uncommitted and is never listed or served.
+- a fresh checkpoint over a live table raises instead of skipping its
+  early epochs (``sinks.guard_epoch``).
 
 Scale: per-batch write cost is O(touched buckets × bucket size), not
 O(table) — the property that makes frequent small CDC batches viable
@@ -49,29 +52,22 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_sampler_spark.operators.merge import merge_upsert
-
-_POINTER = "_CURRENT"
-
-
-def _pointer_path(base_path: str) -> str:
-    return os.path.join(base_path, _POINTER)
+from parquet_sampler_spark.streaming.sinks import (
+    _POINTER,
+    _keep_last,
+    _publish,
+    checkpoint_query_id,
+    guard_epoch,
+    published_epoch,
+)
 
 
 def _manifest_name(batch_id: int) -> str:
     return f"m{batch_id:08d}.json"
-
-
-def _published_manifest_id(base_path: str) -> int | None:
-    ptr = _pointer_path(base_path)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr, encoding="ascii") as f:
-        name = f.read().strip()
-    return int(name[1:-5])  # m<8 digits>.json
 
 
 def _load_manifest(base_path: str, batch_id: int) -> dict[str, str]:
@@ -85,7 +81,7 @@ def list_incremental_versions(base_path: str) -> list[int]:
     (manifests beyond the published pointer are uncommitted crash
     leftovers and excluded)."""
     mdir = os.path.join(base_path, "manifests")
-    published = _published_manifest_id(base_path)
+    published = published_epoch(base_path)
     if published is None or not os.path.isdir(mdir):
         return []
     out = []
@@ -106,7 +102,7 @@ def read_incremental_snapshot(
     """Read the live (or a retained historical) snapshot version —
     the ``VERSION AS OF`` path. Raises for pruned, never-published, or
     uncommitted (crash-window) versions."""
-    published = _published_manifest_id(base_path)
+    published = published_epoch(base_path)
     if published is None:
         raise FileNotFoundError(
             f"no published snapshot at {base_path} (no {_POINTER})"
@@ -127,16 +123,6 @@ def read_incremental_snapshot(
     paths = [os.path.join(base_path, rel) for rel in manifest.values()]
     df = spark.read.parquet(*paths)
     return df.drop("__b") if "__b" in df.columns else df
-
-
-def _publish(base_path: str, batch_id: int) -> None:
-    ptr = _pointer_path(base_path)
-    tmp = ptr + ".__tmp"
-    with open(tmp, "w", encoding="ascii") as f:
-        f.write(_manifest_name(batch_id) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, ptr)
 
 
 def _prune(base_path: str, retain_versions: int) -> None:
@@ -189,26 +175,26 @@ def apply_cdc_batch_incremental(
     delete_col: str | None = None,
     order_col: str | None = None,
     retain_versions: int = 1,
+    run_id: str | None = None,
 ) -> None:
     """Merge ONE CDC batch into the bucketed snapshot, rewriting only
     the buckets the batch's keys hash into. ``nbuckets`` must stay
     constant for the lifetime of a table (it defines the layout).
     Exactly-once: a batch id at or below the published one is skipped.
+    ``run_id`` is the streaming query's identity
+    (:func:`~parquet_sampler_spark.streaming.sinks.checkpoint_query_id`);
+    with it, a different query driving this table raises instead of
+    skipping its early epochs (see
+    :func:`~parquet_sampler_spark.streaming.sinks.guard_epoch`).
     """
     if nbuckets <= 0:
         raise ValueError(f"nbuckets must be positive, got {nbuckets}")
     spark = batch_df.sparkSession
     os.makedirs(os.path.join(base_path, "manifests"), exist_ok=True)
-    published = _published_manifest_id(base_path)
-    if published is not None and published >= batch_id:
+    if guard_epoch(base_path, batch_id, run_id):
         return
-    if order_col is not None:
-        w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-        batch_df = (
-            batch_df.withColumn("__psx_rn", F.row_number().over(w))
-            .filter(F.col("__psx_rn") == 1)
-            .drop("__psx_rn", order_col)
-        )
+    published = published_epoch(base_path)
+    batch_df = _keep_last(batch_df, key_cols, order_col)
     data_cols = [c for c in batch_df.columns if c != delete_col]
     bcol = F.pmod(
         F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(nbuckets)
@@ -253,7 +239,7 @@ def apply_cdc_batch_incremental(
         json.dump(new_manifest, f, sort_keys=True)
         f.flush()
         os.fsync(f.fileno())
-    _publish(base_path, batch_id)
+    _publish(base_path, _manifest_name(batch_id), run_id)
     _prune(base_path, retain_versions)
 
 
@@ -279,6 +265,10 @@ def incremental_merge_sink(
             batch_df, batch_id, base_path, key_cols,
             nbuckets=nbuckets, delete_col=delete_col,
             order_col=order_col, retain_versions=retain_versions,
+            run_id=(
+                checkpoint_query_id(checkpoint_dir)
+                if checkpoint_dir else None
+            ),
         )
 
     writer = updates.writeStream.foreachBatch(apply_batch)

@@ -254,8 +254,11 @@ def _prune(base_path: str, keep: str, retain_versions: int = 1) -> None:
 
 def published_epoch(base_path: str) -> int | None:
     """Epoch id of the live published snapshot, or None before the
-    first publish. Every ``publish_snapshot`` consumer MUST skip a
-    batch whose ``epoch_id`` is at or below this (the guard
+    first publish. The pointer names a snapshot dir (``v00000007``)
+    or, for the bucketed sink (``streaming/incremental.py``), a
+    manifest (``m00000007.json``); both carry the epoch. Every
+    ``publish_snapshot`` consumer MUST skip a batch whose ``epoch_id``
+    is at or below this (the guard
     ``apply_cdc_batch`` pioneered): a crash can land after the
     pointer swap but before the streaming checkpoint commits, and the
     replayed epoch would otherwise (a) read ``v<N>`` lazily while
@@ -266,7 +269,7 @@ def published_epoch(base_path: str) -> int | None:
     snap = current_snapshot_path(base_path)
     if snap is None:
         return None
-    return int(os.path.basename(snap)[1:])
+    return int(os.path.splitext(os.path.basename(snap))[0][1:])
 
 
 def publish_snapshot(
@@ -348,6 +351,23 @@ def snapshot_stream(
     return writer
 
 
+def _keep_last(
+    batch_df: DataFrame, key_cols: list[str], order_col: str | None
+) -> DataFrame:
+    """Keep-last-per-key compaction of a CDC batch in event order: the
+    row with the greatest ``order_col`` per key, ``order_col`` dropped
+    (see :func:`stream_merge_sink`). ``order_col=None`` passes the
+    batch through."""
+    if order_col is None:
+        return batch_df
+    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
+    return (
+        batch_df.withColumn("__psx_rn", F.row_number().over(w))
+        .filter(F.col("__psx_rn") == 1)
+        .drop("__psx_rn", order_col)
+    )
+
+
 def apply_cdc_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -373,16 +393,7 @@ def apply_cdc_batch(
         # checkpoint committed: this batch is already in the
         # snapshot — exactly-once by skipping, not re-merging
         return
-    if order_col is not None:
-        # keep-last-per-key compaction in event order
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col(order_col).desc()
-        )
-        batch_df = (
-            batch_df.withColumn("__psx_rn", F.row_number().over(w))
-            .filter(F.col("__psx_rn") == 1)
-            .drop("__psx_rn", order_col)
-        )
+    batch_df = _keep_last(batch_df, key_cols, order_col)
     data_cols = [c for c in batch_df.columns if c != delete_col]
     snap = current_snapshot_path(base_path)
     if snap is not None:

@@ -113,11 +113,11 @@ def test_crash_in_commit_window_and_replay(spark, tmp_path, monkeypatch):
 
     publish = incremental._publish
 
-    def crash_on_batch_1(base_path, batch_id):
-        if batch_id == 1:
+    def crash_on_batch_1(base_path, manifest_name, run_id=None):
+        if manifest_name == "m00000001.json":
             raise RuntimeError(f"injected crash before publishing "
-                               f"manifest {batch_id}")
-        publish(base_path, batch_id)
+                               f"manifest {manifest_name}")
+        publish(base_path, manifest_name, run_id)
 
     with monkeypatch.context() as m:
         m.setattr(incremental, "_publish", crash_on_batch_1)

@@ -7,9 +7,10 @@ memo entry, no registered plan, no persisted RDD, no session tmp root.
 The registry keeps every plan until that clear. The guard tests keep
 new module-level caches from growing back beside the memo, keep
 environment variables from becoming hidden switches between code
-paths, and keep streaming state on its two drivers: ``foreachBatch``
+paths, keep streaming state on its two drivers (``foreachBatch``
 loops in the three snapshot sinks, memory sinks in the one drain that
-drops its view.
+drops its view), and keep the ANN family's pandas UDFs in one set of
+kernel factories.
 """
 
 from __future__ import annotations
@@ -165,6 +166,18 @@ def test_foreach_batch_only_in_snapshot_sinks():
     assert not found, (
         "foreachBatch outside the snapshot sinks (pass a fold to "
         "streaming.sinks.snapshot_stream instead): " + ", ".join(found)
+    )
+
+
+def test_pandas_udfs_only_in_kernel_factories():
+    found = _method_calls_outside("pandas_udf", {
+        "_sig_udf", "_assign_udf", "_cell_dist_udf", "_probe_udf",
+        "_codes_udf", "_lut_udf", "_unit_dot_arrow", "simhash_pairs",
+    })
+    assert not found, (
+        "pandas_udf outside the kernel factories (build the kernel from "
+        "a factory in operators/similarity.py instead): "
+        + ", ".join(found)
     )
 
 

@@ -149,15 +149,44 @@ def test_neardup_lsh_high_threshold_recall(spark):
 
 def test_ivf_model_cache_reused(embeddings, queries):
     from parquet_sampler_spark.operators.similarity import ivf_topk
+    from parquet_sampler_spark.plans.cache import MEMO
 
-    cache: dict = {}
+    key = ("ivf_model", "test_ivf_model_cache_reused")
     ivf_topk(embeddings, queries, "vec_id", "embedding", k=5,
-             nlist=8, nprobe=4, model_cache=cache, cache_key="k").count()
-    assert "k" in cache
-    model = cache["k"]
+             nlist=8, nprobe=4, cache_key=key).count()
+    assert key in MEMO
+    model = MEMO[key]
     ivf_topk(embeddings, queries, "vec_id", "embedding", k=5,
-             nlist=8, nprobe=4, model_cache=cache, cache_key="k").count()
-    assert cache["k"] is model
+             nlist=8, nprobe=4, cache_key=key).count()
+    assert MEMO[key] is model
+
+
+def test_ivf_family_fits_once_per_key_and_clear_drains(
+        embeddings, queries, monkeypatch):
+    """ivf_topk and ivf_coreset given the same ``cache_key`` share ONE
+    coarse fit (the model and its broadcast handles are memoized in
+    plans.cache.MEMO), and clear_caches() drains both entries."""
+    from parquet_sampler_spark.operators import similarity
+    from parquet_sampler_spark.plans.cache import MEMO
+    from parquet_sampler_spark.queries import clear_caches
+
+    fit = similarity._fit_coarse_hierarchy
+    calls = []
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return fit(*a, **kw)
+
+    monkeypatch.setattr(similarity, "_fit_coarse_hierarchy", counted)
+    key = ("ivf_model", "test_ivf_family_fits_once_per_key")
+    similarity.ivf_topk(embeddings, queries, "vec_id", "embedding", k=5,
+                        nlist=8, nprobe=4, cache_key=key).count()
+    similarity.ivf_coreset(embeddings, "vec_id", "embedding", m=2,
+                           nlist=8, cache_key=key).count()
+    assert len(calls) == 1
+    assert key in MEMO and (key, "__bc") in MEMO
+    clear_caches()
+    assert key not in MEMO and (key, "__bc") not in MEMO
 
 
 def test_ivf_index_is_standing_state(embeddings, queries):
@@ -170,9 +199,8 @@ def test_ivf_index_is_standing_state(embeddings, queries):
     from parquet_sampler_spark.operators.similarity import ivf_topk
     from parquet_sampler_spark.plans import cache as plan_cache
 
-    cache: dict = {}
-    kw = dict(k=5, nlist=8, nprobe=4, model_cache=cache,
-              cache_key="standing")
+    kw = dict(k=5, nlist=8, nprobe=4,
+              cache_key=("ivf_model", "test_ivf_index_is_standing_state"))
     first = ivf_topk(embeddings, queries, "vec_id", "embedding", **kw)
     a = sorted(map(tuple, first.collect()))
     n_persisted = len(plan_cache._PERSISTED)
@@ -315,16 +343,17 @@ def test_pq_recall_at_10(embeddings, queries):
 
 
 def test_pq_deterministic_and_cached(embeddings, queries):
-    """Same seed => identical output; the model_cache must be hit on
+    """Same seed => identical output; the memoized model must be hit on
     the second call (training is the index-build cost, amortized)."""
     from parquet_sampler_spark.operators.similarity import pq_topk
+    from parquet_sampler_spark.plans.cache import MEMO
 
-    cache: dict = {}
+    key = ("pq_model", "test_pq_deterministic_and_cached")
     a = pq_topk(embeddings, queries, "vec_id", "embedding", k=5,
-                model_cache=cache, cache_key="t").collect()
-    assert "t" in cache
+                cache_key=key).collect()
+    assert key in MEMO
     b = pq_topk(embeddings, queries, "vec_id", "embedding", k=5,
-                model_cache=cache, cache_key="t").collect()
+                cache_key=key).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b)) and a
 
 
@@ -674,13 +703,15 @@ def test_ivf_coreset_central_and_outlier_semantics(spark):
 def test_ivf_coreset_shares_model_cache(spark):
     from parquet_sampler_spark.operators.similarity import ivf_coreset
 
+    from parquet_sampler_spark.plans.cache import MEMO
+
     df = _coreset_corpus(spark)
-    cache = {}
+    key = ("ivf_model", "test_ivf_coreset_shares_model_cache")
     a = ivf_coreset(df, "vec_id", "embedding", m=2, nlist=2, seed=11,
-                    model_cache=cache, cache_key="k").collect()
-    assert "k" in cache
+                    cache_key=key).collect()
+    assert key in MEMO
     b = ivf_coreset(df, "vec_id", "embedding", m=2, nlist=2, seed=11,
-                    model_cache=cache, cache_key="k").collect()
+                    cache_key=key).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -1076,3 +1107,26 @@ def test_pq_sqdists_bit_identical_to_difference_tensor():
     )
     ref = ((xs[:, :, None, :] - cbq[None, :, :, :]) ** 2).sum(axis=3)
     assert np.array_equal(_pq_sqdists(xs, cbq), ref)
+
+
+def test_sketch_topk_paths_agree_on_boundary_ties(spark, monkeypatch):
+    """The quantizer sketch's collect-all path and its distributed
+    k-th-rank path select identical rows in identical (__h, __id) order,
+    also when the k-th boundary cuts a run of tied hashes."""
+    from parquet_sampler_spark.operators import similarity
+
+    # 7 ids per hash value 0..9; k = 23 keeps hashes 0-2 and the two
+    # lowest ids of the 7 tied at hash 3
+    rows = [(i, [float(i), 1.0], i * 9 % 10) for i in range(70)]
+    rel = spark.createDataFrame(
+        rows, "__id long, __v array<double>, __h long"
+    ).repartition(5)
+    k = 23
+    got = {}
+    for path, cutover in (("collect_all", 1 << 40), ("distributed", 0)):
+        monkeypatch.setattr(similarity, "_SKETCH_COLLECT_ALL_MAX", cutover)
+        got[path] = [tuple(r) for r in similarity._sketch_topk(rel, k)]
+    want = sorted(rows, key=lambda r: (r[2], r[0]))[:k]
+    assert got["collect_all"] == got["distributed"] == want
+    assert [r for r in want if r[2] == 3] == [(7, [7.0, 1.0], 3),
+                                              (17, [17.0, 1.0], 3)]

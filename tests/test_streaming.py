@@ -1501,6 +1501,39 @@ def test_fresh_checkpoint_over_live_state_raises(spark, tmp_path):
     got = {r.k: r.v for r in read_snapshot(spark, base).collect()}
     assert got == {1: 1.0, 2: 2.0, 3: 3.0}
 
+    # and so does the bucketed CDC sink, whose pointer names a manifest
+    from parquet_sampler_spark.streaming.incremental import (
+        incremental_merge_sink,
+        read_incremental_snapshot,
+    )
+
+    inc = str(tmp_path / "inc_state")
+
+    def merge_inc(ckpt):
+        stream = (spark.readStream.schema("k long, v double")
+                  .option("maxFilesPerTrigger", 1).parquet(str(cdc)))
+        q = (incremental_merge_sink(stream, inc, ["k"], nbuckets=4,
+                                    checkpoint_dir=str(tmp_path / ckpt))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    merge_inc("inc1")
+    assert published_epoch(inc) == 2
+    inc_run = published_run_id(inc)
+    assert inc_run is not None
+
+    add_change(3, 4, 4.0)
+    with pytest.raises(pyspark.errors.StreamingQueryException,
+                       match="fresh checkpoint"):
+        merge_inc("inc2")
+    assert published_epoch(inc) == 2
+    assert published_run_id(inc) == inc_run
+
+    merge_inc("inc1")
+    assert published_epoch(inc) == 3
+    got = {r.k: r.v for r in read_incremental_snapshot(spark, inc).collect()}
+    assert got == {1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0}
+
 
 def test_watermark_filter_lags_one_batch(spark, tmp_path):
     """Pin the EXACT drop-rule timing the streaming_late_watermark

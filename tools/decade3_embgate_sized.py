@@ -130,7 +130,7 @@ def main() -> int:
         )
         return emb, twins
 
-    def gate(kind: str, sf_dir: str, n: int, cache: dict):
+    def gate(kind: str, sf_dir: str, n: int):
         emb, twins = corpus_and_batch(sf_dir)
         if kind == "signbit":
             return embedding_neardup_incremental(
@@ -147,7 +147,7 @@ def main() -> int:
             emb, twins, "vec_id", "embedding", threshold=THRESHOLD,
             nlist=_sized_nlist(n), nprobe=NPROBE,
             train_per_cell=TRAIN_PER_CELL, verify_broadcast=False,
-            model_cache=cache, cache_key=(sf_dir, _sized_nlist(n)),
+            cache_key=("embgate_sized", sf_dir, _sized_nlist(n)),
         )
 
     tiers = []
@@ -190,7 +190,6 @@ def main() -> int:
         rows[kind] = {}
         for sf, sf_dir, n in tiers:
             registry.clear_caches()
-            cache: dict = {}
             if scaled_parts:
                 # partitions ∝ data: ~6.3k corpus rows per partition
                 # (32 at the 200k tier), floor 32 — the persisted
@@ -203,10 +202,10 @@ def main() -> int:
                       flush=True)
             spark.sparkContext._jvm.System.gc()
             t0 = time.perf_counter()
-            gate(kind, sf_dir, n, cache).count()   # standing-state build
+            gate(kind, sf_dir, n).count()   # standing-state build
             setup = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
-            cnt = gate(kind, sf_dir, n, cache).count()  # warm probe
+            cnt = gate(kind, sf_dir, n).count()  # warm probe
             probe = round(time.perf_counter() - t0, 3)
             if sf == "1":   # plan warmup tier, untimed
                 continue
