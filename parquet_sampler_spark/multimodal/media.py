@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_sampler_spark.sources.io import local_frame
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),     # image|audio|video
@@ -286,7 +288,7 @@ def synthetic_media(spark, n: int = 64, seed: int = 7) -> DataFrame:
                 i, kind, payload, f"application/x-{kind}",
                 None, None, 5000 if kind == "video" else None,
             ))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 RESIZED_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),

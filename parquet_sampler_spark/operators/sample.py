@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from parquet_sampler_spark.functions.hashing import MODULUS, lehmer_hash
 from parquet_sampler_spark.plans.cache import register
+from parquet_sampler_spark.sources.io import local_frame
 
 _PR = "__psx_pr"
 _RN = "__psx_rn"
@@ -608,8 +609,9 @@ def mixture_resample(
         for s in live
     }
     spark = df.sparkSession
-    thr_df = spark.createDataFrame(
-        [(s, thr[s]) for s in live], f"{source_col} string, __thr bigint"
+    thr_df = local_frame(
+        spark, [(s, thr[s]) for s in live],
+        f"{source_col} string, __thr bigint",
     )
     return (
         df.join(F.broadcast(thr_df), source_col, "inner")

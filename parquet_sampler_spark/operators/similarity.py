@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 
 from parquet_sampler_spark.functions.vectors import cosine, norm2
 from parquet_sampler_spark.plans.layout import spread
+from parquet_sampler_spark.sources.io import local_frame
 
 _RN = "__psx_rank"
 
@@ -1113,7 +1114,8 @@ def _block_candidates(
         "id_a", "__va",
         F.pmod(F.xxhash64("id_a"), F.lit(nblocks)).cast("int").alias("__blk"),
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(i, j) for i in range(nblocks) for j in range(i, nblocks)],
         "bi int, bj int",
     )

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_sampler_spark.sources.io import local_frame
+
 
 def _mg_update(counters: dict, key, w: int, cap: int) -> None:
     """Weighted Misra-Gries update: add ``w`` occurrences of ``key``
@@ -160,7 +162,7 @@ def heavy_hitters(df: DataFrame, col: str, k: int) -> DataFrame:
     # a -1 marker from any partition proposes NaN as a candidate; the
     # verify join relies on Spark's NaN-equality semantics (NaN = NaN
     # is true in join keys and groupBy), so NaN gets one exact count
-    # like any other key. createDataFrame's pickle path preserves NaN.
+    # like any other key. local_frame keeps NaN as NaN, never null.
     nan_candidate = any(
         r["__hh_n"] is not None and r["__hh_n"] < 0 for r in rows
     )
@@ -169,13 +171,11 @@ def heavy_hitters(df: DataFrame, col: str, k: int) -> DataFrame:
         cand_rows.append((float("nan"),))
     spark = df.sparkSession
     if not cand_rows:
-        empty = spark.createDataFrame([], schema=T.StructType(
+        empty = local_frame(spark, [], T.StructType(
             [key_field, T.StructField("cnt", T.LongType(), False)]
         ))
         return empty.withColumnRenamed("__hh_key", col)
-    candidates = spark.createDataFrame(
-        cand_rows, schema=T.StructType([key_field])
-    )
+    candidates = local_frame(spark, cand_rows, T.StructType([key_field]))
     return (
         src.join(F.broadcast(candidates), "__hh_key")
         .groupBy("__hh_key")

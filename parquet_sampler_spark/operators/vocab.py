@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parquet_sampler_spark.sources.io import local_frame
+
 
 def bpe_merge_rounds(
     df: DataFrame,
@@ -116,8 +118,8 @@ def bpe_merge_rounds(
         cur = nxt
     if prev_cached is not None:
         prev_cached.unpersist()
-    return spark.createDataFrame(
-        merges, "round int, pair string, merged string, cnt bigint"
+    return local_frame(
+        spark, merges, "round int, pair string, merged string, cnt bigint"
     )
 
 

@@ -22,12 +22,12 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     (by assumption small) input; benefit: full-width CPU parallelism for
     expensive downstream map work."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if _num_partitions(df) < target:
+    if num_partitions(df) < target:
         return df.repartition(target)
     return df
 
 
-def _num_partitions(df: DataFrame) -> int:
+def num_partitions(df: DataFrame) -> int:
     """Partition count of the physical plan without constructing a
     Python-side RDD: ``df.rdd`` builds a JVM→Python conversion pipeline
     (serializer + mapPartitions) per call, noticeable when every

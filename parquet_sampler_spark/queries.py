@@ -480,18 +480,22 @@ def _q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @row("metadata_counts", lambda: "SELECT " + ", ".join(
     f"(SELECT count(*) FROM {t}) AS {t}_rows" for t in TABLES
-))
+), plan=("LocalTableScan", "!ExistingRDD"))
 def _q_metadata_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Footer-metadata row counts, no data scan (sample.rs:31-34) —
-    computed via pyarrow footers, surfaced as a 1-row DataFrame."""
-    from parquet_sampler_spark.sources.io import metadata_row_count
+    computed via pyarrow footers, surfaced as a 1-row local relation
+    (no Python RDD, no Python worker)."""
+    from parquet_sampler_spark.sources.io import (
+        local_frame,
+        metadata_row_count,
+    )
 
     counts = {
         f"{t}_rows": metadata_row_count(f"{sf_dir}/{t}.parquet")
         for t in TABLES
     }
     schema = ", ".join(f"{c} long" for c in counts)
-    return spark.createDataFrame([tuple(counts.values())], schema=schema)
+    return local_frame(spark, [tuple(counts.values())], schema)
 
 
 _SNAP_SEED = 11

@@ -42,7 +42,7 @@ from parquet_sampler_spark.operators.similarity import (
 from parquet_sampler_spark.plans.cache import MEMO, persist
 from parquet_sampler_spark.queries import fitted, row
 from parquet_sampler_spark.queries import table as _t
-from parquet_sampler_spark.sources.io import read_parquet
+from parquet_sampler_spark.sources.io import local_frame, read_parquet
 from parquet_sampler_spark.streaming.sampling import run_stream_to_memory
 
 
@@ -6471,10 +6471,10 @@ def _q_manifest_prune(spark, sf_dir):
         path, "user_id", _MANIFEST_LO, _MANIFEST_HI
     )
     if not kept:  # conservative planner kept nothing => empty result
-        return spark.createDataFrame(
-            [], "event_type string, n_events bigint, total_value double"
+        return local_frame(
+            spark, [], "event_type string, n_events bigint, total_value double"
         )
-    df = spark.read.parquet(*kept).filter(
+    df = read_parquet(spark, kept).filter(
         (F.col("user_id") >= _MANIFEST_LO)
         & (F.col("user_id") <= _MANIFEST_HI)
     )
@@ -7270,8 +7270,8 @@ def _q_bpe_merges(spark, sf_dir):
     shared with the encode/packing rows — bench charges it to
     setup_bpe_model."""
     rows = _bpe_merges_cached(spark, sf_dir)
-    return spark.createDataFrame(
-        rows, "round int, pair string, merged string, cnt bigint"
+    return local_frame(
+        spark, rows, "round int, pair string, merged string, cnt bigint"
     )
 
 

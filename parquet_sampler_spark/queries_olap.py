@@ -18,6 +18,7 @@ from parquet_sampler_spark.queries import table as _t
 # a top-level import, so queries_ext's rows are declared before these in
 # any import order
 from parquet_sampler_spark.queries_ext import _events
+from parquet_sampler_spark.sources.io import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -759,7 +760,8 @@ def _merge_batch(spark, sf_dir):
         "c_mktsegment",
         (F.col("c_custkey") % 250 == 0).alias("is_deleted"),
     )
-    inserts = spark.createDataFrame(
+    inserts = local_frame(
+        spark,
         [(10_000_001 + i, f"NewCustomer#{i}", 0, 0.0, "BUILDING", False)
          for i in range(3)],
         "c_custkey long, c_name string, c_nationkey int, "

@@ -5,6 +5,21 @@ same code scales to a multi-executor cluster: AQE for runtime re-planning
 (skew joins, partition coalescing), UTC session timezone so results are
 comparable against UTC-naive engines (DuckDB oracle), and Arrow for any
 Pandas-UDF path.
+
+PySpark's DataFrame debugging context is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``, a static conf).
+With it on, every DataFrame and ``functions`` call is wrapped to record
+its Python call site in the JVM (an active-session lookup, a conf read,
+a stack walk and two py4j calls per API call); Spark's docs note its
+"non-trivial performance overhead", and on a registry row's driver-side
+build it costs tens of milliseconds per request. The only thing lost is
+the Python call site in an ``AnalysisException``'s DataFrame query
+context; the error itself and its message are unchanged.
+
+The driver heap defaults to a quarter of physical memory, capped at
+8 GiB, so a session that shares its host leaves room for the others;
+``SPARK_DRIVER_MEMORY`` overrides it. In ``local[N]`` mode the driver
+heap is the executors' heap too.
 """
 
 from __future__ import annotations
@@ -43,8 +58,17 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_heap())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_heap() -> str:
+    """A quarter of physical memory, capped at 8 GiB (``spark.driver.memory``
+    syntax)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 4, 8 << 30) >> 20}m"

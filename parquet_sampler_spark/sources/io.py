@@ -5,7 +5,8 @@ The reference reads whole files through the parquet crate's row iterator
 materialized row buffer (lib.rs:27). Spark subsumes both: vectorized
 Parquet scan with column pruning + predicate pushdown, and a distributed
 multi-file writer supporting every Spark type (the reference panics on
-INT96 / decimals / nested, lib.rs:122-124).
+INT96 / decimals / nested, lib.rs:122-124). Rows computed on the driver
+enter Spark through :func:`local_frame`, an Arrow local relation.
 """
 
 from __future__ import annotations
@@ -14,6 +15,11 @@ from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.classic.column import _to_seq
+from pyspark.sql.types import _make_type_verifier
+
+from parquet_sampler_spark.plans.layout import num_partitions
 
 # Hadoop glob metacharacters (SparkHadoopUtil.isGlobPath)
 _GLOB_CHARS = frozenset("{}[]*?\\")
@@ -21,11 +27,14 @@ _PARQUET_PKG = "org.apache.spark.sql.execution.datasources.parquet"
 
 
 def read_parquet(
-    spark: SparkSession, path: str, columns: list[str] | None = None
+    spark: SparkSession,
+    path: str | list[str],
+    columns: list[str] | None = None,
 ) -> DataFrame:
-    """Scan a Parquet path; optional projection (reference: join.rs:42-56
-    builds a one-column schema projection by hand — Catalyst's
-    ColumnPruning pushes ``select`` into the reader for free).
+    """Scan a Parquet path, or a list of paths as one relation; optional
+    projection (reference: join.rs:42-56 builds a one-column schema
+    projection by hand — Catalyst's ColumnPruning pushes ``select`` into
+    the reader for free).
 
     The schema is resolved on the driver from one file footer, as the
     reference does (``file_metadata.schema()``, sample.rs:83, join.rs:43),
@@ -37,8 +46,9 @@ def read_parquet(
     ``ParquetToSparkSchemaConverter``), so the Spark row-metadata key,
     ``binaryAsString``, INT96 and timestamp-NTZ settings apply exactly
     as in inference. The footer read is the file Spark's inference would
-    pick: the first data file by path, hidden names (``_*``, ``.*``,
-    ``*._COPYING_``) skipped.
+    pick: the first data file by qualified path over every listed path
+    (``ParquetUtils.splitFiles`` sorts them), hidden names (``_*``,
+    ``.*``, ``*._COPYING_``) skipped.
 
     Falls back to ``spark.read.parquet`` — inference, and Spark's own
     errors — for a glob, a directory with any
@@ -47,24 +57,25 @@ def read_parquet(
     on, no data file, and any failure of the footer read (a missing
     path, say).
     """
+    paths = [path] if isinstance(path, str) else list(path)
     schema = None
-    if not _GLOB_CHARS.intersection(path):
+    if not any(_GLOB_CHARS.intersection(p) for p in paths):
         try:
-            schema = _footer_schema(spark, path)
+            schema = _footer_schema(spark, paths)
         except (OSError, Py4JError, PySparkException):
             pass  # inference below raises Spark's own error, if any
     if schema is None:
-        df = spark.read.parquet(path)
+        df = spark.read.parquet(*paths)
     else:
-        df = DataFrame(
-            spark._jsparkSession.read().schema(schema).parquet(path), spark)
+        df = DataFrame(spark._jsparkSession.read().schema(schema).parquet(
+            _to_seq(spark.sparkContext, paths)), spark)
     if columns is not None:
         df = df.select(*columns)
     return df
 
 
-def _footer_schema(spark: SparkSession, path: str):
-    """The JVM ``StructType`` Spark's inference would give ``path``, read
+def _footer_schema(spark: SparkSession, paths: list[str]):
+    """The JVM ``StructType`` Spark's inference would give ``paths``, read
     from one footer on the driver; ``None`` where inference must run."""
     client = spark.sparkContext._gateway._gateway_client
 
@@ -77,31 +88,36 @@ def _footer_schema(spark: SparkSession, path: str):
     if state.conf().isParquetSchemaMergingEnabled():
         return None
     conf = state.newHadoopConf()
-    hpath = cls("org.apache.hadoop.fs.Path")(path)
-    fs = hpath.getFileSystem(conf)
-    # (name, is_dir) of each directory entry; None for a file
-    entries = None if fs.getFileStatus(hpath).isFile() else [
-        (st.getPath().getName(), st.isDirectory())
-        for st in fs.listStatus(hpath)]
-    if entries is None:
-        if _hidden(hpath.getName()):
-            return None
-        data = hpath
-    else:
-        if any(is_dir or name.startswith(("_metadata", "_common_metadata"))
-               for name, is_dir in entries):
-            return None
-        names = sorted(name for name, _ in entries if not _hidden(name))
-        if not names:
-            return None
-        data = cls("org.apache.hadoop.fs.Path")(hpath, names[0])
+    data = {}  # every data file: qualified path string -> its Path
+    for path in paths:
+        hpath = cls("org.apache.hadoop.fs.Path")(path)
+        fs = hpath.getFileSystem(conf)
+        status = fs.getFileStatus(hpath)
+        if status.isFile():
+            if _hidden(hpath.getName()):
+                return None
+            qualified = status.getPath()
+            data[qualified.toString()] = qualified
+            continue
+        for st in fs.listStatus(hpath):
+            qualified = st.getPath()
+            key = qualified.toString()
+            name = key.rsplit("/", 1)[-1]
+            if st.isDirectory() or name.startswith(
+                    ("_metadata", "_common_metadata")):
+                return None
+            if not _hidden(name):
+                data[key] = qualified
+    if not data:
+        return None
+    first = data[min(data)]
     metadata = cls(f"{_PARQUET_PKG}.ParquetFooterReader").readFooter(
         cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
-            data, conf),
+            first, conf),
         cls("org.apache.parquet.format.converter.ParquetMetadataConverter")
         .SKIP_ROW_GROUPS,
     )
-    footer = cls("org.apache.parquet.hadoop.Footer")(data, metadata)
+    footer = cls("org.apache.parquet.hadoop.Footer")(first, metadata)
     converter = cls(f"{_PARQUET_PKG}.ParquetToSparkSchemaConverter")(
         state.conf())
     return cls(f"{_PARQUET_PKG}.ParquetFileFormat").readSchemaFromFooter(
@@ -113,6 +129,61 @@ def _hidden(name: str) -> bool:
     shouldFilterOutPathName``, summary files aside)."""
     return ((name.startswith("_") and "=" not in name)
             or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over rows held on the driver, planned as a
+    ``LocalRelation`` (``LocalTableScan``): the rows reach the JVM as
+    one Arrow table, so no Python RDD is built and no Python worker
+    runs. ``createDataFrame`` over Python rows pickles them through a
+    ``Scan ExistingRDD`` instead, whose actions launch extra jobs.
+
+    ``rows`` are tuples in field order; ``schema`` is a ``StructType``
+    or a DDL string and is kept as given, nullability included. Every
+    row passes the type verifier ``createDataFrame`` applies (Arrow by
+    itself accepts a ``None`` in a non-nullable field), so an
+    out-of-range int or a missing required value raises as before. NaN
+    stays NaN, never null. A ``TimestampType`` column converts through
+    ``TimestampType.toInternal``, as the pickle path does (a naive
+    ``datetime`` is local time); a timestamp nested in an array, map or
+    struct is rejected rather than read as UTC.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for field, afield, values in zip(schema.fields, arrow_schema, columns):
+        if isinstance(field.dataType, T.TimestampType):
+            micros = [field.dataType.toInternal(v) for v in values]
+            arrays.append(pa.array(micros, pa.int64()).cast(afield.type))
+        elif _holds_timestamp(field.dataType):
+            raise TypeError(
+                f"local_frame: field {field.name!r} nests a timestamp "
+                f"({field.dataType.simpleString()}); only top-level "
+                "timestamp columns are converted")
+        else:
+            arrays.append(pa.array(values, afield.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def _holds_timestamp(dt: T.DataType) -> bool:
+    if isinstance(dt, T.ArrayType):
+        return _holds_timestamp(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _holds_timestamp(dt.keyType) or _holds_timestamp(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_holds_timestamp(f.dataType) for f in dt.fields)
+    return isinstance(dt, T.TimestampType)
 
 
 def metadata_row_count(path: str) -> int:
@@ -181,7 +252,7 @@ def compact_parquet(
     # repartition only if the input has FEWER partitions than wanted
     out = (
         df.coalesce(n_out)
-        if df.rdd.getNumPartitions() >= n_out else df.repartition(n_out)
+        if num_partitions(df) >= n_out else df.repartition(n_out)
     )
     out.write.mode("overwrite").parquet(out_path)
     return n_out

@@ -33,6 +33,7 @@ from parquet_sampler_spark.operators.sketches import (
     _mg_update,
     mg_weighted_updates,
 )
+from parquet_sampler_spark.sources.io import local_frame
 from parquet_sampler_spark.streaming.sinks import (
     read_snapshot,
     snapshot_stream,
@@ -87,7 +88,7 @@ def streaming_heavy_hitters(
         n += batch_n
         rows = [(key, int(c)) for key, c in sorted(counters.items())]
         rows.append((None, n))
-        return spark.createDataFrame(rows, "key string, cnt long")
+        return local_frame(spark, rows, "key string, cnt long")
 
     return snapshot_stream(keyed, summary_path, fold, checkpoint_dir)
 

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_sampler_spark.operators.merge import merge_upsert
+from parquet_sampler_spark.sources.io import read_parquet
 from parquet_sampler_spark.streaming.sinks import (
     _POINTER,
     _keep_last,
@@ -121,7 +122,7 @@ def read_incremental_snapshot(
             f"to read (every row was deleted)"
         )
     paths = [os.path.join(base_path, rel) for rel in manifest.values()]
-    df = spark.read.parquet(*paths)
+    df = read_parquet(spark, paths)
     return df.drop("__b") if "__b" in df.columns else df
 
 
@@ -209,8 +210,8 @@ def apply_cdc_batch_incremental(
         if published is not None else {}
     old_rel = [manifest[str(b)] for b in changed if str(b) in manifest]
     if old_rel:
-        base = spark.read.parquet(
-            *[os.path.join(base_path, rel) for rel in old_rel]
+        base = read_parquet(
+            spark, [os.path.join(base_path, rel) for rel in old_rel]
         )
         if "__b" in base.columns:
             base = base.drop("__b")

@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from parquet_sampler_spark.operators.sample import sample_exact
 from parquet_sampler_spark.sources.io import (
+    local_frame,
     metadata_row_count,
     read_parquet,
     write_parquet,
@@ -323,6 +324,29 @@ def test_read_picks_first_data_file_skipping_hidden(spark, tmp_path):
     assert read_parquet(spark, str(flat)).columns == ["a"]
 
 
+def test_read_schema_parity_multi_path(spark, tmp_path):
+    """Several paths (directories and files, listed out of order) read
+    as one relation with no job: the schema is the footer of the first
+    data file by qualified path over all of them, as Spark's inference
+    picks it, even where the files' schemas differ."""
+    for name, col in [("b_dir", "b"), ("a_dir", "a"), ("c_dir", "c")]:
+        spark.range(4).selectExpr(f"id AS {col}").coalesce(1).write.parquet(
+            str(tmp_path / name))
+    c_file = str(sorted((tmp_path / "c_dir").glob("part-*.parquet"))[0])
+    paths = [str(tmp_path / "b_dir"), c_file, str(tmp_path / "a_dir")]
+    df, jobs = _read_jobs(spark, lambda: read_parquet(spark, paths))
+    want = spark.read.parquet(*paths)
+    assert jobs == 0
+    assert df.schema.json() == want.schema.json()
+    assert df.columns == ["a"]
+    assert df.count() == want.count() == 12
+    # a glob among the paths keeps Spark's inference
+    globbed = paths[:1] + [f"{tmp_path}/a_dir/*.parquet"]
+    df, jobs = _read_jobs(spark, lambda: read_parquet(spark, globbed))
+    assert jobs >= 1
+    assert df.schema.json() == spark.read.parquet(*globbed).schema.json()
+
+
 def test_read_fallback_partitioned(spark, tmp_path):
     """A partitioned layout keeps Spark's inference (partition columns
     come from directory names)."""
@@ -409,3 +433,72 @@ def test_compact_parquet_reads_without_inference(spark, tmp_path):
         spark, lambda: spark.read.parquet(src).write.parquet(
             str(tmp_path / "plain")))
     assert jobs_compact == jobs_plain - 1
+
+
+# ---------------------------------------------------------------------------
+# local_frame: driver-local rows as an Arrow LocalRelation, value- and
+# schema-identical to createDataFrame's pickle path
+# ---------------------------------------------------------------------------
+
+LOCAL_SCHEMA = T.StructType([
+    T.StructField("s", T.StringType(), False),
+    T.StructField("i", T.IntegerType(), True),
+    T.StructField("l", T.LongType(), False),
+    T.StructField("b", T.BooleanType(), True),
+    T.StructField("bin", T.BinaryType(), True),
+    T.StructField("d", T.DoubleType(), True),
+    T.StructField("dt", T.DateType(), True),
+    T.StructField("dec", T.DecimalType(12, 2), True),
+    T.StructField("ts", T.TimestampType(), True),
+])
+
+LOCAL_ROWS = [
+    ("a", 1, 2**40, True, b"\x00\xff", float("nan"),
+     datetime.date(2024, 2, 29), Decimal("12.50"),
+     datetime.datetime(2024, 3, 1, 5, 6, 7, 891011)),
+    ("", -2**31, -2**63, False, bytearray(b"x"), None, None,
+     Decimal("-0.5"),
+     datetime.datetime(2024, 3, 1, 5, 6, 7, tzinfo=datetime.timezone.utc)),
+    ("c", None, 0, None, None, -0.0, datetime.date(1970, 1, 1), None, None),
+]
+
+
+def test_local_frame_matches_pickle_path(spark):
+    """Every type the driver-local call sites pass (and that
+    heavy_hitters' candidate keys can take): the same schema,
+    nullability included, and the same rows — NaN stays NaN, not null —
+    from a LocalTableScan instead of a Python RDD."""
+    for rows in (LOCAL_ROWS, []):
+        got = local_frame(spark, rows, LOCAL_SCHEMA)
+        want = spark.createDataFrame(rows, LOCAL_SCHEMA)
+        assert got.schema == want.schema == LOCAL_SCHEMA
+        # repr: a Row holding NaN never compares equal to itself
+        assert repr(got.collect()) == repr(want.collect())
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    ddl = "key string, cnt long"
+    assert local_frame(spark, [("k", 3), (None, 7)], ddl).schema == \
+        spark.createDataFrame([("k", 3)], ddl).schema
+    assert repr(local_frame(spark, [(None, 7)], ddl).collect()) == \
+        repr(spark.createDataFrame([(None, 7)], ddl).collect())
+
+
+@pytest.mark.parametrize("rows, schema", [
+    ([(None,)], "x int not null"),
+    ([(2**31,)], "x int"),
+    ([(True,)], "x long"),
+    ([(1, 2)], "x long"),
+])
+def test_local_frame_rejects_what_the_pickle_path_rejects(spark, rows, schema):
+    with pytest.raises(Exception) as want:
+        spark.createDataFrame(rows, schema)
+    with pytest.raises(type(want.value)):
+        local_frame(spark, rows, schema)
+
+
+def test_local_frame_rejects_nested_timestamps(spark):
+    """A timestamp inside an array would be read as UTC by Arrow but as
+    local time by the pickle path; it is refused, not guessed."""
+    schema = "ts array<timestamp>"
+    with pytest.raises(TypeError, match="nests a timestamp"):
+        local_frame(spark, [([datetime.datetime(2024, 1, 1)],)], schema)

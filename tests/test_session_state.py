@@ -181,6 +181,21 @@ def test_pandas_udfs_only_in_kernel_factories():
     )
 
 
+def test_driver_rows_only_through_local_frame():
+    found = _method_calls_outside("createDataFrame", {"local_frame"})
+    assert not found, (
+        "createDataFrame outside sources.io.local_frame (build driver-"
+        "local rows with local_frame, an Arrow LocalRelation, instead of "
+        "a pickled Python RDD): " + ", ".join(found)
+    )
+
+
+def test_dataframe_debugging_context_is_off(spark):
+    """get_spark turns off PySpark's per-call call-site capture."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_memory_sink_only_in_the_drain():
     found = _method_calls_outside(
         "format", {"run_stream_to_memory"}, arg="memory")
