@@ -509,15 +509,7 @@ def minhash_lsh_pairs(
             f"weighted={weighted!r}: expected bool, 'grouped', or "
             "'windowed' (alias of 'grouped')"
         )
-    r = num_hashes // bands
-
-    import random
-
     from parquet_sampler_spark.plans.layout import spread
-
-    rng = random.Random(seed)
-    A = [rng.randrange(1, _MINHASH_P) for _ in range(num_hashes)]
-    B = [rng.randrange(0, _MINHASH_P) for _ in range(num_hashes)]
 
     # shingled feeds both the signature pipeline and the verify joins —
     # persist so split/shingle runs once (measured faster than
@@ -637,24 +629,7 @@ def minhash_lsh_pairs(
             id_col,
             F.abs(F.xxhash64("__s") % F.lit(_MINHASH_P)).alias("__h"),
         )
-    sig = ex.groupBy(id_col).agg(*[
-        F.min(
-            F.pmod(F.col("__h") * F.lit(A[i]) + F.lit(B[i]),
-                   F.lit(_MINHASH_P))
-        ).alias(f"__m{i}")
-        for i in range(num_hashes)
-    ])
-
-    # Band table WITHOUT the shingle arrays: the explode multiplies rows
-    # by `bands`, and carrying a large string array through that (and
-    # the join shuffle) would multiply I/O by the same factor.
-    band_keys = [
-        F.xxhash64(*[F.col(f"__m{j * r + i}") for i in range(r)])
-        for j in range(bands)
-    ]
-    banded = _persist(sig.select(
-        id_col, F.posexplode(F.array(*band_keys)).alias("band", "bh")
-    ))
+    banded = _persist(_minhash_bands(ex, id_col, num_hashes, bands, seed))
 
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -781,6 +756,36 @@ def _minhash_params(num_hashes: int, seed: int):
     return A, B
 
 
+def _minhash_bands(
+    ex: DataFrame, id_col: str, num_hashes: int, bands: int, seed: int
+) -> DataFrame:
+    """The one signature pipeline from the hashed element stream
+    ``(id, __h)`` to the band table ``(id, band, bh)``, shared by
+    :func:`minhash_lsh_pairs` and :func:`minhash_index` so the index
+    and the self-join agree bit-for-bit: ``num_hashes`` min-aggregates
+    of ``(a_i·h + b_i) mod P`` (partial-combined map-side), then each
+    band's r signature values folded with ``xxhash64``. The band table
+    carries no shingle arrays: the explode multiplies rows by
+    ``bands``, and carrying a large string array through that (and the
+    join shuffle) would multiply I/O by the same factor."""
+    r = num_hashes // bands
+    A, B = _minhash_params(num_hashes, seed)
+    sig = ex.groupBy(id_col).agg(*[
+        F.min(
+            F.pmod(F.col("__h") * F.lit(A[i]) + F.lit(B[i]),
+                   F.lit(_MINHASH_P))
+        ).alias(f"__m{i}")
+        for i in range(num_hashes)
+    ])
+    band_keys = [
+        F.xxhash64(*[F.col(f"__m{j * r + i}") for i in range(r)])
+        for j in range(bands)
+    ]
+    return sig.select(
+        id_col, F.posexplode(F.array(*band_keys)).alias("band", "bh")
+    )
+
+
 def minhash_index(
     df: DataFrame,
     id_col: str,
@@ -805,17 +810,13 @@ def minhash_index(
     hashes), so index rows built in different jobs/sessions are
     identical — the property incrementality rests on.
 
-    Identical signature pipeline to :func:`minhash_lsh_pairs`' set
-    path: explode distinct shingles, hash to the 31-bit prime space
-    (exact in BIGINT under ANSI), ``num_hashes`` min-aggregates that
-    partial-combine map-side, band keys folded with ``xxhash64`` over
-    each band's r signature values. Docs with no shingles emit
-    nothing.
+    The element stream of :func:`minhash_lsh_pairs`' set path
+    (explode distinct shingles, hash to the 31-bit prime space — exact
+    in BIGINT under ANSI) feeds the same :func:`_minhash_bands`
+    signature/band pipeline. Docs with no shingles emit nothing.
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-    A, B = _minhash_params(num_hashes, seed)
     from parquet_sampler_spark.plans.layout import spread
 
     ex = (
@@ -826,20 +827,7 @@ def minhash_index(
             F.abs(F.xxhash64("__s") % F.lit(_MINHASH_P)).alias("__h"),
         )
     )
-    sig = ex.groupBy(id_col).agg(*[
-        F.min(
-            F.pmod(F.col("__h") * F.lit(A[i]) + F.lit(B[i]),
-                   F.lit(_MINHASH_P))
-        ).alias(f"__m{i}")
-        for i in range(num_hashes)
-    ])
-    band_keys = [
-        F.xxhash64(*[F.col(f"__m{j * r + i}") for i in range(r)])
-        for j in range(bands)
-    ]
-    return sig.select(
-        id_col, F.posexplode(F.array(*band_keys)).alias("band", "bh")
-    )
+    return _minhash_bands(ex, id_col, num_hashes, bands, seed)
 
 
 def minhash_probe_pairs(

@@ -1,4 +1,4 @@
-"""Corpus-statistics quality scoring: unigram-LM rarity filtering and
+"""Corpus-statistics quality scoring: n-gram-LM rarity filtering and
 fixed-point TF-IDF term extraction.
 
 Reference parity note: the reference engine (andreaskipf/parquet-sampler,
@@ -6,14 +6,15 @@ lib.rs:13-134) has no corpus-statistics operator — this module is part
 of the mandated beyond-reference LLM-pipeline scope. Semantics follow
 the CCNet recipe (Wenzek et al. 2020, "CCNet: Extracting High Quality
 Monolingual Datasets from Web Crawl Data"): score every document by a
-language-model statistic computed against corpus-wide token
+language-model statistic computed against corpus-wide gram
 frequencies, then keep/drop at a threshold. A true KenLM perplexity is
 a transcendental (sum of logs); both engines' ``ln`` differ in the last
 ulp, so the value-hash contract instead uses the EXACT-ARITHMETIC
-analog: per-token rarity ``total_tokens DIV cnt(token)`` (the integer
-part of inverse relative frequency — monotone in -log p), summed per
-document in bigint. Every number either engine produces is an integer,
-so the oracle comparison is exact at any row order.
+analog: per-gram rarity ``total DIV cnt(gram)`` (the integer part of
+inverse relative frequency — monotone in -log p) with integer
+stupid-backoff (:func:`ngram_rarity`), summed per document in bigint.
+Every number either engine produces is an integer, so the oracle
+comparison is exact at any row order.
 
 All plans are DataFrame-native (explode fused into the scan, map-side
 partial aggregation, broadcast of the vocabulary-sized statistics
@@ -25,269 +26,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parquet_sampler_spark.functions.text import word_ngrams
+from parquet_sampler_spark.plans.cache import persist as _persist
 
-# Driver-safety bound for the inline (model-shipped) scoring paths: a
+
+# Driver-safety bound for the inline (model-shipped) scoring path: a
 # CPython dict costs ~100 bytes/entry, so 2·10^7 entries ≈ 2 GB of
 # driver heap — past that the model no longer "ships everywhere" and
 # the broadcast/shuffle JOIN path is the right plan. The guard exists
-# because the 2^53 asserts bound value MAGNITUDE, not dictionary
+# because the 2^53 assert bounds value MAGNITUDE, not dictionary
 # CARDINALITY (r12 VERDICT): a boilerplate-free web corpus's bigram
 # vocabulary would OOM the driver before any magnitude assert fired.
 INLINE_VOCAB_MAX_ROWS = 20_000_000
 
+_COUNT_COL = {1: "n_tokens", 2: "n_bigrams", 3: "n_trigrams"}
 
-def _guard_inline_vocab(
-    model: DataFrame, what: str, bound: int | None = None
-) -> None:
+
+def _guard_inline_vocab(model: DataFrame, what: str) -> None:
     """Raise before a driver ``.collect()`` of a model table whose row
     count exceeds the driver-safe bound, naming the join path as the
     escape. One cheap ``count()`` per (persisted) model table. The
     bound is read at call time so deployments (and tests) can adjust
     ``INLINE_VOCAB_MAX_ROWS`` module-wide."""
-    if bound is None:
-        bound = INLINE_VOCAB_MAX_ROWS
     n = model.count()
-    if n > bound:
+    if n > INLINE_VOCAB_MAX_ROWS:
         raise ValueError(
-            f"{what} has {n} rows > inline bound {bound}; collecting "
-            "it would exhaust driver memory — use the join path "
-            "(inline=False), which broadcasts or shuffle-joins the "
+            f"{what} has {n} rows > inline bound {INLINE_VOCAB_MAX_ROWS}; "
+            "collecting it would exhaust driver memory — use the join "
+            "path (inline=False), which broadcasts or shuffle-joins the "
             "model instead of shipping it through the driver"
         )
 
 
-def _doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One row per token occurrence ``(id_col, tok)``; NULL / empty /
-    whitespace-only documents contribute nothing (matching
-    ``token_count``'s zero for them)."""
-    t = F.trim(F.col(text_col))
-    return (
-        df.filter(t.isNotNull() & (F.length(t) > 0))
-        .select(F.col(id_col), F.explode(F.split(t, " ")).alias("tok"))
-    )
-
-
-def unigram_rarity(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    scale: int = 1000,
-    keep_below: int | None = None,
-    broadcast_vocab: bool = True,
-    inline: bool = False,
-    fit_df: DataFrame | None = None,
-) -> DataFrame:
-    """CCNet-style unigram-LM quality scores, exact-arithmetic variant.
-
-    Corpus pass 1 builds the unigram table ``(tok, cnt)`` and the
-    total token count; each token's rarity is ``total DIV cnt``
-    (bigint — inverse relative frequency, the exact-integer analog of
-    surprisal). Corpus pass 2 scores each document:
-
-    * ``n_tokens`` — token occurrences in the document,
-    * ``sum_rarity`` — Σ rarity over its token occurrences,
-    * ``mean_rarity_scaled`` — ``(scale * sum_rarity) DIV n_tokens``
-      (fixed-point mean; high = rare/unusual tokens = the documents a
-      perplexity filter drops),
-    * ``kept`` — ``mean_rarity_scaled <= keep_below`` when a threshold
-      is given (CCNet keeps the low-perplexity head/middle).
-
-    Documents with zero tokens are excluded (they have no defined
-    score), exactly as in the SQL oracle.
-
-    Plan shape (the 100 TB contract): ONE token hash-aggregation
-    (map-side partial — cost ∝ corpus tokens, output ∝ vocabulary),
-    its 1-row total broadcast-crossed and the vocabulary table
-    broadcast back onto the token stream (a web-scale unigram vocab is
-    ~10^7 rows / ~100 MB — broadcastable; pass
-    ``broadcast_vocab=False`` for the AQE shuffle-join escape when it
-    is not), then ONE per-document aggregation. The corpus text itself
-    is never shuffled — only (id, tok) pairs.
-
-    ``inline=True`` switches scoring to the CCNet-at-scale shape: the
-    vocabulary rarity table is collected (bounded by VOCABULARY size —
-    the model, not the corpus) and shipped into an Arrow-batched
-    pandas UDF that scores each document in place — NO join, NO
-    shuffle of anything, the exact way CCNet distributes its KenLM
-    model to every worker. Same output, pinned equal to the default
-    path by test. Use it when a downstream stage would otherwise join
-    the per-doc verdict back to the corpus (the verdict list is
-    corpus-sized and stops broadcasting around ~10^8 docs; inline
-    scoring removes that join entirely, as curation-style pipelines
-    need at the 100 TB mark).
-
-    ``fit_df`` (cross-corpus / holdout mode) fits the unigram model on
-    a DIFFERENT corpus than the one being scored — the tokenizer
-    lifecycle (fit once, apply to every new corpus). Tokens of the
-    scored corpus absent from the fitted model take the CCNet-style
-    out-of-vocabulary rarity ``total DIV 1`` = ``total`` (an unseen
-    token is maximally surprising — rarer than any observed singleton,
-    whose rarity is ``total DIV 1`` too; the integer analog of
-    KenLM's unknown-token penalty). The join path becomes a LEFT join
-    with ``coalesce(rarity, total)``; the inline path uses
-    ``rar.get(tok, total)`` — identical by construction.
-    """
-    if scale < 1:
-        raise ValueError(f"scale must be >= 1, got {scale}")
-    fit = df if fit_df is None else fit_df
-    toks = _doc_tokens(fit, id_col, text_col)
-    vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    total = vocab.agg(
-        F.sum("cnt").cast("bigint").alias("__total")
-    )
-    rarity = (
-        vocab.crossJoin(F.broadcast(total))
-        .select(
-            "tok",
-            F.expr("__total DIV cnt").cast("bigint").alias("__rarity"),
-        )
-    )
-    if inline:
-        from parquet_sampler_spark.plans.cache import persist as _persist
-
-        scored = _score_inline(
-            df, id_col, text_col, _persist(vocab), scale
-        )
-    else:
-        if broadcast_vocab:
-            rarity = F.broadcast(rarity)
-        stoks = toks if fit_df is None else _doc_tokens(
-            df, id_col, text_col
-        )
-        if fit_df is None:
-            # self-corpus fit: every token is in the vocabulary —
-            # inner join, no OOV branch in the plan
-            tok_r = stoks.join(rarity, "tok").select(
-                id_col, F.col("__rarity").alias("__r")
-            )
-        else:
-            # cross-corpus scoring: unseen tokens coalesce to the
-            # max rarity `total` (the 1-row total broadcast-joined)
-            tok_r = (
-                stoks.join(rarity, "tok", "left")
-                .crossJoin(F.broadcast(total))
-                .select(
-                    id_col,
-                    F.coalesce(
-                        F.col("__rarity"),
-                        F.expr("__total DIV 1").cast("bigint"),
-                    ).alias("__r"),
-                )
-            )
-        scored = (
-            tok_r.groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-                F.sum("__r").cast("bigint").alias("sum_rarity"),
-            )
-            .select(
-                id_col,
-                "n_tokens",
-                "sum_rarity",
-                F.expr(f"({scale} * sum_rarity) DIV n_tokens")
-                .cast("bigint")
-                .alias("mean_rarity_scaled"),
-            )
-        )
-    if keep_below is not None:
-        scored = scored.withColumn(
-            "kept", F.col("mean_rarity_scaled") <= F.lit(keep_below)
-        )
-    return scored
-
-
-def _score_inline(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    vocab: DataFrame,
-    scale: int,
-) -> DataFrame:
-    """Inline (model-shipped) scoring: collect the vocabulary count
-    table (bounded by vocabulary size), derive the rarity dict and the
-    OOV rarity driver-side, and score every document in an
-    Arrow-batched ``mapInPandas`` pass — no join, no shuffle. Integer
-    arithmetic only, so the result is bit-identical to the join+agg
-    path at any batch split (pinned by test).
-
-    Tokenization parity with the join path (``_doc_tokens``): Spark's
-    ``F.trim`` strips SPACES only, so the pandas side strips
-    ``' '`` — not all whitespace — before splitting (a doc like
-    ``'\\tc x'`` must tokenize identically on both paths). Tokens
-    outside the shipped model score the OOV rarity ``total`` (see
-    :func:`unigram_rarity`); on a self-corpus fit that branch is
-    unreachable. The scoring pass is columnar pandas (split / explode
-    / dict-map / groupby-sum) — no Python-level per-document loop;
-    every rarity value is < 2^53 so the float64 round-trip through the
-    dict map is exact, and the per-document sums accumulate in int64.
-    """
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    _guard_inline_vocab(vocab, "unigram vocabulary")
-    rows = vocab.collect()
-    total = sum(r["cnt"] for r in rows)
-    # The exactness contract below (rarity values survive the float64
-    # round-trip through Series.map/fillna) requires every value —
-    # max = total — to be < 2^53. Fail loudly rather than corrupt
-    # sums on the OOV-bearing path (ADVICE r11).
-    if total >= 2**53:
-        raise ValueError(
-            f"fit corpus has {total} tokens >= 2**53; inline scoring "
-            "would lose exactness through float64 — use the join path"
-        )
-    rar = {r["tok"]: total // r["cnt"] for r in rows}
-    oov = total  # total DIV 1: an unseen token is maximally rare
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("n_tokens", T.LongType(), False),
-            T.StructField("sum_rarity", T.LongType(), False),
-            T.StructField("mean_rarity_scaled", T.LongType(), False),
-        ]
-    )
-    cols = [id_col, "n_tokens", "sum_rarity", "mean_rarity_scaled"]
-
-    def score(batches):
-        for pdf in batches:
-            t = pdf[text_col].dropna().str.strip(" ")
-            t = t[t != ""]
-            if t.empty:
-                yield pd.DataFrame(columns=cols).astype(
-                    {c: "int64" for c in cols[1:]}
-                )
-                continue
-            toks = t.str.split(" ")
-            n = toks.str.len().astype("int64")
-            ex = toks.explode()
-            # Series.map(dict) is a vectorized take; absent keys yield
-            # NaN -> fillna(oov). Values < 2^53, exact through float64.
-            r = ex.map(rar).fillna(oov).astype("int64")
-            s = r.groupby(level=0).sum()
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col].loc[t.index],
-                    "n_tokens": n,
-                    "sum_rarity": s,
-                    "mean_rarity_scaled": (scale * s) // n,
-                }
-            )
-            yield out
-
-    return df.select(id_col, text_col).mapInPandas(score, schema)
-
-
 def _doc_grams(
-    df: DataFrame, id_col: str, text_col: str, n: int, alias: str
+    df: DataFrame, id_col: str, text_col: str, n: int = 1, alias: str = "tok"
 ) -> DataFrame:
     """One row per consecutive ``n``-token gram ``(id_col, alias)``
     (space-joined, from the shared gram builder functions/text.
     word_ngrams — same tokenize/slide/short-doc semantics as every
-    shingle in the repo). Documents with fewer than ``n`` tokens
-    contribute nothing (empty gram array)."""
-    from parquet_sampler_spark.functions.text import word_ngrams
-
+    shingle in the repo; ``n=1`` is one row per token occurrence).
+    NULL / empty / whitespace-only documents and documents with fewer
+    than ``n`` tokens contribute nothing (matching ``token_count``'s
+    zero for them)."""
     t = F.trim(F.col(text_col))
     return (
         df.filter(t.isNotNull() & (F.length(t) > 0))
@@ -298,16 +78,12 @@ def _doc_grams(
     )
 
 
-def _doc_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Consecutive token pairs ``(id_col, bg)`` — see
-    :func:`_doc_grams`."""
-    return _doc_grams(df, id_col, text_col, 2, "bg")
-
-
-def bigram_rarity_backoff(
+def ngram_rarity(
     df: DataFrame,
     id_col: str,
     text_col: str,
+    order: int,
+    *,
     scale: int = 1000,
     penalty: int = 3,
     keep_below: int | None = None,
@@ -315,126 +91,85 @@ def bigram_rarity_backoff(
     inline: bool = False,
     broadcast_vocab: bool = True,
 ) -> DataFrame:
-    """Order-2 rarity with stupid-backoff: the exact-integer analog of
-    a bigram LM quality score (the depth extension of
-    :func:`unigram_rarity` — pair counts are counts, so the
-    transcendental-free contract extends verbatim).
+    """CCNet-style n-gram-LM quality scores (``order`` 1, 2 or 3),
+    exact-arithmetic variant with integer stupid-backoff.
 
-    ``inline=True`` ships BOTH model tables (bigram + unigram rarity
-    dicts, bounded by vocabulary size) into an Arrow-batched
-    ``mapInPandas`` scorer — no join, no shuffle, the CCNet
-    model-to-every-worker shape :func:`unigram_rarity` documents;
-    bit-identical output (pinned by the shared oracle). The caveat is
-    sharper at order 2: a web-scale BIGRAM vocabulary can be 10-100×
-    the unigram one — if the collected model no longer fits the
-    driver/executors, stay on the (broadcast or shuffle) join path.
+    Model (fit corpus): for every order k ≤ ``order`` the gram counts
+    ``cnt_k`` and ``total_k = Σ cnt_k``; a gram's rarity is ``r_k =
+    total_k DIV cnt_k`` (bigint — inverse relative frequency, the
+    exact-integer analog of surprisal). Each gram ``w1…wn`` of the
+    scored corpus scores
 
-    Model (fit corpus): bigram counts ``cnt2(w1 w2)`` over consecutive
-    token pairs with ``total2 = Σ cnt2``, plus the unigram table
-    ``cnt1(w)`` / ``total1`` for backoff. Scoring, per bigram of the
-    scored corpus:
+        ``coalesce(r_n(w1…wn), p·r_{n−1}(w2…wn), …, p^{n−1}·r_1(wn),
+        p^{n−1}·total_1)``
 
-    * seen bigram → ``total2 DIV cnt2`` (inverse relative frequency),
-    * unseen bigram, seen second word → ``penalty · (total1 DIV
-      cnt1(w2))`` — the integer analog of stupid backoff
-      (Brants et al. 2007: score λ·S(w2) when the bigram is unseen;
-      ``penalty`` ≈ 1/λ, an integer so both engines agree exactly),
-    * unseen second word → ``penalty · total1`` (the OOV maximum, as
-      in :func:`unigram_rarity`'s cross-corpus mode).
+    with ``p = penalty`` — the integer analog of stupid backoff
+    (Brants et al. 2007: score λ·S(suffix) when the gram is unseen;
+    ``penalty`` ≈ 1/λ, an integer so both engines agree exactly). The
+    last term is the CCNet-style out-of-vocabulary rarity: an unseen
+    token is maximally surprising (rarer than any observed singleton,
+    whose rarity is ``total_1 DIV 1`` too; the integer analog of
+    KenLM's unknown-token penalty). At ``order=1`` the rule is
+    ``coalesce(r_1, total_1)``.
 
-    Output per document with ≥ 1 bigram: ``n_bigrams``,
-    ``sum_rarity``, ``mean_rarity_scaled = (scale·sum) DIV n``, and
-    ``kept`` when ``keep_below`` is given. Documents with < 2 tokens
-    are excluded (no defined bigram score), mirroring the unigram
-    operator's zero-token exclusion.
+    Output per document with ≥ ``order`` tokens:
 
-    Plan shape: bigrams are a pure per-row array expression (no
-    shuffle to form them); the model tables aggregate map-side-partial
-    (output ∝ bigram vocabulary); scoring is two BROADCAST left joins
-    (bigram rarity on ``bg``, unigram backoff on the extracted second
-    word) over the bigram stream plus one per-document aggregation.
-    A web-scale bigram vocabulary is larger than the unigram one
-    (~10⁸ rows can exceed broadcast) — pass ``broadcast_vocab=False``
-    to drop the hints and let AQE pick shuffle joins for both model
-    tables, exactly ``unigram_rarity``'s escape. The inline shape is
-    NOT that escape: it collects BOTH model tables to the driver
-    (guarded at ``INLINE_VOCAB_MAX_ROWS``), so past broadcast capacity
-    the shuffle-join path is the only correct plan.
+    * ``n_tokens`` / ``n_bigrams`` / ``n_trigrams`` — grams in the
+      document,
+    * ``sum_rarity`` — Σ score over its grams,
+    * ``mean_rarity_scaled`` — ``(scale * sum_rarity) DIV n`` (fixed-
+      point mean; high = rare/unusual text = the documents a
+      perplexity filter drops),
+    * ``kept`` — ``mean_rarity_scaled <= keep_below`` when a threshold
+      is given (CCNet keeps the low-perplexity head/middle).
+
+    ``fit_df`` (cross-corpus / holdout mode) fits the model on a
+    DIFFERENT corpus than the one being scored — the tokenizer
+    lifecycle (fit once, apply to every new corpus). Without it the
+    model is fit on ``df`` itself, every scored top-order gram is in
+    the model, and the join scorer inner-joins the top-order table
+    only — no backoff joins, no OOV branch in the plan.
+
+    Plan shape (the 100 TB contract): ONE scan of the fit corpus feeds
+    ONE ``(order, gram)`` hash aggregate (map-side partial — cost ∝
+    corpus tokens, output ∝ vocabulary); its rarity table is broadcast
+    back onto the scored gram stream once per backoff level (back-off
+    keys are per-row string expressions on the same stream — no extra
+    corpus pass), then ONE per-document aggregation. The corpus text
+    itself is never shuffled. A web-scale bigram/trigram vocabulary
+    (~10⁸ rows) can exceed broadcast — pass ``broadcast_vocab=False``
+    to drop the hints and let AQE pick shuffle joins.
+
+    ``inline=True`` switches scoring to the CCNet-at-scale shape: the
+    model tables are collected (bounded by VOCABULARY size — the
+    model, not the corpus; each order guarded at
+    ``INLINE_VOCAB_MAX_ROWS``) and shipped into an Arrow-batched
+    ``mapInPandas`` scorer that scores each document in place — NO
+    join, NO shuffle of anything, the way CCNet distributes its KenLM
+    model to every worker. Same output, pinned equal to the join path
+    by test. Use it when a downstream stage would otherwise join the
+    per-doc verdict back to the corpus (the verdict list is
+    corpus-sized and stops broadcasting around ~10^8 docs). It is NOT
+    the escape for a model past broadcast capacity: it collects the
+    model to the driver, so there the shuffle-join path is the only
+    correct plan.
     """
+    if order not in _COUNT_COL:
+        raise ValueError(f"order must be 1, 2 or 3, got {order}")
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
     if penalty < 1:
         raise ValueError(f"penalty must be >= 1, got {penalty}")
-    from parquet_sampler_spark.plans.cache import persist as _persist
-
-    fit = df if fit_df is None else fit_df
-    fb = _doc_bigrams(fit, id_col, text_col)
-    vocab2 = fb.groupBy("bg").agg(F.count(F.lit(1)).alias("cnt2"))
-    tot2 = vocab2.agg(F.sum("cnt2").cast("bigint").alias("__total2"))
-    # The three model tables (bigram rarity, unigram backoff, totals)
-    # are fit-once/score-many state — vocabulary-sized, so persisting
-    # them is cheap, and a session scoring several corpora against one
-    # fit (the production lifecycle) re-reads the model instead of
-    # re-aggregating the fit corpus per action.
-    rar2 = _persist(
-        vocab2.crossJoin(F.broadcast(tot2))
-        .select(
-            "bg",
-            F.expr("__total2 DIV cnt2").cast("bigint").alias("__r2"),
-        )
-    )
-    ft = _doc_tokens(fit, id_col, text_col)
-    vocab1 = ft.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt1"))
-    tot1 = _persist(
-        vocab1.agg(F.sum("cnt1").cast("bigint").alias("__total1"))
-    )
-    rar1 = _persist(
-        vocab1.crossJoin(F.broadcast(tot1))
-        .select(
-            F.col("tok").alias("__w2"),
-            F.expr("__total1 DIV cnt1").cast("bigint").alias("__r1"),
-        )
-    )
+    counts = _fit_counts(df if fit_df is None else fit_df, text_col, order)
     if inline:
-        scored = _score_bigram_inline(
-            df, id_col, text_col, rar2, rar1, tot1, scale, penalty
+        scored = _score_inline(
+            df, id_col, text_col, counts, order, scale, penalty
         )
-        if keep_below is not None:
-            scored = scored.withColumn(
-                "kept", F.col("mean_rarity_scaled") <= F.lit(keep_below)
-            )
-        return scored
-    sb = _doc_bigrams(df, id_col, text_col).withColumn(
-        "__w2", F.element_at(F.split(F.col("bg"), " "), 2)
-    )
-    rar2_side = F.broadcast(rar2) if broadcast_vocab else rar2
-    rar1_side = F.broadcast(rar1) if broadcast_vocab else rar1
-    scored = (
-        sb.join(rar2_side, "bg", "left")
-        .join(rar1_side, "__w2", "left")
-        .crossJoin(F.broadcast(tot1))
-        .select(
-            id_col,
-            F.coalesce(
-                F.col("__r2"),
-                F.lit(penalty) * F.col("__r1"),
-                F.lit(penalty) * F.col("__total1"),
-            ).alias("__r"),
+    else:
+        scored = _score_join(
+            df, id_col, text_col, counts, order, scale, penalty,
+            self_fit=fit_df is None, broadcast_vocab=broadcast_vocab,
         )
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-            F.sum("__r").cast("bigint").alias("sum_rarity"),
-        )
-        .select(
-            id_col,
-            "n_bigrams",
-            "sum_rarity",
-            F.expr(f"({scale} * sum_rarity) DIV n_bigrams")
-            .cast("bigint")
-            .alias("mean_rarity_scaled"),
-        )
-    )
     if keep_below is not None:
         scored = scored.withColumn(
             "kept", F.col("mean_rarity_scaled") <= F.lit(keep_below)
@@ -442,370 +177,219 @@ def bigram_rarity_backoff(
     return scored
 
 
-def _score_bigram_inline(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    rar2: DataFrame,
-    rar1: DataFrame,
-    tot1: DataFrame,
-    scale: int,
-    penalty: int,
-) -> DataFrame:
-    """Inline (model-shipped) order-2 scoring: collect both rarity
-    tables (bounded by vocabulary size) and score every document in an
-    Arrow-batched ``mapInPandas`` pass — no join, no shuffle.
-    Bit-identical to the join path (shared oracle): the scoring pass
-    is columnar pandas (split / explode / within-doc shift / dict-map
-    / coalesce / groupby-sum), no Python-level per-document loop.
+def _fit_counts(fit: DataFrame, text_col: str, order: int) -> DataFrame:
+    """The fitted model: one ``(__o, __g, __cnt)`` row per distinct
+    gram of every order 1..``order``.
 
-    Exactness contract: every mapped value must survive the float64
-    round-trip through ``Series.map``/``fillna`` — rarity values are
-    ≤ the fit totals and the backoff multiplies by ``penalty``, so
-    both ``total2`` and ``penalty·total1`` must be < 2^53 (asserted,
-    as in :func:`_score_inline`)."""
-    import pandas as pd
+    ONE tokenize pass fits all model orders (r14 optimization round,
+    guide §2.3 "aggregate before you shuffle" / §1.2): deriving each
+    order's vocabulary with its own scan→explode→aggregate pipeline
+    costs one full corpus scan per order. Here every order's grams
+    explode from one scan as (order, gram) rows into ONE hash
+    aggregate, so the corpus is read once and shuffled once. Counts
+    per (order, gram) are identical to the per-order pipelines', so
+    the fitted model — and every scored row — is value-identical."""
 
-    from pyspark.sql import types as T
-
-    _guard_inline_vocab(rar2, "bigram model")
-    _guard_inline_vocab(rar1, "unigram backoff model")
-    d2 = {r["bg"]: r["__r2"] for r in rar2.collect()}
-    d1 = {r["__w2"]: r["__r1"] for r in rar1.collect()}
-    total1 = tot1.collect()[0]["__total1"]
-    total2_max = max(d2.values(), default=0)
-    if total2_max >= 2**53 or penalty * total1 >= 2**53:
-        raise ValueError(
-            "fit corpus too large for exact float64 round-trip in "
-            "inline scoring — use the join path"
+    def tagged(k):
+        return F.transform(
+            word_ngrams(text_col, k),
+            lambda g: F.struct(F.lit(k).alias("o"), g.alias("g")),
         )
-    oov1 = total1  # total1 DIV 1, as in the join path's final coalesce
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("n_bigrams", T.LongType(), False),
-            T.StructField("sum_rarity", T.LongType(), False),
-            T.StructField("mean_rarity_scaled", T.LongType(), False),
-        ]
-    )
-    cols = [id_col, "n_bigrams", "sum_rarity", "mean_rarity_scaled"]
-
-    def score(batches):
-        for pdf in batches:
-            t = pdf[text_col].dropna().str.strip(" ")
-            t = t[t != ""]
-            empty = pd.DataFrame(columns=cols).astype(
-                {c: "int64" for c in cols[1:]}
-            )
-            if t.empty:
-                yield empty
-                continue
-            toks = t.str.split(" ")
-            ex = toks.explode()
-            w = pd.DataFrame({"row": ex.index, "w1": ex.values})
-            # consecutive pairs via ONE global shift + boundary mask —
-            # a row pairs with its successor iff both belong to the
-            # same document, so masking on the shifted row label is
-            # exactly the per-doc shift without pandas' groupby.shift
-            # (measured 4.5× slower than the join path at sf10; the
-            # groupby was the hot spot — the global-shift form is
-            # pure vectorized ops)
-            w["w2"] = w["w1"].shift(-1)
-            w = w[w["row"].eq(w["row"].shift(-1)).fillna(False)]
-            if w.empty:
-                yield empty
-                continue
-            bg = w["w1"] + " " + w["w2"]
-            # coalesce(r2, penalty*r1(w2), penalty*total1): values
-            # < 2^53, exact through float64
-            backoff = w["w2"].map(d1).fillna(oov1) * penalty
-            r = bg.map(d2).fillna(backoff).astype("int64")
-            s = r.groupby(w["row"]).sum()
-            n = w.groupby("row").size().astype("int64")
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col].loc[s.index],
-                    "n_bigrams": n,
-                    "sum_rarity": s,
-                    "mean_rarity_scaled": (scale * s) // n,
-                }
-            )
-            yield out[cols]
-
-    return df.select(id_col, text_col).mapInPandas(score, schema)
-
-
-def trigram_rarity_backoff(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    scale: int = 1000,
-    penalty: int = 3,
-    keep_below: int | None = None,
-    fit_df: DataFrame | None = None,
-    inline: bool = False,
-    broadcast_vocab: bool = True,
-) -> DataFrame:
-    """Order-3 rarity with a FULL stupid-backoff chain — the CCNet-
-    style filter order production actually ships (r13, VERDICT r12
-    #6; counts are counts, so :func:`bigram_rarity_backoff`'s
-    transcendental-free contract extends verbatim one more order).
-
-    Model (fit corpus): trigram counts ``cnt3`` / ``total3``, bigram
-    counts ``cnt2`` / ``total2`` over the trailing-pair keys, unigram
-    ``cnt1`` / ``total1``. Scoring, per trigram ``w1 w2 w3`` of the
-    scored corpus (Brants et al. 2007 chained one level deeper —
-    each back-off step multiplies by the integer ``penalty`` ≈ 1/λ):
-
-    * seen trigram → ``total3 DIV cnt3``,
-    * unseen trigram, seen trailing bigram ``w2 w3`` →
-      ``penalty · (total2 DIV cnt2)``,
-    * unseen bigram, seen last word ``w3`` →
-      ``penalty² · (total1 DIV cnt1(w3))``,
-    * unseen last word → ``penalty² · total1`` (the OOV maximum).
-
-    Output per document with ≥ 1 trigram (≥ 3 tokens):
-    ``n_trigrams``, ``sum_rarity``, ``mean_rarity_scaled =
-    (scale·sum) DIV n``, plus ``kept`` when ``keep_below`` is given.
-
-    Plan shape: identical to the order-2 operator with one more
-    vocabulary-sized broadcast left join (trigram → bigram → unigram,
-    all on the SAME exploded trigram stream — no extra pass over the
-    corpus; back-off keys are per-row string expressions). The same
-    ``broadcast_vocab=False`` AQE shuffle-join escape applies to all
-    three model tables; ``inline=True`` ships all three dicts into
-    the Arrow scorer (cardinality-guarded per model table, exactness
-    asserts extended to ``penalty²·total1``).
-    """
-    if scale < 1:
-        raise ValueError(f"scale must be >= 1, got {scale}")
-    if penalty < 1:
-        raise ValueError(f"penalty must be >= 1, got {penalty}")
-    from parquet_sampler_spark.plans.cache import persist as _persist
-
-    fit = df if fit_df is None else fit_df
-    # ONE tokenize pass fits all three model orders (r14 optimization
-    # round, guide §2.3 "aggregate before you shuffle" / §1.2): the
-    # r13 form derived trigram, bigram and unigram vocabularies with
-    # three separate scan→explode→aggregate pipelines — three full
-    # corpus scans per fit. Here every order's grams explode from one
-    # scan as (order, gram) rows into ONE hash aggregate; the three
-    # per-order reductions below share that aggregate's exchange via
-    # ReuseExchange, so the corpus is read once and shuffled once.
-    # Counts per (order, gram) are identical to the per-order
-    # pipelines', so the fitted model — and every scored row — is
-    # value-identical (oracle unchanged).
-    from parquet_sampler_spark.functions.text import word_ngrams
 
     t = F.trim(F.col(text_col))
-    tagged = F.concat(
-        F.transform(
-            word_ngrams(text_col, 3),
-            lambda g: F.struct(F.lit(3).alias("o"), g.alias("g")),
-        ),
-        F.transform(
-            word_ngrams(text_col, 2),
-            lambda g: F.struct(F.lit(2).alias("o"), g.alias("g")),
-        ),
-        F.transform(
-            F.split(t, " "),
-            lambda g: F.struct(F.lit(1).alias("o"), g.alias("g")),
-        ),
-    )
-    # persisted: the per-order filters below would otherwise push
-    # through the aggregate and fork three scan pipelines again —
-    # and the (order, gram) count table IS the fitted model, the
-    # same vocabulary-bounded state the rar tables persist
-    counts = _persist(
+    return (
         fit.filter(t.isNotNull() & (F.length(t) > 0))
-        .select(F.explode(tagged).alias("og"))
+        .select(
+            F.explode(
+                F.concat(*[tagged(k) for k in range(1, order + 1)])
+            ).alias("og")
+        )
         .select(F.col("og.o").alias("__o"), F.col("og.g").alias("__g"))
         .groupBy("__o", "__g")
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    vocab3 = counts.filter(F.col("__o") == 3).select(
-        F.col("__g").alias("tg"), F.col("__cnt").alias("cnt3")
-    )
-    tot3 = vocab3.agg(F.sum("cnt3").cast("bigint").alias("__total3"))
-    rar3 = _persist(
-        vocab3.crossJoin(F.broadcast(tot3))
-        .select(
-            "tg",
-            F.expr("__total3 DIV cnt3").cast("bigint").alias("__r3"),
-        )
-    )
-    vocab2 = counts.filter(F.col("__o") == 2).select(
-        F.col("__g").alias("bg"), F.col("__cnt").alias("cnt2")
-    )
-    tot2 = vocab2.agg(F.sum("cnt2").cast("bigint").alias("__total2"))
-    rar2 = _persist(
-        vocab2.crossJoin(F.broadcast(tot2))
-        .select(
-            F.col("bg").alias("__bg2"),
-            F.expr("__total2 DIV cnt2").cast("bigint").alias("__r2"),
-        )
-    )
-    vocab1 = counts.filter(F.col("__o") == 1).select(
-        F.col("__g").alias("tok"), F.col("__cnt").alias("cnt1")
-    )
-    tot1 = _persist(
-        vocab1.agg(F.sum("cnt1").cast("bigint").alias("__total1"))
-    )
-    rar1 = _persist(
-        vocab1.crossJoin(F.broadcast(tot1))
-        .select(
-            F.col("tok").alias("__w3"),
-            F.expr("__total1 DIV cnt1").cast("bigint").alias("__r1"),
-        )
-    )
-    if inline:
-        scored = _score_trigram_inline(
-            df, id_col, text_col, rar3, rar2, rar1, tot1, tot2,
-            scale, penalty,
-        )
-    else:
-        st = _doc_grams(df, id_col, text_col, 3, "tg").select(
-            id_col,
-            "tg",
-            F.concat_ws(
-                " ",
-                F.element_at(F.split(F.col("tg"), " "), 2),
-                F.element_at(F.split(F.col("tg"), " "), 3),
-            ).alias("__bg2"),
-            F.element_at(F.split(F.col("tg"), " "), 3).alias("__w3"),
-        )
-        r3_side = F.broadcast(rar3) if broadcast_vocab else rar3
-        r2_side = F.broadcast(rar2) if broadcast_vocab else rar2
-        r1_side = F.broadcast(rar1) if broadcast_vocab else rar1
-        scored = (
-            st.join(r3_side, "tg", "left")
-            .join(r2_side, "__bg2", "left")
-            .join(r1_side, "__w3", "left")
-            .crossJoin(F.broadcast(tot1))
-            .select(
-                id_col,
-                F.coalesce(
-                    F.col("__r3"),
-                    F.lit(penalty) * F.col("__r2"),
-                    F.lit(penalty * penalty) * F.col("__r1"),
-                    F.lit(penalty * penalty) * F.col("__total1"),
-                ).alias("__r"),
-            )
-            .groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_trigrams"),
-                F.sum("__r").cast("bigint").alias("sum_rarity"),
-            )
-            .select(
-                id_col,
-                "n_trigrams",
-                "sum_rarity",
-                F.expr(f"({scale} * sum_rarity) DIV n_trigrams")
-                .cast("bigint")
-                .alias("mean_rarity_scaled"),
-            )
-        )
-    if keep_below is not None:
-        scored = scored.withColumn(
-            "kept", F.col("mean_rarity_scaled") <= F.lit(keep_below)
-        )
-    return scored
 
 
-def _score_trigram_inline(
+def _score_join(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    rar3: DataFrame,
-    rar2: DataFrame,
-    rar1: DataFrame,
-    tot1: DataFrame,
-    tot2: DataFrame,
+    counts: DataFrame,
+    order: int,
+    scale: int,
+    penalty: int,
+    *,
+    self_fit: bool,
+    broadcast_vocab: bool,
+) -> DataFrame:
+    """Join scorer: the rarity table LEFT-joined once per backoff level
+    on the scored gram's length-k suffix ``__g{k}`` (``__g{order}`` is
+    the gram itself), then the coalesce chain and one per-document
+    aggregation. A self-corpus fit joins the top level only, INNER:
+    every scored gram is in the model.
+
+    ONE rarity table serves every level: a k-gram holds exactly k−1
+    spaces (tokens never hold one), so a length-k key can only match
+    an order-k row. Every consumer reads ``counts`` unfiltered — a
+    per-order filter would push through the aggregate and fork one
+    fit-corpus scan per order — so the totals, the rarity table and
+    every level's join share the one aggregate's exchange."""
+    n_col = _COUNT_COL[order]
+    totals = F.broadcast(counts.groupBy().agg(*[
+        F.sum(F.when(F.col("__o") == k, F.col("__cnt")))
+        .cast("bigint")
+        .alias(f"__t{k}")
+        for k in range(1, order + 1)
+    ]))
+    t_k = ", ".join(f"__t{k}" for k in range(1, order + 1))
+    rar = counts.crossJoin(totals).select(
+        "__g",
+        F.expr(f"element_at(array({t_k}), __o) DIV __cnt")
+        .cast("bigint")
+        .alias("__r"),
+    )
+    if broadcast_vocab:
+        rar = F.broadcast(rar)
+    levels = [order] if self_fit else list(range(order, 0, -1))
+    toks = F.split(F.col(f"__g{order}"), " ")
+    grams = _doc_grams(df, id_col, text_col, order, f"__g{order}").select(
+        "*",
+        *[
+            F.concat_ws(" ", F.slice(toks, order - k + 1, k)).alias(f"__g{k}")
+            for k in levels[1:]
+        ],
+    )
+    for k in levels:
+        grams = grams.join(
+            rar.select(
+                F.col("__g").alias(f"__g{k}"), F.col("__r").alias(f"__r{k}")
+            ),
+            f"__g{k}",
+            "inner" if self_fit else "left",
+        )
+    if self_fit:
+        r = F.col(f"__r{order}")
+    else:
+        grams = grams.crossJoin(totals)
+        r = F.coalesce(
+            *[F.lit(penalty ** (order - k)) * F.col(f"__r{k}") for k in levels],
+            F.lit(penalty ** (order - 1)) * F.col("__t1"),
+        )
+    return (
+        grams.select(id_col, r.alias("__r"))
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias(n_col),
+            F.sum("__r").cast("bigint").alias("sum_rarity"),
+        )
+        .select(
+            id_col,
+            n_col,
+            "sum_rarity",
+            F.expr(f"({scale} * sum_rarity) DIV {n_col}")
+            .cast("bigint")
+            .alias("mean_rarity_scaled"),
+        )
+    )
+
+
+def _score_inline(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    counts: DataFrame,
+    order: int,
     scale: int,
     penalty: int,
 ) -> DataFrame:
-    """Inline (model-shipped) order-3 scoring: all three rarity tables
-    collected (each cardinality-guarded) and applied in one
-    Arrow-batched ``mapInPandas`` pass — no join, no shuffle;
-    bit-identical to the join path (shared oracle). Consecutive
-    triples come from TWO global shifts + a same-document boundary
-    mask (the r12 groupby-free pairing, extended one position).
+    """Inline (model-shipped) scoring: collect the ``(__o, __g,
+    __cnt)`` model (each order cardinality-guarded), derive the
+    rarity dict and per-order totals driver-side, and score every
+    document in one Arrow-batched ``mapInPandas`` pass — no join, no
+    shuffle. Integer arithmetic only, so the result is bit-identical
+    to the join path at any batch split (pinned by test).
+
+    Tokenization parity with the join path (``_doc_grams``): Spark's
+    ``F.trim`` strips SPACES only, so the pandas side strips ``' '`` —
+    not all whitespace — before splitting (a doc like ``'\\tc x'``
+    must tokenize identically on both paths). The scoring pass is
+    columnar pandas (split / explode / shift / dict-map / coalesce /
+    groupby-sum) — no Python-level per-document loop.
 
     Exactness contract: every mapped value must survive the float64
-    round-trip — the largest possible scores are ``total3``,
-    ``penalty·total2`` and ``penalty²·total1``, all asserted
-    < 2^53."""
+    round-trip through ``Series.map``/``fillna``; the largest score
+    reachable at backoff level k is ``p^{order−k}·total_k``, so each
+    is asserted < 2^53 (fail loudly rather than corrupt sums), and the
+    per-document sums accumulate in int64."""
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    _guard_inline_vocab(rar3, "trigram model")
-    _guard_inline_vocab(rar2, "bigram backoff model")
-    _guard_inline_vocab(rar1, "unigram backoff model")
-    d3 = {r["tg"]: r["__r3"] for r in rar3.collect()}
-    d2 = {r["__bg2"]: r["__r2"] for r in rar2.collect()}
-    d1 = {r["__w3"]: r["__r1"] for r in rar1.collect()}
-    total1 = tot1.collect()[0]["__total1"]
-    total2 = tot2.collect()[0]["__total2"]
-    total3_max = max(d3.values(), default=0)
-    if (
-        total3_max >= 2**53
-        or penalty * total2 >= 2**53
-        or penalty * penalty * total1 >= 2**53
+    # persisted: the guard counts and the collect each re-read it
+    counts = _persist(counts)
+    for k in range(1, order + 1):
+        _guard_inline_vocab(
+            counts.filter(F.col("__o") == k), f"order-{k} model"
+        )
+    rows = counts.collect()
+    totals = [0] * (order + 1)
+    for o, _, c in rows:
+        totals[o] += c
+    if any(
+        penalty ** (order - k) * totals[k] >= 2**53
+        for k in range(1, order + 1)
     ):
         raise ValueError(
-            "fit corpus too large for exact float64 round-trip in "
-            "inline scoring — use the join path"
+            f"fit corpus too large: penalty**(order-k) * total_k >= 2**53 "
+            f"(totals {totals[1:]}); inline scoring would lose exactness "
+            "through float64 — use the join path"
         )
-    oov1 = total1
+    # one dict for every order, as in the join path: a k-gram holds
+    # exactly k−1 spaces, so keys of different orders never collide
+    rar = {g: totals[o] // c for o, g, c in rows}
+    n_col = _COUNT_COL[order]
+    cols = [id_col, n_col, "sum_rarity", "mean_rarity_scaled"]
     schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("n_trigrams", T.LongType(), False),
-            T.StructField("sum_rarity", T.LongType(), False),
-            T.StructField("mean_rarity_scaled", T.LongType(), False),
-        ]
+        [df.schema[id_col]]
+        + [T.StructField(c, T.LongType(), False) for c in cols[1:]]
     )
-    cols = [id_col, "n_trigrams", "sum_rarity", "mean_rarity_scaled"]
-    p2 = penalty * penalty
 
     def score(batches):
         for pdf in batches:
             t = pdf[text_col].dropna().str.strip(" ")
-            t = t[t != ""]
-            empty = pd.DataFrame(columns=cols).astype(
-                {c: "int64" for c in cols[1:]}
-            )
-            if t.empty:
-                yield empty
-                continue
-            toks = t.str.split(" ")
-            ex = toks.explode()
-            w = pd.DataFrame({"row": ex.index, "w1": ex.values})
-            # consecutive triples: two global shifts, rows kept iff
-            # positions i, i+1, i+2 all belong to the same document
-            # (the r12 global-shift pairing — no groupby.shift)
-            w["w2"] = w["w1"].shift(-1)
-            w["w3"] = w["w1"].shift(-2)
-            same = w["row"].eq(w["row"].shift(-1)).fillna(False) & (
-                w["row"].eq(w["row"].shift(-2)).fillna(False)
-            )
+            ex = t[t != ""].str.split(" ").explode()
+            w = pd.DataFrame({"row": ex.index, "w0": ex.values})
+            # consecutive grams via order−1 GLOBAL shifts + a
+            # same-document mask: a position starts a gram iff the
+            # next order−1 positions belong to the same document, so
+            # masking on the shifted row label is exactly the per-doc
+            # shift without pandas' groupby.shift (measured 4.5×
+            # slower than the join path at sf10; the groupby was the
+            # hot spot — the global-shift form is pure vectorized ops)
+            same = pd.Series(True, index=w.index)
+            for j in range(1, order):
+                w[f"w{j}"] = w["w0"].shift(-j)
+                same &= w["row"].eq(w["row"].shift(-j))
             w = w[same]
             if w.empty:
-                yield empty
+                yield pd.DataFrame(columns=cols).astype(
+                    {c: "int64" for c in cols[1:]}
+                )
                 continue
-            tg = w["w1"] + " " + w["w2"] + " " + w["w3"]
-            bg2 = w["w2"] + " " + w["w3"]
-            # coalesce(r3, p*r2, p²*r1, p²*total1), exact in float64
-            back1 = w["w3"].map(d1).fillna(oov1) * p2
-            back2 = bg2.map(d2).mul(penalty).fillna(back1)
-            r = tg.map(d3).fillna(back2).astype("int64")
-            s = r.groupby(w["row"]).sum()
+            # the backoff chain folded from the shortest suffix up:
+            # Series.map(dict) yields NaN for an unseen key, which
+            # fillna replaces with the next-shorter level's score
+            key = w[f"w{order - 1}"]
+            r = key.map(rar).fillna(totals[1]) * penalty ** (order - 1)
+            for k in range(2, order + 1):
+                key = w[f"w{order - k}"] + " " + key
+                r = key.map(rar).mul(penalty ** (order - k)).fillna(r)
+            s = r.astype("int64").groupby(w["row"]).sum()
             n = w.groupby("row").size().astype("int64")
             out = pd.DataFrame(
                 {
                     id_col: pdf[id_col].loc[s.index],
-                    "n_trigrams": n,
+                    n_col: n,
                     "sum_rarity": s,
                     "mean_rarity_scaled": (scale * s) // n,
                 }
@@ -849,7 +433,7 @@ def tfidf_top_terms(
         raise ValueError(f"k must be >= 1, got {k}")
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
-    toks = _doc_tokens(df, id_col, text_col)
+    toks = _doc_grams(df, id_col, text_col)
     tf = (
         toks.groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
@@ -907,7 +491,7 @@ def gopher_rules(
     their conjunction, so the caller sees WHY a document was dropped,
     not just that it was — the standard pre-training heuristic gate
     that complements the model-based rarity filter
-    (:func:`unigram_rarity`).
+    (:func:`ngram_rarity`).
 
     Rules (every comparison INTEGER arithmetic — thresholds applied as
     rational multiples, e.g. mean word length ``3 <= chars/n <= 10``
@@ -984,7 +568,7 @@ def cooccurrence_topk(
     co-occurrence, kept transcendental-free as
     ``(scale · pair_docs · n_docs) DIV (df(x) · df(y))`` (monotone in
     PMI = its log; exact integers in both engines — the corpus-
-    statistics convention of :func:`unigram_rarity` / tf-idf).
+    statistics convention of :func:`ngram_rarity` / tf-idf).
     Collocation mining for corpus analysis: which token pairs travel
     together far more than chance.
 
@@ -1009,7 +593,7 @@ def cooccurrence_topk(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    toks = _doc_tokens(df, id_col, text_col).distinct()
+    toks = _doc_grams(df, id_col, text_col).distinct()
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
     n_docs = toks.select(id_col).distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("__ndocs")
@@ -1090,13 +674,13 @@ def ccnet_buckets(
        residual skew surface; raise ``scale`` to spread them);
     4. the NTILE tile from the rank in pure integer arithmetic.
 
-    The per-doc scores come from :func:`unigram_rarity` (self-corpus
+    The per-doc scores come from :func:`ngram_rarity` (self-corpus
     fit); the language column rides a narrow (id, lang) join — text
     never shuffles.
     """
     if nbuckets < 1:
         raise ValueError(f"nbuckets must be >= 1, got {nbuckets}")
-    scored = unigram_rarity(df, id_col, text_col, scale=scale)
+    scored = ngram_rarity(df, id_col, text_col, 1, scale=scale)
     langs = df.select(F.col(id_col), F.col(lang_col).alias("lang"))
     s = scored.join(langs, id_col).select(
         id_col, "lang", "mean_rarity_scaled"
@@ -1175,7 +759,7 @@ def dsir_affinity(
     are, select the high-affinity slice.
 
     DSIR's log importance weight is Σ_tok [log p_target(tok) − log
-    p_raw(tok)] — transcendental, so (the :func:`unigram_rarity`
+    p_raw(tok)] — transcendental, so (the :func:`ngram_rarity`
     convention) this uses the exact-integer surrogate
 
         affinity = Σ_tok [rarity_raw(tok) − rarity_target(tok)]
@@ -1206,8 +790,8 @@ def dsir_affinity(
     """
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
-    toks = _doc_tokens(df, id_col, text_col)
-    ttoks = _doc_tokens(target_df, id_col, text_col)
+    toks = _doc_grams(df, id_col, text_col)
+    ttoks = _doc_grams(target_df, id_col, text_col)
     rawv = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__cr"))
     tgtv = ttoks.groupBy("tok").agg(F.count(F.lit(1)).alias("__ct"))
     rtot = rawv.agg(F.sum("__cr").cast("bigint").alias("__tr"))

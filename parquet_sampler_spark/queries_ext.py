@@ -1337,7 +1337,7 @@ def _q_curation_incremental(spark, sf_dir):
         exact_dup_probe,
         minhash_admit_batch,
     )
-    from parquet_sampler_spark.operators.quality import unigram_rarity
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     corpus, batch = _incremental_split(spark, sf_dir)
     losers_e = exact_dup_probe(
@@ -1348,8 +1348,8 @@ def _q_curation_incremental(spark, sf_dir):
         corpus, survivors, "doc_id", "text",
         n=_JACCARD_N, threshold=_JACCARD_T, num_hashes=32, bands=8,
     )
-    return unigram_rarity(
-        admitted, "doc_id", "text",
+    return ngram_rarity(
+        admitted, "doc_id", "text", 1,
         scale=_RARITY_SCALE, keep_below=_RARITY_KEEP_BELOW,
         fit_df=corpus,
     )
@@ -7444,13 +7444,14 @@ def _q_quality_rarity(spark, sf_dir):
     document text never shuffles. All-integer output so the value
     hash is order-independent (a true KenLM perplexity sums
     transcendentals; see operators/quality.py docstring)."""
-    from parquet_sampler_spark.operators.quality import unigram_rarity
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     d = _t(spark, sf_dir, "documents")
-    return unigram_rarity(
+    return ngram_rarity(
         d,
         "doc_id",
         "text",
+        1,
         scale=_RARITY_SCALE,
         keep_below=_RARITY_KEEP_BELOW,
     )
@@ -8088,12 +8089,12 @@ def _q_curation_pipeline(spark, sf_dir):
     thresholds broadcast, one cum-sum window per pack shard."""
     from parquet_sampler_spark.operators.dedup import exact_dedup
     from parquet_sampler_spark.operators.packing import pack_sequences
-    from parquet_sampler_spark.operators.quality import unigram_rarity
+    from parquet_sampler_spark.operators.quality import ngram_rarity
     from parquet_sampler_spark.operators.sample import mixture_resample
 
     d = _t(spark, sf_dir, "documents")
-    scored = unigram_rarity(
-        d, "doc_id", "text",
+    scored = ngram_rarity(
+        d, "doc_id", "text", 1,
         scale=_RARITY_SCALE, keep_below=_RARITY_KEEP_BELOW,
     )
     kept = d.join(
@@ -8173,13 +8174,13 @@ def _q_curation_pipeline_bpe(spark, sf_dir):
     charged to setup_bpe_model."""
     from parquet_sampler_spark.operators.dedup import exact_dedup
     from parquet_sampler_spark.operators.packing import pack_sequences
-    from parquet_sampler_spark.operators.quality import unigram_rarity
+    from parquet_sampler_spark.operators.quality import ngram_rarity
     from parquet_sampler_spark.operators.sample import mixture_resample
     from parquet_sampler_spark.operators.vocab import bpe_encode
 
     d = _t(spark, sf_dir, "documents")
-    scored = unigram_rarity(
-        d, "doc_id", "text",
+    scored = ngram_rarity(
+        d, "doc_id", "text", 1,
         scale=_RARITY_SCALE, keep_below=_RARITY_KEEP_BELOW,
     )
     kept = d.join(
@@ -8336,13 +8337,14 @@ def _q_quality_rarity_inline(spark, sf_dir):
     (plan-audited: zero Exchange). Shares quality_rarity's oracle
     verbatim because the integer arithmetic is bit-identical by
     construction (also pytest-pinned against the join path)."""
-    from parquet_sampler_spark.operators.quality import unigram_rarity
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     d = _t(spark, sf_dir, "documents")
-    return unigram_rarity(
+    return ngram_rarity(
         d,
         "doc_id",
         "text",
+        1,
         scale=_RARITY_SCALE,
         keep_below=_RARITY_KEEP_BELOW,
         inline=True,
@@ -8370,24 +8372,11 @@ def _q_quality_rarity_holdout(spark, sf_dir):
     identical perturbation (the dq_quarantine injection pattern).
     Unseen tokens score the max rarity ``total DIV 1``; the scoring
     pass is the zero-Exchange inline shape (plan-audited)."""
-    from parquet_sampler_spark.operators.quality import unigram_rarity
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
-    d = _t(spark, sf_dir, "documents")
-    is_train = F.col("source").isin(_BPE_TRAIN_SRC)
-    fit = d.filter(is_train)
-    hold = d.filter(~is_train).select(
-        "doc_id",
-        F.when(
-            F.pmod(F.col("doc_id"), F.lit(4)) == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" unk"),
-                F.pmod(F.col("doc_id"), F.lit(3)).cast("string"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    return unigram_rarity(
-        hold, "doc_id", "text",
+    fit, hold = _rarity_holdout_split(spark, sf_dir)
+    return ngram_rarity(
+        hold, "doc_id", "text", 1,
         scale=_RARITY_SCALE, keep_below=_RARITY_KEEP_BELOW,
         fit_df=fit, inline=True,
     )
@@ -8443,13 +8432,11 @@ def _q_quality_rarity_bigram(spark, sf_dir):
     stupid-backoff (penalty · unigram rarity), and unseen-word OOV
     (penalty · total1) via the appended unk tokens. All integers —
     the value-hash compares exact arithmetic, never a float log."""
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit, hold = _rarity_holdout_split(spark, sf_dir)
-    return bigram_rarity_backoff(
-        hold, "doc_id", "text",
+    return ngram_rarity(
+        hold, "doc_id", "text", 2,
         scale=_RARITY_SCALE, penalty=_BIGRAM_PENALTY, fit_df=fit,
     )
 
@@ -8466,13 +8453,11 @@ def _q_quality_rarity_bigram_inline(spark, sf_dir):
     scored corpus, the same promotion quality_rarity_inline made for
     order 1. Bit-identical integer output: the oracle is
     quality_rarity_bigram's verbatim."""
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit, hold = _rarity_holdout_split(spark, sf_dir)
-    return bigram_rarity_backoff(
-        hold, "doc_id", "text",
+    return ngram_rarity(
+        hold, "doc_id", "text", 2,
         scale=_RARITY_SCALE, penalty=_BIGRAM_PENALTY, fit_df=fit,
         inline=True,
     )
@@ -8535,8 +8520,8 @@ FROM hscore
 
 
 def _rarity_holdout_split(spark, sf_dir):
-    """The shared fit/holdout split of the order-2/order-3 rarity
-    rows: fit on the TRAIN sources, score the rest with the
+    """The shared fit/holdout split of the holdout, order-2 and
+    order-3 rarity rows: fit on the TRAIN sources, score the rest with the
     deterministic ``unk<k>`` perturbation (so the OOV branch is
     value-hash-exercised at gate sf)."""
     d = _t(spark, sf_dir, "documents")
@@ -8556,7 +8541,11 @@ def _rarity_holdout_split(spark, sf_dir):
     return fit, hold
 
 
-@row("quality_rarity_trigram", lambda: _sql_quality_rarity_trigram())
+@row("quality_rarity_trigram", lambda: _sql_quality_rarity_trigram(),
+     # all three model tables broadcast back onto the per-row trigram
+     # stream; no Python, no cartesian beyond the broadcast 1-row totals
+     plan=("BroadcastHashJoin", "!CartesianProduct", "!BatchEvalPython",
+           "!ArrowEvalPython"))
 def _q_quality_rarity_trigram(spark, sf_dir):
     """Order-3 rarity with the FULL stupid-backoff chain (r13,
     VERDICT r12 #6 — the order CCNet-style filters actually ship):
@@ -8569,18 +8558,20 @@ def _q_quality_rarity_trigram(spark, sf_dir):
     and exact-integer contract as the order-2 row; one more
     vocabulary-sized broadcast join on the same exploded trigram
     stream — no extra corpus pass."""
-    from parquet_sampler_spark.operators.quality import (
-        trigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit, hold = _rarity_holdout_split(spark, sf_dir)
-    return trigram_rarity_backoff(
-        hold, "doc_id", "text",
+    return ngram_rarity(
+        hold, "doc_id", "text", 3,
         scale=_RARITY_SCALE, penalty=_BIGRAM_PENALTY, fit_df=fit,
     )
 
 
-@row("quality_rarity_trigram_inline", lambda: _sql_quality_rarity_trigram())
+@row("quality_rarity_trigram_inline", lambda: _sql_quality_rarity_trigram(),
+     # the model collects at plan-build time; the executed scoring plan
+     # must be the zero-Exchange shape (scan -> project -> Arrow scorer)
+     plan=("!Exchange", "!BroadcastHashJoin", "!SortMergeJoin",
+           "!CartesianProduct", "!BatchEvalPython"))
 def _q_quality_rarity_trigram_inline(spark, sf_dir):
     """The zero-Exchange inline shape of the order-3 scorer (r13):
     all THREE model tables collected (each cardinality-guarded
@@ -8589,13 +8580,11 @@ def _q_quality_rarity_trigram_inline(spark, sf_dir):
     same-document mask (the r12 groupby-free pairing extended one
     position). Bit-identical integer output: the oracle is
     quality_rarity_trigram's verbatim."""
-    from parquet_sampler_spark.operators.quality import (
-        trigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit, hold = _rarity_holdout_split(spark, sf_dir)
-    return trigram_rarity_backoff(
-        hold, "doc_id", "text",
+    return ngram_rarity(
+        hold, "doc_id", "text", 3,
         scale=_RARITY_SCALE, penalty=_BIGRAM_PENALTY, fit_df=fit,
         inline=True,
     )

@@ -15,8 +15,8 @@ from __future__ import annotations
 import pytest
 
 from parquet_sampler_spark.operators.quality import (
+    ngram_rarity,
     tfidf_top_terms,
-    unigram_rarity,
 )
 
 
@@ -33,7 +33,7 @@ def test_rarity_hand_trace(spark):
     df = _docs(spark, ["a a b", "a b c"])
     got = {
         r["doc_id"]: (r["n_tokens"], r["sum_rarity"], r["mean_rarity_scaled"])
-        for r in unigram_rarity(df, "doc_id", "text", scale=10).collect()
+        for r in ngram_rarity(df, "doc_id", "text", 1, scale=10).collect()
     }
     # doc0: 2+2+3 = 7, mean = 70 DIV 3 = 23; doc1: 2+3+6 = 11,
     # mean = 110 DIV 3 = 36
@@ -42,8 +42,8 @@ def test_rarity_hand_trace(spark):
 
 def test_rarity_keep_threshold_and_empty_docs(spark):
     df = _docs(spark, ["a a b", "a b c", "", "   ", None])
-    out = unigram_rarity(
-        df, "doc_id", "text", scale=10, keep_below=30
+    out = ngram_rarity(
+        df, "doc_id", "text", 1, scale=10, keep_below=30
     ).collect()
     # empty/whitespace/NULL docs are excluded entirely
     assert sorted(r["doc_id"] for r in out) == [0, 1]
@@ -54,21 +54,21 @@ def test_rarity_keep_threshold_and_empty_docs(spark):
 def test_rarity_rejects_bad_scale(spark):
     df = _docs(spark, ["a"])
     with pytest.raises(ValueError):
-        unigram_rarity(df, "doc_id", "text", scale=0)
+        ngram_rarity(df, "doc_id", "text", 1, scale=0)
 
 
 def test_rarity_shuffle_vocab_path_matches_broadcast(spark):
     df = _docs(spark, ["a a b x", "a b c", "c c y z"])
     b = sorted(
         tuple(r)
-        for r in unigram_rarity(
-            df, "doc_id", "text", broadcast_vocab=True
+        for r in ngram_rarity(
+            df, "doc_id", "text", 1, broadcast_vocab=True
         ).collect()
     )
     s = sorted(
         tuple(r)
-        for r in unigram_rarity(
-            df, "doc_id", "text", broadcast_vocab=False
+        for r in ngram_rarity(
+            df, "doc_id", "text", 1, broadcast_vocab=False
         ).collect()
     )
     assert b == s
@@ -152,9 +152,9 @@ def test_rarity_invariant_under_row_order_and_partitioning(spark):
     a = _docs(spark, texts)
     b = _docs(spark, texts).orderBy(F_desc_doc()).repartition(7)
     ra = sorted(tuple(r) for r in
-                unigram_rarity(a, "doc_id", "text").collect())
+                ngram_rarity(a, "doc_id", "text", 1).collect())
     rb = sorted(tuple(r) for r in
-                unigram_rarity(b, "doc_id", "text").collect())
+                ngram_rarity(b, "doc_id", "text", 1).collect())
     assert ra == rb
     ta = sorted(tuple(r) for r in
                 tfidf_top_terms(a, "doc_id", "text").collect())
@@ -198,7 +198,7 @@ def test_quality_family_matches_independent_reference(spark):
     got_r = {
         r["doc_id"]: (r["n_tokens"], r["sum_rarity"],
                       r["mean_rarity_scaled"])
-        for r in unigram_rarity(df, "doc_id", "text").collect()
+        for r in ngram_rarity(df, "doc_id", "text", 1).collect()
     }
     assert got_r == exp_r
 
@@ -234,11 +234,11 @@ def test_rarity_inline_matches_join_path(spark):
         [(i, t) for i, t in enumerate(texts)],
         "doc_id bigint, text string",
     ).repartition(5)
-    a = sorted(tuple(r) for r in unigram_rarity(
-        df, "doc_id", "text", scale=777, keep_below=5000
+    a = sorted(tuple(r) for r in ngram_rarity(
+        df, "doc_id", "text", 1, scale=777, keep_below=5000
     ).collect())
-    b = sorted(tuple(r) for r in unigram_rarity(
-        df, "doc_id", "text", scale=777, keep_below=5000, inline=True
+    b = sorted(tuple(r) for r in ngram_rarity(
+        df, "doc_id", "text", 1, scale=777, keep_below=5000, inline=True
     ).collect())
     assert a == b and len(a) == 81
 
@@ -250,11 +250,11 @@ def test_rarity_inline_nonspace_whitespace_parity(spark):
     # paths (tokens keep their tab/newline bytes).
     texts = ["\tc x", "a\nb a", " y z ", "p\tq", None, "  "]
     df = _docs(spark, texts)
-    a = sorted(tuple(r) for r in unigram_rarity(
-        df, "doc_id", "text", scale=10
+    a = sorted(tuple(r) for r in ngram_rarity(
+        df, "doc_id", "text", 1, scale=10
     ).collect())
-    b = sorted(tuple(r) for r in unigram_rarity(
-        df, "doc_id", "text", scale=10, inline=True
+    b = sorted(tuple(r) for r in ngram_rarity(
+        df, "doc_id", "text", 1, scale=10, inline=True
     ).collect())
     assert a == b and len(a) == 4
     # '\tc' is its own token (F.trim left the tab alone)
@@ -275,8 +275,8 @@ def test_rarity_holdout_oov_value_pinned(spark):
         got = {
             r["doc_id"]: (r["n_tokens"], r["sum_rarity"],
                           r["mean_rarity_scaled"])
-            for r in unigram_rarity(
-                new, "doc_id", "text", scale=10, fit_df=fit, **kw
+            for r in ngram_rarity(
+                new, "doc_id", "text", 1, scale=10, fit_df=fit, **kw
             ).collect()
         }
         # doc100: 2 + 6(OOV) = 8, mean 40; doc101: 12, mean 60;
@@ -297,11 +297,11 @@ def test_rarity_holdout_join_and_inline_agree_at_scale(spark):
         [(1000 + i, t) for i, t in enumerate(new_texts)],
         "doc_id bigint, text string",
     ).repartition(4)
-    a = sorted(tuple(r) for r in unigram_rarity(
-        new, "doc_id", "text", scale=321, keep_below=900, fit_df=fit
+    a = sorted(tuple(r) for r in ngram_rarity(
+        new, "doc_id", "text", 1, scale=321, keep_below=900, fit_df=fit
     ).collect())
-    b = sorted(tuple(r) for r in unigram_rarity(
-        new, "doc_id", "text", scale=321, keep_below=900, fit_df=fit,
+    b = sorted(tuple(r) for r in ngram_rarity(
+        new, "doc_id", "text", 1, scale=321, keep_below=900, fit_df=fit,
         inline=True,
     ).collect())
     assert a == b and len(a) == 51
@@ -314,14 +314,14 @@ def test_quality_rarity_holdout_registry_row_exercises_oov(spark):
     # least one OOV contribution (= total train tokens, the max
     # rarity) — strictly larger than any in-vocab token's rarity
     from parquet_sampler_spark import queries_ext as QX
-    from parquet_sampler_spark.operators.quality import _doc_tokens
+    from parquet_sampler_spark.operators.quality import _doc_grams
 
     import pyspark.sql.functions as F
 
     sf = "/root/testdata/sf0.001"
     d = spark.read.parquet(f"{sf}/documents.parquet")
     train = d.filter(F.col("source").isin(QX._BPE_TRAIN_SRC))
-    total = _doc_tokens(train, "doc_id", "text").count()
+    total = _doc_grams(train, "doc_id", "text").count()
     rows = {r["doc_id"]: r for r in QX._q_quality_rarity_holdout(
         spark, sf
     ).collect()}
@@ -342,11 +342,81 @@ def test_inline_rarity_rejects_huge_fit_corpus(spark):
     from parquet_sampler_spark.operators.quality import _score_inline
 
     df = spark.createDataFrame([(1, "a b")], "doc_id bigint, text string")
-    vocab = spark.createDataFrame(
-        [("a", 2**53)], "tok string, cnt bigint"
+    counts = spark.createDataFrame(
+        [(1, "a", 2**53)], "__o int, __g string, __cnt bigint"
     )
     with pytest.raises(ValueError, match="2\\*\\*53"):
-        _score_inline(df, "doc_id", "text", vocab, 1_000_000)
+        _score_inline(df, "doc_id", "text", counts, 1, 1_000_000, 3)
+
+
+@pytest.mark.parametrize("order", [1, 2, 3])
+def test_inline_exactness_guard_at_each_order(spark, order):
+    # the guard bounds p^(order-k) * total_k for EVERY backoff level k:
+    # a unigram total just under 2^53 passes alone but trips the guard
+    # once the order-n chain scales it by penalty^(n-1)
+    from parquet_sampler_spark.operators.quality import _score_inline
+
+    df = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
+    p = 3
+    total1 = -(-(2**53) // p ** (order - 1))  # least with p^(n-1)·t1 >= 2^53
+    rows = [(1, "a", total1)] + [(k, "x", 1) for k in range(2, order + 1)]
+    counts = spark.createDataFrame(rows, "__o int, __g string, __cnt bigint")
+    with pytest.raises(ValueError, match="2\\*\\*53.*join path"):
+        _score_inline(df, "doc_id", "text", counts, order, 1, p)
+    # one unit below the bound the same model scores
+    rows[0] = (1, "a", total1 - 1)
+    counts = spark.createDataFrame(rows, "__o int, __g string, __cnt bigint")
+    assert _score_inline(df, "doc_id", "text", counts, order, 1, p) \
+        .count() == 1
+
+
+# every input of the unigram / bigram / trigram inline-parity tests
+# above, plus NULL, empty, space-only, tab and multi-space texts and
+# docs shorter than the order
+_PARITY_FIT = [
+    "a b c a b c", "a b d", "c  a b", "a b a b", "a b c",
+] + [f"w{i % 9} x{i % 4} common tail{i % 2}" for i in range(40)]
+_PARITY_SCORE = [
+    "a b x", "c c", "b  c a", "solo", None, "  ", "", "   ",
+    "a b c d x", "x b c q", "just two", "a b c", "\tc x", "a\nb a",
+    " y z ", "p\tq", "\t", "a\tb  c", "a   b", "a b c d e f",
+] + [f"w{i % 11} q{i % 5} common novel{i % 2}" for i in range(30)]
+
+
+@pytest.mark.parametrize("fit", ["self", "cross"])
+@pytest.mark.parametrize("order", [1, 2, 3])
+def test_ngram_rarity_join_shuffle_and_inline_agree(spark, order, fit):
+    # the broadcast join path, the shuffle-join escape and the inline
+    # scorer emit identical rows at every order, on a self-corpus fit
+    # (inner join of the top-order table only) and on a cross-corpus
+    # fit whose scored text carries OOV tokens and unseen grams
+    score = spark.createDataFrame(
+        list(enumerate(_PARITY_SCORE)), "doc_id bigint, text string"
+    ).repartition(3)
+    kw = dict(
+        scale=777, penalty=3, keep_below=5000,
+        fit_df=None if fit == "self" else _docs(spark, _PARITY_FIT),
+    )
+
+    def rows(**extra):
+        return sorted(
+            tuple(r) for r in ngram_rarity(
+                score, "doc_id", "text", order, **kw, **extra
+            ).collect()
+        )
+
+    hinted = rows()
+    assert hinted == rows(broadcast_vocab=False) == rows(inline=True)
+    scored = [t.strip(" ").split(" ") for t in _PARITY_SCORE
+              if t is not None and t.strip(" ")]
+    assert len(hinted) == sum(len(toks) >= order for toks in scored)
+
+
+def test_ngram_rarity_rejects_bad_order(spark):
+    df = _docs(spark, ["a b c"])
+    for order in (0, 4):
+        with pytest.raises(ValueError, match="order"):
+            ngram_rarity(df, "doc_id", "text", order)
 
 
 def test_gopher_rules_boundaries(spark):
@@ -635,7 +705,7 @@ def test_ngram_diversity_validation(spark):
 
 
 # ---------------------------------------------------------------------------
-# bigram_rarity_backoff — order-2 rarity with stupid-backoff
+# ngram_rarity order 2 — bigram rarity with stupid-backoff
 # ---------------------------------------------------------------------------
 
 def test_bigram_rarity_hand_trace(spark):
@@ -644,9 +714,7 @@ def test_bigram_rarity_hand_trace(spark):
     Score 'a b x': bigram 'a b' seen → 5 DIV 3 = 1; bigram 'b x':
     unseen, word 'x' unseen → penalty*total1 = 3*7 = 21.
     Score 'c c': bigram 'c c' unseen, 'c' seen → 3*(7 DIV 1) = 21."""
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit = _docs(spark, ["a b a b", "a b c"])
     score = spark.createDataFrame(
@@ -655,8 +723,8 @@ def test_bigram_rarity_hand_trace(spark):
     )
     out = {
         r.doc_id: r
-        for r in bigram_rarity_backoff(
-            score, "doc_id", "text", scale=100, penalty=3, fit_df=fit
+        for r in ngram_rarity(
+            score, "doc_id", "text", 2, scale=100, penalty=3, fit_df=fit
         ).collect()
     }
     assert out[10].n_bigrams == 2
@@ -667,38 +735,32 @@ def test_bigram_rarity_hand_trace(spark):
 
 
 def test_bigram_rarity_excludes_short_docs(spark):
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     docs = _docs(spark, ["a b c d", "single", "", None, "  "])
-    out = bigram_rarity_backoff(docs, "doc_id", "text").collect()
+    out = ngram_rarity(docs, "doc_id", "text", 2).collect()
     assert [r.doc_id for r in out] == [0]
     assert out[0].n_bigrams == 3
 
 
 def test_bigram_rarity_rejects_bad_params(spark):
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     docs = _docs(spark, ["a b"])
     with pytest.raises(ValueError, match="scale"):
-        bigram_rarity_backoff(docs, "doc_id", "text", scale=0)
+        ngram_rarity(docs, "doc_id", "text", 2, scale=0)
     with pytest.raises(ValueError, match="penalty"):
-        bigram_rarity_backoff(docs, "doc_id", "text", penalty=0)
+        ngram_rarity(docs, "doc_id", "text", 2, penalty=0)
 
 
 def test_bigram_rarity_keep_threshold(spark):
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     docs = _docs(spark, ["a b a b a b", "z q w e r t"])
     out = {
         r.doc_id: r.kept
-        for r in bigram_rarity_backoff(
-            docs, "doc_id", "text", scale=100, keep_below=500
+        for r in ngram_rarity(
+            docs, "doc_id", "text", 2, scale=100, keep_below=500
         ).collect()
     }
     # self-fit: total2=10; doc0 = (a b)x3,(b a)x2 → mean 380;
@@ -711,9 +773,7 @@ def test_bigram_rarity_keep_threshold(spark):
 def test_bigram_inline_matches_join_path(spark):
     """inline=True is bit-identical to the join path — including
     multi-space token edges, OOV words, and unseen bigrams."""
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit = _docs(spark, ["a b a b", "a b c", "c  a b"])
     score = spark.createDataFrame(
@@ -722,13 +782,13 @@ def test_bigram_inline_matches_join_path(spark):
         "doc_id bigint, text string",
     )
     join_rows = sorted(
-        tuple(r) for r in bigram_rarity_backoff(
-            score, "doc_id", "text", scale=100, penalty=3, fit_df=fit
+        tuple(r) for r in ngram_rarity(
+            score, "doc_id", "text", 2, scale=100, penalty=3, fit_df=fit
         ).collect()
     )
     inline_rows = sorted(
-        tuple(r) for r in bigram_rarity_backoff(
-            score, "doc_id", "text", scale=100, penalty=3, fit_df=fit,
+        tuple(r) for r in ngram_rarity(
+            score, "doc_id", "text", 2, scale=100, penalty=3, fit_df=fit,
             inline=True,
         ).collect()
     )
@@ -736,7 +796,7 @@ def test_bigram_inline_matches_join_path(spark):
 
 
 # ---------------------------------------------------------------------------
-# trigram_rarity_backoff (r13): the order-3 stupid-backoff chain
+# ngram_rarity order 3 (r13): the trigram stupid-backoff chain
 # ---------------------------------------------------------------------------
 
 
@@ -755,9 +815,7 @@ def test_trigram_rarity_hand_trace_all_four_branches(spark):
                           → 3 · (7 DIV 2) = 9
       (b c q) unseen, (c q) unseen, q unseen → 81
     """
-    from parquet_sampler_spark.operators.quality import (
-        trigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit = _docs(spark, ["a b c a b c", "a b d"])
     score = spark.createDataFrame(
@@ -766,8 +824,8 @@ def test_trigram_rarity_hand_trace_all_four_branches(spark):
     )
     out = {
         r.doc_id: r
-        for r in trigram_rarity_backoff(
-            score, "doc_id", "text", scale=100, penalty=3, fit_df=fit
+        for r in ngram_rarity(
+            score, "doc_id", "text", 3, scale=100, penalty=3, fit_df=fit
         ).collect()
     }
     assert out[10].n_trigrams == 3
@@ -778,27 +836,23 @@ def test_trigram_rarity_hand_trace_all_four_branches(spark):
 
 
 def test_trigram_rarity_excludes_short_docs_and_validates(spark):
-    from parquet_sampler_spark.operators.quality import (
-        trigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     docs = _docs(spark, ["a b c d", "two toks", "one", "", None])
-    out = trigram_rarity_backoff(docs, "doc_id", "text").collect()
+    out = ngram_rarity(docs, "doc_id", "text", 3).collect()
     assert [r.doc_id for r in out] == [0]
     assert out[0].n_trigrams == 2
     with pytest.raises(ValueError, match="scale"):
-        trigram_rarity_backoff(docs, "doc_id", "text", scale=0)
+        ngram_rarity(docs, "doc_id", "text", 3, scale=0)
     with pytest.raises(ValueError, match="penalty"):
-        trigram_rarity_backoff(docs, "doc_id", "text", penalty=0)
+        ngram_rarity(docs, "doc_id", "text", 3, penalty=0)
 
 
 def test_trigram_inline_matches_join_path(spark):
     """inline=True is bit-identical to the join path across all four
     backoff branches, multi-space tokens, and degenerate docs; the
     keep_below flag survives both paths."""
-    from parquet_sampler_spark.operators.quality import (
-        trigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit = _docs(spark, ["a b c a b c", "a b d", "c  a b"])
     score = spark.createDataFrame(
@@ -808,32 +862,30 @@ def test_trigram_inline_matches_join_path(spark):
     )
     kw = dict(scale=100, penalty=3, fit_df=fit, keep_below=5000)
     join_rows = sorted(
-        tuple(r) for r in trigram_rarity_backoff(
-            score, "doc_id", "text", **kw
+        tuple(r) for r in ngram_rarity(
+            score, "doc_id", "text", 3, **kw
         ).collect()
     )
     inline_rows = sorted(
-        tuple(r) for r in trigram_rarity_backoff(
-            score, "doc_id", "text", inline=True, **kw
+        tuple(r) for r in ngram_rarity(
+            score, "doc_id", "text", 3, inline=True, **kw
         ).collect()
     )
     assert join_rows == inline_rows and join_rows
 
 
 def test_trigram_shuffle_join_escape_equal(spark):
-    from parquet_sampler_spark.operators.quality import (
-        trigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     fit = _docs(spark, ["a b c a b c", "a b d"])
     score = spark.createDataFrame(
         [(10, "a b c d x"), (11, "x b c q")],
         "doc_id bigint, text string",
     )
-    a = trigram_rarity_backoff(
-        score, "doc_id", "text", fit_df=fit, broadcast_vocab=True
+    a = ngram_rarity(
+        score, "doc_id", "text", 3, fit_df=fit, broadcast_vocab=True
     ).orderBy("doc_id").collect()
-    b = trigram_rarity_backoff(
-        score, "doc_id", "text", fit_df=fit, broadcast_vocab=False
+    b = ngram_rarity(
+        score, "doc_id", "text", 3, fit_df=fit, broadcast_vocab=False
     ).orderBy("doc_id").collect()
     assert a == b

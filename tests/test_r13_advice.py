@@ -101,13 +101,11 @@ def test_sample_threshold_negative_keys_respect_ratio(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE low: bigram_rarity_backoff broadcast_vocab escape
+# ADVICE low: ngram_rarity order-2 broadcast_vocab escape
 # ---------------------------------------------------------------------------
 
 def test_bigram_backoff_shuffle_join_path_equal(spark):
-    from parquet_sampler_spark.operators.quality import (
-        bigram_rarity_backoff,
-    )
+    from parquet_sampler_spark.operators.quality import ngram_rarity
 
     docs = spark.createDataFrame(
         [
@@ -119,21 +117,21 @@ def test_bigram_backoff_shuffle_join_path_equal(spark):
         "doc_id bigint, text string",
     )
     fit = docs.filter("doc_id <= 2")
-    a = bigram_rarity_backoff(
-        docs, "doc_id", "text", fit_df=fit, broadcast_vocab=True
+    a = ngram_rarity(
+        docs, "doc_id", "text", 2, fit_df=fit, broadcast_vocab=True
     ).orderBy("doc_id").collect()
-    b = bigram_rarity_backoff(
-        docs, "doc_id", "text", fit_df=fit, broadcast_vocab=False
+    b = ngram_rarity(
+        docs, "doc_id", "text", 2, fit_df=fit, broadcast_vocab=False
     ).orderBy("doc_id").collect()
     assert a == b
     # the escape drops the HINTS (size-based planning may still pick
     # broadcast at toy scale — that is the point of the escape: let
     # the optimizer decide from runtime sizes instead of forcing it)
-    analyzed = bigram_rarity_backoff(
-        docs, "doc_id", "text", fit_df=fit, broadcast_vocab=False
+    analyzed = ngram_rarity(
+        docs, "doc_id", "text", 2, fit_df=fit, broadcast_vocab=False
     )._jdf.queryExecution().analyzed().toString()
-    hinted = bigram_rarity_backoff(
-        docs, "doc_id", "text", fit_df=fit, broadcast_vocab=True
+    hinted = ngram_rarity(
+        docs, "doc_id", "text", 2, fit_df=fit, broadcast_vocab=True
     )._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" in hinted
     assert analyzed.count("ResolvedHint") < hinted.count("ResolvedHint")
@@ -152,15 +150,15 @@ def test_inline_vocab_guard_raises_over_bound(spark, monkeypatch):
     )
     monkeypatch.setattr(quality, "INLINE_VOCAB_MAX_ROWS", 10)
     with pytest.raises(ValueError, match="join path"):
-        quality.unigram_rarity(docs, "doc_id", "text", inline=True)
+        quality.ngram_rarity(docs, "doc_id", "text", 1, inline=True)
     with pytest.raises(ValueError, match="join path"):
-        quality.bigram_rarity_backoff(
-            docs, "doc_id", "text", inline=True
+        quality.ngram_rarity(
+            docs, "doc_id", "text", 2, inline=True
         )
     monkeypatch.setattr(quality, "INLINE_VOCAB_MAX_ROWS", 20_000_000)
     # under the bound both inline paths still run
-    assert quality.unigram_rarity(
-        docs.limit(3), "doc_id", "text", inline=True
+    assert quality.ngram_rarity(
+        docs.limit(3), "doc_id", "text", 1, inline=True
     ).count() == 3
 
 

@@ -164,7 +164,7 @@ def test_plan_fragments_are_nonempty_strings():
     from parquet_sampler_spark.queries import rows
 
     plans = {n: r.plan for n, r in rows().items() if r.plan}
-    assert len(plans) == 66
+    assert len(plans) == 68
     for name, plan in plans.items():
         for frag in plan:
             assert isinstance(frag, str) and frag.removeprefix("!"), (
