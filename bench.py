@@ -175,14 +175,6 @@ SETUPS: dict[str, tuple[Callable, tuple[str, ...]]] = {
         _row_builder(queries_ext._q_minhash_incremental),
         ("minhash_incremental", "minhash_admit"),
     ),
-    "setup_bigram_model": (
-        _row_builder(queries_ext._q_quality_rarity_bigram),
-        ("quality_rarity_bigram",),
-    ),
-    "setup_trigram_model": (
-        _row_builder(queries_ext._q_quality_rarity_trigram),
-        ("quality_rarity_trigram",),
-    ),
     "setup_embneardup_index": (
         _row_builder(queries_ext._q_embedding_neardup_incremental),
         ("embedding_neardup_incremental", "embedding_admit"),

@@ -1,18 +1,27 @@
 """Deduplication operators for training-data pipelines.
 
-Five families, all expressed as declarative DataFrame plans:
+Every pair operator here is a key join, built from four shared pieces:
 
-* :func:`exact_dedup` — hash-groupBy exact dedup, deterministic keeper.
-* :func:`ngram_jaccard_pairs` / :func:`jaccard_dedup` — exact n-gram-set
-  Jaccard via an inverted-index self-join (no cross join: pairs are only
-  generated for docs sharing a shingle — the standard scalable plan).
-* :func:`minhash_lsh_pairs` — MinHash signatures + banded LSH: candidate
-  generation cost is O(docs × bands), then exact-Jaccard verification on
-  the (tiny) candidate set. The 100 TB path: banding replaces the
-  inverted-index join when shingle sets are huge.
-* :func:`simhash_pairs` — 32-bit SimHash + 4-band exact-match blocking,
-  Hamming-distance verification.
-* embedding near-dup lives in ``operators/similarity.py`` (cosine).
+* :func:`shingle_table` — the one persisted ``(id, xxhash64(shingle))``
+  inverted-index relation of the n-gram joins.
+* :func:`_pair_counts` — the one pair join: an equi-join on a key
+  (shingle, band key, SimHash chunk, winnowed fingerprint; self-joins
+  keep ``id_a < id_b``) ending in one ``groupBy(id_a, id_b)`` count.
+  Pairs form only where a key is shared, never the cross product.
+* :func:`~parquet_sampler_spark.plans.skew.drop_hot_keys` — the one
+  hot-key cap (``max_shingle_df``, ``max_band_df``, ``max_fp_df``).
+* :func:`_verify_sets` — the one exact set-Jaccard verify of MinHash
+  candidates.
+
+Each public operator keeps only its own score and filter: exact
+n-gram Jaccard (:func:`ngram_jaccard_pairs`, bipartite
+:func:`cross_ngram_jaccard_pairs`), Broder containment
+(:func:`containment_pairs`), MinHash + banded LSH
+(:func:`minhash_lsh_pairs`, batch-vs-index :func:`minhash_probe_pairs`),
+SimHash banding with a Hamming verify (:func:`simhash_pairs`) and
+winnowing fingerprints (:func:`winnow_pairs`). Exact dedup, span
+detection, Bloom decontamination and duplicate clustering sit beside
+them; embedding near-dup lives in ``operators/similarity.py`` (cosine).
 
 Keeper rule for all dedup variants: a row is dropped iff a *similar* row
 with a smaller id exists (greedy min-id survivor). One pass, deterministic,
@@ -42,6 +51,7 @@ from parquet_sampler_spark.plans.cache import (  # noqa: E402
 from parquet_sampler_spark.plans.lineage import (  # noqa: E402
     truncate_lineage as _truncate_lineage,
 )
+from parquet_sampler_spark.plans.skew import drop_hot_keys  # noqa: E402
 
 
 def exact_dedup(
@@ -70,13 +80,115 @@ def _word_ngrams(text_col: str, n: int):
 def shingle_table(
     df: DataFrame, id_col: str, text_col: str, n: int = 1
 ) -> DataFrame:
-    """Exploded (id, shingle) inverted-index relation, shingles distinct
-    per doc. Input is spread across cores first — a small single-split
-    file would otherwise explode on one thread."""
+    """The persisted inverted-index relation ``(id_col, shingle)`` of
+    the n-gram joins: one row per distinct word n-gram per doc, the
+    shingle as its ``xxhash64`` (fixed-width keys shuffle and compare
+    much faster than ~n-word strings; a collision at any realistic
+    distinct-shingle count is < 2^-40). Persisted because every
+    consumer reads it at least twice (both join sides and the set
+    sizes), so tokenize/shingle/hash runs once. Input is spread across
+    cores first — a small single-split file would otherwise explode on
+    one thread."""
     from parquet_sampler_spark.plans.layout import spread
 
-    return spread(df).select(
-        F.col(id_col), F.explode(_word_ngrams(text_col, n)).alias("shingle")
+    return _persist(
+        spread(df)
+        .select(F.col(id_col),
+                F.explode(_word_ngrams(text_col, n)).alias("shingle"))
+        .select(id_col, F.xxhash64("shingle").alias("shingle"))
+    )
+
+
+def _pair_counts(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    keys: list[str],
+    self_join: bool,
+) -> DataFrame:
+    """``(id_a, id_b, common)``: every pair of a ``left`` and a
+    ``right`` id that share at least one ``keys`` value, with the
+    number of shared key rows. An equi-join on ``keys`` (a self-join
+    keeps ``id_a < id_b``), then one ``groupBy(id_a, id_b)`` count —
+    candidates only where a key is shared, never the cross product.
+    A key held by d docs forms d² join rows (:func:`drop_hot_keys`
+    caps them)."""
+    a = left.select(F.col(id_col).alias("id_a"), *keys)
+    b = right.select(F.col(id_col).alias("id_b"), *keys)
+    joined = a.join(b, keys)
+    if self_join:
+        joined = joined.filter(F.col("id_a") < F.col("id_b"))
+    return joined.groupBy("id_a", "id_b").agg(
+        F.count(F.lit(1)).alias("common")
+    )
+
+
+def _with_sizes(
+    pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame, id_col: str
+) -> DataFrame:
+    """``pairs`` with each side's set size (its row count in the
+    shingle relation ``sh_a`` / ``sh_b``) as ``size_a`` / ``size_b``.
+    Sizes always come from the FULL shingle relations: a hot-key cap
+    prunes the pair join only, so denominators stay exact."""
+    def sizes(sh, side):
+        return (
+            sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
+            .select(F.col(id_col).alias(f"id_{side}"),
+                    F.col("__n").alias(f"size_{side}"))
+        )
+
+    return pairs.join(sizes(sh_a, "a"), "id_a").join(
+        sizes(sh_b, "b"), "id_b"
+    )
+
+
+def _jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` at ``jaccard >= threshold`` from
+    sized pair counts, by inclusion-exclusion."""
+    return (
+        pairs.withColumn(
+            "jaccard",
+            F.col("common").cast("double")
+            / (F.col("size_a") + F.col("size_b")
+               - F.col("common")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _verify_sets(
+    cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame, broadcast: bool
+) -> DataFrame:
+    """Exact set Jaccard (intersection size over union size of the
+    two set arrays) of the candidate pairs ``cand`` ``(id_a, id_b)``;
+    ``sets_a`` and ``sets_b`` are ``(id, set array)`` relations of each
+    side. Returns ``(id_a, id_b, jaccard)``, one row per candidate.
+
+    The candidate list is Θ(near-dup candidates) — small relative to
+    the corpus on a well-banded design — so with ``broadcast`` it is
+    the broadcast side of the first join and the set tables STREAM (no
+    shuffle). Without the hint, a candidate list a few MB past
+    spark.sql.autoBroadcastJoinThreshold silently flips both joins to
+    sort-merge, shuffling the full array table twice (measured at
+    sf100: >70 GB of scratch). The hint cuts the other way when the
+    BANDING is underwater: this corpus's 31-token vocabulary puts ~60M
+    candidates (≈1 GB — over spark.driver.maxResultSize) into the
+    set-form band join at 5M docs, so ``broadcast=False``
+    (``verify_broadcast=False`` on the operators) restores the shuffle
+    join for candidate-heavy corpora — whose real fix is a
+    banding/threshold/cap redesign (SCALING.md r11), not a bigger
+    driver."""
+    side = F.broadcast(cand) if broadcast else cand
+    return (
+        side.join(sets_a.toDF("id_a", "sh_a"), "id_a")
+        .join(sets_b.toDF("id_b", "sh_b"), "id_b")
+        .select(
+            "id_a", "id_b",
+            (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+             / F.size(F.array_union("sh_a", "sh_b")).cast("double"))
+            .alias("jaccard"),
+        )
     )
 
 
@@ -86,30 +198,17 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 1,
     threshold: float = 0.5,
-    prefix_filter: bool = False,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram-set Jaccard similarity join: all pairs (id_a < id_b)
     with ``|A∩B| / |A∪B| >= threshold``.
 
-    Default plan: inverted-index self-join on int64-hashed shingles →
+    Plan: :func:`shingle_table` self-joined by :func:`_pair_counts` →
     per-pair intersection counts → inclusion-exclusion with set sizes.
 
-    ``prefix_filter=True`` switches to PPJoin-style prefix filtering:
-    shingles get a global total order (document frequency ascending),
-    and each doc joins only on its first ``|A| - ceil(t·|A|) + 1``
-    shingles. Exact (no recall loss): J(A,B) ≥ t ⇒ |A∩B| ≥ t·|A|, so
-    the globally-minimal common shingle sits inside BOTH prefixes.
-    Results are identical to the default path (tested). **When to use
-    it**: Zipfian vocabularies where a few stop-shingles dominate — the
-    hot shingles sort last, fall outside every prefix, and their
-    quadratic join groups never form. On this repo's synthetic corpus
-    (uniformly hot ~40-word vocabulary, no rare shingles to anchor on)
-    it is measured ~13× SLOWER — prefix filtering needs df skew to pay
-    for its candidate-verify pass, hence opt-in rather than default.
-
     ``max_shingle_df`` drops shingles whose DOCUMENT FREQUENCY exceeds
-    the cap from the self-join (not from the Jaccard denominator) — the
+    the cap from the self-join (not from the Jaccard denominator) via
+    :func:`~parquet_sampler_spark.plans.skew.drop_hot_keys` — the
     standard guard against quadratic hot-shingle join groups on Zipfian
     corpora: a shingle appearing in d docs generates O(d²) candidate
     rows, and stop-shingles carry almost no similarity signal. The
@@ -123,111 +222,11 @@ def ngram_jaccard_pairs(
 
     Output columns: ``id_a, id_b, jaccard``.
     """
-    if prefix_filter and max_shingle_df is not None:
-        raise ValueError(
-            "prefix_filter and max_shingle_df are alternative hot-"
-            "shingle mitigations — use one (prefix_filter is exact, "
-            "max_shingle_df is recall-approximate but cheaper)"
-        )
     sh = shingle_table(df, id_col, text_col, n)
-    # join on a 64-bit hash of the shingle: fixed-width keys shuffle and
-    # compare much faster than ~n-word strings; collision probability at
-    # any realistic distinct-shingle count is negligible (< 2^-40)
-    sh = sh.select(id_col, F.xxhash64("shingle").alias("shingle"))
-    # the relation feeds three consumers (both self-join sides + sizes);
-    # persist it so tokenize/shingle/hash runs once, not three times
-    sh = _persist(sh)
-    # set sizes ALWAYS come from the full shingle relation — the df cap
-    # prunes the join only, so the Jaccard denominator stays exact
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("set_size"))
-
-    if prefix_filter:
-        return _jaccard_prefix_filtered(sh, sizes, id_col, threshold)
-
-    join_sh = sh
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_shingle_df)
-            .select("shingle")
-        )
-        join_sh = sh.join(rare, "shingle")
-
-    a = join_sh.alias("a")
-    b = join_sh.alias("b")
-    common = (
-        a.join(b, (F.col(f"a.shingle") == F.col(f"b.shingle"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(
-        F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a")
-    )
-    sb = sizes.select(
-        F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b")
-    )
-    return (
-        common.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _jaccard_prefix_filtered(
-    sh: DataFrame, sizes: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Prefix-filtered exact Jaccard join over an (id, shingle-hash)
-    relation. See :func:`ngram_jaccard_pairs` for the guarantee."""
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df"))
-    w = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .withColumn("__pos", F.row_number().over(w))
-        .join(sizes, id_col)
-        # prefix length = |A| - ceil(t·|A|) + 1
-        .filter(
-            F.col("__pos")
-            <= F.col("set_size")
-            - F.ceil(F.col("set_size") * F.lit(threshold)) + 1
-        )
-        .select(id_col, "shingle")
-    )
-    a, b = ranked.alias("a"), ranked.alias("b")
-    cand = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # exact verification on candidate pairs only
-    sets = sh.groupBy(id_col).agg(F.collect_list("shingle").alias("__set"))
-    verified = (
-        cand.join(sets.select(F.col(id_col).alias("id_a"),
-                              F.col("__set").alias("set_a")), "id_a")
-        .join(sets.select(F.col(id_col).alias("id_b"),
-                          F.col("__set").alias("set_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("set_a", "set_b")).cast("double")
-            / F.size(F.array_union("set_a", "set_b")).cast("double"),
-        )
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
+    join_sh = drop_hot_keys(sh, "shingle", max_shingle_df)
+    pairs = _pair_counts(join_sh, join_sh, id_col, ["shingle"],
+                         self_join=True)
+    return _jaccard(_with_sizes(pairs, sh, sh, id_col), threshold)
 
 
 def cross_ngram_jaccard_pairs(
@@ -247,46 +246,21 @@ def cross_ngram_jaccard_pairs(
     where a shingle is shared, never the cross product.
 
     ``max_shingle_df`` caps the CORPUS-side document frequency of join
-    shingles (a stop-shingle in d corpus docs × most benchmark docs is
-    the bipartite blow-up, quadratic in d) — same contract as the
+    shingles (:func:`~parquet_sampler_spark.plans.skew.drop_hot_keys`;
+    a stop-shingle in d corpus docs × most benchmark docs is the
+    bipartite blow-up, quadratic in d) — same contract as the
     self-join variant: denominators stay exact, overlap is
     under-counted, so recall-only approximation with exact precision.
 
     Output: ``id_a`` (corpus), ``id_b`` (benchmark), ``jaccard``.
     """
-    sh_a = _persist(shingle_table(corpus, id_col, text_col, n).select(
-        F.col(id_col).alias("id_a"), F.xxhash64("shingle").alias("shingle")
-    ))
-    sh_b = _persist(shingle_table(benchmark, id_col, text_col, n).select(
-        F.col(id_col).alias("id_b"), F.xxhash64("shingle").alias("shingle")
-    ))
-    sizes_a = sh_a.groupBy("id_a").agg(F.count("*").alias("size_a"))
-    sizes_b = sh_b.groupBy("id_b").agg(F.count("*").alias("size_b"))
-    join_a = sh_a
-    if max_shingle_df is not None:
-        rare = (
-            sh_a.groupBy("shingle")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_shingle_df)
-            .select("shingle")
-        )
-        join_a = sh_a.join(rare, "shingle")
-    common = (
-        join_a.join(sh_b, "shingle")
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
+    sh_a = shingle_table(corpus, id_col, text_col, n)
+    sh_b = shingle_table(benchmark, id_col, text_col, n)
+    pairs = _pair_counts(
+        drop_hot_keys(sh_a, "shingle", max_shingle_df), sh_b,
+        id_col, ["shingle"], self_join=False,
     )
-    return (
-        common.join(sizes_a, "id_a").join(sizes_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("size_a") + F.col("size_b")
-               - F.col("common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard(_with_sizes(pairs, sh_a, sh_b, id_col), threshold)
 
 
 def containment_pairs(
@@ -313,59 +287,25 @@ def containment_pairs(
     which side is the "contained" duplicate (cluster-dedup by keeping
     the superset doc is the usual policy).
 
-    Plan: the same inverted-index self-join skeleton as
-    :func:`ngram_jaccard_pairs` — int64-hashed shingles, candidates
-    only where a shingle is shared (never the cross product),
-    per-pair intersection counts, sizes joined back. ``max_shingle_df``
-    has the identical contract: over-cap shingles leave the self-join
-    ONLY, denominators stay exact, so emitted values are
-    under-estimates (recall-approximate, precision-exact) — and it is
-    the same Σdf² hot-shingle guard, because containment inherits the
-    resemblance join's candidate economics wholesale.
+    Plan: the same shingle self-join and sizes as
+    :func:`ngram_jaccard_pairs`, with the same ``max_shingle_df``
+    contract (:func:`~parquet_sampler_spark.plans.skew.drop_hot_keys`):
+    over-cap shingles leave the self-join ONLY, denominators stay
+    exact, so emitted values are under-estimates (recall-approximate,
+    precision-exact) — containment inherits the resemblance join's
+    candidate economics wholesale.
 
     Output columns: ``id_a, id_b, cont_a, cont_b, containment``.
     """
     sh = shingle_table(df, id_col, text_col, n)
-    sh = _persist(sh.select(id_col, F.xxhash64("shingle").alias("shingle")))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("set_size"))
-
-    join_sh = sh
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_shingle_df)
-            .select("shingle")
-        )
-        join_sh = sh.join(rare, "shingle")
-
-    a = join_sh.alias("a")
-    b = join_sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(
-        F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a")
-    )
-    sb = sizes.select(
-        F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b")
-    )
+    join_sh = drop_hot_keys(sh, "shingle", max_shingle_df)
+    pairs = _pair_counts(join_sh, join_sh, id_col, ["shingle"],
+                         self_join=True)
+    common = F.col("common").cast("double")
     return (
-        common.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "cont_a",
-            F.col("common").cast("double") / F.col("size_a").cast("double"),
-        )
-        .withColumn(
-            "cont_b",
-            F.col("common").cast("double") / F.col("size_b").cast("double"),
-        )
+        _with_sizes(pairs, sh, sh, id_col)
+        .withColumn("cont_a", common / F.col("size_a").cast("double"))
+        .withColumn("cont_b", common / F.col("size_b").cast("double"))
         .withColumn("containment", F.greatest("cont_a", "cont_b"))
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "cont_a", "cont_b", "containment")
@@ -453,9 +393,7 @@ def minhash_lsh_pairs(
     statistic. (2) The occurrence-index expression is O(L²) string
     compares per document (L = grams) — linear and partition-parallel
     at this corpus's ~200-token docs, but a LONG-document corpus
-    (10⁴+ tokens) should pass ``weighted="grouped"`` (``"windowed"``
-    is an accepted alias — the r11 name, kept for compatibility):
-    occurrence indexes come by COUNT, not by sort — a per-(doc, gram)
+    (10⁴+ tokens) should pass ``weighted="grouped"``: occurrence indexes come by COUNT, not by sort — a per-(doc, gram)
     ``groupBy().count()`` (map-side partial combine; the one shuffle
     carries narrow Θ(doc·distinct-gram) tf rows) followed by a pure
     ``sequence``-explode map emitting ``gram#0..gram#(tf-1)``. The
@@ -498,16 +436,13 @@ def minhash_lsh_pairs(
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-    if isinstance(weighted, str) and weighted not in (
-        "windowed", "grouped"
-    ):
-        # a typo like "window" is truthy and would silently fall
+    if isinstance(weighted, str) and weighted != "grouped":
+        # a typo like "group" is truthy and would silently fall
         # through to the O(L^2) expression path (ADVICE r11) — the
         # same validation semi_join_reduce applies to its strategy
         # strings
         raise ValueError(
-            f"weighted={weighted!r}: expected bool, 'grouped', or "
-            "'windowed' (alias of 'grouped')"
+            f"weighted={weighted!r}: expected False, True or 'grouped'"
         )
     from parquet_sampler_spark.plans.layout import spread
 
@@ -515,7 +450,7 @@ def minhash_lsh_pairs(
     # persist so split/shingle runs once (measured faster than
     # re-deriving even single-shot: the verify side reads it twice).
     tf = None
-    if weighted in ("windowed", "grouped"):
+    if weighted == "grouped":
         # long-document escape: occurrence indexes by COUNT, not by
         # sort. The multiset encoding only needs SOME bijection of
         # each gram's occurrences onto gram#0..gram#(tf-1) — the
@@ -527,9 +462,8 @@ def minhash_lsh_pairs(
         # map-side, so the one shuffle carries Θ(doc·distinct-gram)
         # narrow (id, gram, tf) rows instead of the Θ(corpus tokens)
         # element stream. (r11 shipped this mode as a row_number
-        # window — 'windowed', the name kept as an alias — and its
-        # decade-3 cell came in at α 1.16: the four consumers shared
-        # the window's exchange via ReuseExchange but each RE-SORTED
+        # window, and its decade-3 cell came in at α 1.16: the four
+        # consumers shared the window's exchange via ReuseExchange but each RE-SORTED
         # the 600M-row stream from shuffle files. The grouped form
         # removes the sorts AND shrinks what any consumer re-reads to
         # the tf table; verification never touches elements at all —
@@ -631,17 +565,10 @@ def minhash_lsh_pairs(
         )
     banded = _persist(_minhash_bands(ex, id_col, num_hashes, bands, seed))
 
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bh") == F.col("b.bh"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # a pair is a candidate when it shares at least one band
+    cand = _pair_counts(
+        banded, banded, id_col, ["band", "bh"], self_join=True
+    ).select("id_a", "id_b")
     if tf is not None:
         # Row-shaped exact verification (grouped mode): the multiset
         # intersection is Σ_g min(tf_A, tf_B) over the common grams —
@@ -689,39 +616,7 @@ def minhash_lsh_pairs(
             )
         )
     else:
-        # Exact-Jaccard verification: join the shingle sets back in
-        # for the (small) candidate set only — from the pre-UDF
-        # `shingled` stage, so re-deriving them does not re-run base
-        # hashing or the signature UDF.
-        # The candidate list is Θ(near-dup candidates) — small
-        # relative to the corpus on a well-banded design — so it is
-        # the broadcast side of the first verify join and the
-        # shingle-array table STREAMS (no shuffle). Without the hint,
-        # a candidate list a few MB past
-        # spark.sql.autoBroadcastJoinThreshold silently flips both
-        # verify joins to sort-merge, shuffling the full array table
-        # twice (measured at sf100: >70 GB of scratch). The hint cuts
-        # the other way when the BANDING is underwater: this corpus's
-        # 31-token vocabulary puts ~60M candidates (≈1 GB — over
-        # spark.driver.maxResultSize) into the set-form band join at
-        # 5M docs, so ``verify_broadcast=False`` restores the shuffle
-        # join for candidate-heavy corpora — whose real fix is a
-        # banding/threshold/cap redesign (SCALING.md r11), not a
-        # bigger driver.
-        sh = shingled
-        cand_side = F.broadcast(cand) if verify_broadcast else cand
-        verified = (
-            cand_side
-            .join(sh.select(F.col(id_col).alias("id_a"),
-                            F.col("__sh").alias("sh_a")), "id_a")
-            .join(sh.select(F.col(id_col).alias("id_b"),
-                            F.col("__sh").alias("sh_b")), "id_b")
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-            )
-        )
+        verified = _verify_sets(cand, shingled, shingled, verify_broadcast)
     return verified.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )
@@ -887,22 +782,11 @@ def minhash_probe_pairs(
     )
     probe = minhash_index(batch, id_col, text_col, n=n,
                           num_hashes=num_hashes, bands=bands, seed=seed)
-    cand = (
-        idx.alias("a")
-        .join(
-            probe.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # Exact-set verification, candidate side broadcast as in
-    # minhash_lsh_pairs (same escape hatch: verify_broadcast=False for
-    # candidate-heavy corpora restores the shuffle join). The corpus
+    cand = _pair_counts(
+        idx, probe, id_col, ["band", "bh"], self_join=False
+    ).select("id_a", "id_b")
+    # Exact-set verification (:func:`_verify_sets`, the same tail and
+    # escape hatch as minhash_lsh_pairs). The corpus
     # shingle relation is persisted alongside the index — it is the
     # other half of the standing state a production deployment stores
     # (or storage-prunes to candidate ids on a bucketed layout), so a
@@ -920,16 +804,7 @@ def minhash_probe_pairs(
         F.col(id_col).alias("id_b"),
         _word_ngrams(text_col, n).alias("sh_b"),
     )
-    cand_side = F.broadcast(cand) if verify_broadcast else cand
-    verified = (
-        cand_side.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-        )
-    )
+    verified = _verify_sets(cand, sh_a, sh_b, verify_broadcast)
     return verified.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )
@@ -1097,9 +972,10 @@ def simhash_pairs(
     size and the blocking join's candidate count quadratically (the
     measured sf1 super-linearity in SCALING.md). The cap drops
     (band, chunk) buckets holding more than ``max_band_df`` docs from
-    candidate generation: recall-only approximate — a qualifying pair
-    survives iff it agrees on at least one UNDER-cap band — and
-    deterministic, so an oracle can replicate it. Precision and the
+    candidate generation (:func:`~parquet_sampler_spark.plans.skew.drop_hot_keys`):
+    recall-only approximate — a qualifying pair survives iff it agrees
+    on at least one UNDER-cap band — and deterministic, so an oracle
+    can replicate it. Precision and the
     emitted Hamming distances stay exact (verification is unchanged)."""
     if bits % bands != 0:
         raise ValueError("bits must be divisible by bands")
@@ -1145,11 +1021,20 @@ def simhash_pairs(
     n_parts = max(
         df.sparkSession.sparkContext.defaultParallelism, 8
     )
+    # The kernel never returns NULL, and coalesce tells the optimizer
+    # so: the Hamming filter below reads the fingerprint out of the pair
+    # ids, and would otherwise make it infer IS NOT NULL on the
+    # fingerprint and push that filter through the barrier into the
+    # hashing projection — the uncompilable nesting above.
     fp = tokens_hashed.repartition(n_parts).select(
-        F.col(id_col), simhash_udf(F.col("__th")).alias("__fp")
+        F.col(id_col),
+        F.coalesce(simhash_udf(F.col("__th")), F.lit(0)).alias("__fp"),
     )
+    # the fingerprint rides in the pair id: it is a function of the id,
+    # so pairs of (id, fp) structs are pairs of ids, and the struct
+    # order (id first) is the id order
     banded = fp.select(
-        id_col, "__fp",
+        F.struct(F.col(id_col).alias("id"), "__fp").alias("__doc"),
         F.explode(
             F.array(*[
                 F.struct(
@@ -1159,36 +1044,20 @@ def simhash_pairs(
                 for i in range(bands)
             ])
         ).alias("b"),
-    ).select(id_col, "__fp", "b.band", "b.chunk")
-
-    if max_band_df is not None:
-        cool = (
-            banded.groupBy("band", "chunk")
-            .agg(F.count("*").alias("__bdf"))
-            .filter(F.col("__bdf") <= max_band_df)
-            .select("band", "chunk")
-        )
-        banded = banded.join(cool, ["band", "chunk"])
-
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.chunk") == F.col("b.chunk"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.__fp").alias("fp_a"),
-            F.col("b.__fp").alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    ).select("__doc", "b.band", "b.chunk")
+    # a NULL id never pairs (NULL < x is NULL), but a struct holding
+    # one compares below every other struct
+    banded = drop_hot_keys(banded, ["band", "chunk"], max_band_df).filter(
+        F.col("__doc.id").isNotNull()
     )
-    return (
-        cand.withColumn("hamming", F.bit_count(
-            F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    pairs = _pair_counts(banded, banded, "__doc", ["band", "chunk"],
+                         self_join=True)
+    return pairs.select(
+        F.col("id_a.id").alias("id_a"),
+        F.col("id_b.id").alias("id_b"),
+        F.bit_count(F.col("id_a.__fp").bitwiseXOR(F.col("id_b.__fp")))
+        .alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
 
 # ---------------------------------------------------------------------------
 # Connected-components duplicate clustering
@@ -1895,7 +1764,7 @@ def winnow_pairs(
     self-join on the fingerprint. Like every inverted-index join in
     this family it has a Σdf² hot-key term — ``max_fp_df`` drops
     fingerprints above a document-frequency cap from PAIR FORMATION
-    ONLY (``n_shared`` then under-counts by the dropped fingerprints,
+    ONLY (:func:`~parquet_sampler_spark.plans.skew.drop_hot_keys`) (``n_shared`` then under-counts by the dropped fingerprints,
     precision of the emitted pairs stays exact — the
     ``jaccard_pairs_capped`` contract, replicated in the oracle via
     GROUP BY…HAVING). A boilerplate run shared by d docs is d·(d−1)/2
@@ -1923,33 +1792,14 @@ def winnow_pairs(
 
     fp = _winnow_fps(df, id_col, text_col, k, w)
     if max_fp_df == "census":
-        from parquet_sampler_spark.plans.cache import persist as _persist
-
         fp = _persist(fp)  # census + pair join share one computation
         max_fp_df = winnow_fp_census(
             df, id_col, text_col, k=k, w=w, _fp=fp
         )["recommended_cap"]
-    join_fp = fp
-    if max_fp_df is not None:
-        # broadcast the HOT set as an anti-join, never the keep set:
-        # fingerprints below the cap are ~ALL of them (Θ(corpus
-        # tokens) rows — measured 91M / >8 GiB at the Heaps sf100
-        # tier, where a keep-side broadcast kills the job), while the
-        # over-cap head is tiny BY CONSTRUCTION of the cap
-        hot = (
-            fp.groupBy("f")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_fp_df)
-            .select("f")
-        )
-        join_fp = fp.join(F.broadcast(hot), "f", "left_anti")
-    a = join_fp.select(F.col(id_col).alias("id_a"), "f")
-    b = join_fp.select(F.col(id_col).alias("id_b"), "f")
+    join_fp = drop_hot_keys(fp, "f", max_fp_df)
     return (
-        a.join(b, ["f"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
+        _pair_counts(join_fp, join_fp, id_col, ["f"], self_join=True)
+        .withColumnRenamed("common", "n_shared")
         .filter(F.col("n_shared") >= min_shared)
     )
 

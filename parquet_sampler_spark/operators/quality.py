@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from parquet_sampler_spark.functions.text import word_ngrams
 from parquet_sampler_spark.plans.cache import persist as _persist
+from parquet_sampler_spark.plans.skew import drop_hot_keys
 
 
 # Driver-safety bound for the inline (model-shipped) scoring path: a
@@ -577,9 +578,10 @@ def cooccurrence_topk(
     frequencies from the full corpus. ``min_pair_docs`` drops
     singleton-pair noise. ``max_token_df`` excludes ultra-common
     tokens from PAIR FORMATION ONLY (df denominators stay exact) —
-    the hot-token guard with the same contract as the dedup family's
-    ``max_shingle_df``: a token in d docs forms Θ(d·u) pair rows, and
-    stop-tokens carry no association signal.
+    the hot-token guard with the same contract (and the same
+    :func:`~parquet_sampler_spark.plans.skew.drop_hot_keys`) as the
+    dedup family's ``max_shingle_df``: a token in d docs forms Θ(d·u)
+    pair rows, and stop-tokens carry no association signal.
 
     Plan: doc-distinct token relation (one aggregate), per-doc
     self-join for pair counts (Θ(docs · u²), u = distinct tokens per
@@ -598,13 +600,7 @@ def cooccurrence_topk(
     n_docs = toks.select(id_col).distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("__ndocs")
     )
-    join_toks = toks
-    if max_token_df is not None:
-        join_toks = toks.join(
-            F.broadcast(dfreq.filter(F.col("__df") <= max_token_df)
-                        .select("tok")),
-            "tok",
-        )
+    join_toks = drop_hot_keys(toks, "tok", max_token_df)
     a = join_toks.select(F.col(id_col), F.col("tok").alias("tok_a"))
     b = join_toks.select(F.col(id_col), F.col("tok").alias("tok_b"))
     pairs = (

@@ -8725,7 +8725,7 @@ def _q_minhash_pairs_weighted_win(spark, sf_dir):
         F.length(F.trim(F.col("text"))) > 0
     )
     return minhash_lsh_pairs(
-        d, "doc_id", "text", n=2, threshold=_WMH_T, weighted="windowed",
+        d, "doc_id", "text", n=2, threshold=_WMH_T, weighted="grouped",
     ).select("id_a", "id_b", F.col("jaccard").alias("jaccard_w"))
 
 

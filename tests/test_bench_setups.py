@@ -5,13 +5,18 @@ tools built on it, ``tools/profile_rows.py``) reads the table, so a
 wrong entry mis-attributes build time everywhere at once. The static
 tests pin its shape; the import test loads every tool that reads it;
 the sf0.001 test runs each builder from a cleared session and checks
-that its consumers then find their state already built: building a
-consumer's DataFrame adds no key to ``plans.cache.MEMO``.
+that a builder with consumers leaves state behind (a ``plans.cache.MEMO``
+key or a registry entry; ``setup_stream_chunks``'s state is its staged
+``data`` directory) and that its consumers then find it already built:
+building a consumer's DataFrame adds no key to ``plans.cache.MEMO``.
+A builder that leaves nothing only warms codegen, and belongs in
+``bench.SESSION_WARM_ROWS`` with no consumers.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import os
 from pathlib import Path
 
 import pytest
@@ -57,7 +62,12 @@ def test_setup_builds_the_state_its_consumers_reuse(spark):
     try:
         for setup, (build, consumers) in bench.SETUPS.items():
             registry.clear_caches()
-            build(spark, SF_SMALL)
+            built = build(spark, SF_SMALL)
+            if setup == "setup_stream_chunks":
+                assert os.path.isdir(built), f"{setup} staged no {built}"
+            elif consumers:
+                assert cache.MEMO or cache._PERSISTED, (
+                    f"{setup} leaves no state for {consumers}")
             for row in consumers:
                 before = set(cache.MEMO)
                 qs[row](spark, SF_SMALL)  # built, not executed

@@ -92,18 +92,20 @@ def test_simhash_near_pair_low_distance(dup_docs):
     assert (1, 3) in got and got[(1, 3)] <= 8
 
 
-def test_prefix_filter_equals_naive(documents):
-    """Prefix filtering is an exact optimization: identical pair set and
-    jaccard values vs the naive inverted-index path."""
-    naive = {(r.id_a, r.id_b): r.jaccard
-             for r in ngram_jaccard_pairs(documents, "doc_id", "text",
-                                          n=2, threshold=0.5,
-                                          prefix_filter=False).collect()}
-    fast = {(r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(documents, "doc_id", "text",
-                                         n=2, threshold=0.5,
-                                         prefix_filter=True).collect()}
-    assert naive == fast and naive
+def test_simhash_lambda_token_hash_with_hamming_filter(dup_docs):
+    """A token hash built from array lambdas (the registry rows'
+    mixed_string_hash) must stay on its side of the exchange barrier
+    even though the Hamming filter reads the fingerprint out of the
+    pair ids: an inferred IS NOT NULL on the fingerprint, pushed into
+    the hashing projection, nests the lambda under the pandas UDF,
+    which Spark cannot evaluate."""
+    from parquet_sampler_spark.functions.hashing import mixed_string_hash
+
+    got = {(r.id_a, r.id_b): r.hamming for r in simhash_pairs(
+        dup_docs, "doc_id", "text", max_hamming=1,
+        hash_fn=mixed_string_hash,
+    ).collect()}
+    assert got[(1, 2)] == got[(1, 5)] == got[(2, 5)] == 0
 
 
 def test_simhash_udf_matches_jvm_expression(spark, dup_docs):
@@ -223,12 +225,6 @@ def test_shingle_df_cap_collapses_hot_candidates(spark):
     # tokens) while the denominator stays exact → an under-estimate,
     # never an over-estimate (precision-exact, recall-approximate)
     assert pair.jaccard == pytest.approx(3 / 9)
-
-
-def test_shingle_df_cap_conflicts_with_prefix_filter(spark, documents):
-    with pytest.raises(ValueError, match="alternative"):
-        ngram_jaccard_pairs(documents, "doc_id", "text",
-                            prefix_filter=True, max_shingle_df=5)
 
 
 def test_duplicate_clusters_nonconverged_raises(spark):
@@ -771,8 +767,8 @@ def test_weighted_minhash_bigram_multiplicity(spark):
 
 
 def test_weighted_minhash_windowed_matches_expression_path(spark):
-    # weighted="windowed" (the long-document escape: row_number over
-    # the exploded gram stream instead of the O(L^2) per-row
+    # weighted="grouped" (the long-document escape: occurrence indexes
+    # by a per-(doc, gram) count instead of the O(L^2) per-row
     # occurrence-index expression) must produce the IDENTICAL pair set
     # and jaccard values — including on docs long enough that the
     # quadratic path is the one being escaped, and on repeated-token
@@ -808,18 +804,12 @@ def test_weighted_minhash_windowed_matches_expression_path(spark):
                 df, "doc_id", "text", weighted=True, **kw
             ).collect()
         )
-        win = sorted(
-            tuple(r) for r in minhash_lsh_pairs(
-                df, "doc_id", "text", weighted="windowed", **kw
-            ).collect()
-        )
         grp = sorted(
             tuple(r) for r in minhash_lsh_pairs(
                 df, "doc_id", "text", weighted="grouped", **kw
             ).collect()
         )
-        assert expr == win, kw
-        assert win == grp, kw  # "windowed" is an alias of "grouped"
+        assert expr == grp, kw
         assert any(p[:2] == (1, 2) for p in expr), kw  # long pair found
 
 
@@ -833,13 +823,14 @@ def test_weighted_rejects_unknown_strategy_string(spark):
     df = spark.createDataFrame(
         [(1, "a b"), (2, "a b")], "doc_id bigint, text string"
     )
-    with pytest.raises(ValueError, match="windowed"):
-        minhash_lsh_pairs(df, "doc_id", "text", weighted="window")
+    for typo in ("window", "windowed"):
+        with pytest.raises(ValueError, match="'grouped'"):
+            minhash_lsh_pairs(df, "doc_id", "text", weighted=typo)
 
 
 def test_windowed_verify_broadcast_escape(spark):
-    # verify_broadcast=False must apply to windowed mode too (ADVICE
-    # r11): same output, and the windowed verify plan carries no
+    # verify_broadcast=False must apply to grouped mode too (ADVICE
+    # r11): same output, and the grouped verify plan carries no
     # broadcast-hinted candidate join when the escape is on
     from parquet_sampler_spark.operators.dedup import minhash_lsh_pairs
 
@@ -850,7 +841,7 @@ def test_windowed_verify_broadcast_escape(spark):
         (4, None),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    kw = dict(n=1, threshold=0.3, weighted="windowed")
+    kw = dict(n=1, threshold=0.3, weighted="grouped")
     hinted = minhash_lsh_pairs(df, "doc_id", "text", **kw)
     escaped = minhash_lsh_pairs(
         df, "doc_id", "text", verify_broadcast=False, **kw

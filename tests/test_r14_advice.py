@@ -1,7 +1,7 @@
 """Round-14 regression pins for the r13 ADVICE findings: the
 hierarchical ``_route_probe`` empty-batch guard and
 ``_unit_dot_arrow``'s degenerate-input parity with the ``_unit_dot``
-fold."""
+fold; and ``_seq_unroll_ok``'s probe at the PQ fit shape."""
 
 from __future__ import annotations
 
@@ -79,3 +79,26 @@ def test_unit_dot_arrow_degenerate_parity_with_fold(spark):
     assert got[1][0] == 0.0 and got[1][1] == 0.0
     assert got[2] == (None, None) and got[3] == (None, None)
     assert got[6] == got[7] == got[8] == (None, None)
+
+
+# ---------------------------------------------------------------------------
+# ADVICE: _seq_unroll_ok must probe the shape the PQ fits run (n=4096
+# sketch rows, k=256 codes, dsub 2-7), not a toy one — numpy's reduction
+# order depends on the array size. On this build the probe passes, so
+# _sqdist_f64 takes the unrolled path, and that path replays the tensor
+# form bit-for-bit at every width it serves.
+# ---------------------------------------------------------------------------
+
+def test_seq_unroll_probe_passes_at_pq_fit_shape():
+    from parquet_sampler_spark.operators.similarity import (
+        _SEQ_UNROLL_OK,
+        _sqdist_f64,
+    )
+
+    assert _SEQ_UNROLL_OK
+    rng = np.random.default_rng(2024)
+    for d in range(2, 8):
+        X = rng.standard_normal((4096, d)) * 2.0 ** 20
+        C = rng.standard_normal((256, d)) * 2.0 ** 20
+        ref = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        assert np.array_equal(_sqdist_f64(X, C), ref), d

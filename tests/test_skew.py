@@ -1,11 +1,11 @@
-"""Salted-join equivalence tests."""
+"""Salted-join equivalence tests and the hot-key cap."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_sampler_spark.plans.skew import salted_join
+from parquet_sampler_spark.plans.skew import drop_hot_keys, salted_join
 
 
 @pytest.fixture(scope="module")
@@ -153,3 +153,19 @@ def test_salted_agg_equals_plain_groupby(spark):
         .collect()
     }
     assert got == want
+
+
+def test_drop_hot_keys_keeps_rows_of_keys_at_or_under_cap(spark):
+    """Rows whose key occurs more than ``cap`` times go, every other
+    row stays (the cap is inclusive); keys may span columns, and
+    ``cap=None`` returns the frame unchanged."""
+    df = spark.createDataFrame(
+        [(1, "a", 10), (1, "a", 11), (1, "a", 12),   # (1, a) x3: hot
+         (1, "b", 13), (1, "b", 14),                 # (1, b) x2: at cap
+         (2, "a", 15)],
+        "k long, g string, v long",
+    )
+    assert drop_hot_keys(df, ["k", "g"], None) is df
+    kept = sorted(r.v for r in drop_hot_keys(df, ["k", "g"], 2).collect())
+    assert kept == [13, 14, 15]
+    assert sorted(r.v for r in drop_hot_keys(df, "k", 1).collect()) == [15]

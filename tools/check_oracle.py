@@ -3,6 +3,12 @@ entry on Spark and its oracle_sql() on DuckDB at a given sf dir, compare
 row count, column names, and an order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [sf_dir] [name ...]
+           [--conf key=value ...] [--json OUT_PATH]
+
+``--conf`` (repeatable) sets a runtime SQL conf on the session before
+the first row, e.g. ``--conf spark.sql.shuffle.partitions=7`` or
+``--conf spark.sql.adaptive.enabled=false``: a row whose hash moves
+under another partition count or plan depends on partitioning.
 """
 
 from __future__ import annotations
@@ -55,15 +61,24 @@ def value_hash(rows, colnames):
 
 
 def main() -> int:
+    usage = ("usage: check_oracle.py [sf_dir] [name ...] "
+             "[--conf key=value ...] [--json OUT_PATH]")
     args = sys.argv[1:]
     json_out = None
     if "--json" in args:
         i = args.index("--json")
         if i + 1 >= len(args):
-            print("usage: check_oracle.py [sf_dir] [name ...] "
-                  "[--json OUT_PATH]", file=sys.stderr)
+            print(usage, file=sys.stderr)
             return 2
         json_out = args[i + 1]
+        args = args[:i] + args[i + 2:]
+    confs = []
+    while "--conf" in args:
+        i = args.index("--conf")
+        if i + 1 >= len(args) or "=" not in args[i + 1]:
+            print(usage, file=sys.stderr)
+            return 2
+        confs.append(args[i + 1].split("=", 1))
         args = args[:i] + args[i + 2:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
@@ -74,9 +89,14 @@ def main() -> int:
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
     import __spark_entry__ as e
+    from parquet_sampler_spark.queries import clear_caches
     from parquet_sampler_spark.session import get_spark
 
     spark = get_spark("check_oracle")
+    for key, value in confs:
+        spark.conf.set(key, value)
+    # no state built under the session's own confs reaches a row
+    clear_caches()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -141,7 +161,8 @@ def main() -> int:
         import json
 
         with open(json_out, "w") as f:
-            json.dump({"sf_dir": sf_dir, "n_queries": len(report),
+            json.dump({"sf_dir": sf_dir, "confs": dict(confs),
+                       "n_queries": len(report),
                        "failures": failures, "queries": report}, f,
                       indent=1)
         print(f"wrote {json_out}")
